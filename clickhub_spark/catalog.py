@@ -93,9 +93,9 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 FINAL_KEYS = {
     # version carries the lines_added tiebreak because stamp_updated_at
     # gives EVERY row of one import batch the same timestamp — without
-    # it the view keeps an arbitrary row per in-batch duplicate, and
-    # would diverge from Orchestrator.commits_final (which resolves
-    # ties the same deterministic way)
+    # it the view keeps an arbitrary row per in-batch duplicate.
+    # Orchestrator.commits_final reads this entry too, so the app's
+    # FINAL read and the SQL view break ties the same way.
     "commits": (["repo_name", "time", "hash"], ["updated_at", "lines_added"]),
     "file_changes": (["repo_name", "time", "commit_hash", "path"], ["updated_at"]),
     "line_changes": (

@@ -67,10 +67,13 @@ def train_bigram_lm(df: DataFrame, text: str, id_col: str) -> tuple[DataFrame, D
     table, and in the store path the bigram write populates it and
     the unigram write scans KBs instead of the corpus.  The cache
     entry is model-sized (vocabulary-bounded, the docstring's
-    "typically broadcastable"), never corpus-sized, and the
-    ContextCleaner reclaims it with the plan.  ``vocab`` keeps its
-    own corpus scan: it counts distinct tokens over ALL documents,
-    including single-token docs that contribute no bigram."""
+    "typically broadcastable"), never corpus-sized, but the
+    CacheManager holds it until ``unpersist()``: ``write_lm_store``
+    releases it once both tables are written, and an inline caller
+    that is done scoring must call ``bigram_counts.unpersist()``.
+    ``vocab`` keeps its own corpus scan: it counts distinct tokens
+    over ALL documents, including single-token docs that contribute
+    no bigram."""
     bg = _bigrams(df, text, id_col)
     bigram_counts = bg.groupBy("prev", "w").agg(F.count("*").alias("cbw"))
     bigram_counts = bigram_counts.persist()
@@ -92,7 +95,8 @@ def write_lm_store(
     mode (mirrors write_minhash_store): at 100 TB the reference corpus
     is scored-against for months, so training must not rerun per batch.
     Model size is bounded by observed bigram vocabulary, so the store
-    is small (typically broadcastable on read)."""
+    is small (typically broadcastable on read).  Releases the cached
+    bigram table that ``train_bigram_lm`` persisted."""
     from concurrent.futures import ThreadPoolExecutor
 
     bigram_counts, unigram_counts, vocab = model
@@ -107,22 +111,25 @@ def write_lm_store(
     # persisted bigram table would otherwise write one shard per
     # cached shuffle partition (the persist boundary blocks AQE's
     # write coalescing; measured 32 files for a 46 KB table).
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fb = pool.submit(
-            lambda: bigram_counts.coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{path}/bigrams")
-        )
-        fv = pool.submit(
-            lambda: vocab.coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{path}/vocab")
-        )
-        fb.result()
-        unigram_counts.coalesce(1).write.mode("overwrite").parquet(
-            f"{path}/unigrams"
-        )
-        fv.result()
+    try:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            fb = pool.submit(
+                lambda: bigram_counts.coalesce(1)
+                .write.mode("overwrite")
+                .parquet(f"{path}/bigrams")
+            )
+            fv = pool.submit(
+                lambda: vocab.coalesce(1)
+                .write.mode("overwrite")
+                .parquet(f"{path}/vocab")
+            )
+            fb.result()
+            unigram_counts.coalesce(1).write.mode("overwrite").parquet(
+                f"{path}/unigrams"
+            )
+            fv.result()
+    finally:
+        bigram_counts.unpersist()
     return path
 
 

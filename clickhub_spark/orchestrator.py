@@ -19,7 +19,7 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from clickhub_spark.catalog import COMMITS_SCHEMA
+from clickhub_spark.catalog import COMMITS_SCHEMA, FINAL_KEYS
 from clickhub_spark.operators.dedup import final_view
 from clickhub_spark.queue import AlreadyScheduled, QueueFull, WorkQueue
 from clickhub_spark.sources.tsv import read_positional_tsv, stamp_updated_at
@@ -76,11 +76,11 @@ class Orchestrator:
 
     def commits_final(self):
         """The FINAL read view over commits (≙ ReplacingMergeTree merge
-        visibility, reference README.md:133)."""
+        visibility, reference README.md:133), with the same keys and
+        tie-break as the registered ``commits_final`` SQL view."""
+        keys, version = FINAL_KEYS["commits"]
         return final_view(
-            self.spark.read.parquet(self.commits_path),
-            keys=["repo_name", "time", "hash"],
-            version=["updated_at", "lines_added"],
+            self.spark.read.parquet(self.commits_path), keys=keys, version=version
         )
 
     # -- update_all_repos (≙ clickhub.py:109-114 →

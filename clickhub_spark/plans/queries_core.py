@@ -497,9 +497,10 @@ def q_dedup_replacing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clickhub_spark.operators.dedup import final_view
 
     # r16 (guide §2.3 — project before the exchange): final_view's
-    # max_by(struct(ALL columns)) is opaque to Catalyst's column
-    # pruning, so without the explicit select the aggregate shuffled
-    # every lineitem column (16) to emit 4.  Selecting the key +
+    # max_by(struct(non-key columns)) is opaque to Catalyst's column
+    # pruning — only the keys come out of the grouping and prune — so
+    # without the explicit select the struct would carry all 15
+    # non-key lineitem columns to emit 3.  Selecting the key +
     # version + output columns up front cuts the shuffled row to the 5
     # columns the query actually consumes; survivor choice is
     # unchanged (same key, same version ordering).

@@ -47,75 +47,14 @@ _REGISTRY: dict[str, "QuerySpec"] = {}
 # driver row is older than round 4 (VERDICT r9 item 2's done
 # criterion).
 ROUND_PRIORITY = [
-    # --- ROUND-17 WINDOW (rotation gate in tests/test_registry.py;
-    # regenerated from `python tools/staleness.py` at the r17 close).
-    # Slots 1-8: queries whose PLANS were restructured this
-    # optimization round (equivalence oracle-proven in-repo at
-    # sf0.001/0.01/0.1; the driver window re-verifies their hashes):
-    # lttb_cert (single cogrouped verify pass), quantile
-    # (single-buffer multi-percentile), tpch q3/q21 (join
-    # reorder/pre-filter), semdedup (matmul tier), multiway
-    # (dims-first revert + projections), dedup_passage
-    # (single-explode), decontam_bloom (no-distinct bloom build).
-    # Slots 9-50: the full 42-name r9 block — at exactly 8-rounds
-    # stale if skipped (MAX_AGE 7), name-sorted for determinism.
-    # The other r17-touched names (tpch q4/q5/q10, ngram_novelty)
-    # are ALREADY in the r9 block; dedup_bloom shares the bloom
-    # operator decontam re-verifies, and dedup_incremental /
-    # bucketed / kmeans_assign changed only build-time layout or
-    # error paths (exec rows unchanged, in-repo oracle green).
-    # Everything after the window: oldest-driver-row first (r10,
-    # r11, r12, r13, r14, r16), name-sorted within a round.
-    "q_agg_lttb_cert",
-    "q_agg_quantile",
-    "q_tpch_q3",
-    "q_tpch_q21",
-    "q_llm_semdedup",
-    "q_join_multiway",
-    "q_llm_dedup_passage",
-    "q_llm_decontam_bloom",
-    "q_agg_kendall",
-    "q_agg_kendall_by",
-    "q_agg_mode",
-    "q_agg_ndcg",
-    "q_agg_proportions_z",
-    "q_agg_retention_rollup",
-    "q_agg_seasonal_index",
-    "q_agg_spearman",
-    "q_agg_stats",
-    "q_agg_theils_u",
-    "q_agg_time_decay",
-    "q_agg_topk_bounds",
-    "q_agg_topk_sketch",
-    "q_agg_topk_weighted",
-    "q_dedup_collapsing_versioned",
-    "q_fill_gaps",
-    "q_fn_array_join",
-    "q_fn_editdistance",
-    "q_fn_minmax_normalize",
-    "q_fn_round_modes",
-    "q_fn_url",
-    "q_join_asof_nearest",
-    "q_join_interval_overlap",
-    "q_llm_boilerplate",
-    "q_llm_embed_centroid",
-    "q_llm_ngram_novelty",
-    "q_llm_simhash",
-    "q_multimodal_audio_stats",
-    "q_scan_schema_evolution",
-    "q_scan_snapshot_diff",
-    "q_scan_time_travel",
-    "q_seq_match_time",
-    "q_stream_dedup",
-    "q_tpch_q10",
-    "q_tpch_q13",
-    "q_tpch_q14",
-    "q_tpch_q18",
-    "q_tpch_q4",
-    "q_tpch_q5",
-    "q_tpch_q7",
-    "q_tpch_q8",
-    "q_win_running_distinct",
+    # --- ROUND-18 WINDOW (rotation gate in tests/test_registry.py;
+    # regenerated from `python tools/staleness.py`).
+    # Slots 1-49: the full r10 block, at exactly 8 rounds stale if
+    # skipped (MAX_AGE 7), name-sorted for determinism.
+    # Slot 50: q_dedup_replacing, whose final_view plan changed this
+    # round (the max_by struct now carries only the non-key columns).
+    # Everything after the window: oldest CORRECTNESS row first (r11, r12,
+    # r13, r14, r16, r17), name-sorted within a round.
     "q_agg_approx_distinct",
     "q_agg_count",
     "q_agg_count_col",
@@ -165,6 +104,7 @@ ROUND_PRIORITY = [
     "q_tpch_q20",
     "q_tpch_q22",
     "q_tpch_q9",
+    "q_dedup_replacing",
     "q_agg_approx_quantile",
     "q_agg_argmax",
     "q_agg_array_combinator",
@@ -172,7 +112,6 @@ ROUND_PRIORITY = [
     "q_agg_grouping_sets",
     "q_agg_salted",
     "q_dedup_collapsing",
-    "q_dedup_replacing",
     "q_fn_array",
     "q_fn_cond",
     "q_fn_date",
@@ -407,6 +346,56 @@ ROUND_PRIORITY = [
     "q_stream_enrich",
     "q_stream_stateful",
     "q_win_interpolate",
+    "q_agg_kendall",
+    "q_agg_kendall_by",
+    "q_agg_lttb_cert",
+    "q_agg_mode",
+    "q_agg_ndcg",
+    "q_agg_proportions_z",
+    "q_agg_quantile",
+    "q_agg_retention_rollup",
+    "q_agg_seasonal_index",
+    "q_agg_spearman",
+    "q_agg_stats",
+    "q_agg_theils_u",
+    "q_agg_time_decay",
+    "q_agg_topk_bounds",
+    "q_agg_topk_sketch",
+    "q_agg_topk_weighted",
+    "q_dedup_collapsing_versioned",
+    "q_fill_gaps",
+    "q_fn_array_join",
+    "q_fn_editdistance",
+    "q_fn_minmax_normalize",
+    "q_fn_round_modes",
+    "q_fn_url",
+    "q_join_asof_nearest",
+    "q_join_interval_overlap",
+    "q_join_multiway",
+    "q_llm_boilerplate",
+    "q_llm_decontam_bloom",
+    "q_llm_dedup_passage",
+    "q_llm_embed_centroid",
+    "q_llm_ngram_novelty",
+    "q_llm_semdedup",
+    "q_llm_simhash",
+    "q_multimodal_audio_stats",
+    "q_scan_schema_evolution",
+    "q_scan_snapshot_diff",
+    "q_scan_time_travel",
+    "q_seq_match_time",
+    "q_stream_dedup",
+    "q_tpch_q10",
+    "q_tpch_q13",
+    "q_tpch_q14",
+    "q_tpch_q18",
+    "q_tpch_q21",
+    "q_tpch_q3",
+    "q_tpch_q4",
+    "q_tpch_q5",
+    "q_tpch_q7",
+    "q_tpch_q8",
+    "q_win_running_distinct",
 ]
 
 

@@ -52,6 +52,45 @@ def test_final_view_idempotent_reimport(spark):
     assert out.count() == 3
 
 
+def _stored_commits(spark, tmp_path):
+    path = str(tmp_path / "commits")
+    _commits(spark).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_final_view_key_predicate_reaches_scan(spark, tmp_path):
+    """A key predicate on the FINAL view is pushed through the dedup
+    aggregate into the parquet scan (the app's point read by
+    repo_name), leaving no filter above the aggregate."""
+    view = final_view(
+        _stored_commits(spark, tmp_path),
+        keys=["repo_name", "time", "hash"],
+        version=["updated_at"],
+    )
+    point = view.where(F.col("repo_name") == "r1")
+    plan = point._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    scan = next(ln for ln in lines if "FileScan parquet" in ln)
+    assert "EqualTo(repo_name,r1)" in scan, scan
+    first_agg = next(i for i, ln in enumerate(lines) if "Aggregate(" in ln)
+    assert not any("Filter" in ln for ln in lines[:first_agg]), plan
+    assert {(r.hash, r.lines) for r in point.collect()} == {("h1", 99), ("h2", 20)}
+
+
+def test_final_view_key_only_projection_drops_max_by(spark, tmp_path):
+    """Reading only key columns (the app's count(repo_name) and
+    max(time) reads) plans a distinct over the keys, without max_by."""
+    view = final_view(
+        _stored_commits(spark, tmp_path),
+        keys=["repo_name", "time", "hash"],
+        version=["updated_at"],
+    )
+    counted = view.where(F.col("repo_name") == "r1").agg(F.count("repo_name").alias("n"))
+    plan = counted._jdf.queryExecution().executedPlan().toString()
+    assert "max_by" not in plan, plan
+    assert counted.first().n == 2
+
+
 def test_exact_dup_groups(spark):
     docs = spark.createDataFrame(
         [(1, "aaa"), (2, "bbb"), (3, "aaa")], "doc_id long, text string"

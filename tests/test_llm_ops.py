@@ -115,6 +115,23 @@ def test_lm_heldout_scoring_uses_smoothing_floor(spark):
     assert all(r["bits"] > 0 for r in self_rows)
 
 
+def test_lm_store_write_releases_bigram_cache(spark, tmp_path):
+    """train_bigram_lm persists the bigram table for the store writes;
+    write_lm_store must unpersist it, or the CacheManager holds it for
+    the life of a long-running Spark application."""
+    from pyspark.storagelevel import StorageLevel
+
+    from clickhub_spark.operators.lm import train_bigram_lm, write_lm_store
+
+    train = spark.createDataFrame(
+        [(1, "a b a b c"), (2, "a b c d")], "id long, text string"
+    )
+    model = train_bigram_lm(train, "text", "id")
+    assert model[0].storageLevel != StorageLevel.NONE
+    write_lm_store(model, str(tmp_path / "lm"))
+    assert model[0].storageLevel == StorageLevel.NONE
+
+
 def test_lm_store_reuse_equals_inline_training(spark, tmp_path):
     """write_lm_store → score_against_store must reproduce inline
     score_bits exactly (train-once/score-many contract), and scoring a

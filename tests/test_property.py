@@ -47,6 +47,53 @@ def test_final_view_idempotent(spark, rows):
     assert sorted(map(tuple, once.collect())) == sorted(map(tuple, replay.collect()))
 
 
+keyed_rows_strategy = st.lists(
+    st.tuples(
+        st.none() | st.integers(min_value=0, max_value=2),  # k1 (nullable)
+        st.none() | st.sampled_from(["a", "b"]),  # k2 (nullable)
+        st.integers(min_value=0, max_value=3),  # version
+        st.integers(min_value=-5, max_value=5),  # value
+    ),
+    min_size=1,
+    max_size=30,
+)
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    rows=keyed_rows_strategy,
+    shape=st.sampled_from(["versioned", "version_is_keys", "all_keys"]),
+)
+def test_final_view_agg_matches_window(spark, rows, shape):
+    """For ANY rows with null and in-batch duplicate keys, the "agg"
+    strategy returns the same rows and schema (names, order, types) as
+    the "window" strategy.  Shapes: a total version order; version ==
+    keys (the DDL fallback for a ReplacingMergeTree with no version
+    column, where each key's rows are exact re-imports, so the
+    survivor is unique); and a table whose columns are all keys."""
+    keys = ["k1", "k2"]
+    version = ["ver", "v"]
+    if shape == "version_is_keys":
+        first = {}
+        rows = [first.setdefault((k1, k2), (k1, k2, ver, v)) for k1, k2, ver, v in rows]
+        version = keys
+    # keys sit between non-key columns, so the output must re-interleave them
+    df = spark.createDataFrame(
+        [(v, k1, ver, k2) for k1, k2, ver, v in rows], "v int, k1 int, ver int, k2 string"
+    )
+    if shape == "all_keys":
+        df = df.select("k2", "k1")
+        version = keys
+    agg = final_view(df, keys=keys, version=version)
+    win = final_view(df, keys=keys, version=version, strategy="window")
+    assert [(f.name, f.dataType) for f in agg.schema] == [
+        (f.name, f.dataType) for f in win.schema
+    ]
+    assert sorted(map(tuple, agg.collect()), key=repr) == sorted(
+        map(tuple, win.collect()), key=repr
+    )
+
+
 texts_strategy = st.lists(
     st.lists(
         st.sampled_from(["alpha", "beta", "gamma", "delta", "epsilon"]),

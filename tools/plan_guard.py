@@ -20,10 +20,12 @@ from __future__ import annotations
 import json
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
-SNAPSHOT = "/root/repo/PLAN_FINGERPRINTS.json"
+SNAPSHOT = str(REPO / "PLAN_FINGERPRINTS.json")
 SF_DIR = "/root/testdata/sf0.001"
 
 #: operator classes counted per plan (formatted-mode detail headers)
