@@ -147,27 +147,6 @@ def shingles(
     )
 
 
-def shingle_hashes(df: DataFrame, text: str, id_col: str, k: int = 3) -> DataFrame:
-    """Distinct k-word shingle HASHES per document: (id, __h) — the
-    string shingle is never built; xxhash64 consumes the k word values
-    directly via element_at over the materialized word array.  Use on
-    engine-internal paths (MinHash/xxhash); oracle-checked paths need
-    the string form (``shingles``) for an engine-portable hash basis."""
-    words = F.col("__words")
-    n = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    hs = F.transform(
-        idx,
-        lambda i: F.xxhash64(*[F.element_at(words, i + j + 1) for j in range(k)]),
-    )
-    return (
-        _spread(df)
-        .withColumn("__words", F.split(F.col(text), " "))
-        .where(n >= k)
-        .select(F.col(id_col), F.explode(F.array_distinct(hs)).alias("__h"))
-    )
-
-
 def jaccard_pairs(
     df: DataFrame,
     text: str,

@@ -4,15 +4,12 @@ Importing this package registers every query into
 ``clickhub_spark.plans.registry``.
 
 Import order IS registration order (the registry dict preserves
-insertion order), and external harnesses may verify only a prefix of
-the registered queries (50 in rounds 1-2).  ``registry.ROUND_PRIORITY``
-additionally front-loads specific names (new/changed queries and ones
-that have never had a driver row) ahead of registration order, and
-``SPARK_GRAFT_QUERY_ORDER`` overrides ad hoc.  Round 1's window
-covered ch/core/extra/fn; round 2's covered join/window/llm/stream/
-fn2; round 3 front-loads the priority list then returns to the
-round-1 families so every query's driver evidence stays ≤2 rounds
-old.
+insertion order).  External harnesses verify only a prefix (~50 names)
+of the registered queries each round; ``registry.driver_order`` derives
+that order from the committed ``CORRECTNESS_r*.json`` driver artifacts
+(changed queries first, then oldest driver row first) and falls back to
+registration order without them.  ``SPARK_GRAFT_QUERY_ORDER`` overrides
+ad hoc.
 """
 
 from clickhub_spark.plans import (  # noqa: F401

@@ -1,8 +1,9 @@
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -1,5 +1,9 @@
 """Registry + driver-contract sanity."""
 
+import json
+
+import pytest
+
 import __spark_entry__ as entrymod
 from clickhub_spark.plans import all_specs
 
@@ -43,14 +47,13 @@ def test_oracle_map_is_subset_of_queries():
 
 
 def test_round_priority_front_loads_window(monkeypatch):
-    """Driver windows verify a prefix: ROUND_PRIORITY names must lead,
-    SPARK_GRAFT_QUERY_ORDER must override, and neither may drop or
-    duplicate a registration."""
+    """Driver windows verify a prefix: all_specs() must follow the
+    derived driver order, SPARK_GRAFT_QUERY_ORDER must override, and
+    neither may drop or duplicate a registration."""
     from clickhub_spark.plans import registry
 
     names = list(all_specs())
-    want = [n for n in registry.ROUND_PRIORITY if n in names]
-    assert names[: len(want)] == want
+    assert names == registry.driver_order(registry._REGISTRY)
     assert len(names) == len(set(names)) == len(registry._REGISTRY)
 
     monkeypatch.setenv("SPARK_GRAFT_QUERY_ORDER", "q_agg_count,q_join_inner")
@@ -75,56 +78,107 @@ def test_column_names_match_oracle_aliases(spark):
             assert "(" not in c, f"{name} has unaliased column {c}"
 
 
-def test_round_priority_rotation_bounds_staleness():
-    """VERDICT r10 #7: the driver verifies only the first 50 names of
-    ROUND_PRIORITY each round.  This gate makes a skipped rotation a
-    RED TEST instead of a judge catch: simulating the upcoming driver
-    run over the committed prefix, no registered query may end up more
-    than MAX_AGE rounds behind the newest CORRECTNESS file, and any
-    never-checked query must sit inside the window.
+WINDOW = 50
+MAX_AGE = 7
 
-    MAX_AGE is 7, not the steady-state 6 (~297 names / 50 per
-    round), because round 9 skipped rotation and left a backlog one
-    50-slot window cannot clear.  The round-12 window drains the
-    last of it: the nine r4 names lead (judge-re-verified at sf0.1
-    in the r11 session), then new round-12 registrations, then r5
-    names fill the window.  The r5 names deferred past the window
-    sit at exactly 7 rounds stale in this simulation and MUST lead
-    the round-13 window; the backlog shrinks each round (8 -> 4 ->
-    0) until steady-state rotation keeps everything within 6 <= 7."""
-    import json
-    import re
-    from pathlib import Path
 
-    from clickhub_spark.plans.registry import ROUND_PRIORITY
-
-    repo = Path(__file__).resolve().parent.parent
-    rounds = {}
-    for p in sorted(repo.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", p.name)
-        rounds[int(m.group(1))] = json.loads(p.read_text())
-    if not rounds:
-        return  # fresh clone without driver artifacts: nothing to gate
-    latest = {}
-    for rnd in sorted(rounds):
-        for name in rounds[rnd]:
-            latest[name] = rnd
-    registered = list(entrymod.queries())
-    assert sorted(set(ROUND_PRIORITY)) == sorted(registered), (
-        "ROUND_PRIORITY must cover the registry exactly once"
-    )
-    window = set(ROUND_PRIORITY[:50])
-    next_round = max(rounds) + 1
+def _window_staleness(order, registered, latest, next_round):
+    """Names that would sit more than MAX_AGE rounds behind ``next_round``
+    once the driver checks the first WINDOW names of ``order``."""
+    window = set(order[:WINDOW])
     stale = []
     for name in registered:
         simulated = next_round if name in window else latest.get(name)
         if simulated is None:
             stale.append(f"{name}: never driver-checked and not in window")
-        elif next_round - simulated > 7:
+        elif next_round - simulated > MAX_AGE:
             stale.append(
                 f"{name}: would be {next_round - simulated} rounds stale "
                 f"(last row r{simulated})"
             )
-    assert not stale, (
-        "rotate ROUND_PRIORITY (tools/staleness.py):\n" + "\n".join(stale)
+    return stale
+
+
+def test_round_priority_rotation_bounds_staleness():
+    """The driver verifies only the first 50 names of queries() each
+    round.  Simulating the upcoming driver run over the derived order,
+    no registered query may end up more than MAX_AGE rounds behind the
+    newest CORRECTNESS file, and any never-checked query must sit
+    inside the window.  MAX_AGE is 7: 341 names over a 50-name window
+    revisit each name every 7 rounds."""
+    from clickhub_spark.plans.registry import latest_rows, load_rounds
+
+    rounds = load_rounds()
+    if not rounds:
+        return  # fresh clone without driver artifacts: nothing to gate
+    latest = {name: rnd for name, (rnd, _) in latest_rows(rounds).items()}
+    registered = list(entrymod.queries())
+    order = list(all_specs())
+    assert sorted(set(order)) == sorted(registered) and len(order) == len(registered), (
+        "the driver order must cover the registry exactly once"
     )
+    stale = _window_staleness(order, registered, latest, max(rounds) + 1)
+    assert not stale, "driver window leaves stale queries:\n" + "\n".join(stale)
+
+
+def _write_round(root, rnd, names):
+    row = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+    (root / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps({n: row for n in names}))
+
+
+def test_driver_order_forward_simulation_bounds_staleness(tmp_path):
+    """Feed each round's derived 50-name window back in as that round's
+    driver artifact for 12 rounds, starting from the committed history:
+    the order must keep every registered query within MAX_AGE rounds
+    without anyone editing it.  (A static list drifts one round staler
+    per round.)"""
+    from clickhub_spark.plans.registry import _REGISTRY, driver_order, latest_rows, load_rounds
+
+    registered = list(_REGISTRY)
+    history = load_rounds()
+    if not history:
+        pytest.skip("fresh clone without driver artifacts: no history to extend")
+    for rnd, rows in history.items():
+        _write_round(tmp_path, rnd, rows)
+    for _ in range(12):
+        rounds = load_rounds(tmp_path)
+        latest = {name: rnd for name, (rnd, _) in latest_rows(rounds).items()}
+        next_round = max(rounds) + 1
+        order = driver_order(registered, tmp_path)
+        assert sorted(order) == sorted(registered)
+        stale = _window_staleness(order, registered, latest, next_round)
+        assert not stale, f"r{next_round}:\n" + "\n".join(stale)
+        _write_round(tmp_path, next_round, order[:WINDOW])
+
+
+def test_driver_order_changed_entry_self_clears(tmp_path):
+    """A CHANGED name leads until a driver row at its round exists, then
+    drops back to its oldest-first slot."""
+    from clickhub_spark.plans.registry import driver_order
+
+    names = ["q_e", "q_d", "q_c", "q_b", "q_a"]
+    _write_round(tmp_path, 1, ["q_a", "q_b", "q_c", "q_d", "q_e"])
+    _write_round(tmp_path, 2, ["q_b", "q_c"])
+    changed = {"q_c": 3}
+    assert driver_order(names, tmp_path, changed) == ["q_c", "q_a", "q_d", "q_e", "q_b"]
+    _write_round(tmp_path, 3, ["q_a", "q_c"])
+    assert driver_order(names, tmp_path, changed) == ["q_d", "q_e", "q_b", "q_a", "q_c"]
+    # a registered name with no driver row yet counts as oldest
+    assert driver_order(["q_new", *names], tmp_path, changed)[0] == "q_new"
+
+
+def test_driver_order_without_artifacts_is_registration_order(tmp_path):
+    from clickhub_spark.plans.registry import _REGISTRY, driver_order
+
+    assert driver_order(_REGISTRY, tmp_path) == list(_REGISTRY)
+    assert driver_order(["q_b", "q_a"], tmp_path, {"q_a": 1}) == ["q_b", "q_a"]
+
+
+@pytest.mark.parametrize("body", ["{", "[]", '{"q_a": 1}'])
+def test_malformed_driver_artifact_names_the_file(tmp_path, body):
+    from clickhub_spark.plans.registry import driver_order
+
+    _write_round(tmp_path, 1, ["q_a"])
+    (tmp_path / "CORRECTNESS_r02.json").write_text(body)
+    with pytest.raises(ValueError, match="CORRECTNESS_r02.json"):
+        driver_order(["q_a"], tmp_path)

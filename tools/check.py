@@ -23,8 +23,9 @@ import os
 import sys
 import time
 import traceback
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def driver_canon_probe(cols, rows):

@@ -25,8 +25,10 @@ import os
 import sys
 import time
 import traceback
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from check import normalize  # noqa: E402  (tools/ sibling)
 
@@ -38,7 +40,7 @@ def main() -> int:
     from clickhub_spark.session import _builder, ship_package
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/CLUSTER_GATE.json"
+    out_path = sys.argv[2] if len(sys.argv) > 2 else str(REPO / "CLUSTER_GATE.json")
     spec = os.environ.get("CLUSTER_SPEC", "local-cluster[2,8,4096]")
 
     # the cluster profile sets no master (spark-submit's job); supply

@@ -8,8 +8,9 @@ Usage: python tools/dump_plans.py > PLANS.md
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SHOWCASE = [
     "q_scan_parquet",

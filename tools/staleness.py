@@ -6,7 +6,7 @@ The external driver verifies only a ~50-name prefix window of
 judge computed this by hand to find 36 six-round-stale names; this
 tool makes it a one-command check for the round-end checklist.
 
-Usage:  python tools/staleness.py [--repo /root/repo] [--max-age N]
+Usage:  python tools/staleness.py [--repo DIR] [--max-age N]
 
 Prints one line per registered query: latest driver round (or NEVER),
 status in that row, sorted oldest-first; then a summary histogram.
@@ -18,32 +18,8 @@ gate, report only).
 from __future__ import annotations
 
 import argparse
-import json
-import re
 import sys
 from pathlib import Path
-
-
-def load_rounds(repo: Path) -> dict[int, dict]:
-    rounds: dict[int, dict] = {}
-    for p in sorted(repo.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", p.name)
-        if not m:
-            continue
-        try:
-            rounds[int(m.group(1))] = json.loads(p.read_text())
-        except (OSError, json.JSONDecodeError) as exc:  # pragma: no cover
-            print(f"warn: skipping {p.name}: {exc}", file=sys.stderr)
-    return rounds
-
-
-def latest_rows(rounds: dict[int, dict]) -> dict[str, tuple[int, dict]]:
-    latest: dict[str, tuple[int, dict]] = {}
-    for rnd in sorted(rounds):
-        for name, row in rounds[rnd].items():
-            if isinstance(row, dict):
-                latest[name] = (rnd, row)
-    return latest
 
 
 def row_status(row: dict) -> str:
@@ -64,16 +40,16 @@ def main() -> int:
     args = ap.parse_args()
     repo = Path(args.repo)
 
+    sys.path.insert(0, str(repo))
+    from clickhub_spark.plans import all_specs  # noqa: PLC0415
+    from clickhub_spark.plans.registry import latest_rows, load_rounds  # noqa: PLC0415
+
     rounds = load_rounds(repo)
     if not rounds:
         print("no CORRECTNESS_r*.json files found", file=sys.stderr)
         return 2
     newest = max(rounds)
     latest = latest_rows(rounds)
-
-    sys.path.insert(0, str(repo))
-    from clickhub_spark.plans import all_specs  # noqa: PLC0415
-
     names = list(all_specs())
 
     rows = []
