@@ -19,7 +19,7 @@ from clickhub_spark.plans import all_specs
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the TPC-H Q1-shaped
     multi-aggregate rollup (SURVEY §2.D8, q_agg_multi)."""
-    from clickhub_spark.plans.queries_core import q_agg_multi
+    from clickhub_spark.plans.queries_agg import q_agg_multi
 
     return q_agg_multi(spark, "/root/testdata/sf0.001")
 

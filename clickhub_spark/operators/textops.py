@@ -232,7 +232,7 @@ def passage_dup_stats(
     df: DataFrame, text: str, id_col: str, w: int = 3, flag_frac: float = 0.5
 ) -> DataFrame:
     """Passage-frequency duplication profile (RefinedWeb/CCNet corpus
-    curation; plans/queries_r7.q_llm_dedup_passage is the registered
+    curation; plans/queries_llm.q_llm_dedup_passage is the registered
     twin): split each document into non-overlapping ``w``-word
     passages, count the DISTINCT documents per passage hash, and per
     document report how many of its passages occur verbatim in some

@@ -1,12 +1,8 @@
-"""Joins — SURVEY §2.C.  The reference app issues no SQL joins (its
-star schema denormalizes around repo_name/commit_hash precisely to
-avoid them, reference README.md:149-161) but join parity is mandatory
-for the analytical surface (§2.C legend: P rows).
-
-Scale discipline: dims (region/nation/supplier) are broadcast; fact-
-fact joins shuffle on the key and rely on AQE for skew; the range
-join is written equi-key-first so Catalyst plans a hash join with a
-residual range predicate rather than a cartesian expansion.
+"""Join queries (``q_join_*``).  Dimension tables (region/nation/
+supplier) are broadcast; fact-fact joins shuffle on the key and rely on
+AQE for skew; range joins are written equi-key-first so Catalyst plans
+a hash join with a residual range predicate rather than a cartesian
+expansion.
 """
 
 from __future__ import annotations
@@ -447,3 +443,145 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("o_orderkey", "n_items", "order_total", "o_orderstatus")
     )
+
+
+@query(
+    "q_join_cross",
+    oracle="""
+    SELECT a.r_name AS name_a, b.r_name AS name_b
+    FROM region a CROSS JOIN region b
+    """,
+)
+def q_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Explicit CROSS JOIN of tiny inputs (SURVEY §2.C parity; at
+    scale cross joins are only ever dim×dim — Catalyst would reject an
+    accidental fact×fact via spark.sql.crossJoin checks)."""
+    r = load(spark, sf_dir, "region")
+    a = r.select(F.col("r_name").alias("name_a"))
+    b = r.select(F.col("r_name").alias("name_b"))
+    return a.crossJoin(b)
+
+
+@query(
+    "q_join_asof_fwd",
+    oracle="""
+    SELECT e.event_id, e.user_id, e.ts,
+           (SELECT min(c.ts) FROM events c
+             WHERE c.user_id = e.user_id AND c.event_type = 'purchase'
+               AND c.ts >= e.ts) AS asof_ts
+    FROM events e
+    WHERE e.event_type = 'view'
+    """,
+)
+def q_join_asof_fwd(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Forward as-of join (ClickHouse `ASOF JOIN ... >=` — SURVEY
+    §2.C8's other direction, previously backward-only): for each view
+    event, the same user's EARLIEST purchase at or after it — the
+    time-to-conversion primitive.  Same union+window single pass as
+    the backward form with the time axis reversed
+    (operators/asof.asof_join direction="forward"); no candidate-pair
+    materialization."""
+    from clickhub_spark.operators.asof import asof_join
+
+    ev = load(spark, sf_dir, "events")
+    views = ev.where(F.col("event_type") == "view").select("event_id", "user_id", "ts")
+    buys = ev.where(F.col("event_type") == "purchase").select("user_id", "ts")
+    return asof_join(
+        views, buys, on=["user_id"], left_ts="ts", right_ts="ts",
+        right_values=[], direction="forward",
+    ).select("event_id", "user_id", "ts", "asof_ts")
+
+
+@query(
+    "q_join_interval_overlap",
+    oracle="""
+    WITH iv AS (
+        SELECT event_id, event_type,
+               CAST(FLOOR(epoch(ts)) AS BIGINT) AS s,
+               CAST(FLOOR(epoch(ts)) AS BIGINT)
+                 + CAST(FLOOR(value * 10) AS BIGINT) AS e
+        FROM events WHERE value > 0 AND user_id < 20
+    ), a AS (SELECT * FROM iv WHERE event_type = 'click'),
+       b AS (SELECT * FROM iv WHERE event_type = 'view')
+    SELECT a.event_id AS id_a, b.event_id AS id_b,
+           CAST(LEAST(a.e, b.e) - GREATEST(a.s, b.s) AS BIGINT)
+               AS overlap_sec
+    FROM a JOIN b ON a.s < b.e AND b.s < a.e
+    ORDER BY id_a, id_b
+    """,
+)
+def q_join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Interval×interval overlap join (SURVEY §2.C7 completion —
+    point-in-interval was covered; this is the two-interval case,
+    e.g. concurrent-session attribution): binned equi-join with the
+    owner-bin trick — each overlapping pair is attributed to the bin
+    holding the overlap's START, so no post-join distinct and no
+    second shuffle (operators/rangejoin.interval_overlap_join).  The
+    oracle is the plain theta join, which only an oracle can afford —
+    Spark would plan it as a nested loop."""
+    from clickhub_spark.operators.rangejoin import interval_overlap_join
+
+    ev = load(spark, sf_dir, "events").where(
+        (F.col("value") > 0) & (F.col("user_id") < 20)
+    )
+    iv = ev.select(
+        "event_id",
+        "event_type",
+        F.unix_timestamp("ts").alias("s"),
+        (F.unix_timestamp("ts") + F.floor(F.col("value") * 10).cast("bigint")).alias(
+            "e"
+        ),
+    )
+    a = iv.where(F.col("event_type") == "click").select(
+        F.col("event_id").alias("id_a"), F.col("s").alias("sa"), F.col("e").alias("ea")
+    )
+    b = iv.where(F.col("event_type") == "view").select(
+        F.col("event_id").alias("id_b"), F.col("s").alias("sb"), F.col("e").alias("eb")
+    )
+    pairs = interval_overlap_join(a, b, "sa", "ea", "sb", "eb", bin_width=3600)
+    return pairs.select(
+        "id_a",
+        "id_b",
+        (F.least("ea", "eb") - F.greatest("sa", "sb")).cast("bigint").alias(
+            "overlap_sec"
+        ),
+    ).orderBy("id_a", "id_b")
+
+
+@query(
+    "q_join_asof_nearest",
+    oracle="""
+    SELECT e.event_id, e.user_id, e.ts,
+           (SELECT c.ts FROM events c
+             WHERE c.user_id = e.user_id AND c.event_type = 'click'
+             ORDER BY abs(epoch(c.ts) - epoch(e.ts)),
+                      CASE WHEN c.ts <= e.ts THEN 0 ELSE 1 END
+             LIMIT 1) AS asof_ts
+    FROM events e
+    WHERE e.event_type = 'error'
+    """,
+)
+def q_join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Nearest-direction as-of join (pandas merge_asof
+    direction='nearest' parity — SURVEY §2.C8 completion alongside
+    backward/forward): for each error event, the click by the same
+    user CLOSEST in time, ties preferring the at-or-before match.
+    Both direction passes share one union + one partitioning — no
+    second shuffle (operators/asof._asof_nearest).  The oracle is a
+    correlated nearest-row subquery with the same tie rule."""
+    from clickhub_spark.operators.asof import asof_join
+
+    ev = load(spark, sf_dir, "events")
+    errors = ev.where(F.col("event_type") == "error").select(
+        "event_id", "user_id", "ts"
+    )
+    clicks = ev.where(F.col("event_type") == "click").select("user_id", "ts")
+    return asof_join(
+        errors,
+        clicks,
+        on=["user_id"],
+        left_ts="ts",
+        right_ts="ts",
+        right_values=[],
+        direction="nearest",
+    ).select("event_id", "user_id", "ts", "asof_ts")

@@ -1,8 +1,7 @@
-"""Streaming/incremental operators, batch-equivalent forms — SURVEY
-§2.I.  The canonical semantics are these batch queries (oracle-
-checked); the actual Structured Streaming implementations live in
-clickhub_spark/streaming/ and are unit-tested for batch/stream
-equivalence (SURVEY §5.2).
+"""Streaming queries (``q_stream_*``) in their batch-equivalent form.
+These batch queries are the canonical, oracle-checked semantics; the
+Structured Streaming implementations live in clickhub_spark/streaming/
+and are unit-tested for batch/stream equivalence.
 """
 
 from __future__ import annotations
@@ -13,6 +12,32 @@ from pyspark.sql.window import Window
 
 from clickhub_spark.catalog import load
 from clickhub_spark.plans.registry import query
+
+
+@query(
+    "q_stream_slide",
+    oracle="""
+    SELECT CAST(time_bucket(INTERVAL '30 minutes', ts)
+                - i * INTERVAL '30 minutes' AS TIMESTAMP) AS window_start,
+           event_type, COUNT(*) AS n
+    FROM events, UNNEST([0, 1]) t(i)
+    GROUP BY 1, 2
+    """,
+)
+def q_stream_slide(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sliding window (1 h width, 30 min slide, SURVEY §2.I3): every
+    event lands in two overlapping windows.  Spark's window() handles
+    the expansion natively; the oracle unnests the two candidate
+    starts — both epoch-aligned to :00/:30."""
+    return (
+        load(spark, sf_dir, "events")
+        .groupBy(
+            F.window(F.col("ts"), "1 hour", "30 minutes").alias("win"),
+            F.col("event_type"),
+        )
+        .agg(F.count("*").alias("n"))
+        .select(F.col("win.start").alias("window_start"), "event_type", "n")
+    )
 
 
 @query(
@@ -125,4 +150,102 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "click_id",
         "click_ts",
         F.round("value", 2).alias("value"),
+    )
+
+
+@query(
+    "q_stream_enrich",
+    oracle="""
+    SELECT CAST(date_trunc('hour', e.ts) AS TIMESTAMP) AS window_start,
+           n.n_name AS nation,
+           CAST(count(*) AS BIGINT) AS n,
+           ROUND(SUM(e.value), 2) AS total_value
+    FROM events e
+    JOIN nation n ON n.n_nationkey = e.user_id % 25
+    GROUP BY 1, 2
+    """,
+)
+def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-static enrichment join, batch canon (SURVEY §2.I3
+    adjunct — the third streaming join shape next to stream-stream
+    q_stream_join and the windowed aggregates): tumbling-hour event
+    aggregates enriched against a static dimension (user→nation via a
+    deterministic FK).  In streaming form the dim is a broadcast
+    static DataFrame joined per micro-batch — no stream state, no
+    watermark needed on the dim side; tests/test_streaming.py's
+    stream-static test pins that readStream shape's stream≡batch
+    equivalence.  The batch canon broadcasts the same 25-row dim."""
+    ev = load(spark, sf_dir, "events")
+    nation = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    return (
+        ev.join(F.broadcast(nation), ev["user_id"] % 25 == nation["n_nationkey"])
+        .groupBy(
+            F.date_trunc("hour", F.col("ts")).alias("window_start"),
+            F.col("n_name").alias("nation"),
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.sum("value"), 2).alias("total_value"),
+        )
+    )
+
+
+@query(
+    "q_stream_stateful",
+    oracle="""
+    SELECT user_id,
+           CAST(count(*) AS BIGINT) AS n_total,
+           ROUND(SUM(value), 2) AS v_total
+    FROM events WHERE value IS NOT NULL
+    GROUP BY user_id ORDER BY user_id
+    """,
+)
+def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch canon of the custom stateful streaming operator
+    (streaming/stateful.running_user_totals — applyInPandasWithState,
+    SURVEY §2.I): after the last micro-batch the per-user state holds
+    exactly this groupBy's (count, sum) — the stream ≡ batch
+    equivalence is pinned in tests/test_stateful.py, which drives the
+    REAL streaming operator over a rate-limited source and compares
+    its final emissions to this aggregate.  State is one fixed-width
+    tuple per key, so the store is bounded by key cardinality at any
+    corpus size."""
+    return (
+        load(spark, sf_dir, "events")
+        .where(F.col("value").isNotNull())
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_total"),
+            F.round(F.sum("value"), 2).alias("v_total"),
+        )
+        .orderBy("user_id")
+    )
+
+
+@query(
+    "q_stream_dedup",
+    oracle="""
+    SELECT event_id, CAST(count(*) AS BIGINT) AS n
+    FROM (
+        SELECT DISTINCT event_id FROM events WHERE event_id < 5000
+    ) GROUP BY event_id HAVING count(*) = 1 ORDER BY event_id
+    """,
+)
+def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch canon of streaming exactly-once dedup
+    (streaming/mv.stream_dedup — dropDuplicatesWithinWatermark, the
+    Spark-native answer to at-least-once upstream delivery, SURVEY
+    §2.I4): after the watermark closes, each key appears ONCE; the
+    batch equivalent is DISTINCT on the key.  The streaming operator
+    itself is exercised in tests/test_streaming (state bounded by the
+    watermark delay, not the stream length — the 100 TB property)."""
+    return (
+        load(spark, sf_dir, "events")
+        .where(F.col("event_id") < 5000)
+        .select("event_id")
+        .distinct()
+        .groupBy("event_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .where(F.col("n") == 1)
+        .orderBy("event_id")
     )

@@ -3558,7 +3558,7 @@ def translate(sql: str) -> str:
             raise ValueError(
                 f"{what}(keys, values) over parallel arrays needs an "
                 "explode + re-aggregate — use the registered DataFrame "
-                "query q_agg_summap (plans/queries_r5.py); the Map-"
+                "query q_agg_summap (plans/queries_agg.py); the Map-"
                 f"column form {what}(m) is supported directly"
             )
         cl = f"collect_list({a[0]})"

@@ -3,7 +3,9 @@ from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO_ROOT = Path(__file__).resolve().parent.parent
+FIXTURES = REPO_ROOT / "tests" / "fixtures"
+sys.path.insert(0, str(REPO_ROOT))
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -15,3 +17,12 @@ def spark():
     spark = get_spark("pytest", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
+
+
+@pytest.fixture(scope="session")
+def built_queries(spark):
+    """Every registered query's DataFrame, built once per session for the
+    sweeps that inspect only plans and schemas."""
+    from clickhub_spark.plans import all_specs
+
+    return {name: spec.builder(spark, SF_DIR) for name, spec in all_specs().items()}

@@ -9,13 +9,14 @@ stays quiet on every scalar shape the registry legitimately emits.
 """
 
 import datetime
+import sys
 
 import numpy as np
 import pytest
 
-import sys
+from tests.conftest import REPO_ROOT
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(REPO_ROOT / "tools"))
 
 from check import driver_canon_probe  # noqa: E402
 

@@ -11,9 +11,11 @@ local[] fixture and a local-cluster master cannot coexist.
 import subprocess
 import sys
 
+from tests.conftest import REPO_ROOT
+
 _SCRIPT = """
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from clickhub_spark.session import _builder
 spark = (
     _builder("cluster-profile-test", None, "cluster")
@@ -37,7 +39,7 @@ print("CLUSTER_PROFILE_OK")
 
 def test_cluster_profile_executes_with_aqe_coalesce():
     out = subprocess.run(
-        [sys.executable, "-c", _SCRIPT],
+        [sys.executable, "-c", _SCRIPT, str(REPO_ROOT)],
         capture_output=True,
         text=True,
         timeout=300,

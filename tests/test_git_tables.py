@@ -23,7 +23,9 @@ from clickhub_spark.sources.tsv import (
     validate_enum,
 )
 
-FIX = "/root/repo/tests/fixtures"
+from tests.conftest import FIXTURES
+
+FIX = str(FIXTURES)
 
 
 def test_file_changes_ingest(spark):

@@ -15,7 +15,9 @@ from clickhub_spark.sources.tsv import (
 )
 from clickhub_spark.sources.writer import high_water_mark, incremental_append
 
-FIXTURE = "/root/repo/tests/fixtures/commits.tsv"
+from tests.conftest import FIXTURES
+
+FIXTURE = str(FIXTURES / "commits.tsv")
 
 
 def test_positional_cast_and_literal_injection(spark):

@@ -9,7 +9,9 @@ from clickhub_spark.operators.mutate import delete_where, insert_rows, update_wh
 from clickhub_spark.orchestrator import Orchestrator
 from clickhub_spark.queue import WorkQueue
 
-FIXTURE = "/root/repo/tests/fixtures/commits.tsv"
+from tests.conftest import FIXTURES
+
+FIXTURE = str(FIXTURES / "commits.tsv")
 
 
 @pytest.fixture()

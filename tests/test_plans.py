@@ -257,17 +257,14 @@ def test_sharded_pack_has_no_single_partition_window(spark):
     assert "hashpartitioning(shard" in plan
 
 
-def test_no_query_plans_a_cartesian_product(spark):
+def test_no_query_plans_a_cartesian_product(built_queries):
     """Global plan-hygiene sweep: NO registered query may compile to a
     CartesianProduct — scalar one-row subqueries come out as bounded
     BroadcastNestedLoopJoin, big-side products must never appear.  A
     new query that accidentally drops its join keys fails here before
     it ships."""
-    from clickhub_spark.plans import all_specs
-
     offenders = []
-    for name, spec in all_specs().items():
-        df = spec.builder(spark, SF_DIR)
+    for name, df in built_queries.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
         if "CartesianProduct" in plan:
             offenders.append(name)

@@ -7,7 +7,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from clickhub_spark.plans.queries_r5c import _FIXTURE_COMMITS, _fixture_repo
+from clickhub_spark.plans.queries_core import _FIXTURE_COMMITS, _fixture_repo
 from clickhub_spark.sources.pyds import register_sources
 
 

@@ -15,6 +15,8 @@ from clickhub_spark.queue import (
     WorkQueue,
 )
 
+from tests.conftest import REPO_ROOT
+
 
 @pytest.fixture(params=["fs", "sqlite", "http"])
 def make_queue(request, tmp_path):
@@ -199,7 +201,7 @@ def test_http_two_processes_no_shared_local_state(http_coord, tmp_path):
             [sys.executable, "-c", worker_src, url, f"proc-w{i}"],
             stdout=subprocess.PIPE,
             text=True,
-            cwd="/root/repo",
+            cwd=REPO_ROOT,
         )
         for i in range(2)
     ]

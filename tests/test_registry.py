@@ -1,13 +1,13 @@
 """Registry + driver-contract sanity."""
 
 import json
+from pathlib import Path
 
 import pytest
 
 import __spark_entry__ as entrymod
+from clickhub_spark import plans
 from clickhub_spark.plans import all_specs
-
-from tests.conftest import SF_DIR
 
 
 def test_every_query_has_builder_and_doc():
@@ -17,6 +17,23 @@ def test_every_query_has_builder_and_doc():
         assert name.startswith("q_")
         assert callable(spec.builder)
         assert spec.doc, f"{name} lacks a docstring"
+
+
+def test_each_query_lives_in_its_family_module():
+    """``q_<fam>_…`` is defined in ``plans/queries_<fam>.py`` when that
+    module exists and in ``plans/queries_core.py`` otherwise; no plan
+    module is named after the round that added it."""
+    plans_dir = Path(plans.__file__).parent
+    modules = {p.stem for p in plans_dir.glob("queries_*.py")}
+    misplaced = []
+    for name, spec in all_specs().items():
+        home = f"queries_{name.split('_')[1]}"
+        want = home if home in modules else "queries_core"
+        got = spec.builder.__module__.rsplit(".", 1)[-1]
+        if got != want:
+            misplaced.append(f"{name}: in {got}, expected {want}")
+    assert not misplaced, "queries outside their family module:\n" + "\n".join(misplaced)
+    assert sorted(p.name for p in plans_dir.glob("queries_r[0-9]*.py")) == []
 
 
 def test_oracle_map_is_subset_of_queries():
@@ -69,11 +86,10 @@ def test_entry_returns_rows(spark):
     assert "sum_qty" in df.columns
 
 
-def test_column_names_match_oracle_aliases(spark):
+def test_column_names_match_oracle_aliases(built_queries):
     """Driver compares columns sorted by name — builders must not leak
     unaliased aggregate names like sum(l_quantity)."""
-    for name, spec in all_specs().items():
-        df = spec.builder(spark, SF_DIR)
+    for name, df in built_queries.items():
         for c in df.columns:
             assert "(" not in c, f"{name} has unaliased column {c}"
 

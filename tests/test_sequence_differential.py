@@ -164,7 +164,7 @@ def seq_fixture(spark, tmp_path_factory):
 def test_differential_seq_match(spark, seq_fixture):
     """q_seq_match ≙ sequenceMatch('(?1).*(?2).*(?3)') with conds
     view/click/purchase."""
-    from clickhub_spark.plans.queries_ch import q_seq_match
+    from clickhub_spark.plans.queries_seq import q_seq_match
 
     streams, sf_dir = seq_fixture
     got = {
@@ -186,7 +186,7 @@ def test_differential_seq_match(spark, seq_fixture):
 def test_differential_seq_count(spark, seq_fixture):
     """q_seq_count ≙ sequenceCount('(?1).*(?2)') — non-overlapping
     view→…→purchase chains."""
-    from clickhub_spark.plans.queries_r5b import q_seq_count
+    from clickhub_spark.plans.queries_seq import q_seq_count
 
     streams, sf_dir = seq_fixture
     got = {
@@ -208,7 +208,7 @@ def test_differential_seq_match_time(spark, seq_fixture):
     (view, purchase) — DIRECT adjacency in the stored entry list plus
     the time bound.  Compares the per-user match AND the matched-user
     count the registered aggregate publishes."""
-    from clickhub_spark.plans.queries_r5c import q_seq_match_time
+    from clickhub_spark.plans.queries_seq import q_seq_match_time
 
     streams, sf_dir = seq_fixture
     row = q_seq_match_time(spark, sf_dir).collect()[0]

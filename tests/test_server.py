@@ -13,7 +13,9 @@ from clickhub_spark.orchestrator import Orchestrator
 from clickhub_spark.queue import WorkQueue
 from clickhub_spark.server import make_server
 
-FIXTURE = "/root/repo/tests/fixtures/commits.tsv"
+from tests.conftest import FIXTURES
+
+FIXTURE = str(FIXTURES / "commits.tsv")
 
 
 @pytest.fixture()

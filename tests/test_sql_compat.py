@@ -7,9 +7,9 @@ from clickhub_spark.catalog import COMMITS_SCHEMA, load
 from clickhub_spark.sources.tsv import read_positional_tsv, stamp_updated_at
 from clickhub_spark.sql_compat import run, translate
 
-from tests.conftest import SF_DIR
+from tests.conftest import FIXTURES, SF_DIR
 
-FIXTURE = "/root/repo/tests/fixtures/commits.tsv"
+FIXTURE = str(FIXTURES / "commits.tsv")
 
 
 @pytest.fixture(scope="module")
@@ -586,10 +586,7 @@ def test_sequence_match_sql(spark):
         """,
     )
     got = {r.user_id: (r.matched, r.n_adj) for r in df.collect()}
-    from clickhub_spark.plans.queries_r11 import (
-        q_seq_count_adjacent,
-        q_seq_match_pattern,
-    )
+    from clickhub_spark.plans.queries_seq import q_seq_count_adjacent, q_seq_match_pattern
 
     want_m = {
         r.user_id: r.matched
@@ -636,7 +633,7 @@ def test_window_funnel_sql(spark):
         """,
     )
     got = {r.level: r.n_users for r in df.collect()}
-    from clickhub_spark.plans.queries_r10 import q_funnel_window
+    from clickhub_spark.plans.queries_funnel import q_funnel_window
 
     want = {
         r.level: r.n_users for r in q_funnel_window(spark, SF_DIR).collect()
@@ -748,14 +745,14 @@ def test_sequence_next_node_sql(spark):
         )
         return {r.user_id: r.next_node for r in df.collect()}
 
-    from clickhub_spark.plans.queries_r12 import (
+    from clickhub_spark.plans.queries_seq import (
+        q_seq_next_node,
         q_seq_next_node_backward,
         q_seq_next_node_backward_first,
+        q_seq_next_node_chain,
         q_seq_next_node_head,
         q_seq_next_node_last_match,
     )
-    from clickhub_spark.plans.queries_r7 import q_seq_next_node
-    from clickhub_spark.plans.queries_r11 import q_seq_next_node_chain
 
     # forward/first_match, single 'view' chain ≡ q_seq_next_node (r7;
     # emits only users WITH a view, next_type NULL when view is last)
@@ -860,7 +857,7 @@ def test_sequence_match_events_sql(spark):
         """,
     )
     got = {r.user_id: [round(t, 6) for t in r.trail] for r in df.collect()}
-    from clickhub_spark.plans.queries_r11 import q_seq_match_events
+    from clickhub_spark.plans.queries_seq import q_seq_match_events
 
     want = {}
     for r in q_seq_match_events(spark, SF_DIR).collect():

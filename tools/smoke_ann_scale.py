@@ -33,12 +33,12 @@ D = 64
 def main():
     spark = get_spark("smoke-ann-scale")
     spark.sparkContext.setLogLevel("ERROR")
-    from clickhub_spark.plans.queries_r9 import q_llm_knn_lsh_recall
-    from clickhub_spark.plans.queries_r10 import (
+    from clickhub_spark.plans.queries_llm import (
         q_llm_knn_ivf_recall,
+        q_llm_knn_lsh_recall,
         q_llm_knn_pq_recall,
+        q_llm_knn_pq_rerank_recall,
     )
-    from clickhub_spark.plans.queries_r11 import q_llm_knn_pq_rerank_recall
 
     out = {"n_vectors": N, "dim": D}
     with tempfile.TemporaryDirectory() as td:
@@ -89,7 +89,7 @@ def main():
     # gated at scale: ADC rank quality degrades with neighbor density
     # (distortion constant, true-neighbor gaps shrinking), which is
     # exactly why the certified serving path at scale is two-stage
-    # (queries_r11.q_llm_knn_pq_rerank_recall / knn.pq_rerank_topk)
+    # (queries_llm.q_llm_knn_pq_rerank_recall / knn.pq_rerank_topk)
     ok = (
         ivf.n_vectors == N
         and ivf.recall_ge_050 == 1

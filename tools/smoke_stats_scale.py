@@ -45,14 +45,14 @@ def main() -> None:
     base.write.mode("overwrite").parquet("/tmp/smoke_stats_events")
     spark.read.parquet("/tmp/smoke_stats_events").createOrReplaceTempView("events")
 
-    from clickhub_spark.plans import all_specs, queries_r5c, queries_r6
+    from clickhub_spark.plans import all_specs, queries_agg
 
     def view_load(spark_, _sf, name):  # the smoke's table IS the view
         return spark_.table("events")
 
-    # the plan modules bound `load` at import time — patch their names
-    orig = (queries_r5c.load, queries_r6.load)
-    queries_r5c.load = queries_r6.load = view_load
+    # the plan module bound `load` at import time — patch its name
+    orig = queries_agg.load
+    queries_agg.load = view_load
     try:
         specs = all_specs()
         out = {"n_rows": n}
@@ -64,7 +64,7 @@ def main() -> None:
         out["loadavg_1m"] = round(os.getloadavg()[0], 2)
         print(json.dumps(out))
     finally:
-        queries_r5c.load, queries_r6.load = orig
+        queries_agg.load = orig
 
 
 if __name__ == "__main__":
