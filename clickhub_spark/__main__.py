@@ -22,6 +22,8 @@ import os
 import sys
 import uuid
 
+from clickhub_spark.sqltext import split_top
+
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="clickhub_spark")
@@ -289,7 +291,7 @@ def main(argv: list[str] | None = None) -> int:
         serve(orch, args.host, args.port)
     elif args.cmd == "sql":
         from clickhub_spark.catalog import register_final_views, register_views
-        from clickhub_spark.ddl import Warehouse, _split_top
+        from clickhub_spark.ddl import Warehouse
         from clickhub_spark.sql_compat import run
 
         if not args.query and not args.file:
@@ -308,7 +310,7 @@ def main(argv: list[str] | None = None) -> int:
         if args.file:
             with open(args.file, encoding="utf-8") as f:
                 text = f.read()
-        for stmt in _split_top(text, ";"):
+        for stmt in split_top(text, ";"):
             verb = stmt.lstrip().split(None, 1)[0].upper() if stmt.strip() else ""
             if verb in (
                 "CREATE", "DROP", "TRUNCATE", "INSERT", "ALTER", "OPTIMIZE",

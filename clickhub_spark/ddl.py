@@ -36,6 +36,10 @@ the machinery that already implements their semantics Spark-first:
 Table metadata persists as ``_ddl.json`` beside the data so a new
 session (or a crashed one) reloads the warehouse from disk — the
 analog of ClickHouse's metadata/*.sql files.
+
+Statement text is split with the shared lexical primitives of
+sqltext.py (string literals, bracket depth, matching close paren,
+top-level separators) — the same rules the SELECT shim uses.
 """
 
 from __future__ import annotations
@@ -63,6 +67,14 @@ from pyspark.sql.types import (
     StructField,
     StructType,
     TimestampType,
+)
+
+from clickhub_spark.sqltext import (
+    find_code,
+    find_top,
+    matching_close,
+    split_quoted,
+    split_top,
 )
 
 
@@ -281,40 +293,6 @@ def _check_partition_value(value: str) -> None:
         raise DdlError(f"invalid partition value {value!r}")
 
 
-def _split_top(text: str, sep: str = ",") -> list[str]:
-    """Split at top-level ``sep`` — nested parens and single-quoted
-    strings (with backslash escapes) are opaque."""
-    parts, depth, buf, i = [], 0, [], 0
-    in_str = False
-    while i < len(text):
-        ch = text[i]
-        if in_str:
-            if ch == "\\" and i + 1 < len(text):
-                buf.append(text[i : i + 2])
-                i += 2
-                continue
-            if ch == "'":
-                in_str = False
-            buf.append(ch)
-        elif ch == "'":
-            in_str = True
-            buf.append(ch)
-        elif ch == "(":
-            depth += 1
-            buf.append(ch)
-        elif ch == ")":
-            depth -= 1
-            buf.append(ch)
-        elif ch == sep and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    parts.append("".join(buf))
-    return [p.strip() for p in parts if p.strip()]
-
-
 def parse_type(ch: str) -> tuple[DataType, dict[int, str] | None]:
     """ClickHouse type text → (Spark type, enum labels or None)."""
     ch = ch.strip()
@@ -330,7 +308,7 @@ def parse_type(ch: str) -> tuple[DataType, dict[int, str] | None]:
         return parse_type(inner)
     if base in ("Enum8", "Enum16"):
         labels: dict[int, str] = {}
-        for entry in _split_top(inner or ""):
+        for entry in split_top(inner or ""):
             em = re.fullmatch(r"\s*'((?:[^'\\]|\\.)*)'\s*=\s*(-?\d+)\s*", entry)
             if not em:
                 raise DdlError(f"bad enum entry {entry!r} in {ch!r}")
@@ -344,7 +322,7 @@ def parse_type(ch: str) -> tuple[DataType, dict[int, str] | None]:
         # timezone / precision arguments don't change the Spark type
         return TimestampType(), None
     if base == "Decimal":
-        args = _split_top(inner or "")
+        args = split_top(inner or "")
         if len(args) != 2:
             raise DdlError(f"Decimal needs (precision, scale): {ch!r}")
         return DecimalType(int(args[0]), int(args[1])), None
@@ -355,7 +333,7 @@ def parse_type(ch: str) -> tuple[DataType, dict[int, str] | None]:
         elem, _ = parse_type(inner or "")
         return ArrayType(elem, True), None
     if base == "Map":
-        args = _split_top(inner or "")
+        args = split_top(inner or "")
         if len(args) != 2:
             raise DdlError(f"Map needs (key, value): {ch!r}")
         k, _ = parse_type(args[0])
@@ -363,7 +341,7 @@ def parse_type(ch: str) -> tuple[DataType, dict[int, str] | None]:
         return MapType(k, v, True), None
     if base == "Tuple":
         fields = []
-        for i, entry in enumerate(_split_top(inner or "")):
+        for i, entry in enumerate(split_top(inner or "")):
             nm = re.match(r"`?(\w+)`?\s+(.+)", entry, re.DOTALL)
             if nm:
                 fname, ftype = nm.group(1), nm.group(2)
@@ -393,16 +371,11 @@ def _parse_column(entry: str) -> ColumnDef:
         raise DdlError(f"unparseable column entry: {entry!r}")
     name = m.group(1) or m.group(2)
     rest = m.group(3).strip()
-    # split off modifiers (word boundaries outside quotes/parens —
-    # entries are single columns so a top-level keyword scan suffices)
+    # the first top-level modifier keyword ends the type expression
     materialized = default = None
-    upper = rest.upper()
-    cut = len(rest)
-    first_mod = None
-    for kw in _MODIFIERS:
-        pos = _find_keyword(upper, kw)
-        if pos is not None and pos < cut:
-            cut, first_mod = pos, kw
+    mod = find_top(rest, rf"(?i)\b({'|'.join(_MODIFIERS)})\b")
+    cut = mod.start() if mod else len(rest)
+    first_mod = mod.group(1).upper() if mod else None
     type_text = rest[:cut].strip()
     tail = rest[cut:].strip()
     if first_mod == "MATERIALIZED":
@@ -414,41 +387,11 @@ def _parse_column(entry: str) -> ColumnDef:
     return ColumnDef(name, type_text, spark_type, labels, materialized, default)
 
 
-def _find_keyword(upper: str, kw: str) -> int | None:
-    """Position of top-level keyword ``kw`` (outside parens/quotes)."""
-    depth = 0
-    in_str = False
-    i = 0
-    n = len(upper)
-    while i < n:
-        ch = upper[i]
-        if in_str:
-            if ch == "\\":
-                i += 2
-                continue
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and upper.startswith(kw, i):
-            before_ok = i == 0 or not (upper[i - 1].isalnum() or upper[i - 1] == "_")
-            j = i + len(kw)
-            after_ok = j == n or not (upper[j].isalnum() or upper[j] == "_")
-            if before_ok and after_ok:
-                return i
-        i += 1
-    return None
-
-
 def _key_list(text: str) -> list[str]:
     text = text.strip()
     if text.startswith("(") and text.endswith(")"):
         text = text[1:-1]
-    return [c.strip().strip("`") for c in _split_top(text)]
+    return [c.strip().strip("`") for c in split_top(text)]
 
 
 def parse_create_table(sql: str) -> TableDef:
@@ -466,31 +409,12 @@ def parse_create_table(sql: str) -> TableDef:
     if_not_exists = m.group(1) is not None
     database = m.group(2) or "default"
     name = m.group(3)
-    # find the matching close paren of the column list
     start = m.end() - 1
-    depth = 0
-    in_str = False
-    end = None
-    for i in range(start, len(sql)):
-        ch = sql[i]
-        if in_str:
-            if ch == "\\":
-                continue
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                end = i
-                break
+    end = matching_close(sql, start)
     if end is None:
         raise DdlError("unbalanced parens in CREATE TABLE")
     body = sql[start + 1 : end]
-    columns = [_parse_column(entry) for entry in _split_top(body)]
+    columns = [_parse_column(entry) for entry in split_top(body)]
     if not columns:
         raise DdlError("CREATE TABLE with empty column list")
     tail = sql[end + 1 :]
@@ -500,7 +424,7 @@ def parse_create_table(sql: str) -> TableDef:
         raise DdlError("CREATE TABLE without ENGINE clause")
     engine = em.group(1)
     engine_args = (
-        [a.strip().strip("'") for a in _split_top(em.group(3))]
+        [a.strip().strip("'") for a in split_top(em.group(3))]
         if em.group(3)
         else []
     )
@@ -528,7 +452,7 @@ def parse_create_table(sql: str) -> TableDef:
     settings: dict[str, str] = {}
     sm = re.search(r"SETTINGS\s+(.*)$", tail, re.IGNORECASE | re.DOTALL)
     if sm:
-        for kv in _split_top(sm.group(1)):
+        for kv in split_top(sm.group(1)):
             k, _, v = kv.partition("=")
             if k.strip():
                 settings[k.strip()] = v.strip()
@@ -577,9 +501,9 @@ def parse_insert_values(sql: str):
     cols, rows of python literals).  Covers the literal forms the
     dialect uses: single-quoted strings, ints, floats, NULL.
 
-    The column list is scanned paren-aware via _split_top (VERDICT
-    r12 "what's wrong" #3: a ``[^)]*`` regex mis-split the list at
-    the first ``)`` inside a parenthesized entry); entries that are
+    The column list runs to its matching close paren (VERDICT r12
+    "what's wrong" #3: a ``[^)]*`` regex mis-split the list at the
+    first ``)`` inside a parenthesized entry); entries that are
     not bare column names — expressions, DEFAULT — are rejected with
     a clear error rather than mis-parsed."""
     m = re.match(
@@ -594,27 +518,10 @@ def parse_insert_values(sql: str):
     rest = m.group(3).lstrip()
     cols = None
     if rest.startswith("("):
-        # scan to the MATCHING close paren (string-literal aware) —
-        # everything inside is the column list, VALUES must follow
-        depth, i, in_str = 0, 0, False
-        while i < len(rest):
-            ch = rest[i]
-            if in_str:
-                if ch == "\\":
-                    i += 2
-                    continue
-                if ch == "'":
-                    in_str = False
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            i += 1
-        if depth != 0:
+        # everything inside the matching close paren is the column
+        # list; VALUES must follow
+        i = matching_close(rest, 0)
+        if i is None:
             raise DdlError(
                 f"unbalanced column list in INSERT: {sql[:80]!r}"
             )
@@ -624,7 +531,7 @@ def parse_insert_values(sql: str):
             raise DdlError(
                 f"not an INSERT … VALUES statement: {sql[:80]!r}"
             )
-        entries = _split_top(rest[1:i])
+        entries = split_top(rest[1:i])
         bad = [e for e in entries if not re.fullmatch(r"`?\w+`?", e)]
         if bad:
             raise DdlError(
@@ -643,11 +550,11 @@ def parse_insert_values(sql: str):
             )
         rest = mv.group(1)
     rows = []
-    for tup in _split_top(rest.strip()):
+    for tup in split_top(rest.strip()):
         tup = tup.strip()
         if not (tup.startswith("(") and tup.endswith(")")):
             raise DdlError(f"bad VALUES tuple: {tup!r}")
-        rows.append([_literal(v) for v in _split_top(tup[1:-1])])
+        rows.append([_literal(v) for v in split_top(tup[1:-1])])
     if not rows:
         raise DdlError("INSERT with no VALUES tuples")
     return database, table, cols, rows
@@ -695,7 +602,6 @@ def mv_block_output(
     name.  String literals are never touched.  ``rewrite_refs`` lets
     the caller map OTHER table references (e.g. the Warehouse's
     db.tbl → db_tbl view names) before execution."""
-    from clickhub_spark.sql_compat import _split_quoted
     from clickhub_spark.sql_compat import run as _run
 
     db, name = source_q.split(".", 1)
@@ -716,7 +622,7 @@ def mv_block_output(
         alias = mm.group(2) or f" AS {name}"
         return f"{mm.group(1)}__mv_batch{alias}"
 
-    segs = _split_quoted(mv_select)
+    segs = split_quoted(mv_select)
     for k, (lit, txt) in enumerate(segs):
         if lit:
             continue
@@ -1042,7 +948,7 @@ class Warehouse:
             raise DdlError("INSERT … SELECT into KeeperMap is not supported")
         schema = td.ingest_schema()
         names = (
-            [c.strip().strip("`") for c in _split_top(m.group(3))]
+            [c.strip().strip("`") for c in split_top(m.group(3))]
             if m.group(3)
             else [f.name for f in schema.fields]
         )
@@ -1197,7 +1103,7 @@ class Warehouse:
         if not m:
             raise DdlError(f"unparseable RENAME TABLE: {sql[:60]!r}")
         moves = []
-        for pair in _split_top(m.group(1)):
+        for pair in split_top(m.group(1)):
             pm = re.fullmatch(
                 r"\s*(?:`?(\w+)`?\.)?`?(\w+)`?\s+TO\s+"
                 r"(?:`?(\w+)`?\.)?`?(\w+)`?\s*",
@@ -1291,9 +1197,7 @@ class Warehouse:
         their registered ``db_table`` view names (the dialect shim
         only strips the reference's git./default. prefixes).  String
         literals are inert (a 'db.table' constant stays verbatim)."""
-        from clickhub_spark.sql_compat import _split_quoted
-
-        segs = _split_quoted(sql)
+        segs = split_quoted(sql)
         for k, (lit, txt) in enumerate(segs):
             if lit:
                 continue
@@ -1636,20 +1540,12 @@ class Warehouse:
         td = self._require(f"{db}.{name}")
         kind, rest = m.group(3).upper(), m.group(4).strip()
         in_partition: str | None = None
-        from clickhub_spark.sql_compat import _in_spans, _literal_spans
-
-        pm = None
-        rest_spans = _literal_spans(rest)
-        for cand in re.finditer(
-            r"(?is)\bIN\s+PARTITION\s+(?:'([^']*)'|(\w+))\s+(?=WHERE\s)",
-            rest,
-        ):
-            # the keyword inside a string literal is data, not clause
-            # (a predicate like note = 'IN PARTITION 5 WHERE x' must
-            # not silently rescope the mutation)
-            if not _in_spans(rest_spans, cand.start()):
-                pm = cand
-                break
+        # the keyword inside a string literal is data, not clause (a
+        # predicate like note = 'IN PARTITION 5 WHERE x' must not
+        # silently rescope the mutation)
+        pm = find_code(
+            rest, r"(?is)\bIN\s+PARTITION\s+(?:'([^']*)'|(\w+))\s+(?=WHERE\s)"
+        )
         if pm:
             in_partition = pm.group(1) if pm.group(1) is not None else pm.group(2)
             rest = (rest[: pm.start()].strip() + " " + rest[pm.end():].strip()).strip()
@@ -1669,7 +1565,7 @@ class Warehouse:
             if not um:
                 raise DdlError("ALTER TABLE … UPDATE needs a WHERE clause")
             assigns = {}
-            for entry in _split_top(um.group(1)):
+            for entry in split_top(um.group(1)):
                 am = re.match(r"(?s)`?(\w+)`?\s*=\s*(.+)$", entry.strip())
                 if not am:
                     raise DdlError(f"bad UPDATE assignment: {entry!r}")

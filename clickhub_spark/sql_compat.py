@@ -6,12 +6,16 @@ statement it ever runs is cited below); ``translate`` rewrites the
 ClickHouse-isms to Spark SQL and ``run`` executes against registered
 views.  This is a conservative, pattern-scoped translator for the
 app-surface dialect + the common ClickHouse function names — not a
-general SQL transpiler.  String literals are inert for the call
-rewrites and the function-rename pass (quoted text, incl. backslash
-escapes and doubled ``''``, is never rewritten — round 6); the few
-remaining keyword-level passes (PREWHERE, WITH TOTALS, FINAL) are
-still textual, and none of the reference's statements put those
-keywords inside literals.
+general SQL transpiler.  What counts as a string literal, a bracket
+depth, a matching close paren, a top-level comma and the derived
+table around a clause is defined once in sqltext.py.  The call
+rewrites and the clause passes find their targets through those
+primitives, so quoted text stays inert and a clause inside a
+subquery is rewritten in that subquery.  A few statement-level
+probes (SAMPLE, trailing FORMAT/SETTINGS, WITH FILL, ASOF JOIN,
+APPLY, the unsupported-function pointers) still look only at the
+FIRST occurrence of their keyword and pass through when it is
+quoted.
 
 Reference statements covered (all of them):
 - SELECT max(time) as max_time FROM git.commits WHERE repo_name='x'
@@ -42,7 +46,17 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from clickhub_spark.ddl import _split_top
+from clickhub_spark.sqltext import (
+    depth,
+    find_code,
+    find_top,
+    in_literal,
+    iter_code,
+    matching_close,
+    splice_enclosing,
+    split_quoted,
+    split_top,
+)
 
 #: ClickHouse function name → Spark SQL equivalent (1:1 renames).
 _FN_RENAMES = {
@@ -182,9 +196,8 @@ def _rewrite_array_literals(sql: str) -> str:
     (identifier char, ``)``, ``]``, a closing backquote or double
     quote from a quoted identifier) with no whitespace, the way
     subscripts are written; after a space, comma, operator, or at
-    start it is an array literal.  Balanced scan so nesting works;
-    brackets inside single-quoted string literals pass through
-    untouched, honoring both backslash escapes and doubled ``''``.
+    start it is an array literal.  Nesting works; brackets inside
+    string literals pass through untouched.
 
     Known unsupported form: a subscript separated from its base by
     whitespace (``x [1]``) is classified as an array literal — the
@@ -192,85 +205,17 @@ def _rewrite_array_literals(sql: str) -> str:
     [1, 2]`` (keyword then literal), so write subscripts unspaced."""
     out = list(sql)
     stack = []  # replacement for each open bracket's closer: ")" or "]"
-    in_string = False
-    i = 0
-    while i < len(sql):
-        ch = sql[i]
-        if in_string:
-            if ch == "\\":  # ClickHouse strings are backslash-escaped
-                i += 2
-                continue
-            if ch == "'":
-                in_string = False  # a doubled '' reads as close+reopen
-        elif ch == "'":
-            in_string = True
-        elif ch == "[":
+    for m in iter_code(sql, r"[][]"):
+        i = m.start()
+        if sql[i] == "[":
             prev = sql[i - 1] if i else ""
             literal = not (prev.isalnum() or prev in '_)]`"')
             stack.append(")" if literal else "]")
             if literal:
                 out[i] = "array("
-        elif ch == "]" and stack:
+        elif stack:
             out[i] = stack.pop()
-        i += 1
     return "".join(out)
-
-
-def _split_quoted(sql: str) -> list[tuple[bool, str]]:
-    """Split SQL into (is_literal, text) segments; literal segments
-    include their quotes and honor backslash escapes and doubled
-    ``''``.  An unterminated literal swallows the rest of the string
-    (matching how the engine would fail to parse it anyway)."""
-    segs: list[tuple[bool, str]] = []
-    i, n, start = 0, len(sql), 0
-    while i < n:
-        if sql[i] == "'":
-            if i > start:
-                segs.append((False, sql[start:i]))
-            j = i + 1
-            closed = False
-            while j < n:
-                if sql[j] == "\\":
-                    j += 2
-                    continue
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    closed = True
-                    break
-                j += 1
-            if not closed:
-                segs.append((True, sql[i:]))
-                return segs
-            segs.append((True, sql[i : j + 1]))
-            start = i = j + 1
-        else:
-            i += 1
-    if start < n:
-        segs.append((False, sql[start:]))
-    return segs
-
-
-def _literal_spans(sql: str) -> list[tuple[int, int]]:
-    """[start, end) index ranges of single-quoted literals in ``sql``
-    (same quoting rules as _split_quoted).  Used by the call-rewrite
-    passes to skip matches that START inside a literal — a mapped
-    pattern like ``addDays(`` occurring in a string constant
-    (``SELECT 'see addDays(a,b)'``) must stay verbatim (ADVICE r6:
-    only the rename pass was literal-safe; the call scanner only
-    guarded its ARGUMENT split, not the match itself)."""
-    spans = []
-    pos = 0
-    for is_lit, seg in _split_quoted(sql):
-        if is_lit:
-            spans.append((pos, pos + len(seg)))
-        pos += len(seg)
-    return spans
-
-
-def _in_spans(spans: list[tuple[int, int]], i: int) -> bool:
-    return any(s <= i < e for s, e in spans)
 
 
 # table → sampling-key expression for SAMPLE … OFFSET (ClickHouse
@@ -290,143 +235,69 @@ def set_sample_key(table: str, key_expr: str) -> None:
 def _rewrite_call(
     sql: str, name: str, render, nargs: int = 1, with_tail: bool = False
 ) -> str:
-    """Rewrite every ``name(...)`` call, scanning balanced parentheses
-    AND square brackets so nested calls like
-    ``toStartOfWeek(CAST(x AS DATE))`` and array literals like
-    ``arrayExists(x -> x > 2, [1, 2, 3])`` split correctly.  Commas,
-    parens, and brackets inside single-quoted string literals are
-    inert (honoring backslash escapes and doubled ``''``, the same
-    quoting rules _rewrite_array_literals applies) — without this,
-    ``splitByChar(',', s)`` split ON the quoted comma and rendered
-    corrupted SQL (round-6 regression test).
+    """Rewrite every ``name(...)`` call outside string literals.
     ``render`` receives the list of top-level comma-split arguments
     (plus, when ``with_tail`` is set, the SQL text FOLLOWING the
     close paren — so a render can adapt to window position, e.g.
-    sumIf's coalesce wrapper is illegal before ``OVER``).
-    Matches that START inside a string literal are skipped entirely
-    (``_literal_spans`` — ADVICE r6)."""
-    out = []
-    i = 0
+    sumIf's coalesce wrapper is illegal before ``OVER``).  A call
+    with fewer than ``nargs`` arguments, or one that never closes, is
+    left untouched."""
     pat = re.compile(rf"\b{name}\s*\(")
-    spans = _literal_spans(sql)
-    while True:
-        m = pat.search(sql, i)
-        if not m:
-            out.append(sql[i:])
-            return "".join(out)
-        if _in_spans(spans, m.start()):
-            out.append(sql[i : m.end()])
-            i = m.end()
-            continue
+    if not pat.search(sql):
+        return sql
+    out, i = [], 0
+    for m in iter_code(sql, pat):
+        if m.start() < i:
+            continue  # inside the arguments of a call already rendered
+        close = matching_close(sql, m.end() - 1)
+        if close is None:
+            break
+        args = split_top(sql[m.end() : close], keep_empty=True)
         out.append(sql[i : m.start()])
-        depth, j, args, start = 1, m.end(), [], m.end()
-        brackets = 0
-        in_str = False
-        while j < len(sql) and depth:
-            ch = sql[j]
-            if in_str:
-                if ch == "\\":
-                    j += 2
-                    continue
-                if ch == "'":
-                    if j + 1 < len(sql) and sql[j + 1] == "'":
-                        j += 2  # doubled '' stays inside the literal
-                        continue
-                    in_str = False
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    args.append(sql[start:j].strip())
-            elif ch == "[":
-                brackets += 1
-            elif ch == "]":
-                brackets -= 1
-            elif ch == "," and depth == 1 and brackets == 0:
-                args.append(sql[start:j].strip())
-                start = j + 1
-            j += 1
-        if depth or len(args) < nargs:
-            out.append(sql[m.start() : j])  # malformed: leave untouched
-        else:
-            # the scanner resumes AFTER the close paren, so a same-name
-            # call nested in the ARGUMENTS would survive untranslated
-            # (round-15 probing: `tuple(tuple(1, 2), 3)` kept the
-            # inner call) — recurse into each argument first.  Safe:
-            # args shrink strictly, and renders receive the rewritten
-            # inner text exactly as they would from any other pass
-            # that ran earlier.
-            if re.search(rf"\b{name}\s*\(", "".join(args)):
-                args = [
-                    _rewrite_call(a, name, render, nargs, with_tail)
-                    for a in args
-                ]
-            out.append(render(args, sql[j:]) if with_tail else render(args))
-        i = j
+        i = close + 1
+        if len(args) < nargs:
+            out.append(sql[m.start() : i])
+            continue
+        # the scan resumes after the close paren, so a same-name call
+        # nested in the arguments (`tuple(tuple(1, 2), 3)`) is
+        # rewritten first, by recursion into each argument
+        if pat.search("".join(args)):
+            args = [
+                _rewrite_call(a, name, render, nargs, with_tail) for a in args
+            ]
+        out.append(render(args, sql[i:]) if with_tail else render(args))
+    out.append(sql[i:])
+    return "".join(out)
 
 
 def _rewrite_parametric(sql: str, name: str, render) -> str:
     """Rewrite ClickHouse parameterized aggregates ``name(params)(args)``
-    (e.g. ``quantile(0.5)(x)``); ``render`` receives (params, args).
-    Matches that START inside a string literal are skipped
-    (``_literal_spans`` — ADVICE r6)."""
-    out = []
-    i = 0
+    (e.g. ``quantile(0.5)(x)``) outside string literals; ``render``
+    receives (params, args)."""
     pat = re.compile(rf"\b{name}\s*\(")
-    spans = _literal_spans(sql)
-    while True:
-        m = pat.search(sql, i)
-        if not m:
-            out.append(sql[i:])
-            return "".join(out)
-        if _in_spans(spans, m.start()):
-            out.append(sql[i : m.end()])
-            i = m.end()
+    if not pat.search(sql):
+        return sql
+    out, i = [], 0
+    for m in iter_code(sql, pat):
+        if m.start() < i:
             continue
-
-        def scan(start: int) -> tuple[list[str], int]:
-            depth, j, args, s = 1, start, [], start
-            in_str = False
-            while j < len(sql) and depth:
-                ch = sql[j]
-                if in_str:
-                    if ch == "\\":
-                        j += 2
-                        continue
-                    if ch == "'":
-                        if j + 1 < len(sql) and sql[j + 1] == "'":
-                            j += 2
-                            continue
-                        in_str = False
-                elif ch == "'":
-                    in_str = True
-                elif ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        args.append(sql[s:j].strip())
-                elif ch == "," and depth == 1:
-                    args.append(sql[s:j].strip())
-                    s = j + 1
-                j += 1
-            return (args, j) if depth == 0 else ([], -1)
-
-        params, j = scan(m.end())
-        if j < 0 or j >= len(sql) or sql[j] != "(":
-            out.append(sql[i : max(j, m.end())])
-            i = max(j, m.end())
+        close = matching_close(sql, m.end() - 1)
+        if close is None:
             continue
-        args, j2 = scan(j + 1)
-        if j2 < 0:
-            out.append(sql[i:j2])
-            return "".join(out)
+        if not sql.startswith("(", close + 1):
+            out.append(sql[i : close + 1])
+            i = close + 1
+            continue
+        args_close = matching_close(sql, close + 1)
+        if args_close is None:
+            break
+        params = split_top(sql[m.end() : close], keep_empty=True)
+        args = split_top(sql[close + 2 : args_close], keep_empty=True)
         out.append(sql[i : m.start()])
         out.append(render(params, args))
-        i = j2
+        i = args_close + 1
+    out.append(sql[i:])
+    return "".join(out)
 
 
 def _sequence_sql(params: list[str], args: list[str], count: bool) -> str:
@@ -687,8 +558,8 @@ def _retention_sql(args: list[str]) -> str:
     (1-based, matching ClickHouse's r[i]) — Spark's bracket subscript
     on arrays is 0-based and is NOT rewritten by the shim."""
     if not args or not any(a.strip() for a in args):
-        # a zero-argument call reaches here as args == [''] (the
-        # balanced-paren scanner yields one empty slice)
+        # a zero-argument call reaches here as args == [''] (one
+        # empty argument)
         raise ValueError("retention() needs at least one condition")
     ms = [
         f"MAX(IF(COALESCE(({c}), false), 1, 0))" for c in args
@@ -793,6 +664,9 @@ def _sequence_next_node_sql(params: list[str], args: list[str]) -> str:
     return f"element_at(transform(array({arr}), a -> {body}), 1)"
 
 
+_LIMIT_BY = r"LIMIT\s+\d+\s*(?:,\s*\d+\s+|OFFSET\s+\d+\s+)?\s*BY\b"
+
+
 def _rewrite_limit_by(sql: str) -> str:
     """ClickHouse ``ORDER BY o LIMIT n BY g [LIMIT m]`` (first n rows
     per group, then an optional overall limit) → a row_number window
@@ -803,86 +677,25 @@ def _rewrite_limit_by(sql: str) -> str:
     the next n — probe battery 7) filter ``m < rn <= m + n`` instead.
     Scoped to a single top-level ORDER BY/LIMIT BY tail — the dialect
     subset the shim supports."""
-    if not re.search(
-        r"(?i)\bLIMIT\s+\d+\s*(?:,\s*\d+\s+|OFFSET\s+\d+\s+)?\s*BY\b", sql
-    ):
+    limit_by = rf"(?i)\b{_LIMIT_BY}"
+    if not re.search(limit_by, sql):
         return sql
-    # locate the LIMIT n BY and the statement's own ORDER BY at paren
-    # DEPTH 0 outside string literals — a lazy regex latched onto the
-    # first ORDER BY anywhere, including inside an OVER(...) clause,
-    # shredding e.g. a QUALIFY-rewritten statement (probe battery 6)
-    spans = _literal_spans(sql)
-    depth = 0
-    order_start = order_kw_end = None
-    limit_start = None
-    j = 0
-    while j < len(sql):
-        if _in_spans(spans, j):
-            j += 1
+    # the statement's own ORDER BY and LIMIT n BY are the depth-0 ones
+    # (an ORDER BY inside OVER(...) is not the statement's)
+    order_m = limit_start = None
+    scan = rf"(?i)\b(?:(?P<order>ORDER\s+BY\b)|{_LIMIT_BY})"
+    for m in iter_code(sql, scan, top=True):
+        if m.group("order"):
+            order_m = m
             continue
-        ch = sql[j]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and ch.isalpha()
-            and (j == 0 or not (sql[j - 1].isalnum() or sql[j - 1] == "_"))
-        ):
-            mo = re.match(r"ORDER\s+BY\b", sql[j:], re.IGNORECASE)
-            if mo:
-                order_start, order_kw_end = j, j + mo.end()
-                j = order_kw_end
-                continue
-            if re.match(
-                r"LIMIT\s+\d+\s*(?:,\s*\d+\s+|OFFSET\s+\d+\s+)?\s*BY\b",
-                sql[j:],
-                re.IGNORECASE,
-            ):
-                limit_start = j
-                break
-        j += 1
+        limit_start = m.start()
+        break
     if limit_start is None:
-        # LIMIT n BY at depth > 0: inside a derived-table subquery —
-        # recurse into the enclosing paren (same splice as QUALIFY)
-        for m_lb in re.finditer(
-            r"\bLIMIT\s+\d+\s*(?:,\s*\d+\s+|OFFSET\s+\d+\s+)?\s*BY\b",
-            sql,
-            re.IGNORECASE,
-        ):
-            if _in_spans(spans, m_lb.start()):
-                continue
-            open_stack: list[int] = []
-            for k in range(m_lb.start()):
-                if _in_spans(spans, k):
-                    continue
-                if sql[k] == "(":
-                    open_stack.append(k)
-                elif sql[k] == ")" and open_stack:
-                    open_stack.pop()
-            if not open_stack:
-                return sql
-            open_pos = open_stack[-1]
-            d2, k = 1, open_pos + 1
-            while k < len(sql) and d2:
-                if not _in_spans(spans, k):
-                    if sql[k] == "(":
-                        d2 += 1
-                    elif sql[k] == ")":
-                        d2 -= 1
-                k += 1
-            if d2:
-                return sql
-            close = k - 1
-            inner = sql[open_pos + 1 : close]
-            new_inner = _rewrite_limit_by(inner)
-            if new_inner == inner:
-                return sql
-            return _rewrite_limit_by(
-                sql[: open_pos + 1] + new_inner + sql[close:]
-            )
-        return sql
+        # LIMIT n BY inside a derived-table subquery
+        m_lb = find_code(sql, limit_by)
+        if m_lb is None:
+            return sql
+        return splice_enclosing(sql, m_lb.start(), _rewrite_limit_by)
     head_m = re.match(
         r"(?is)LIMIT\s+(?P<a>\d+)\s*"
         r"(?:,\s*(?P<b>\d+)\s+|OFFSET\s+(?P<off>\d+)\s+)?"
@@ -891,31 +704,13 @@ def _rewrite_limit_by(sql: str) -> str:
     )
     if not head_m:
         return sql
-    # the BY list may contain EXPRESSIONS (lower(g), id % 2) — scan
-    # balanced text up to a depth-0 trailing `LIMIT n` or statement
-    # end instead of a plain-column regex (probe battery 8)
+    # the BY list may contain EXPRESSIONS (lower(g), id % 2): it runs
+    # to a depth-0 trailing `LIMIT n` or the statement end
     by_start = limit_start + head_m.end()
-    j2, d3 = by_start, 0
     by_end, outer_n = len(sql), None
-    while j2 < len(sql):
-        if _in_spans(spans, j2):
-            j2 += 1
-            continue
-        c3 = sql[j2]
-        if c3 == "(":
-            d3 += 1
-        elif c3 == ")":
-            d3 -= 1
-        elif (
-            d3 == 0
-            and c3 in "Ll"
-            and not (sql[j2 - 1].isalnum() or sql[j2 - 1] == "_")
-        ):
-            mo2 = re.match(r"LIMIT\s+(\d+)\s*;?\s*$", sql[j2:], re.IGNORECASE)
-            if mo2:
-                by_end, outer_n = j2, mo2.group(1)
-                break
-        j2 += 1
+    m_outer = find_top(sql, r"(?i)\bLIMIT\s+(\d+)\s*;?\s*$", by_start)
+    if m_outer:
+        by_end, outer_n = m_outer.start(), m_outer.group(1)
     by_text = sql[by_start:by_end].strip().rstrip(";").strip()
     if not by_text:
         return sql
@@ -923,21 +718,10 @@ def _rewrite_limit_by(sql: str) -> str:
     # is a form this rewrite does not support (LIMIT n OFFSET m,
     # SETTINGS, FORMAT after the BY list): pass the SQL through
     # unchanged rather than swallowing the clause into PARTITION BY
-    for m_kw in re.finditer(
-        r"(?i)\b(LIMIT|OFFSET|SETTINGS|FORMAT|UNION|INTERSECT|EXCEPT)\b",
-        by_text,
+    if find_top(
+        by_text, r"(?i)\b(LIMIT|OFFSET|SETTINGS|FORMAT|UNION|INTERSECT|EXCEPT)\b"
     ):
-        d4 = 0
-        bad = True
-        for k4 in range(m_kw.start()):
-            if by_text[k4] == "(":
-                d4 += 1
-            elif by_text[k4] == ")":
-                d4 -= 1
-        if d4 != 0:
-            bad = False  # inside an expression's parens: fine
-        if bad and not _in_spans(_literal_spans(by_text), m_kw.start()):
-            return sql
+        return sql
     # ClickHouse offset forms: LIMIT off, n BY g  /  LIMIT n OFFSET
     # off BY g — skip the first `off` rows of each group
     if head_m.group("b") is not None:
@@ -946,9 +730,9 @@ def _rewrite_limit_by(sql: str) -> str:
         skip, keep = int(head_m.group("off")), int(head_m.group("a"))
     else:
         skip, keep = 0, int(head_m.group("a"))
-    if order_start is not None and order_start < limit_start:
-        body = sql[:order_start].strip()
-        order = sql[order_kw_end:limit_start].strip()
+    if order_m is not None:
+        body = sql[: order_m.start()].strip()
+        order = sql[order_m.end() : limit_start].strip()
     else:
         body = sql[:limit_start].strip()
         # with no ORDER BY, ClickHouse keeps an arbitrary n per group;
@@ -964,7 +748,7 @@ def _rewrite_limit_by(sql: str) -> str:
             t
             if lit
             else re.sub(r"\b[A-Za-z_]\w*\.(\w+)\b", r"\1", t)
-            for lit, t in _split_quoted(text)
+            for lit, t in split_quoted(text)
         )
 
     by = _strip_quals(by_text)
@@ -981,104 +765,51 @@ def _rewrite_limit_by(sql: str) -> str:
 def _rewrite_limit_with_ties(sql: str) -> str:
     """ClickHouse ``ORDER BY o LIMIT n WITH TIES`` — keep every row
     tied with the n-th on the ORDER BY key — as a rank() window (rank
-    ≤ n IS the with-ties cut).  Depth-0, literal-safe scan like
-    _rewrite_limit_by; table qualifiers stripped from the ORDER list
-    for the wrapped scope.  The bare text "WITH TIES" in a string
-    literal or a CTE/identifier named ``ties`` is NOT a match (ADVICE
-    r13): only a depth-0, non-literal ``LIMIT n WITH TIES`` token
+    ≤ n IS the with-ties cut); table qualifiers stripped from the
+    ORDER list for the wrapped scope.  The bare text "WITH TIES" in a
+    string literal or a CTE/identifier named ``ties`` is NOT a match
+    (ADVICE r13): only a depth-0, non-literal ``LIMIT n WITH TIES`` token
     triggers a rewrite (or, at depth > 0, a recursion into the
     enclosing paren); with no real match the SQL passes through, and
     the ValueError is reserved for a real match lacking ORDER BY."""
-    if not re.search(r"(?i)\bLIMIT\s+\d+\s+WITH\s+TIES\b", sql):
+    with_ties = r"(?i)\bLIMIT\s+\d+\s+WITH\s+TIES\b"
+    if not re.search(with_ties, sql):
         return sql
-    spans = _literal_spans(sql)
-    depth = 0
-    order_start = order_kw_end = None
-    limit_m = None
-    j = 0
-    while j < len(sql):
-        if _in_spans(spans, j):
-            j += 1
+    order_m = limit_m = None
+    for m in iter_code(
+        sql,
+        r"(?i)\b(?:(?P<order>ORDER\s+BY\b)|LIMIT\s+(\d+)\s+WITH\s+TIES\s*;?\s*$)",
+        top=True,
+    ):
+        if m.group("order"):
+            order_m = m
             continue
-        ch = sql[j]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and ch.isalpha()
-            and (j == 0 or not (sql[j - 1].isalnum() or sql[j - 1] == "_"))
-        ):
-            mo = re.match(r"ORDER\s+BY\b", sql[j:], re.IGNORECASE)
-            if mo:
-                order_start, order_kw_end = j, j + mo.end()
-                j = order_kw_end
-                continue
-            ml = re.match(
-                r"LIMIT\s+(\d+)\s+WITH\s+TIES\s*;?\s*$", sql[j:], re.IGNORECASE
-            )
-            if ml:
-                limit_m = (j, ml)
-                break
-        j += 1
+        limit_m = m
+        break
     if limit_m is None:
-        # LIMIT n WITH TIES at depth > 0 (inside a derived-table
-        # subquery): recurse into the enclosing paren and splice —
-        # the same pattern as _rewrite_limit_by / _rewrite_qualify
-        for m_wt in re.finditer(
-            r"(?i)\bLIMIT\s+\d+\s+WITH\s+TIES\b", sql
-        ):
-            if _in_spans(spans, m_wt.start()):
-                continue
-            open_stack: list[int] = []
-            for k in range(m_wt.start()):
-                if _in_spans(spans, k):
-                    continue
-                if sql[k] == "(":
-                    open_stack.append(k)
-                elif sql[k] == ")" and open_stack:
-                    open_stack.pop()
-            if not open_stack:
-                return sql
-            open_pos = open_stack[-1]
-            d2, k = 1, open_pos + 1
-            while k < len(sql) and d2:
-                if not _in_spans(spans, k):
-                    if sql[k] == "(":
-                        d2 += 1
-                    elif sql[k] == ")":
-                        d2 -= 1
-                k += 1
-            if d2:
-                return sql
-            close = k - 1
-            inner = sql[open_pos + 1 : close]
-            new_inner = _rewrite_limit_with_ties(inner)
-            if new_inner == inner:
-                return sql
-            return _rewrite_limit_with_ties(
-                sql[: open_pos + 1] + new_inner + sql[close:]
-            )
-        return sql  # literal-only occurrences: pass through
-    if order_start is None:
+        # LIMIT n WITH TIES inside a derived-table subquery, or only
+        # in literals (then it passes through)
+        m_wt = find_code(sql, with_ties)
+        if m_wt is None:
+            return sql
+        return splice_enclosing(sql, m_wt.start(), _rewrite_limit_with_ties)
+    if order_m is None:
         raise ValueError(
             "unsupported LIMIT WITH TIES form: a top-level ORDER BY "
             "followed by LIMIT n WITH TIES at statement end is the "
             "supported dialect subset"
         )
-    lpos, ml = limit_m
     order = "".join(
         t
         if lit
         else re.sub(r"\b[A-Za-z_]\w*\.(\w+)\b", r"\1", t)
-        for lit, t in _split_quoted(sql[order_kw_end:lpos].strip())
+        for lit, t in split_quoted(sql[order_m.end() : limit_m.start()].strip())
     )
-    body = sql[:order_start].strip()
+    body = sql[: order_m.start()].strip()
     return (
         f"SELECT * EXCEPT (__rk) FROM (SELECT __wt.*, rank() OVER "
         f"(ORDER BY {order}) AS __rk FROM ({body}) __wt) "
-        f"WHERE __rk <= {ml.group(1)} ORDER BY {order}"
+        f"WHERE __rk <= {limit_m.group(2)} ORDER BY {order}"
     )
 
 
@@ -1108,79 +839,25 @@ def _non_aggregate_select_items(sql: str) -> list[str]:
     no aggregate-function call, aliases stripped — ClickHouse's (and
     Spark's own) ``GROUP BY ALL`` expansion rule.  Used to spell the
     grouping columns out when a construct needs them textually
-    (GROUP BY ALL WITH TOTALS).  A leading depth-0 WITH clause is
-    skipped (balanced scan to the top-level SELECT) so CTE-prefixed
-    statements expand instead of raising (ADVICE r14)."""
-    spans = _literal_spans(sql)
+    (GROUP BY ALL WITH TOTALS).  A leading WITH clause is skipped up
+    to the depth-0 SELECT, so CTE-prefixed statements expand instead
+    of raising (ADVICE r14)."""
     if re.match(r"(?is)\s*WITH\b", sql):
-        d, k, sel = 0, 0, None
-        while k < len(sql):
-            if _in_spans(spans, k):
-                k += 1
-                continue
-            c = sql[k]
-            if c == "(":
-                d += 1
-            elif c == ")":
-                d -= 1
-            elif (
-                d == 0
-                and c in "Ss"
-                and not (k and (sql[k - 1].isalnum() or sql[k - 1] == "_"))
-                and re.match(r"SELECT\b", sql[k:], re.IGNORECASE)
-            ):
-                sel = k
-                break
-            k += 1
-        if sel is None:
-            return []
-        return _non_aggregate_select_items(sql[sel:])
+        sel = find_top(sql, r"(?i)\bSELECT\b")
+        return [] if sel is None else _non_aggregate_select_items(sql[sel.start() :])
     m_sel = re.match(r"(?is)\s*SELECT\s+(DISTINCT\s+)?", sql)
     if not m_sel:
         return []
     # depth-0 FROM ends the select list
-    depth, j, from_pos = 0, m_sel.end(), None
-    while j < len(sql):
-        if _in_spans(spans, j):
-            j += 1
-            continue
-        ch = sql[j]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and ch in "Ff"
-            and re.match(r"FROM\b", sql[j:], re.IGNORECASE)
-            and not (sql[j - 1].isalnum() or sql[j - 1] == "_")
-        ):
-            from_pos = j
-            break
-        j += 1
-    if from_pos is None:
+    from_m = find_top(sql, r"(?i)\bFROM\b", m_sel.end())
+    if from_m is None:
         return []
-    items, buf, d2 = [], [], 0
-    for k in range(m_sel.end(), from_pos):
-        if _in_spans(spans, k):
-            buf.append(sql[k])
-            continue
-        c = sql[k]
-        if c == "(":
-            d2 += 1
-        elif c == ")":
-            d2 -= 1
-        if c == "," and d2 == 0:
-            items.append("".join(buf))
-            buf = []
-        else:
-            buf.append(c)
-    items.append("".join(buf))
+    items = split_top(sql[m_sel.end() : from_m.start()], keep_empty=True)
     out: list[str] = []
     for it in items:
         has_agg = any(
             re.search(rf"(?i)\b{re.escape(fn)}\s*\(", t)
-            for lit, t in _split_quoted(it)
+            for lit, t in split_quoted(it)
             if not lit
             for fn in _SPARK_AGG_NAMES
         ) or re.search(r"(?i)\bcount\s*\(\s*\*", it)
@@ -1189,7 +866,7 @@ def _non_aggregate_select_items(sql: str) -> list[str]:
         # GROUP BY is illegal SQL
         has_window = any(
             re.search(r"(?i)\bOVER\b", t)
-            for lit, t in _split_quoted(it)
+            for lit, t in split_quoted(it)
             if not lit
         )
         if has_agg or has_window:
@@ -1230,21 +907,8 @@ def _strip_implicit_alias(expr: str) -> str:
     if ident in _ALIAS_STOP:
         return expr
     head = expr[: m.start()].rstrip()
-    if not head:
-        return expr
-    spans = _literal_spans(expr)
-    if _in_spans(spans, m.start()):
-        return expr
-    # the identifier must sit at depth 0 of the item
-    d = 0
-    for k in range(m.start()):
-        if _in_spans(spans, k):
-            continue
-        if expr[k] in "([":
-            d += 1
-        elif expr[k] in ")]":
-            d -= 1
-    if d != 0:
+    # the identifier must sit at depth 0 of the item, outside literals
+    if not head or in_literal(expr, m.start()) or depth(expr, m.start()):
         return expr
     last = head[-1]
     if last in ")]'\"`" or last.isalnum() or last == "_":
@@ -1261,50 +925,13 @@ def _expand_group_by_all_totals(sql: str) -> str:
     GROUPING SETS).  ALL must expand against the select list of the
     statement that CONTAINS the clause: a depth-0 match uses the
     outermost list; a match inside a derived table recurses into the
-    enclosing paren (the _rewrite_limit_by splice).  Plain GROUP BY
+    enclosing paren.  Plain GROUP BY
     ALL without TOTALS stays Spark-native and untouched."""
-    spans = _literal_spans(sql)
-    m = None
-    for cand in re.finditer(r"(?is)\bGROUP BY\s+ALL\s+WITH TOTALS\b", sql):
-        if not _in_spans(spans, cand.start()):
-            m = cand
-            break
+    m = find_code(sql, r"(?is)\bGROUP BY\s+ALL\s+WITH TOTALS\b")
     if m is None:
         return sql
-    depth = 0
-    open_stack: list[int] = []
-    for j in range(m.start()):
-        if _in_spans(spans, j):
-            continue
-        if sql[j] == "(":
-            depth += 1
-            open_stack.append(j)
-        elif sql[j] == ")":
-            depth -= 1
-            if open_stack:
-                open_stack.pop()
-    if depth != 0:
-        if not open_stack:
-            return sql
-        open_pos = open_stack[-1]
-        d2, k = 1, open_pos + 1
-        while k < len(sql) and d2:
-            if not _in_spans(spans, k):
-                if sql[k] == "(":
-                    d2 += 1
-                elif sql[k] == ")":
-                    d2 -= 1
-            k += 1
-        if d2:
-            return sql
-        close = k - 1
-        inner = sql[open_pos + 1 : close]
-        new_inner = _expand_group_by_all_totals(inner)
-        if new_inner == inner:
-            return sql
-        return _expand_group_by_all_totals(
-            sql[: open_pos + 1] + new_inner + sql[close:]
-        )
+    if depth(sql, m.start()):
+        return splice_enclosing(sql, m.start(), _expand_group_by_all_totals)
     cols = _non_aggregate_select_items(sql)
     if not cols:
         raise ValueError(
@@ -1328,95 +955,30 @@ def _rewrite_distinct_on(sql: str) -> str:
     a valid transcription; DuckDB's makes the oracle agree); with no
     ORDER BY the ON columns order the window (deterministic
     arbitrary).  Depth-0 statements rewrite in place; a DISTINCT ON
-    inside a derived table recurses into the enclosing paren (the
-    _rewrite_limit_by splice).  ORDER BY terms must be FROM-scope
+    inside a derived table recurses into the enclosing paren.  ORDER
+    BY terms must be FROM-scope
     columns (not projection aliases) — the supported subset."""
-    spans = _literal_spans(sql)
-    m = None
-    for cand in re.finditer(r"(?i)\bDISTINCT\s+ON\s*\(", sql):
-        if not _in_spans(spans, cand.start()):
-            m = cand
-            break
+    m = find_code(sql, r"(?i)\bDISTINCT\s+ON\s*\(")
     if m is None:
         return sql
-    depth = 0
-    open_stack: list[int] = []
-    for j in range(m.start()):
-        if _in_spans(spans, j):
-            continue
-        if sql[j] == "(":
-            depth += 1
-            open_stack.append(j)
-        elif sql[j] == ")":
-            depth -= 1
-            if open_stack:
-                open_stack.pop()
-    if depth != 0:
-        if not open_stack:
-            return sql
-        open_pos = open_stack[-1]
-        d2, k = 1, open_pos + 1
-        while k < len(sql) and d2:
-            if not _in_spans(spans, k):
-                if sql[k] == "(":
-                    d2 += 1
-                elif sql[k] == ")":
-                    d2 -= 1
-            k += 1
-        if d2:
-            return sql
-        close = k - 1
-        inner = sql[open_pos + 1 : close]
-        new_inner = _rewrite_distinct_on(inner)
-        if new_inner == inner:
-            return sql
-        return _rewrite_distinct_on(
-            sql[: open_pos + 1] + new_inner + sql[close:]
-        )
-    # the ON (…) column list, balanced-paren scan
-    d2, k = 1, m.end()
-    while k < len(sql) and d2:
-        if not _in_spans(spans, k):
-            if sql[k] == "(":
-                d2 += 1
-            elif sql[k] == ")":
-                d2 -= 1
-        k += 1
-    if d2:
+    if depth(sql, m.start()):
+        return splice_enclosing(sql, m.start(), _rewrite_distinct_on)
+    close = matching_close(sql, m.end() - 1)
+    if close is None:
         return sql  # unbalanced — leave for Spark's parser
-    on_cols = sql[m.end() : k - 1].strip()
+    on_cols = sql[m.end() : close].strip()
     head = sql[: m.start()]  # "SELECT " (DISTINCT ON consumed)
-    rest = sql[k:]  # select list + FROM … [ORDER BY …] [LIMIT n]
-    rspans = _literal_spans(rest)
-    depth = 0
+    rest = sql[close + 1 :]  # select list + FROM … [ORDER BY …] [LIMIT n]
     from_pos = order_pos = order_kw_end = limit_pos = None
-    j = 0
-    while j < len(rest):
-        if _in_spans(rspans, j):
-            j += 1
-            continue
-        ch = rest[j]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and ch.isalpha()
-            and (j == 0 or not (rest[j - 1].isalnum() or rest[j - 1] == "_"))
-        ):
-            if from_pos is None and re.match(r"FROM\b", rest[j:], re.IGNORECASE):
-                from_pos = j
-            mo = re.match(r"ORDER\s+BY\b", rest[j:], re.IGNORECASE)
-            if mo:
-                order_pos, order_kw_end = j, j + mo.end()
-                j = order_kw_end
-                continue
-            if limit_pos is None and re.match(
-                r"LIMIT\b", rest[j:], re.IGNORECASE
-            ):
-                limit_pos = j
-        j += 1
+    for mk in iter_code(
+        rest, r"(?i)\b(?:(?P<from>FROM\b)|(?P<order>ORDER\s+BY\b)|LIMIT\b)", top=True
+    ):
+        if mk.group("order"):
+            order_pos, order_kw_end = mk.span()
+        elif mk.group("from"):
+            from_pos = mk.start() if from_pos is None else from_pos
+        elif limit_pos is None:
+            limit_pos = mk.start()
     if from_pos is None:
         raise ValueError("DISTINCT ON needs a SELECT … FROM statement")
     tail_start = order_pos if order_pos is not None else limit_pos
@@ -1477,7 +1039,7 @@ def _sub_outside_literals(sql: str, pattern: str, repl: str) -> str:
     matches cannot straddle a literal boundary."""
     return "".join(
         seg if is_lit else re.sub(pattern, repl, seg, flags=re.IGNORECASE)
-        for is_lit, seg in _split_quoted(sql)
+        for is_lit, seg in split_quoted(sql)
     )
 
 
@@ -1500,116 +1062,41 @@ def _rewrite_with_totals(sql: str) -> str:
     grouping_id() = 2^n - 1`` (the all-bits id only the totals row
     carries).  Pinned against a hand-built UNION ALL oracle in probe
     battery 9."""
-    spans = _literal_spans(sql)
-    m = None
-    for cand in re.finditer(r"(?is)\bWITH\s+TOTALS\b", sql):
-        if not _in_spans(spans, cand.start()):
-            m = cand
-            break
+    m = find_code(sql, r"(?is)\bWITH\s+TOTALS\b")
     if m is None:
         return sql
-
-    def depth_at(pos: int) -> int:
-        d = 0
-        for k in range(pos):
-            if _in_spans(spans, k):
-                continue
-            if sql[k] == "(":
-                d += 1
-            elif sql[k] == ")":
-                d -= 1
-        return d
-
-    m_depth = depth_at(m.start())
+    level = depth(sql, m.start())
     gb = None
-    for g in re.finditer(r"(?is)\bGROUP\s+BY\b", sql[: m.start()]):
-        if _in_spans(spans, g.start()):
-            continue
-        if depth_at(g.start()) == m_depth:
+    for g in iter_code(sql, r"(?is)\bGROUP\s+BY\b", end=m.start()):
+        if depth(sql, g.start()) == level:
             gb = g
     if gb is None:
         return sql  # stray WITH TOTALS — leave for Spark's parser
     cols = sql[gb.end() : m.start()].strip()
     # column count → the totals row's grouping_id() (all bits set)
-    cspans = _literal_spans(cols)
-    n, d = 1, 0
-    for k, c in enumerate(cols):
-        if _in_spans(cspans, k):
-            continue
-        if c in "([":
-            d += 1
-        elif c in ")]":
-            d -= 1
-        elif c == "," and d == 0:
-            n += 1
+    n = len(split_top(cols, keep_empty=True))
     tail = sql[m.end() :]
-    mh = None
-    tspans = _literal_spans(tail)
     # the HAVING must belong to THIS select: stop looking at the
     # first depth-0 set-operation boundary (a later UNION branch's
     # HAVING must not inherit the totals exemption — review r15)
     scope_end = len(tail)
-    for b in re.finditer(r"(?is)\b(UNION|INTERSECT|EXCEPT)\b", tail):
-        if _in_spans(tspans, b.start()):
-            continue
-        d = 0
-        for k in range(b.start()):
-            if _in_spans(tspans, k):
-                continue
-            if tail[k] == "(":
-                d += 1
-            elif tail[k] == ")":
-                d -= 1
-        if d == 0 and not tail[: b.start()].rstrip().endswith("*"):
+    for b in iter_code(tail, r"(?is)\b(UNION|INTERSECT|EXCEPT)\b", top=True):
+        if not tail[: b.start()].rstrip().endswith("*"):
             scope_end = b.start()
             break
-    for h in re.finditer(r"(?is)\bHAVING\b", tail):
-        if h.start() >= scope_end:
-            break
-        if _in_spans(tspans, h.start()):
-            continue
-        d = 0
-        for k in range(h.start()):
-            if _in_spans(tspans, k):
-                continue
-            if tail[k] == "(":
-                d += 1
-            elif tail[k] == ")":
-                d -= 1
-        if d == 0:
-            mh = h
-        break
+    mh = find_code(tail, r"(?is)\bHAVING\b")
+    if mh is not None and (mh.start() >= scope_end or depth(tail, mh.start())):
+        mh = None
     if mh is not None:
-        # predicate runs to the next depth-0 trailing clause
-        j, pred_end, d = mh.end(), len(tail), 0
-        end_kw = re.compile(
-            r"(?is)\b(ORDER\s+BY|LIMIT|WINDOW|QUALIFY|SETTINGS|FORMAT"
-            r"|UNION|INTERSECT|EXCEPT)\b"
+        # predicate runs to the next depth-0 trailing clause, or the
+        # paren closing the enclosing subquery
+        end_m = find_top(
+            tail,
+            r"(?is)[);]|\b(ORDER\s+BY|LIMIT|WINDOW|QUALIFY|SETTINGS|FORMAT"
+            r"|UNION|INTERSECT|EXCEPT)\b",
+            mh.end(),
         )
-        while j < len(tail):
-            if _in_spans(tspans, j):
-                j += 1
-                continue
-            c = tail[j]
-            if c == "(":
-                d += 1
-            elif c == ")":
-                if d == 0:
-                    pred_end = j
-                    break
-                d -= 1
-            elif c == ";" and d == 0:
-                pred_end = j
-                break
-            elif (
-                d == 0
-                and c.isalpha()
-                and not (tail[j - 1].isalnum() or tail[j - 1] == "_")
-                and end_kw.match(tail, j)
-            ):
-                pred_end = j
-                break
-            j += 1
+        pred_end = end_m.start() if end_m else len(tail)
         pred = tail[mh.end() : pred_end].strip()
         tail = (
             tail[: mh.end()]
@@ -1624,8 +1111,9 @@ def _rewrite_with_totals(sql: str) -> str:
     return _rewrite_with_totals(out)
 
 
+#: what ends an ARRAY JOIN item list: ';' or the next clause keyword
 _AJ_ITEM_END = re.compile(
-    r"(?is)\b(WHERE|PREWHERE|GROUP\s+BY|HAVING|WINDOW|QUALIFY|ORDER\s+BY"
+    r"(?is);|\b(WHERE|PREWHERE|GROUP\s+BY|HAVING|WINDOW|QUALIFY|ORDER\s+BY"
     r"|LIMIT|SETTINGS|FORMAT|UNION|INTERSECT|EXCEPT"
     r"|(?:LEFT\s+)?ARRAY\s+JOIN"
     r"|(?:INNER|CROSS)\s+JOIN|(?:FULL|RIGHT|LEFT)\s+(?:OUTER\s+)?JOIN"
@@ -1660,127 +1148,32 @@ def _rewrite_array_join_clause(sql: str) -> str:
       for the rest; the wrap hides ``__aj_pos`` from ``SELECT *``.
 
     Matches inside string literals are skipped; a clause inside a
-    derived table recurses into the enclosing paren (the
-    _rewrite_qualify splice).  Bare non-column expressions raise, as
+    derived table recurses into the enclosing paren.  Bare non-column
+    expressions raise, as
     ClickHouse itself does ("No alias for non-trivial ARRAY JOIN").
     Caveat (documented, loud): the wrapped forms hide base-relation
     ALIASES from outer clauses — qualified references like ``t.col``
     around a bare/multi ARRAY JOIN fail analysis; use plain column
     names (CH queries conventionally do)."""
-    spans = _literal_spans(sql)
-    m = None
-    for cand in re.finditer(r"(?is)\b(?P<left>LEFT\s+)?ARRAY\s+JOIN\b", sql):
-        if not _in_spans(spans, cand.start()):
-            m = cand
-            break
+    m = find_code(sql, r"(?is)\b(?P<left>LEFT\s+)?ARRAY\s+JOIN\b")
     if m is None:
         return sql
-    # depth>0 → recurse into the enclosing paren and splice back
-    depth = 0
-    open_stack: list[int] = []
-    for j in range(m.start()):
-        if _in_spans(spans, j):
-            continue
-        if sql[j] == "(":
-            depth += 1
-            open_stack.append(j)
-        elif sql[j] == ")":
-            depth -= 1
-            if open_stack:
-                open_stack.pop()
-    if depth != 0:
-        if not open_stack:
-            return sql
-        open_pos = open_stack[-1]
-        d2, k = 1, open_pos + 1
-        while k < len(sql) and d2:
-            if not _in_spans(spans, k):
-                if sql[k] == "(":
-                    d2 += 1
-                elif sql[k] == ")":
-                    d2 -= 1
-            k += 1
-        if d2:
-            return sql
-        close = k - 1
-        inner = sql[open_pos + 1 : close]
-        new_inner = _rewrite_array_join_clause(inner)
-        if new_inner == inner:
-            return sql
-        return _rewrite_array_join_clause(
-            sql[: open_pos + 1] + new_inner + sql[close:]
-        )
+    if depth(sql, m.start()):
+        return splice_enclosing(sql, m.start(), _rewrite_array_join_clause)
     outer = "OUTER " if m.group("left") else ""
     # the item list runs to the next depth-0 clause keyword / ';' / end
-    j, items_end = m.end(), len(sql)
-    d2 = 0
-    while j < len(sql):
-        if _in_spans(spans, j):
-            j += 1
-            continue
-        ch = sql[j]
-        if ch == "(":
-            d2 += 1
-        elif ch == ")":
-            d2 -= 1
-        elif d2 == 0:
-            if ch == ";":
-                items_end = j
-                break
-            if ch.isalpha() and (
-                j == 0 or not (sql[j - 1].isalnum() or sql[j - 1] == "_")
-            ):
-                mk = _AJ_ITEM_END.match(sql, j)
-                if mk:
-                    items_end = j
-                    break
-        j += 1
-    items_text = sql[m.end() : items_end]
-    # split on depth-0 commas (literals inert)
-    item_spans = _literal_spans(items_text)
-    items, buf, d3 = [], [], 0
-    for k, c in enumerate(items_text):
-        if _in_spans(item_spans, k):
-            buf.append(c)
-            continue
-        if c == "(" or c == "[":
-            d3 += 1
-        elif c == ")" or c == "]":
-            d3 -= 1
-        if c == "," and d3 == 0:
-            items.append("".join(buf))
-            buf = []
-        else:
-            buf.append(c)
-    items.append("".join(buf))
+    end_m = find_top(sql, _AJ_ITEM_END, m.end())
+    items_end = end_m.start() if end_m else len(sql)
     parsed: list[tuple[str, str | None]] = []  # (expr, alias|None)
-    for it in items:
-        it = it.strip()
+    for it in split_top(sql[m.end() : items_end], keep_empty=True):
         if not it:
             raise ValueError("ARRAY JOIN: empty item in the array list")
-        # rightmost depth-0 `AS <ident>` tail (CAST(x AS T) sits at
-        # depth>0 and is inert)
-        ispans = _literal_spans(it)
+        # the depth-0 `AS <ident>` tail (CAST(x AS T) sits at depth>0)
         alias = None
-        d4 = 0
-        for k in range(len(it)):
-            if _in_spans(ispans, k):
-                continue
-            c = it[k]
-            if c == "(" or c == "[":
-                d4 += 1
-            elif c == ")" or c == "]":
-                d4 -= 1
-            elif (
-                d4 == 0
-                and c in "Aa"
-                and (k == 0 or not (it[k - 1].isalnum() or it[k - 1] == "_"))
-            ):
-                ma = re.match(r"(?is)AS\s+(`?)(\w+)\1\s*$", it[k:])
-                if ma:
-                    alias = ma.group(2)
-                    it = it[:k].strip()
-                    break
+        ma = find_top(it, r"(?is)\bAS\s+(`?)(\w+)\1\s*$")
+        if ma:
+            alias = ma.group(2)
+            it = it[: ma.start()].strip()
         parsed.append((it, alias))
     aliased_ok = all(a is not None for _, a in parsed)
     if len(parsed) == 1 and aliased_ok:
@@ -1801,24 +1194,11 @@ def _rewrite_array_join_clause(sql: str) -> str:
                 f"{expr!r} — add AS <alias> (ClickHouse requires this "
                 f"too)"
             )
-    # locate the depth-0 FROM that owns the clause (the last one
-    # before it at depth 0, outside literals)
-    from_m = None
-    for fc in re.finditer(r"(?is)\bFROM\b", sql[: m.start()]):
-        if _in_spans(spans, fc.start()):
-            continue
-        d5 = 0
-        for k in range(fc.start()):
-            if _in_spans(spans, k):
-                continue
-            if sql[k] == "(":
-                d5 += 1
-            elif sql[k] == ")":
-                d5 -= 1
-        if d5 == 0:
-            from_m = fc
-    if from_m is None:
+    # the FROM that owns the clause: the last depth-0 one before it
+    froms = list(iter_code(sql, r"(?is)\bFROM\b", end=m.start(), top=True))
+    if not froms:
         raise ValueError("ARRAY JOIN: no FROM clause to attach to")
+    from_m = froms[-1]
     rel = sql[from_m.end() : m.start()].strip()
     gen_names = [
         a if a is not None else f"__aj_e{i}"
@@ -1874,10 +1254,9 @@ def _rewrite_array_join_clause(sql: str) -> str:
     )
 
 
-_CLAUSE_AFTER_WHERE = re.compile(
+_CLAUSE_AFTER_WHERE = (
     r"\b(GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|WINDOW|UNION|INTERSECT|EXCEPT"
-    r"|SETTINGS|FORMAT|QUALIFY)\b",
-    re.IGNORECASE,
+    r"|SETTINGS|FORMAT|QUALIFY)\b"
 )
 
 
@@ -1888,67 +1267,19 @@ def _rewrite_qualify(sql: str) -> str:
     wrap, filter, and drop the helper column; trailing ORDER BY /
     LIMIT move OUTSIDE the wrapper, where they ran in the original.
     Top-level set operations with QUALIFY are out of scope (raise)."""
-    spans = _literal_spans(sql)
-    m = re.search(r"\bQUALIFY\b", sql, re.IGNORECASE)
-    if not m or _in_spans(spans, m.start()):
+    m = find_code(sql, r"(?i)\bQUALIFY\b")
+    if m is None:
         return sql
-    # a QUALIFY at paren depth > 0 lives inside a derived-table
-    # subquery: recurse into the ENCLOSING paren's text and splice
-    # the rewrite back (probe battery 6 — inline subqueries never
-    # pass through translate() on their own, so "handled when the
-    # subquery translates" was wrong for them)
-    depth = 0
-    open_stack: list[int] = []
-    for j in range(m.start()):
-        if _in_spans(spans, j):
-            continue
-        if sql[j] == "(":
-            depth += 1
-            open_stack.append(j)
-        elif sql[j] == ")":
-            depth -= 1
-            if open_stack:
-                open_stack.pop()
-    if depth != 0:
-        if not open_stack:
-            return sql  # unbalanced — leave for Spark's parser
-        open_pos = open_stack[-1]
-        d2, j = 1, open_pos + 1
-        while j < len(sql) and d2:
-            if not _in_spans(spans, j):
-                if sql[j] == "(":
-                    d2 += 1
-                elif sql[j] == ")":
-                    d2 -= 1
-            j += 1
-        if d2:
-            return sql
-        close = j - 1
-        inner = sql[open_pos + 1 : close]
-        new_inner = _rewrite_qualify(inner)
-        if new_inner == inner:
-            return sql
-        return _rewrite_qualify(
-            sql[: open_pos + 1] + new_inner + sql[close:]
-        )
+    if depth(sql, m.start()):
+        # inside a derived-table subquery: inline subqueries never pass
+        # through translate() on their own
+        return splice_enclosing(sql, m.start(), _rewrite_qualify)
     # set-op guard: only a DEPTH-0 set operation outside string
     # literals conflicts with the wrap-in-subquery rewrite.  A UNION
     # inside a derived table, an EXCEPT in a string constant, or the
     # `SELECT * EXCEPT (col)` projection modifier must NOT trip it
     # (ADVICE r12).
-    for m_set in re.finditer(r"\b(UNION|INTERSECT|EXCEPT)\b", sql, re.IGNORECASE):
-        if _in_spans(spans, m_set.start()):
-            continue
-        d = 0
-        for j in range(m_set.start()):
-            if _in_spans(spans, j):
-                continue
-            if sql[j] == "(":
-                d += 1
-            elif sql[j] == ")":
-                d -= 1
-        if d != 0:
-            continue
+    for m_set in iter_code(sql, r"(?i)\b(UNION|INTERSECT|EXCEPT)\b", top=True):
         if (
             m_set.group(1).upper() == "EXCEPT"
             and sql[: m_set.start()].rstrip().endswith("*")
@@ -1959,58 +1290,17 @@ def _rewrite_qualify(sql: str) -> str:
             "apply QUALIFY inside a subquery per branch"
         )
     # predicate runs to the next depth-0 trailing clause
-    tail_kw = re.compile(
-        r"\b(ORDER\s+BY|LIMIT|SETTINGS|FORMAT)\b", re.IGNORECASE
-    )
-    j, pred_end = m.end(), len(sql)
-    depth = 0
-    while j < len(sql):
-        if _in_spans(spans, j):
-            j += 1
-            continue
-        ch = sql[j]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and ch.isalpha()
-            and not (sql[j - 1].isalnum() or sql[j - 1] == "_")
-            and tail_kw.match(sql, j)
-        ):
-            pred_end = j
-            break
-        j += 1
+    end_m = find_top(sql, r"(?i)\b(ORDER\s+BY|LIMIT|SETTINGS|FORMAT)\b", m.end())
+    pred_end = end_m.start() if end_m else len(sql)
     pred = sql[m.end() : pred_end].strip()
     tail = sql[pred_end:]
     inner = sql[: m.start()].rstrip()
     # insert the predicate at the end of the SELECT list: before the
     # first depth-0 FROM
-    f = re.search(r"\bFROM\b", inner, re.IGNORECASE)
-    pos, depth = None, 0
-    k = 0
-    inner_spans = _literal_spans(inner)
-    while k < len(inner):
-        if _in_spans(inner_spans, k):
-            k += 1
-            continue
-        ch = inner[k]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and ch in "Ff"
-            and re.match(r"FROM\b", inner[k:], re.IGNORECASE)
-            and not (inner[k - 1].isalnum() or inner[k - 1] == "_")
-        ):
-            pos = k
-            break
-        k += 1
-    if pos is None or not f:
+    from_m = find_top(inner, r"(?i)\bFROM\b")
+    if from_m is None:
         raise ValueError("QUALIFY needs a SELECT … FROM statement")
+    pos = from_m.start()
     # ClickHouse lets QUALIFY reference SELECT-list ALIASES (it
     # substitutes the aliased expression textually); Spark rejects a
     # lateral column alias inside a window expression, so inline the
@@ -2018,22 +1308,7 @@ def _rewrite_qualify(sql: str) -> str:
     # does (probe battery 6).  Iterate for alias-on-alias chains.
     sel_m = re.match(r"\s*SELECT\s+(DISTINCT\s+)?", inner, re.IGNORECASE)
     if sel_m:
-        items, buf, d2 = [], [], 0
-        for k2 in range(sel_m.end(), pos):
-            if _in_spans(inner_spans, k2):
-                buf.append(inner[k2])
-                continue
-            c2 = inner[k2]
-            if c2 == "(":
-                d2 += 1
-            elif c2 == ")":
-                d2 -= 1
-            if c2 == "," and d2 == 0:
-                items.append("".join(buf))
-                buf = []
-            else:
-                buf.append(c2)
-        items.append("".join(buf))
+        items = split_top(inner[sel_m.end() : pos], keep_empty=True)
         aliases = {}
         for it in items:
             ma = re.match(r"(?is)^\s*(.*\S)\s+AS\s+`?(\w+)`?\s*$", it)
@@ -2046,7 +1321,7 @@ def _rewrite_qualify(sql: str) -> str:
                     t
                     if lit
                     else re.sub(rf"(?<![.\w`]){al}\b", f"({expr})", t)
-                    for lit, t in _split_quoted(new_pred)
+                    for lit, t in split_quoted(new_pred)
                 )
             if new_pred == pred:
                 break
@@ -2067,46 +1342,17 @@ def _merge_prewhere(sql: str) -> str:
     literals, so subqueries inside either predicate are inert.  A
     PREWHERE with no following WHERE is left for the plain keyword
     rename."""
-    spans = _literal_spans(sql)
-    m = re.search(r"\bPREWHERE\b", sql, re.IGNORECASE)
-    if not m or _in_spans(spans, m.start()):
+    m = find_code(sql, r"(?i)\bPREWHERE\b")
+    if m is None:
         return sql
-
-    def _scan_clause_end(start: int, stop_where: bool) -> tuple[int, str]:
-        """Return (index, keyword) of the next depth-0 clause keyword
-        at/after ``start`` ('' at end of statement)."""
-        depth, j = 0, start
-        while j < len(sql):
-            if _in_spans(spans, j):
-                j += 1
-                continue
-            ch = sql[j]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif (
-                depth == 0
-                and ch.isalpha()
-                and (j == 0 or not (sql[j - 1].isalnum() or sql[j - 1] == "_"))
-            ):
-                if stop_where:
-                    mw = re.match(r"WHERE\b", sql[j:], re.IGNORECASE)
-                    if mw:
-                        return j, "WHERE"
-                mk = _CLAUSE_AFTER_WHERE.match(sql, j)
-                if mk:
-                    return j, mk.group(1).upper()
-            j += 1
-        return len(sql), ""
-
-    pre_end, kw = _scan_clause_end(m.end(), stop_where=True)
-    if kw != "WHERE":
+    where = find_top(sql, rf"(?i)\bWHERE\b|{_CLAUSE_AFTER_WHERE}", m.end())
+    if where is None or where.group().upper() != "WHERE":
         return sql  # no WHERE to merge with; plain rename handles it
+    pre_end = where.start()
     p1 = sql[m.end() : pre_end].strip()
-    where_body_start = pre_end + len("WHERE")
-    body_end, _ = _scan_clause_end(where_body_start, stop_where=False)
-    p2 = sql[where_body_start:body_end].strip()
+    body_end_m = find_top(sql, rf"(?i){_CLAUSE_AFTER_WHERE}", where.end())
+    body_end = body_end_m.start() if body_end_m else len(sql)
+    p2 = sql[where.end() : body_end].strip()
     return (
         sql[: m.start()]
         + f"WHERE ({p1}) AND ({p2}) "
@@ -2121,7 +1367,7 @@ def translate(sql: str) -> str:
     # the rest map to the system_* views the Warehouse registers
     # (register_system_views) — system.tables/columns/parts/databases.
     # Segment-wise so a 'system.tables' string constant stays verbatim.
-    segs_sys = _split_quoted(out)
+    segs_sys = split_quoted(out)
     out = "".join(
         t
         if lit
@@ -2144,7 +1390,7 @@ def translate(sql: str) -> str:
         # preceding`, `rows unbounded/current …`) in the same
         # statement is frame SYNTAX, not the system-view column —
         # quoting it is a parse error (ADVICE r12)
-        segs0 = _split_quoted(out)
+        segs0 = split_quoted(out)
         out = "".join(
             t
             if lit
@@ -2214,8 +1460,7 @@ def translate(sql: str) -> str:
 
     out = _rewrite_parametric(out, "topK", _topk)
     # <agg>If(col, cond) → <agg>(CASE WHEN cond THEN col END); Spark
-    # only has count_if.  Balanced-paren argument scan so nested calls
-    # work.  ClickHouse's non-OrNull aggregates return the TYPE
+    # only has count_if.  ClickHouse's non-OrNull aggregates return the TYPE
     # DEFAULT when the condition matches nothing (probe battery 6):
     # sumIf → 0, avgIf → nan (0/0) — Spark's NULL would silently
     # diverge, so those two coalesce.  minIf/maxIf keep NULL: their
@@ -2634,7 +1879,7 @@ def translate(sql: str) -> str:
             _dot_chain,
             seg,
         )
-        for is_lit, seg in _split_quoted(out)
+        for is_lit, seg in split_quoted(out)
     )
     # greatCircleDistance(lon1, lat1, lon2, lat2) → meters, haversine
     # on ClickHouse's sphere radius 6372797.560856 m
@@ -3616,7 +2861,6 @@ def translate(sql: str) -> str:
     # aggregates that genuinely need operators, and data-order scans —
     # point at the registered DataFrame query instead of failing with
     # an opaque UNRESOLVED_ROUTINE
-    spans_unr = _literal_spans(out)
     for unr, pointer in (
         # battery 4: data-ORDER-dependent scans — an aggregate rewrite
         # has no row order to scan; use a window over an explicit sort
@@ -3659,7 +2903,7 @@ def translate(sql: str) -> str:
                      "json_array_length / json_object_keys instead"),
     ):
         mu = re.search(rf"\b{unr}\s*\(", out)
-        if mu and not _in_spans(spans_unr, mu.start()):
+        if mu and not in_literal(out, mu.start()):
             raise ValueError(f"{unr} {pointer}")
     out = re.sub(r"\btoUnixTimestamp\s*\(", "unix_timestamp(", out)
     out = re.sub(r"\bfromUnixTimestamp\s*\(", "from_unixtime(", out)
@@ -3842,7 +3086,7 @@ def translate(sql: str) -> str:
     # simple function renames (word-boundary, call position only) —
     # applied per non-literal segment so a mapped name INSIDE a string
     # constant ('note: trimBoth(x)') is never rewritten
-    segs = _split_quoted(out)
+    segs = split_quoted(out)
     for k, (lit, txt) in enumerate(segs):
         if lit:
             continue
@@ -3858,38 +3102,21 @@ def translate(sql: str) -> str:
     # A bare rename in _FN_RENAMES would hit that collision; worse,
     # leaving it be makes Spark parse any(bool_col) as bool_or —
     # silently wrong.  Rendered any_value(x, true): ClickHouse any()
-    # SKIPS NULLs, Spark's default does not (ADVICE r12) — the
-    # matching close paren is found at depth outside literal spans so
-    # commas/parens nested in x are inert.  Edits apply ONE at a time
-    # with a re-scan of the mutated string: a pre-computed edit list
-    # went stale when one any() nested inside another — the inner
-    # insert shifted the outer's cached close paren (ADVICE r13).
+    # SKIPS NULLs, Spark's default does not (ADVICE r12).  Edits apply
+    # ONE at a time with a re-scan of the mutated string: a
+    # pre-computed edit list went stale when one any() nested inside
+    # another — the inner insert shifted the outer's cached close
+    # paren (ADVICE r13).
     _any_pat = re.compile(r"\bany\s*\(")
     pos = 0
-    while True:
-        spans_any = _literal_spans(out)
-        m_any = _any_pat.search(out, pos)
-        if not m_any:
-            break
-        if _in_spans(spans_any, m_any.start()):
+    while (m_any := find_code(out, _any_pat, pos)) is not None:
+        prev = out[: m_any.start()].rstrip()
+        close = matching_close(out, m_any.end() - 1)
+        if (prev and prev[-1] in "=<>!") or close is None:
+            # a quantified comparison, not the aggregate — or unbalanced,
+            # left for Spark's parser
             pos = m_any.end()
             continue
-        prev = out[: m_any.start()].rstrip()
-        if prev and prev[-1] in "=<>!":
-            pos = m_any.end()  # quantified comparison, not the aggregate
-            continue
-        depth, j = 1, m_any.end()
-        while j < len(out) and depth:
-            if not _in_spans(spans_any, j):
-                if out[j] == "(":
-                    depth += 1
-                elif out[j] == ")":
-                    depth -= 1
-            j += 1
-        if depth:
-            pos = m_any.end()  # unbalanced — leave for Spark's parser
-            continue
-        close = j - 1
         out = out[:close] + ", true" + out[close:]
         out = out[: m_any.start()] + "any_value(" + out[m_any.end() :]
         pos = m_any.start()  # re-scan: a nested any( may still be inside
@@ -3903,7 +3130,7 @@ def translate(sql: str) -> str:
     # any case (ADVICE r12), literal-safe like every other pass
     out = "".join(
         t if lit else re.sub(r"\bPREWHERE\b", "WHERE", t, flags=re.IGNORECASE)
-        for lit, t in _split_quoted(out)
+        for lit, t in split_quoted(out)
     )
     # QUALIFY: the post-window filter — wrap, filter, drop the helper
     out = _rewrite_qualify(out)
@@ -3917,11 +3144,10 @@ def translate(sql: str) -> str:
     # md5 hex chars compare as a monotone proxy for the 32-bit hash
     # value, so any engine computes the identical row set (probe
     # battery 9; closes the last loud SAMPLE ValueError).
-    spans_smp = _literal_spans(out)
     m_smp = re.search(
         r"\bSAMPLE\s+(\d+(?:\.\d+)?)(\s*/\s*(\d+))?(\s+OFFSET\b)?", out
     )
-    if m_smp and not _in_spans(spans_smp, m_smp.start()):
+    if m_smp and not in_literal(out, m_smp.start()):
         if m_smp.group(4):
             m_off = re.search(
                 r"(?is)\b(?P<tbl>\w+(?:\.\w+)?)\s+SAMPLE\s+"
@@ -3930,7 +3156,7 @@ def translate(sql: str) -> str:
                 r"(?P<m>\d+(?:\.\d+)?(?:\s*/\s*\d+(?:\.\d+)?)?)",
                 out,
             )
-            if not m_off or _in_spans(spans_smp, m_off.start()):
+            if not m_off or in_literal(out, m_off.start()):
                 raise ValueError(
                     "SAMPLE … OFFSET: could not locate the sampled table"
                 )
@@ -4009,12 +3235,10 @@ def translate(sql: str) -> str:
     # trailing FORMAT <name> (output format is a transport concern —
     # the CLI's --format flag) and SETTINGS k = v, … (engine knobs;
     # Catalyst plans without hints) are stripped
-    spans3 = _literal_spans(out)
     for pat in (r"\sFORMAT\s+\w+\s*$", r"\sSETTINGS\s+\w+\s*=[^;]*$"):
         m3 = re.search(pat, out, re.IGNORECASE)
-        if m3 and not _in_spans(spans3, m3.start()):
+        if m3 and not in_literal(out, m3.start()):
             out = out[: m3.start()]
-            spans3 = _literal_spans(out)
     # ClickHouse scalar WITH: `WITH <expr> AS <ident>, …` binds an
     # EXPRESSION to a name (CH substitutes it at every use — distinct
     # from the CTE form `ident AS (subquery)`, which stays a CTE).
@@ -4025,7 +3249,7 @@ def translate(sql: str) -> str:
     # GLOBAL IN / GLOBAL JOIN: a distributed-execution hint (ship the
     # set to every shard); Catalyst chooses broadcast vs shuffle
     # itself, so the keyword is dropped
-    segs3 = _split_quoted(out)
+    segs3 = split_quoted(out)
     out = "".join(
         t if is_lit else re.sub(r"\bGLOBAL\s+", "", t) for is_lit, t in segs3
     )
@@ -4048,7 +3272,7 @@ def translate(sql: str) -> str:
     # name-sorted compare).  The CH canonical modifier order EXCEPT
     # → REPLACE folds both into one EXCEPT (probe battery 6 s2).
     def _replace_mod(m4: re.Match) -> str:
-        entries = _split_top(m4.group(2))
+        entries = split_top(m4.group(2))
         cols = [
             c.strip().strip("`")
             for c in (m4.group(1) or "").split(",")
@@ -4093,30 +3317,12 @@ def _rewrite_scalar_with(sql: str) -> str:
     m = re.match(r"(\s*)WITH\b", sql, re.IGNORECASE)
     if not m:
         return sql
-    spans = _literal_spans(sql)
     # the entry list runs to the first depth-0 SELECT keyword
-    j, depth, body_start = m.end(), 0, None
-    while j < len(sql):
-        if _in_spans(spans, j):
-            j += 1
-            continue
-        ch = sql[j]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and ch in "Ss"
-            and not (sql[j - 1].isalnum() or sql[j - 1] == "_")
-            and re.match(r"SELECT\b", sql[j:], re.IGNORECASE)
-        ):
-            body_start = j
-            break
-        j += 1
-    if body_start is None:
+    sel = find_top(sql, r"(?i)\bSELECT\b", m.end())
+    if sel is None:
         return sql
-    entries = _split_top(sql[m.end() : body_start])
+    body_start = sel.start()
+    entries = split_top(sql[m.end() : body_start])
     body = sql[body_start:]
     kept: list[str] = []
     for entry in entries:
@@ -4129,7 +3335,7 @@ def _rewrite_scalar_with(sql: str) -> str:
             kept.append(e)
             continue
         expr, ident = em.group(1).strip(), em.group(2)
-        segs = _split_quoted(body)
+        segs = split_quoted(body)
         body = "".join(
             t if is_lit else re.sub(rf"(?<![.\w`]){ident}\b", f"({expr})", t)
             for is_lit, t in segs
@@ -4227,11 +3433,10 @@ def parse_with_fill(sql: str):
     the result's column TYPES), so ``run`` executes the inner query
     and applies the DataFrame fill operator — the same delegation the
     windowFunnel strict modes use."""
-    spans = _literal_spans(sql)
     m = _WITH_FILL_RE.search(sql)
-    if not m or _in_spans(spans, m.start()):
+    if not m or in_literal(sql, m.start()):
         loose = re.search(r"\bWITH\s+FILL\b", sql, re.IGNORECASE)
-        if loose and not _in_spans(spans, loose.start()):
+        if loose and not in_literal(sql, loose.start()):
             raise ValueError(
                 "unsupported WITH FILL form: single-column ORDER BY with "
                 "optional FROM/TO/STEP/INTERPOLATE at statement end"
@@ -4275,12 +3480,10 @@ def _rewrite_asof_join(spark: SparkSession, sql: str) -> str:
     instead; documented divergence).  Plain ASOF JOIN (no LEFT) drops
     unmatched left rows, per ClickHouse.
     """
-    spans = _literal_spans(sql)
     m = _ASOF_USING_RE.search(sql)
-    if not m or _in_spans(spans, m.start()):
-        if re.search(r"\bASOF\b", sql, re.IGNORECASE) and not m:
-            loose = re.search(r"\bASOF\b", sql, re.IGNORECASE)
-            if not _in_spans(spans, loose.start()):
+    if not m or in_literal(sql, m.start()):
+        loose = re.search(r"\bASOF\b", sql, re.IGNORECASE)
+        if loose and not m and not in_literal(sql, loose.start()):
                 raise ValueError(
                     "unsupported ASOF JOIN form: FROM t1 ASOF [LEFT] JOIN "
                     "t2 USING (keys…, ts) is the supported dialect subset"
@@ -4323,7 +3526,6 @@ def _rewrite_star_apply(spark: SparkSession, sql: str) -> str:
     run()-level, session-aware rewrite (the asof-join pattern) —
     supported for a plain registered view/table FROM; other shapes
     raise with the supported form named."""
-    spans = _literal_spans(sql)
     m = re.search(
         r"SELECT\s+\*\s*(?:EXCEPT\s*\(([^)]*)\)\s*)?"
         r"(?:REPLACE\s*\(([^()]*(?:\([^()]*\)[^()]*)*)\)\s*)?"
@@ -4331,9 +3533,9 @@ def _rewrite_star_apply(spark: SparkSession, sql: str) -> str:
         sql,
         re.IGNORECASE,
     )
-    if not m or _in_spans(spans, m.start()):
+    if not m or in_literal(sql, m.start()):
         loose = re.search(r"\bAPPLY\s*\(", sql, re.IGNORECASE)
-        if loose and not _in_spans(spans, loose.start()):
+        if loose and not in_literal(sql, loose.start()):
             raise ValueError(
                 "unsupported APPLY form: SELECT * [EXCEPT (…)] "
                 "[REPLACE (…)] APPLY(fn) FROM <registered table> is "
@@ -4344,7 +3546,7 @@ def _rewrite_star_apply(spark: SparkSession, sql: str) -> str:
         c.strip().strip("`") for c in (m.group(1) or "").split(",") if c.strip()
     }
     rep: dict[str, str] = {}
-    for e in _split_top(m.group(2) or ""):
+    for e in split_top(m.group(2) or ""):
         rm = re.match(r"(?s)(.+)\s+AS\s+`?(\w+)`?\s*$", e.strip(), re.IGNORECASE)
         if rm:
             rep[rm.group(2)] = rm.group(1).strip()
@@ -4372,33 +3574,13 @@ def _rewrite_columns_selector(spark: SparkSession, sql: str) -> str:
     (the _rewrite_star_apply pattern).  The statement's first depth-0
     FROM names the registered view; other shapes raise with the
     supported form named.  CH errors on an empty match — so do we."""
-    spans = _literal_spans(sql)
-    m = None
-    for cand in re.finditer(
-        r"(?is)\bCOLUMNS\s*\(\s*'([^']*)'\s*\)"
-        r"(\s*APPLY\s*\(\s*(\w+)\s*\))?",
+    m = find_code(
         sql,
-    ):
-        if not _in_spans(spans, cand.start()):
-            m = cand
-            break
+        r"(?is)\bCOLUMNS\s*\(\s*'([^']*)'\s*\)(\s*APPLY\s*\(\s*(\w+)\s*\))?",
+    )
     if m is None:
         return sql
-    fm = None
-    for fc in re.finditer(r"(?is)\bFROM\s+`?(\w+)`?", sql):
-        if _in_spans(spans, fc.start()):
-            continue
-        d = 0
-        for k in range(fc.start()):
-            if _in_spans(spans, k):
-                continue
-            if sql[k] == "(":
-                d += 1
-            elif sql[k] == ")":
-                d -= 1
-        if d == 0:
-            fm = fc
-            break
+    fm = find_top(sql, r"(?is)\bFROM\s+`?(\w+)`?")
     if fm is None:
         raise ValueError(
             "COLUMNS('regex') needs a depth-0 FROM <registered table> "

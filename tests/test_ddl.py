@@ -167,6 +167,20 @@ def test_create_table_requires_engine():
         parse_create_table("CREATE TABLE t (`a` String)")
 
 
+@pytest.mark.parametrize("comment", [r"'it\'s (x)'", r"'x\') y'"])
+def test_create_table_backslash_escape_in_comment(comment):
+    """An escaped quote inside a COMMENT literal does not end the
+    literal: the parens after it stay inert, so the column list keeps
+    its later columns."""
+    td = parse_create_table(
+        f"CREATE TABLE t (a String COMMENT {comment}, b Int64) "
+        "ENGINE = MergeTree ORDER BY a"
+    )
+    assert [c.name for c in td.columns] == ["a", "b"]
+    assert [c.ch_type for c in td.columns] == ["String", "Int64"]
+    assert td.order_by == ["a"]
+
+
 # --------------------------------------------------------------------------
 # INSERT parsing
 # --------------------------------------------------------------------------

@@ -23,8 +23,37 @@ import re
 
 import pytest
 
-from clickhub_spark.sql_compat import _split_quoted, translate
+from clickhub_spark.sql_compat import translate
 from tests.dialect_corpus import STATEMENTS
+
+
+def _split_quoted(sql: str) -> list[tuple[bool, str]]:
+    """(is_literal, text) segments — written out here, independent of
+    the engine's own scanner, so the invariants below check it rather
+    than trust it.  Literals include their quotes; backslash escapes
+    and doubled ``''`` stay inside; an unterminated literal runs to the
+    end."""
+    segs: list[tuple[bool, str]] = []
+    i, n, start = 0, len(sql), 0
+    while i < n:
+        if sql[i] != "'":
+            i += 1
+            continue
+        if i > start:
+            segs.append((False, sql[start:i]))
+        j = i + 1
+        while j < n:
+            if sql[j] == "\\" or sql[j : j + 2] == "''":
+                j += 2
+            elif sql[j] == "'":
+                break
+            else:
+                j += 1
+        segs.append((True, sql[i : j + 1]))
+        start = i = j + 1
+    if start < n:
+        segs.append((False, sql[start:]))
+    return segs
 
 # renders that legitimately CONSUME a literal argument (JSON paths
 # become '$.k', format strings become Java patterns, sequence

@@ -1052,7 +1052,8 @@ _KEYWORD_PHRASES = [
 )
 @settings(max_examples=200, deadline=None)
 def test_translate_preserves_string_literals(phrase, prefix, suffix, shape):
-    from clickhub_spark.sql_compat import _split_quoted, translate
+    from clickhub_spark.sql_compat import translate
+    from clickhub_spark.sqltext import split_quoted
 
     body = f"{prefix}{phrase}{suffix}"
     lit = f"'{body}'"
@@ -1061,9 +1062,98 @@ def test_translate_preserves_string_literals(phrase, prefix, suffix, shape):
         out = translate(sql)
     except ValueError:
         return  # documented loud refusals are fine — never corruption
-    in_lits = [seg for is_lit, seg in _split_quoted(sql) if is_lit]
-    out_lits = [seg for is_lit, seg in _split_quoted(out) if is_lit]
+    in_lits = [seg for is_lit, seg in split_quoted(sql) if is_lit]
+    out_lits = [seg for is_lit, seg in split_quoted(out) if is_lit]
     for needed in in_lits:
         assert needed in out_lits, (
             f"literal {needed!r} corrupted: {sql!r} -> {out!r}"
         )
+
+
+# --- the shared SQL-text scanner (clickhub_spark/sqltext.py) --------------
+
+_scan_text = st.text(alphabet="'\\()[],ab ", max_size=24)
+
+
+def _naive_literal_mask(text: str) -> list[bool]:
+    """Per character: inside a single-quoted literal (quotes included)?
+    Backslash escapes the next character, a doubled quote stays inside,
+    an unterminated literal runs to the end."""
+    mask, in_lit, i = [False] * len(text), False, 0
+    while i < len(text):
+        ch = text[i]
+        if not in_lit:
+            if ch == "'":
+                in_lit = mask[i] = True
+            i += 1
+            continue
+        mask[i] = True
+        if ch == "\\":
+            if i + 1 < len(text):
+                mask[i + 1] = True
+            i += 2
+        elif ch == "'" and text[i + 1 : i + 2] == "'":
+            mask[i + 1] = True
+            i += 2
+        else:
+            in_lit = ch != "'"
+            i += 1
+    return mask
+
+
+@settings(max_examples=400, deadline=None)
+@given(text=_scan_text)
+def test_sqltext_literal_mask_matches_segmentation(text):
+    from clickhub_spark.sqltext import in_literal, split_quoted
+
+    mask = _naive_literal_mask(text)
+    segs = split_quoted(text)
+    assert "".join(seg for _, seg in segs) == text
+    assert [lit for lit, seg in segs for _ in seg] == mask
+    assert [in_literal(text, i) for i in range(len(text))] == mask
+
+
+@settings(max_examples=400, deadline=None)
+@given(text=_scan_text)
+def test_sqltext_depth_and_matching_close_match_a_stack(text):
+    from clickhub_spark.sqltext import depth, matching_close
+
+    mask = _naive_literal_mask(text)
+    level, stack, close_of = 0, [], {}
+    for i, ch in enumerate(text):
+        assert depth(text, i) == level
+        if mask[i]:
+            continue
+        if ch in "([":
+            level += 1
+            stack.append(i)
+        elif ch in ")]":
+            level -= 1
+            if stack:
+                close_of[stack.pop()] = i
+    for i, ch in enumerate(text):
+        if ch in "([" and not mask[i]:
+            assert matching_close(text, i) == close_of.get(i)
+
+
+@settings(max_examples=400, deadline=None)
+@given(text=_scan_text, sep=st.sampled_from([",", "a"]))
+def test_sqltext_split_top_rejoins_to_input(text, sep):
+    from clickhub_spark.sqltext import split_top
+
+    mask = _naive_literal_mask(text)
+    pieces, level, start = [], 0, 0
+    for i, ch in enumerate(text):
+        if mask[i]:
+            continue
+        if ch in "([":
+            level += 1
+        elif ch in ")]":
+            level -= 1
+        elif ch == sep and level == 0:
+            pieces.append(text[start:i])
+            start = i + 1
+    pieces.append(text[start:])
+    parts = split_top(text, sep, keep_empty=True)
+    assert sep.join(parts) == sep.join(p.strip() for p in pieces)
+    assert split_top(text, sep) == [p for p in parts if p]

@@ -2788,3 +2788,25 @@ def test_columns_regex_selector(spark, b9):
     assert run(
         spark, "SELECT 'see COLUMNS(\\'^l\\') docs' AS s FROM b9_t LIMIT 1"
     ).first().s == "see COLUMNS('^l') docs"
+
+
+def test_keyword_first_seen_in_literal(spark):
+    """QUALIFY and PREWHERE are found at their first occurrence OUTSIDE
+    string literals: a select-list literal spelling the keyword before
+    the real clause used to make both passes give up (QUALIFY reached
+    Spark untranslated; PREWHERE was renamed to a second WHERE)."""
+    spark.createDataFrame(
+        [(1, 3.0, 5), (2, 1.0, 6), (3, 2.0, 1)], "x int, a double, b int"
+    ).createOrReplaceTempView("kwlit_t")
+    rows = run(
+        spark,
+        "SELECT 'QUALIFY' AS s, x, row_number() OVER (ORDER BY x) AS rn "
+        "FROM kwlit_t QUALIFY rn = 1",
+    ).collect()
+    assert [(r.s, r.x, r.rn) for r in rows] == [("QUALIFY", 1, 1)]
+    rows = run(
+        spark,
+        "SELECT 'PREWHERE' AS s, x FROM kwlit_t PREWHERE a > 1 WHERE b > 2 "
+        "ORDER BY x",
+    ).collect()
+    assert [(r.s, r.x) for r in rows] == [("PREWHERE", 1)]
