@@ -3368,7 +3368,7 @@ def q_agg_lttb_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type — the EXACT sequential form (Steinarsson's greedy:
     each bucket's pick anchors on the previously SELECTED point),
     which is what the engine's aggregate computes inside its sorted
-    state; q_agg_lttb (queries_r5c) keeps the parallel
+    state; q_agg_lttb (above) keeps the parallel
     neighbor-centroid approximation for the pure-SQL shape.
     Value-oracled since r13: the oracle replays the greedy
     recurrence as a DuckDB recursive CTE (bit-identical float64

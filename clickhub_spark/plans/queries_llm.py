@@ -3219,7 +3219,7 @@ def q_llm_logreg_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     parameters whose residual exceeds the gate — expected 0, a
     theorem, not a tuned threshold.  The design matrix and the ridge
     λ are IMPORTED from the registered fit's own definitions
-    (queries_r7.logreg_features, glm.DEFAULT_RIDGE), so the
+    (logreg_features above, glm.DEFAULT_RIDGE), so the
     certificate cannot drift from what it certifies."""
     from clickhub_spark.operators.glm import DEFAULT_RIDGE, logistic_fit
 

@@ -226,7 +226,7 @@ def q_seq_next_node_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     'click')``): for each user, the event that FOLLOWS the first
     consecutive view→click pair in the time-ordered stream ('<end>'
     when the chain closes the stream).  Completes the family next to
-    q_seq_next_node (queries_r7), which covers the single-event
+    q_seq_next_node (above), which covers the single-event
     base.
 
     One user_id exchange shared by the lead pair scan and the

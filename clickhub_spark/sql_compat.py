@@ -6,16 +6,25 @@ statement it ever runs is cited below); ``translate`` rewrites the
 ClickHouse-isms to Spark SQL and ``run`` executes against registered
 views.  This is a conservative, pattern-scoped translator for the
 app-surface dialect + the common ClickHouse function names — not a
-general SQL transpiler.  What counts as a string literal, a bracket
-depth, a matching close paren, a top-level comma and the derived
-table around a clause is defined once in sqltext.py.  The call
-rewrites and the clause passes find their targets through those
-primitives, so quoted text stays inert and a clause inside a
-subquery is rewritten in that subquery.  A few statement-level
-probes (SAMPLE, trailing FORMAT/SETTINGS, WITH FILL, ASOF JOIN,
-APPLY, the unsupported-function pointers) still look only at the
-FIRST occurrence of their keyword and pass through when it is
-quoted.
+general SQL transpiler.
+
+Function calls are rewritten from one table, ``_FNS``: each ClickHouse
+name maps to a plain rename, a call render (with a minimum argument
+count and, optionally, the text after the call), a parametric render
+for ``name(params)(args)``, or a render that refuses with a pointer to
+the operator to use instead.  One driver (``_translate_calls``) finds
+the call sites in a single left-to-right pass, rewrites each call's
+arguments before the call itself, and never scans a render's output
+again, so no rewrite depends on the order of the entries.  The
+statement-level passes (system tables, db prefixes, ``::`` casts,
+tuple dot access, ``any(``, PREWHERE, QUALIFY, SAMPLE, WITH TOTALS,
+FINAL, array literals, FORMAT/SETTINGS, scalar WITH, GLOBAL, ANY
+JOIN, ``LIMIT a, b``, REPLACE and the clause rewrites) run in a fixed
+order around it.  What counts as a string literal, a bracket depth, a
+matching close paren, a top-level comma and the derived table around
+a clause is defined once in sqltext.py; every pass finds its targets
+through those primitives, so quoted text stays inert and a clause
+inside a subquery is rewritten in that subquery.
 
 Reference statements covered (all of them):
 - SELECT max(time) as max_time FROM git.commits WHERE repo_name='x'
@@ -43,6 +52,8 @@ query and apply the registered DataFrame operator.
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -58,108 +69,6 @@ from clickhub_spark.sqltext import (
     split_top,
 )
 
-#: ClickHouse function name → Spark SQL equivalent (1:1 renames).
-_FN_RENAMES = {
-    "toYear": "year",
-    "toMonth": "month",
-    "toDayOfMonth": "dayofmonth",
-    "toHour": "hour",
-    "toDate": "to_date",
-    "lowerUTF8": "lower",
-    "upperUTF8": "upper",
-    "countIf": "count_if",
-    "uniq": "approx_count_distinct",
-    "arrayJoin": "explode",
-    "has": "array_contains",
-    "groupArray": "collect_list",
-    "groupUniqArray": "collect_set",
-    "argMax": "max_by",
-    "argMin": "min_by",
-    "intDiv": "div",
-    "cityHash64": "xxhash64",
-    # identical argument order, different name:
-    "startsWith": "startswith",
-    "endsWith": "endswith",
-    "match": "regexp_like",
-    "replaceRegexpAll": "regexp_replace",
-    "replaceAll": "replace",
-    "indexOf": "array_position",
-    "arrayDistinct": "array_distinct",
-    "arraySort": "sort_array",
-    "arrayReverse": "reverse",
-    "lengthUTF8": "length",
-    "substringUTF8": "substring",
-    "position": "instr",  # CH position(haystack, needle) = instr order
-    "ifNull": "coalesce",
-    "today": "current_date",
-    # statistical aggregates (same arg order); ClickHouse's bare `any`
-    # is deliberately NOT mapped — it would collide with SQL's
-    # `= ANY(subquery)`.
-    "stddevPop": "stddev_pop",
-    "stddevSamp": "stddev_samp",
-    "varPop": "var_pop",
-    "varSamp": "var_samp",
-    "covarPop": "covar_pop",
-    "covarSamp": "covar_samp",
-    "anyLast": "last_value",
-    "leftPad": "lpad",
-    "rightPad": "rpad",
-    "modulo": "mod",
-    # probe battery 4 — still strictly 1:1:
-    "bitCount": "bit_count",
-    "base64Encode": "base64",
-    "generateUUIDv4": "uuid",
-    "currentDatabase": "current_database",
-    "currentUser": "current_user",
-    "toTypeName": "typeof",  # Spark type names, not ClickHouse's
-    "toISOWeek": "weekofyear",  # Spark weekofyear is the ISO week
-    # probe battery 5 — 1:1:
-    "mapKeys": "map_keys",
-    "mapValues": "map_values",
-    "mapContains": "map_contains_key",
-    "substringIndex": "substring_index",
-    "toLastDayOfMonth": "last_day",
-    "makeDate": "make_date",
-    "makeDateTime": "make_timestamp",
-    "toUnixTimestamp64Milli": "unix_millis",
-    "fromUnixTimestamp64Milli": "timestamp_millis",
-    "positionUTF8": "instr",  # CH (haystack, needle) = instr order
-    "uniqTheta": "approx_count_distinct",
-    "now64": "now",  # µs vs the engine's configurable sub-second scale
-    "JSONExtractKeys": "json_object_keys",
-    # 64-bit hash families: deterministic xxhash64 stands in for the
-    # engine's sip/farm/wy/halfMD5 (different algorithm, same
-    # bucketing/sampling contract — the cityHash64 precedent)
-    "sipHash64": "xxhash64",
-    "farmHash64": "xxhash64",
-    "wyHash64": "xxhash64",
-    "halfMD5": "xxhash64",
-    # round-6 surface widening — still strictly 1:1 (same arg order,
-    # same meaning); names whose semantics diverge between the
-    # dialects (toDayOfWeek's weekday origin, fromUnixTimestamp's
-    # return type, splitByChar's reversed args, arrayCompact's
-    # consecutive-vs-null semantics) are deliberately NOT mapped.
-    "toMinute": "minute",
-    "toSecond": "second",
-    "toQuarter": "quarter",
-    "toDayOfYear": "dayofyear",
-    "trimBoth": "trim",
-    "trimLeft": "ltrim",
-    "trimRight": "rtrim",
-    "arrayMin": "array_min",
-    "arrayMax": "array_max",
-    "arrayFlatten": "flatten",
-    "arrayConcat": "concat",
-    # toUnixTimestamp / arrayStringConcat / addDays / subtractDays /
-    # arraySlice have DEDICATED handlers inside translate() (default
-    # separator, date-typed args, optional-length form) — listing them
-    # here too would shadow those with wrong-arity renames.
-}
-
-#: <agg>If(x, cond) → <agg>(CASE WHEN cond THEN x END); Spark only has
-#: count_if, the other -If combinators need the CASE rewrite.
-_IF_COMBINATORS = {"sumIf": "sum", "avgIf": "avg", "minIf": "min", "maxIf": "max"}
-
 #: accurateCast('Type') targets — ANSI CAST already throws on overflow,
 #: which IS the "accurate" contract (unsigned types widen: Spark has no
 #: unsigned integers, the engine's documented trade)
@@ -169,15 +78,6 @@ _CH_CAST_TYPES = {
     "UInt32": "BIGINT", "UInt64": "BIGINT", "Float32": "FLOAT",
     "Float64": "DOUBLE", "String": "STRING", "Date": "DATE",
     "DateTime": "TIMESTAMP", "Bool": "BOOLEAN",
-}
-
-_START_OF = {
-    "toStartOfHour": "hour",
-    "toStartOfDay": "day",
-    "toStartOfMonth": "month",
-    "toStartOfQuarter": "quarter",
-    "toStartOfYear": "year",
-    "toStartOfMinute": "minute",
 }
 
 #: ClickHouse formatDateTime %-tokens → Spark datetime pattern letters
@@ -230,74 +130,6 @@ def set_sample_key(table: str, key_expr: str) -> None:
     ``SAMPLE k OFFSET m`` can render its deterministic md5 hash-range
     slice over it."""
     _SAMPLE_KEYS[table.lower()] = key_expr
-
-
-def _rewrite_call(
-    sql: str, name: str, render, nargs: int = 1, with_tail: bool = False
-) -> str:
-    """Rewrite every ``name(...)`` call outside string literals.
-    ``render`` receives the list of top-level comma-split arguments
-    (plus, when ``with_tail`` is set, the SQL text FOLLOWING the
-    close paren — so a render can adapt to window position, e.g.
-    sumIf's coalesce wrapper is illegal before ``OVER``).  A call
-    with fewer than ``nargs`` arguments, or one that never closes, is
-    left untouched."""
-    pat = re.compile(rf"\b{name}\s*\(")
-    if not pat.search(sql):
-        return sql
-    out, i = [], 0
-    for m in iter_code(sql, pat):
-        if m.start() < i:
-            continue  # inside the arguments of a call already rendered
-        close = matching_close(sql, m.end() - 1)
-        if close is None:
-            break
-        args = split_top(sql[m.end() : close], keep_empty=True)
-        out.append(sql[i : m.start()])
-        i = close + 1
-        if len(args) < nargs:
-            out.append(sql[m.start() : i])
-            continue
-        # the scan resumes after the close paren, so a same-name call
-        # nested in the arguments (`tuple(tuple(1, 2), 3)`) is
-        # rewritten first, by recursion into each argument
-        if pat.search("".join(args)):
-            args = [
-                _rewrite_call(a, name, render, nargs, with_tail) for a in args
-            ]
-        out.append(render(args, sql[i:]) if with_tail else render(args))
-    out.append(sql[i:])
-    return "".join(out)
-
-
-def _rewrite_parametric(sql: str, name: str, render) -> str:
-    """Rewrite ClickHouse parameterized aggregates ``name(params)(args)``
-    (e.g. ``quantile(0.5)(x)``) outside string literals; ``render``
-    receives (params, args)."""
-    pat = re.compile(rf"\b{name}\s*\(")
-    if not pat.search(sql):
-        return sql
-    out, i = [], 0
-    for m in iter_code(sql, pat):
-        if m.start() < i:
-            continue
-        close = matching_close(sql, m.end() - 1)
-        if close is None:
-            continue
-        if not sql.startswith("(", close + 1):
-            out.append(sql[i : close + 1])
-            i = close + 1
-            continue
-        args_close = matching_close(sql, close + 1)
-        if args_close is None:
-            break
-        params = split_top(sql[m.end() : close], keep_empty=True)
-        args = split_top(sql[close + 2 : args_close], keep_empty=True)
-        out.append(sql[i : m.start()])
-        out.append(render(params, args))
-        i = args_close + 1
-    out.append(sql[i:])
-    return "".join(out)
 
 
 def _sequence_sql(params: list[str], args: list[str], count: bool) -> str:
@@ -1033,16 +865,6 @@ def _rewrite_distinct_on(sql: str) -> str:
     return f"{out} {tail}" if tail else out
 
 
-def _sub_outside_literals(sql: str, pattern: str, repl: str) -> str:
-    """``re.sub`` applied only to the non-literal segments of ``sql``
-    (string literals pass through byte-identical).  For patterns whose
-    matches cannot straddle a literal boundary."""
-    return "".join(
-        seg if is_lit else re.sub(pattern, repl, seg, flags=re.IGNORECASE)
-        for is_lit, seg in split_quoted(sql)
-    )
-
-
 def _rewrite_with_totals(sql: str) -> str:
     """``GROUP BY <cols> WITH TOTALS`` → ``GROUP BY GROUPING SETS
     ((<cols>), ())``: the totals row is the empty grouping set (its
@@ -1360,1445 +1182,488 @@ def _merge_prewhere(sql: str) -> str:
     )
 
 
-def translate(sql: str) -> str:
-    """Rewrite ClickHouse SQL to Spark SQL."""
-    out = sql
-    # system tables: system.one is the engine's 1-row dummy relation;
-    # the rest map to the system_* views the Warehouse registers
-    # (register_system_views) — system.tables/columns/parts/databases.
-    # Segment-wise so a 'system.tables' string constant stays verbatim.
-    segs_sys = split_quoted(out)
-    out = "".join(
-        t
-        if lit
-        else re.sub(
-            r"\bsystem\.(\w+)",
-            lambda m_s: (
-                "(SELECT 1 AS dummy)"
-                if m_s.group(1) == "one"
-                else f"system_{m_s.group(1)}"
-            ),
-            t,
+# --- call renders ---------------------------------------------------------
+# Each render receives the top-level arguments of one call, already
+# rewritten (innermost calls first), and returns final Spark SQL: the
+# driver never re-scans a render's output.
+
+
+def _topk(ps: list[str], args: list[str]) -> str:
+    """topK(N)(x) → the N most frequent values as an array, most
+    frequent first, value ASC as the deterministic tiebreak (the
+    engine's Space-Saving order on ties is insertion-dependent).  Exact
+    counting over the group's collected values — O(distinct x rows)
+    per group in interpreted HOFs, the dialect-parity shape; the
+    100 TB path is the Misra-Gries operator (operators/topk.py)."""
+    if len(ps) > 1:
+        raise ValueError(
+            "topK(N, load_factor, 'counts') variants are not "
+            "supported — the 'counts' mode changes the result "
+            "shape to (value, count) tuples; use topK(N)(x) or "
+            "the Misra-Gries operator (operators/topk.py)"
         )
-        for lit, t in segs_sys
+    x, n = args[0], int(ps[0])
+    lst = f"collect_list({x})"
+    ranked = (
+        f"array_sort(transform(array_distinct({lst}), v -> "
+        f"named_struct('neg', -size(filter({lst}, e -> e = v)), "
+        f"'v', v)))"
     )
-    # system.columns/parts use the engine's real column names `table`
-    # and `rows`, which Spark's ANSI parser reserves — backtick the
-    # bare identifiers, but only in statements touching those views
-    if re.search(r"\bsystem_(columns|parts)\b", out):
-        # a lowercase window frame (`rows between …`, `rows 3
-        # preceding`, `rows unbounded/current …`) in the same
-        # statement is frame SYNTAX, not the system-view column —
-        # quoting it is a parse error (ADVICE r12)
-        segs0 = split_quoted(out)
-        out = "".join(
-            t
-            if lit
-            else re.sub(
-                r"(?<!`)\b(table|rows)\b(?!`)"
-                r"(?!\s+(?i:between|unbounded|current)\b)(?!\s+\d)",
-                r"`\1`",
-                t,
-            )
-            for lit, t in segs0
-        )
-    # db-qualified tables: git.commits → commits (our views are flat)
-    out = re.sub(r"\b(?:git|default)\.(\w+)", r"\1", out)
-    # bare count() → count(*)
-    out = re.sub(r"\bcount\(\s*\)", "count(*)", out, flags=re.IGNORECASE)
-    # x::Type positional casts → CAST(x AS type)
-    out = re.sub(
-        r"(\w+)::DateTime\('UTC'\)", r"CAST(\1 AS TIMESTAMP)", out
-    )
-    out = re.sub(r"(\w+)::DateTime\b", r"CAST(\1 AS TIMESTAMP)", out)
-    out = re.sub(r"(\w+)::String\b", r"CAST(\1 AS STRING)", out)
-    out = re.sub(r"(\w+)::U?Int\d+\b", r"CAST(\1 AS BIGINT)", out)
-    out = re.sub(r"'([^']*)'::String\b", r"'\1'", out)
-    # function-style casts: toInt64(x)/toUInt32(x) → BIGINT,
-    # toFloat64(x) → DOUBLE, toDateTime(x) → TIMESTAMP
-    # (_rewrite_call embeds `name` in its regex, so a pattern works)
-    for ch_fn, sql_type in [
-        (r"toU?Int(?:8|16|32|64)", "BIGINT"),
-        (r"toFloat(?:32|64)", "DOUBLE"),
-        (r"toDateTime", "TIMESTAMP"),
-    ]:
-        out = _rewrite_call(
-            out, ch_fn, lambda a, t=sql_type: f"CAST({a[0]} AS {t})"
-        )
-    # uniqExact(x) → count(DISTINCT x)  (count_distinct is not a SQL name)
-    out = re.sub(r"\buniqExact\s*\(", "count(DISTINCT ", out)
-    # uniqUpTo(N)(x) → LEAST(count(DISTINCT x), N+1) — ClickHouse's
-    # capped distinct saturates at N+1 ("more than N?" predicate);
-    # must rewrite before the bare-uniq rename pass.
-    out = _rewrite_parametric(
-        out,
-        "uniqUpTo",
-        lambda ps, args: f"LEAST(count(DISTINCT {args[0]}), {int(ps[0]) + 1})",
-    )
-    # topK(N)(x) → the N most frequent values as an array, most
-    # frequent first, value ASC as the deterministic tiebreak (the
-    # engine's Space-Saving order on ties is insertion-dependent).
-    # Exact counting over the group's collected values — O(distinct x
-    # rows) per group in interpreted HOFs, the dialect-parity shape;
-    # the 100 TB path is the Misra-Gries operator (operators/topk.py).
-    def _topk(ps, args):
-        if len(ps) > 1:
-            raise ValueError(
-                "topK(N, load_factor, 'counts') variants are not "
-                "supported — the 'counts' mode changes the result "
-                "shape to (value, count) tuples; use topK(N)(x) or "
-                "the Misra-Gries operator (operators/topk.py)"
-            )
-        x, n = args[0], int(ps[0])
-        lst = f"collect_list({x})"
-        ranked = (
-            f"array_sort(transform(array_distinct({lst}), v -> "
-            f"named_struct('neg', -size(filter({lst}, e -> e = v)), "
-            f"'v', v)))"
-        )
-        return f"transform(slice({ranked}, 1, {n}), s -> s.v)"
+    return f"transform(slice({ranked}, 1, {n}), s -> s.v)"
 
-    out = _rewrite_parametric(out, "topK", _topk)
-    # <agg>If(col, cond) → <agg>(CASE WHEN cond THEN col END); Spark
-    # only has count_if.  ClickHouse's non-OrNull aggregates return the TYPE
-    # DEFAULT when the condition matches nothing (probe battery 6):
-    # sumIf → 0, avgIf → nan (0/0) — Spark's NULL would silently
-    # diverge, so those two coalesce.  minIf/maxIf keep NULL: their
-    # CH default is type-dependent (0 / '' / 1970-01-01), which a
-    # text render can't know; NULL is the -OrNull behavior users
-    # reach for anyway.  In WINDOW position (a trailing OVER) the
-    # coalesce wrapper is illegal — coalesce is not a window function
-    # — so the render keeps the bare sum(CASE …) there; an OVER
-    # window never produces the empty-group row anyway (ADVICE r13).
-    def _if_agg_render(spark_agg: str, default: str):
-        def render(a: list[str], tail: str) -> str:
-            bare = f"{spark_agg}(CASE WHEN {a[1]} THEN {a[0]} END)"
-            if re.match(r"(?is)\s*OVER\b", tail):
-                return bare
-            return f"coalesce({bare}, {default})"
 
-        return render
+def _topk_weighted(ps: list[str], a: list[str]) -> str:
+    n = int(ps[0])
+    lst = f"collect_list(named_struct('x', {a[0]}, 'w', {a[1]}))"
+    ranked = (
+        f"array_sort(transform(array_distinct(transform({lst}, "
+        f"__s -> __s.x)), __v -> named_struct('neg', "
+        f"-aggregate(filter({lst}, __s -> __s.x <=> __v), "
+        f"CAST(0 AS DOUBLE), (__a2, __s) -> __a2 + __s.w), 'v', __v)))"
+    )
+    return f"transform(slice({ranked}, 1, {n}), __s -> __s.v)"
 
-    out = _rewrite_call(
-        out, "sumIf", _if_agg_render("sum", "0"), nargs=2, with_tail=True
-    )
-    out = _rewrite_call(
-        out,
-        "avgIf",
-        _if_agg_render("avg", "CAST('NaN' AS DOUBLE)"),
-        nargs=2,
-        with_tail=True,
-    )
-    for ch_name, spark_agg in _IF_COMBINATORS.items():
-        if ch_name in ("sumIf", "avgIf"):
-            continue
-        out = _rewrite_call(
-            out,
-            ch_name,
-            lambda args, a=spark_agg: f"{a}(CASE WHEN {args[1]} THEN {args[0]} END)",
-            nargs=2,
-        )
-    # parameterized quantile combinators: quantileExact(p)(x) is exact
-    # percentile, quantile(p)(x) the sketch form, quantiles(p…)(x) the
-    # array form.
-    out = _rewrite_parametric(
-        out, "quantileExact", lambda ps, args: f"percentile({args[0]}, {ps[0]})"
-    )
-    out = _rewrite_parametric(
-        out, "quantiles", lambda ps, args: f"percentile_approx({args[0]}, array({', '.join(ps)}))"
-    )
-    out = _rewrite_parametric(
-        out, "quantile", lambda ps, args: f"percentile_approx({args[0]}, {ps[0]})"
-    )
-    out = _rewrite_call(out, "median", lambda a: f"percentile_approx({a[0]}, 0.5)")
-    # sequenceMatch('pattern')(ts, cond1, …) / sequenceCount — the
-    # general pattern aggregates (operators/seqmatch.py is the
-    # DataFrame form; this is the same bitset-string + regex
-    # compilation rendered as pure aggregate SQL).  Time-conditioned
-    # patterns need per-entry timestamps, which a string cannot carry
-    # — those raise with a pointer to the operator.
-    out = _rewrite_parametric(
-        out, "sequenceMatch", lambda ps, args: _sequence_sql(ps, args, False)
-    )
-    out = _rewrite_parametric(
-        out, "sequenceCount", lambda ps, args: _sequence_sql(ps, args, True)
-    )
-    # windowFunnel(w[, mode…])(ts, c1, …) — all four engine modes as
-    # one aggregate() fold of the engine scan (per-condition entries)
-    out = _rewrite_parametric(out, "windowFunnel", _window_funnel_sql)
 
-    # sequenceNextNode(direction, base)(ts, ev, base_cond, e1, …) —
-    # sorted-entry-array form of the q_seq_next_node* constructions
-    out = _rewrite_parametric(
-        out, "sequenceNextNode", _sequence_next_node_sql
-    )
+def _if_agg(spark_agg: str, default: str | None = None):
+    """<agg>If(col, cond) → <agg>(CASE WHEN cond THEN col END); Spark
+    only has count_if.  ClickHouse's non-OrNull aggregates return the
+    TYPE DEFAULT when the condition matches nothing (probe battery 6):
+    sumIf → 0, avgIf → nan (0/0) — Spark's NULL would silently
+    diverge, so those two coalesce to ``default``.  minIf/maxIf keep
+    NULL: their CH default is type-dependent (0 / '' / 1970-01-01),
+    which a text render can't know; NULL is the -OrNull behavior users
+    reach for anyway.  In WINDOW position (a trailing OVER) the
+    coalesce wrapper is illegal — coalesce is not a window function —
+    so the render keeps the bare sum(CASE …) there; an OVER window
+    never produces the empty-group row anyway (ADVICE r13)."""
 
-    # retention(cond1, …) — cohort flag array via max-flags
-    out = _rewrite_call(out, "retention", _retention_sql, nargs=1)
+    def render(a: list[str], tail: str = "") -> str:
+        bare = f"{spark_agg}(CASE WHEN {a[1]} THEN {a[0]} END)"
+        if default is None or re.match(r"(?is)\s*OVER\b", tail):
+            return bare
+        return f"coalesce({bare}, {default})"
 
-    # sequenceMatchEvents('(?i).*(?j)…')(ts, c1, …) — greedy trail
-    # fold for subsequence patterns (others raise → the operator)
-    out = _rewrite_parametric(
-        out, "sequenceMatchEvents", _sequence_match_events_sql
-    )
-    # multiIf(c1, v1, …, else) → CASE chain
-    def _multi_if(args: list[str]) -> str:
-        whens = "".join(
-            f" WHEN {args[i]} THEN {args[i + 1]}" for i in range(0, len(args) - 1, 2)
-        )
-        return f"CASE{whens} ELSE {args[-1]} END"
+    return render
 
-    out = _rewrite_call(out, "multiIf", _multi_if, nargs=3)
-    # argument-order / shape differences
-    out = _rewrite_call(
-        out, "splitByChar", lambda args: f"split({args[1]}, {args[0]})", nargs=2
-    )
-    out = _rewrite_call(
-        out, "extractAll", lambda args: f"regexp_extract_all({args[0]}, {args[1]}, 0)", nargs=2
-    )
-    out = _rewrite_call(
-        out, "arrayMap", lambda args: f"transform({args[1]}, {args[0]})", nargs=2
-    )
-    out = _rewrite_call(
-        out, "arrayFilter", lambda args: f"filter({args[1]}, {args[0]})", nargs=2
-    )
-    out = _rewrite_call(out, "arrayUniq", lambda args: f"size(array_distinct({args[0]}))")
-    out = _rewrite_call(
-        out, "arrayExists", lambda args: f"exists({args[1]}, {args[0]})", nargs=2
-    )
-    out = _rewrite_call(
-        out, "arrayAll", lambda args: f"forall({args[1]}, {args[0]})", nargs=2
-    )
 
-    def _array_string_concat(args: list[str]) -> str:
-        sep = args[1] if len(args) > 1 else "''"
-        return f"array_join({args[0]}, {sep})"
+def _multi_if(args: list[str]) -> str:
+    """multiIf(c1, v1, …, else) → CASE chain."""
+    whens = "".join(
+        f" WHEN {args[i]} THEN {args[i + 1]}" for i in range(0, len(args) - 1, 2)
+    )
+    return f"CASE{whens} ELSE {args[-1]} END"
 
-    out = _rewrite_call(out, "arrayStringConcat", _array_string_concat)
-    # formatDateTime(x, '%Y-%m-%d') → date_format with translated tokens
-    def _fmt_datetime(args: list[str]) -> str:
-        fmt = args[1]
-        for ch_tok, spark_tok in _FMT_TOKENS.items():
-            fmt = fmt.replace(ch_tok, spark_tok)
-        return f"date_format({args[0]}, {fmt})"
 
-    out = _rewrite_call(out, "formatDateTime", _fmt_datetime, nargs=2)
-    # dateDiff('unit', a, b) counts crossed UNIT BOUNDARIES in
-    # ClickHouse (dateDiff('hour', 22:58, 23:05) = 1), while Spark's
-    # timestampdiff counts COMPLETE elapsed units (= 0 there) — so the
-    # operands are date_trunc'ed to the unit first.  age('unit', a, b)
-    # is ClickHouse's complete-units form: plain timestampdiff.
-    def _date_diff(a: list[str]) -> str:
-        unit = a[0].strip().strip("'\"").upper()
-        if unit not in (
-            "SECOND", "MINUTE", "HOUR", "DAY", "WEEK",
-            "MONTH", "QUARTER", "YEAR",
-        ):
-            raise ValueError(f"dateDiff: unsupported unit {unit!r}")
-        return (
-            f"timestampdiff({unit}, date_trunc('{unit}', {a[1]}), "
-            f"date_trunc('{unit}', {a[2]}))"
-        )
+def _array_string_concat(args: list[str]) -> str:
+    sep = args[1] if len(args) > 1 else "''"
+    return f"array_join({args[0]}, {sep})"
 
-    out = _rewrite_call(out, "dateDiff", _date_diff, nargs=3)
-    out = _rewrite_call(out, "date_diff", _date_diff, nargs=3)
-    out = _rewrite_call(
-        out,
-        "age",
-        lambda a: (
-            f"timestampdiff({a[0].strip(chr(39)).upper()}, {a[1]}, {a[2]})"
-        ),
-        nargs=3,
-    )
-    # arraySlice: ClickHouse's 2-arg form means "offset to end" (Spark's
-    # slice requires exactly 3 args); non-negative lengths map 1:1.
-    # ClickHouse NEGATIVE lengths ("all but the last |n|") have no Spark
-    # equivalent and pass through unchanged for a loud analysis error.
-    out = _rewrite_call(
-        out,
-        "arraySlice",
-        lambda a: (
-            f"slice({a[0]}, {a[1]}, {a[2]})"
-            if len(a) == 3
-            else f"slice({a[0]}, {a[1]}, 2147483647)"
-        ),
-        nargs=2,
-    )
-    out = _rewrite_call(out, "addDays", lambda a: f"date_add({a[0]}, {a[1]})", nargs=2)
-    out = _rewrite_call(out, "subtractDays", lambda a: f"date_sub({a[0]}, {a[1]})", nargs=2)
-    out = _rewrite_call(out, "addMonths", lambda a: f"add_months({a[0]}, {a[1]})", nargs=2)
-    out = _rewrite_call(
-        out, "subtractMonths", lambda a: f"add_months({a[0]}, -({a[1]}))", nargs=2
-    )
-    # --- probe battery 4 (round-12 session 3): remaining add/subtract
-    # units render as timestampadd (n may be any expression, so the
-    # INTERVAL literal form doesn't apply)
-    for ch_unit, sp_unit in [
-        ("Hours", "HOUR"), ("Minutes", "MINUTE"), ("Seconds", "SECOND"),
-        ("Weeks", "WEEK"), ("Quarters", "QUARTER"), ("Years", "YEAR"),
-    ]:
-        out = _rewrite_call(
-            out, f"add{ch_unit}",
-            lambda a, u=sp_unit: f"timestampadd({u}, {a[1]}, {a[0]})", nargs=2,
-        )
-        out = _rewrite_call(
-            out, f"subtract{ch_unit}",
-            lambda a, u=sp_unit: f"timestampadd({u}, -({a[1]}), {a[0]})", nargs=2,
-        )
-    out = _rewrite_call(
-        out, "toMonday", lambda a: f"to_date(date_trunc('week', {a[0]}))"
-    )
-    # timeSlot = toStartOfInterval(t, 30 MINUTE); toRelative*Num is the
-    # epoch count in the unit (ClickHouse counts from 1970 in server TZ;
-    # the engine session pins UTC so unix_timestamp matches)
-    out = _rewrite_call(
-        out, "timeSlot",
-        lambda a: (
-            f"timestamp_seconds(CAST(floor(unix_timestamp({a[0]}) / 1800) "
-            f"* 1800 AS BIGINT))"
-        ),
-    )
-    for rel_unit, rel_div in [
-        ("Second", 1), ("Minute", 60), ("Hour", 3600), ("Day", 86400),
-    ]:
-        out = _rewrite_call(
-            out, f"toRelative{rel_unit}Num",
-            lambda a, dv=rel_div: (
-                f"CAST(floor(unix_timestamp({a[0]}) / {dv}) AS BIGINT)"
-            ),
-        )
-    out = _rewrite_call(out, "toISOYear", lambda a: f"extract(YEAROFWEEK FROM {a[0]})")
-    # arithmetic named forms → operators; ClickHouse divide() is always
-    # floating-point division, which Spark's / on integers also is
-    out = _rewrite_call(out, "plus", lambda a: f"(({a[0]}) + ({a[1]}))", nargs=2)
-    out = _rewrite_call(out, "minus", lambda a: f"(({a[0]}) - ({a[1]}))", nargs=2)
-    out = _rewrite_call(out, "multiply", lambda a: f"(({a[0]}) * ({a[1]}))", nargs=2)
-    # divide() is ALWAYS Float64 division in ClickHouse, with IEEE
-    # zero-divisor results (x/0 → ±Inf, 0/0 → NaN).  Spark 4's ANSI
-    # mode throws DIVIDE_BY_ZERO for EVERY numeric type incl. double,
-    # so the zero-divisor branches are spelled out (a -0.0 divisor
-    # loses its sign — documented delta)
-    def _ch_divide(a: list[str]) -> str:
-        num, den = f"CAST({a[0]} AS DOUBLE)", f"CAST({a[1]} AS DOUBLE)"
-        return (
-            f"(CASE WHEN {num} IS NULL OR {den} IS NULL "
-            f"THEN CAST(NULL AS DOUBLE) "
-            f"WHEN {den} = 0.0 THEN "
-            f"CASE WHEN isnan({num}) OR {num} = 0.0 THEN CAST('NaN' AS DOUBLE) "
-            f"WHEN {num} > 0 THEN CAST('Infinity' AS DOUBLE) "
-            f"ELSE CAST('-Infinity' AS DOUBLE) END "
-            f"ELSE {num} / {den} END)"
-        )
 
-    out = _rewrite_call(out, "divide", _ch_divide, nargs=2)
-    out = _rewrite_call(out, "negate", lambda a: f"(-({a[0]}))")
-    out = _rewrite_call(
-        out, "intDivOrZero",
-        lambda a: f"CASE WHEN ({a[1]}) = 0 THEN 0 ELSE div({a[0]}, {a[1]}) END",
-        nargs=2,
-    )
-    out = _rewrite_call(
-        out, "moduloOrZero",
-        lambda a: f"CASE WHEN ({a[1]}) = 0 THEN 0 ELSE ({a[0]}) % ({a[1]}) END",
-        nargs=2,
-    )
-    # gcd/lcm: Euclid unrolled as an aggregate() fold — 92 iterations
-    # bounds the worst case for 64-bit inputs (consecutive Fibonacci
-    # numbers), each step a no-op once the remainder hits 0
-    def _gcd_expr(x: str, y: str) -> str:
-        return (
-            f"aggregate(sequence(1, 92), "
-            f"named_struct('a', abs(CAST({x} AS BIGINT)), "
-            f"'b', abs(CAST({y} AS BIGINT))), "
-            f"(__s, __i) -> IF(__s.b = 0, __s, "
-            f"named_struct('a', __s.b, 'b', __s.a % __s.b)), __s -> __s.a)"
-        )
+def _fmt_datetime(args: list[str]) -> str:
+    """formatDateTime(x, '%Y-%m-%d') → date_format with translated
+    tokens."""
+    fmt = args[1]
+    for ch_tok, spark_tok in _FMT_TOKENS.items():
+        fmt = fmt.replace(ch_tok, spark_tok)
+    return f"date_format({args[0]}, {fmt})"
 
-    out = _rewrite_call(out, "gcd", lambda a: f"({_gcd_expr(a[0], a[1])})", nargs=2)
-    out = _rewrite_call(
-        out, "lcm",
-        lambda a: (
-            f"div(abs(CAST({a[0]} AS BIGINT) * CAST({a[1]} AS BIGINT)), "
-            f"{_gcd_expr(a[0], a[1])})"
-        ),
-        nargs=2,
-    )
-    out = _rewrite_call(out, "exp2", lambda a: f"pow(2, {a[0]})")
-    out = _rewrite_call(out, "exp10", lambda a: f"pow(10, {a[0]})")
-    out = _rewrite_call(
-        out, "intExp2",
-        lambda a: f"shiftleft(CAST(1 AS BIGINT), CAST({a[0]} AS INT))",
-    )
-    out = _rewrite_call(
-        out, "intExp10", lambda a: f"CAST(round(pow(10, {a[0]})) AS BIGINT)"
-    )
-    # erf via Abramowitz-Stegun 7.1.26 (|error| <= 1.5e-7): Spark has
-    # no gamma/error functions; the rational approximation is pure
-    # arithmetic and stays inside whole-stage codegen
-    def _erf_expr(x: str) -> str:
-        t = f"(1 / (1 + 0.3275911 * abs({x})))"
-        poly = (
-            f"({t} * (0.254829592 + {t} * (-0.284496736 + {t} * "
-            f"(1.421413741 + {t} * (-1.453152027 + {t} * 1.061405429)))))"
-        )
-        return f"(sign({x}) * (1 - {poly} * exp(-(({x}) * ({x})))))"
 
-    out = _rewrite_call(out, "erfc", lambda a: f"(1 - {_erf_expr(a[0])})")
-    out = _rewrite_call(out, "erf", lambda a: _erf_expr(a[0]))
-    out = _rewrite_call(
-        out, "isFinite",
-        lambda a: (
-            f"(NOT isnan({a[0]}) AND abs({a[0]}) <> CAST('Infinity' AS DOUBLE))"
-        ),
-    )
-    out = _rewrite_call(
-        out, "isInfinite", lambda a: f"(abs({a[0]}) = CAST('Infinity' AS DOUBLE))"
-    )
-    out = _rewrite_call(
-        out, "bitTest",
-        lambda a: (
-            f"CAST(shiftright(CAST({a[0]} AS BIGINT), CAST({a[1]} AS INT)) "
-            f"& 1 AS INT)"
-        ),
-        nargs=2,
-    )
-    out = _rewrite_call(
-        out, "base64Decode", lambda a: f"CAST(unbase64({a[0]}) AS STRING)"
-    )
-    out = _rewrite_call(
-        out, "bitmaskToList",
-        lambda a: (
-            f"array_join(filter(transform(sequence(0, 62), __i -> "
-            f"IF((shiftright(CAST({a[0]} AS BIGINT), __i) & 1) = 1, "
-            f"CAST(shiftleft(CAST(1 AS BIGINT), __i) AS STRING), NULL)), "
-            f"__v -> __v IS NOT NULL), ',')"
-        ),
-    )
-    out = _rewrite_call(
-        out, "IPv4NumToString",
-        lambda a: (
-            f"concat(CAST(shiftright(CAST({a[0]} AS BIGINT), 24) & 255 AS STRING), "
-            f"'.', CAST(shiftright(CAST({a[0]} AS BIGINT), 16) & 255 AS STRING), "
-            f"'.', CAST(shiftright(CAST({a[0]} AS BIGINT), 8) & 255 AS STRING), "
-            f"'.', CAST(CAST({a[0]} AS BIGINT) & 255 AS STRING))"
-        ),
-    )
-    out = _rewrite_call(
-        out, "IPv4StringToNum",
-        lambda a: (
-            f"aggregate(transform(split({a[0]}, '\\\\.'), "
-            f"__o -> CAST(__o AS BIGINT)), CAST(0 AS BIGINT), "
-            f"(__a, __o) -> __a * 256 + __o)"
-        ),
-    )
-    # splitByString(sep, s): args reversed vs split(), and the
-    # separator is a PLAIN string, so it is regex-quoted with \Q…\E
-    out = _rewrite_call(
-        out, "splitByString",
-        lambda a: f"split({a[1]}, concat('\\\\Q', {a[0]}, '\\\\E'))",
-        nargs=2,
-    )
-
-    # CH extract(s, re) returns the first match (first capture group if
-    # the pattern has one).  Only the 2-arg COMMA form is rewritten, so
-    # SQL's EXTRACT(field FROM ts) never matches.
-    def _ch_extract(a: list[str]) -> str:
-        if len(a) != 2:
-            return f"extract({', '.join(a)})"
-        idx = 0
-        lit = re.fullmatch(r"'((?:[^']|'')*)'", a[1].strip())
-        if lit and re.compile(lit.group(1).replace("''", "'")).groups > 0:
-            idx = 1
-        return f"regexp_extract({a[0]}, {a[1]}, {idx})"
-
-    out = _rewrite_call(out, "extract", _ch_extract, nargs=2)
-
-    # format('{} and {}', …) → format_string('%s and %s', …); {N} is
-    # 0-based positional in ClickHouse, %N$s is 1-based in Java
-    def _ch_format(a: list[str]) -> str:
-        lit = re.fullmatch(r"'((?:[^']|'')*)'", a[0].strip())
-        if not lit:
-            raise ValueError("format(): the format string must be a literal")
-        s = lit.group(1).replace("%", "%%")
-        s = re.sub(r"\{(\d+)\}", lambda m2: f"%{int(m2.group(1)) + 1}$s", s)
-        s = s.replace("{}", "%s")
-        return f"format_string('{s}', {', '.join(a[1:])})"
-
-    out = _rewrite_call(out, "format", _ch_format, nargs=2)
-    # CH transform(x, [from…], [to…][, default]) is the lookup-table
-    # form; Spark's 2-arg transform(arr, lambda) HOF passes through
-    def _ch_transform(a: list[str]) -> str:
-        if len(a) < 3:
-            return f"transform({', '.join(a)})"
-        mapped = f"try_element_at(map_from_arrays({a[1]}, {a[2]}), {a[0]})"
-        return f"coalesce({mapped}, {a[3] if len(a) == 4 else a[0]})"
-
-    out = _rewrite_call(out, "transform", _ch_transform, nargs=2)
-    # tuple(…) → named_struct with positional _N names; tupleElement
-    # reads them back (literal index only — the tuple() form's naming).
-    # Nested tuple(tuple(…), …) is covered by _rewrite_call's
-    # argument recursion (round-15 fix).
-    out = _rewrite_call(
-        out, "tuple",
-        lambda a: (
-            "named_struct("
-            + ", ".join(f"'_{i + 1}', {arg}" for i, arg in enumerate(a))
-            + ")"
-        ),
-    )
-
-    def _tuple_element(a: list[str]) -> str:
-        if not re.fullmatch(r"\d+", a[1].strip()):
-            raise ValueError(
-                "tupleElement: literal positional index only (the tuple() "
-                "render names fields _1, _2, …)"
-            )
-        return f"({a[0]})._{a[1].strip()}"
-
-    out = _rewrite_call(out, "tupleElement", _tuple_element, nargs=2)
-    # untuple(t) expands a tuple into its element columns (select-list
-    # only in CH too).  inline(array(t)) is the Spark generator that
-    # expands ANY struct expression — `t.*` only resolves for column
-    # references (probe battery 9).  Spark allows one generator per
-    # select list; a second untuple fails loudly at analysis.
-    out = _rewrite_call(out, "untuple", lambda a: f"inline(array({a[0]}))")
-    # tuple positional access `t.1` → the tuple() render's `_N` struct
-    # fields, including chains (`t.1.2` reads a nested tuple).  The
-    # token before the first dot must be an identifier or a close-paren
-    # — a digit stays a decimal literal (1.5; the digit-lookbehind
-    # guards only the identifier head, so `tuple(a, 3).1` still
-    # rewrites) — and string literals are inert (probe battery 9).
-    def _dot_chain(m: re.Match) -> str:
-        return m.group(1) + re.sub(r"\.\s*(\d+)", r"._\1", m.group(2))
-
-    out = "".join(
-        seg
-        if is_lit
-        else re.sub(
-            r"((?<!\d)\b[A-Za-z_]\w*|\))((?:\s*\.\s*\d+)+)(?!\w)",
-            _dot_chain,
-            seg,
-        )
-        for is_lit, seg in split_quoted(out)
-    )
-    # greatCircleDistance(lon1, lat1, lon2, lat2) → meters, haversine
-    # on ClickHouse's sphere radius 6372797.560856 m
-    out = _rewrite_call(
-        out, "greatCircleDistance",
-        lambda a: (
-            f"(2 * 6372797.560856 * asin(sqrt("
-            f"pow(sin(radians(({a[3]}) - ({a[1]})) / 2), 2) "
-            f"+ cos(radians({a[1]})) * cos(radians({a[3]})) "
-            f"* pow(sin(radians(({a[2]}) - ({a[0]})) / 2), 2))))"
-        ),
-        nargs=4,
-    )
-    # --- battery-4 array surface ---
-    out = _rewrite_call(
-        out, "arrayElement", lambda a: f"try_element_at({a[0]}, {a[1]})", nargs=2
-    )
-
-    def _array_intersect_fold(a: list[str]) -> str:
-        expr = a[0]
-        for nxt in a[1:]:
-            expr = f"array_intersect({expr}, {nxt})"
-        return expr
-
-    out = _rewrite_call(out, "arrayIntersect", _array_intersect_fold, nargs=2)
-    out = _rewrite_call(
-        out, "arrayPushBack", lambda a: f"concat({a[0]}, array({a[1]}))", nargs=2
-    )
-    out = _rewrite_call(
-        out, "arrayPushFront", lambda a: f"concat(array({a[1]}), {a[0]})", nargs=2
-    )
-    out = _rewrite_call(
-        out, "arrayPopBack",
-        lambda a: f"slice({a[0]}, 1, greatest(size({a[0]}) - 1, 0))",
-    )
-    out = _rewrite_call(
-        out, "arrayPopFront",
-        lambda a: f"slice({a[0]}, 2, greatest(size({a[0]}) - 1, 0))",
-    )
-    out = _rewrite_call(
-        out, "arrayWithConstant",
-        lambda a: f"array_repeat({a[1]}, CAST({a[0]} AS INT))",
-        nargs=2,
-    )
-    # arrayResize pads with the element type's NULL (ClickHouse pads
-    # with the type DEFAULT — documented delta) unless a pad is given;
-    # try_element_at past the end is a TYPED null of the element type
-    def _array_resize(a: list[str]) -> str:
-        pad = a[2] if len(a) == 3 else f"try_element_at({a[0]}, size({a[0]}) + 1)"
-        return (
-            f"CASE WHEN ({a[1]}) <= size({a[0]}) THEN slice({a[0]}, 1, ({a[1]})) "
-            f"ELSE concat({a[0]}, array_repeat({pad}, ({a[1]}) - size({a[0]}))) END"
-        )
-
-    out = _rewrite_call(out, "arrayResize", _array_resize, nargs=2)
-    # arrayCompact: keep element i iff it differs from element i-1
-    # (consecutive-dup collapse, null-safe <=>)
-    out = _rewrite_call(
-        out, "arrayCompact",
-        lambda a: (
-            f"filter({a[0]}, (__x, __i) -> __i = 0 "
-            f"OR NOT (__x <=> try_element_at({a[0]}, __i)))"
-        ),
-    )
-
-    def _lambda_parts(text: str) -> tuple[str, str]:
-        m2 = re.match(r"^\(?\s*(\w+)\s*\)?\s*->\s*(.+)$", text.strip(), re.DOTALL)
-        if not m2:
-            raise ValueError(f"expected a 1-arg lambda, got {text!r}")
-        return m2.group(1), m2.group(2)
-
-    # arraySort/arrayReverseSort by-key lambda forms → array_sort with
-    # a three-way comparator over the key expression
-    def _array_sort_by(a: list[str], desc: bool) -> str:
-        if len(a) == 1:
-            return (
-                f"reverse(sort_array({a[0]}))" if desc else f"sort_array({a[0]})"
-            )
-        p, body = _lambda_parts(a[0])
-        fl = re.sub(rf"\b{p}\b", "__l", body)
-        fr = re.sub(rf"\b{p}\b", "__r", body)
-        lo, hi = ("1", "-1") if desc else ("-1", "1")
-        return (
-            f"array_sort({a[1]}, (__l, __r) -> CASE WHEN ({fl}) < ({fr}) "
-            f"THEN {lo} WHEN ({fl}) > ({fr}) THEN {hi} ELSE 0 END)"
-        )
-
-    out = _rewrite_call(
-        out, "arrayReverseSort", lambda a: _array_sort_by(a, True)
-    )
-    out = _rewrite_call(
-        out, "arraySort",
-        lambda a: _array_sort_by(a, False) if len(a) == 2 else f"sort_array({a[0]})",
-    )
-
-    def _array_index_of_match(a: list[str], last: bool) -> str:
-        p, body = _lambda_parts(a[0])
-        return (
-            f"coalesce(try_element_at(filter(transform({a[1]}, "
-            f"({p}, __ci) -> IF({body}, __ci + 1, CAST(NULL AS INT))), "
-            f"__v -> __v IS NOT NULL), {-1 if last else 1}), 0)"
-        )
-
-    out = _rewrite_call(
-        out, "arrayFirstIndex", lambda a: _array_index_of_match(a, False), nargs=2
-    )
-    out = _rewrite_call(
-        out, "arrayLastIndex", lambda a: _array_index_of_match(a, True), nargs=2
-    )
-    out = _rewrite_call(
-        out, "arrayFirst",
-        lambda a: f"try_element_at(filter({a[1]}, {a[0]}), 1)", nargs=2,
-    )
-    out = _rewrite_call(
-        out, "arrayLast",
-        lambda a: f"try_element_at(filter({a[1]}, {a[0]}), -1)", nargs=2,
-    )
-
-    # arrayReduce('agg', arr) for the aggregate names with a pure
-    # array-expression equivalent; others raise (a string cannot carry
-    # an arbitrary aggregate through one rewrite)
-    def _array_reduce(a: list[str]) -> str:
-        nm = a[0].strip().strip("'\"").lower()
-        arr = a[1]
-        fold_sum = f"aggregate({arr}, CAST(0 AS DOUBLE), (__a, __e) -> __a + __e)"
-        renders = {
-            "sum": fold_sum,
-            "min": f"array_min({arr})",
-            "max": f"array_max({arr})",
-            "avg": f"({fold_sum} / nullif(size({arr}), 0))",
-            "count": f"size({arr})",
-            "any": f"try_element_at({arr}, 1)",
-            "anylast": f"try_element_at({arr}, -1)",
-            "uniq": f"size(array_distinct({arr}))",
-            "uniqexact": f"size(array_distinct({arr}))",
-            "grouparray": arr,
-        }
-        if nm not in renders:
-            raise ValueError(
-                f"arrayReduce: unsupported aggregate {nm!r} (supported: "
-                f"{sorted(renders)})"
-            )
-        return renders[nm]
-
-    out = _rewrite_call(out, "arrayReduce", _array_reduce, nargs=2)
-    # emptyArray<T>() constructors → typed empty array casts
-    out = re.sub(
-        r"\bemptyArrayU?Int(?:8|16|32|64)\s*\(\s*\)",
-        "CAST(array() AS ARRAY<BIGINT>)", out,
-    )
-    out = re.sub(
-        r"\bemptyArrayFloat(?:32|64)\s*\(\s*\)",
-        "CAST(array() AS ARRAY<DOUBLE>)", out,
-    )
-    out = re.sub(
-        r"\bemptyArrayString\s*\(\s*\)", "CAST(array() AS ARRAY<STRING>)", out
-    )
-    out = re.sub(
-        r"\bemptyArrayDateTime\s*\(\s*\)",
-        "CAST(array() AS ARRAY<TIMESTAMP>)", out,
-    )
-    out = re.sub(
-        r"\bemptyArrayDate\s*\(\s*\)", "CAST(array() AS ARRAY<DATE>)", out
-    )
-    # --- battery-4 aggregate surface ---
-    # -If combinators beyond sum/avg/min/max (the CASE table): any_value
-    # and last need ignoreNulls=true or the NULL from a non-matching
-    # row wins; uniq keeps the approx/exact split of the bare names
-    out = _rewrite_call(
-        out, "anyIf",
-        lambda a: f"any_value(CASE WHEN {a[1]} THEN {a[0]} END, true)", nargs=2,
-    )
-    out = _rewrite_call(
-        out, "anyLastIf",
-        lambda a: f"last(CASE WHEN {a[1]} THEN {a[0]} END, true)", nargs=2,
-    )
-    out = _rewrite_call(
-        out, "uniqIf",
-        lambda a: f"approx_count_distinct(CASE WHEN {a[1]} THEN {a[0]} END)",
-        nargs=2,
-    )
-    out = _rewrite_call(
-        out, "uniqExactIf",
-        lambda a: f"count(DISTINCT CASE WHEN {a[1]} THEN {a[0]} END)", nargs=2,
-    )
-    out = _rewrite_call(
-        out, "argMaxIf",
-        lambda a: f"max_by({a[0]}, CASE WHEN {a[2]} THEN {a[1]} END)", nargs=3,
-    )
-    out = _rewrite_call(
-        out, "argMinIf",
-        lambda a: f"min_by({a[0]}, CASE WHEN {a[2]} THEN {a[1]} END)", nargs=3,
-    )
-    # -Distinct combinators → DISTINCT aggregates
-    out = re.sub(r"\bsumDistinct\s*\(", "sum(DISTINCT ", out)
-    out = re.sub(r"\bavgDistinct\s*\(", "avg(DISTINCT ", out)
-    # -Array combinators: aggregate over every element of every row's
-    # array (sums widen to DOUBLE, same trade as arraySum)
-    _fold_sum = "aggregate({e}, CAST(0 AS DOUBLE), (__a, __e) -> __a + __e)"
-    out = _rewrite_call(
-        out, "sumArray", lambda a: f"sum({_fold_sum.format(e=a[0])})"
-    )
-    out = _rewrite_call(out, "minArray", lambda a: f"min(array_min({a[0]}))")
-    out = _rewrite_call(out, "maxArray", lambda a: f"max(array_max({a[0]}))")
-    out = _rewrite_call(
-        out, "avgArray",
-        lambda a: f"(sum({_fold_sum.format(e=a[0])}) / sum(size({a[0]})))",
-    )
-    out = _rewrite_call(out, "countArray", lambda a: f"sum(size({a[0]}))")
-    # parametric groupArray(N)(x) caps the collected list; the Sample
-    # form keeps a deterministic prefix (ClickHouse samples randomly —
-    # documented delta, same cardinality contract)
-    out = _rewrite_parametric(
-        out, "groupArraySample",
-        lambda ps, a: f"slice(collect_list({a[0]}), 1, {ps[0]})",
-    )
-    out = _rewrite_parametric(
-        out, "groupArray",
-        lambda ps, a: f"slice(collect_list({a[0]}), 1, {ps[0]})",
-    )
-    # exact multi-quantiles and exact median
-    out = _rewrite_parametric(
-        out, "quantilesExact",
-        lambda ps, a: f"percentile({a[0]}, array({', '.join(ps)}))",
-    )
-    out = _rewrite_call(out, "medianExact", lambda a: f"percentile({a[0]}, 0.5)")
-    out = _rewrite_parametric(
-        out, "quantilesTDigest",
-        lambda ps, a: f"percentile_approx({a[0]}, array({', '.join(ps)}))",
-    )
-    out = _rewrite_parametric(
-        out, "quantileTDigest",
-        lambda ps, a: f"percentile_approx({a[0]}, {ps[0]})",
-    )
-    # boundingRatio(x, y) = slope between the min-x and max-x points
-    out = _rewrite_call(
-        out, "boundingRatio",
-        lambda a: (
-            f"((max_by({a[1]}, {a[0]}) - min_by({a[1]}, {a[0]})) "
-            f"/ CAST(max({a[0]}) - min({a[0]}) AS DOUBLE))"
-        ),
-        nargs=2,
-    )
-    # human-readable formatters: CASE ladders over the unit thresholds
-    # (binary KiB/MiB/… for sizes, decimal thousand/million/… for
-    # quantities — the engine's exact unit names and 2-dp rendering)
-    def _readable_size(a: list[str]) -> str:
-        b = f"CAST({a[0]} AS DOUBLE)"
-        whens = " ".join(
-            f"WHEN abs({b}) < {float(1024 ** (i + 1))} THEN "
-            f"format_string('%.2f {u}', {b} / {float(1024 ** i)})"
-            for i, u in enumerate(["B", "KiB", "MiB", "GiB", "TiB"])
-        )
-        return (
-            f"(CASE {whens} ELSE format_string('%.2f PiB', "
-            f"{b} / {float(1024 ** 5)}) END)"
-        )
-
-    out = _rewrite_call(out, "formatReadableSize", _readable_size)
-
-    def _readable_qty(a: list[str]) -> str:
-        b = f"CAST({a[0]} AS DOUBLE)"
-        whens = " ".join(
-            f"WHEN abs({b}) < {hi} THEN format_string('%.2f{u}', {b} / {dv})"
-            for hi, u, dv in [
-                ("1000.0", "", "1.0"),
-                ("1000000.0", " thousand", "1000.0"),
-                ("1.0E9", " million", "1000000.0"),
-                ("1.0E12", " billion", "1.0E9"),
-            ]
-        )
-        return (
-            f"(CASE {whens} ELSE format_string('%.2f trillion', "
-            f"{b} / 1.0E12) END)"
-        )
-
-    out = _rewrite_call(out, "formatReadableQuantity", _readable_qty)
-    # sleep() is an engine-side throttle; rendered as its return value
-    out = _rewrite_call(out, "sleepEachRow", lambda a: "0")
-    out = _rewrite_call(out, "sleep", lambda a: "0")
-    # ClickHouse rand() is uniform UInt32, not [0,1) — a bare rename
-    # would silently change every derived distribution.  The UInt32
-    # rewrite runs FIRST so the rand() it emits (and the one
-    # randCanonical renames to) are not themselves re-rewritten.
-    out = _rewrite_call(
-        out, "rand",
-        lambda a: "CAST(floor(rand() * 4294967296) AS BIGINT)", nargs=0,
-    )
-    out = re.sub(r"\brandCanonical\s*\(", "rand(", out)
-    # --- probe battery 5 (round-12 session 3): strings, week grids,
-    # rounding ladders, array sweeps, URL/JSON surface, conversions ---
-    # file(path, format) table function → Spark's path-based table
-    # (format.`path`) for on-disk formats.  numbers() renders LATER —
-    # after the scalar range()→array rewrite, which would otherwise
-    # consume the range() this render emits.
-    def _file_fn(a: list[str]) -> str:
-        pm = re.fullmatch(r"'([^']+)'", a[0].strip())
-        fm = re.fullmatch(r"'(\w+)'", a[1].strip())
-        if not pm or not fm:
-            raise ValueError("file(): literal path and format required")
-        fmt = {
-            "parquet": "parquet", "orc": "orc", "json": "json",
-            "jsoneachrow": "json", "csv": "csv",
-        }.get(fm.group(1).lower())
-        if fmt is None:
-            raise ValueError(
-                f"file(): unsupported format {fm.group(1)!r} "
-                f"(Parquet/ORC/JSONEachRow/CSV)"
-            )
-        return f"{fmt}.`{pm.group(1)}`"
-
-    out = _rewrite_call(out, "file", _file_fn, nargs=2)
-    out = _rewrite_call(
-        out, "multiSearchFirstIndex",
-        lambda a: (
-            f"coalesce(try_element_at(filter(transform({a[1]}, "
-            f"(__n, __i) -> IF(contains({a[0]}, __n), __i + 1, "
-            f"CAST(NULL AS INT))), __v -> __v IS NOT NULL), 1), 0)"
-        ),
-        nargs=2,
-    )
-    out = _rewrite_call(
-        out, "multiSearchAllPositions",
-        lambda a: f"transform({a[1]}, __n -> instr({a[0]}, __n))", nargs=2,
-    )
-    out = _rewrite_call(
-        out, "countMatches",
-        lambda a: f"size(regexp_extract_all({a[0]}, {a[1]}, 0))", nargs=2,
-    )
-    out = _rewrite_call(
-        out, "splitByRegexp", lambda a: f"split({a[1]}, {a[0]})", nargs=2
-    )
-    out = _rewrite_call(
-        out, "alphaTokens",
-        lambda a: f"regexp_extract_all({a[0]}, '[a-zA-Z]+', 0)",
-    )
-    # toWeek/toYearWeek: ClickHouse default mode 0 = Sunday-start weeks
-    # numbered 0-53 from the year's first Sunday; mode 3 = ISO.  The
-    # year-week rolls back into the PREVIOUS year's last week for days
-    # before the first Sunday (MySQL YEARWEEK semantics).
-    def _week0_expr(d: str) -> str:
-        dd = f"CAST({d} AS DATE)"
-        fs = f"next_day(date_sub(trunc({dd}, 'YEAR'), 1), 'SU')"
-        return (
-            f"CASE WHEN datediff({dd}, {fs}) < 0 THEN 0 "
-            f"ELSE CAST(floor(datediff({dd}, {fs}) / 7) AS INT) + 1 END"
-        )
-
-    def _to_week(a: list[str]) -> str:
-        mode = a[1].strip() if len(a) > 1 else "0"
-        if mode == "3":
-            return f"weekofyear({a[0]})"
-        if mode != "0":
-            raise ValueError("toWeek: modes 0 (Sunday, 0-53) and 3 (ISO) only")
-        return f"({_week0_expr(a[0])})"
-
-    def _to_year_week(a: list[str]) -> str:
-        mode = a[1].strip() if len(a) > 1 else "0"
-        if mode == "3":
-            return (
-                f"(extract(YEAROFWEEK FROM {a[0]}) * 100 "
-                f"+ weekofyear({a[0]}))"
-            )
-        if mode != "0":
-            raise ValueError(
-                "toYearWeek: modes 0 (Sunday, 0-53) and 3 (ISO) only"
-            )
-        d31 = f"date_sub(trunc(CAST({a[0]} AS DATE), 'YEAR'), 1)"
-        return (
-            f"(CASE WHEN ({_week0_expr(a[0])}) = 0 "
-            f"THEN (year({a[0]}) - 1) * 100 + ({_week0_expr(d31)}) "
-            f"ELSE year({a[0]}) * 100 + ({_week0_expr(a[0])}) END)"
-        )
-
-    out = _rewrite_call(out, "toYearWeek", _to_year_week)
-    out = _rewrite_call(out, "toWeek", _to_week)
-    # minute grids beyond toStartOfInterval's INTERVAL form
-    for grid_name, grid_s in [
-        ("toStartOfFiveMinutes", 300), ("toStartOfTenMinutes", 600),
-        ("toStartOfFifteenMinutes", 900),
-    ]:
-        out = _rewrite_call(
-            out, grid_name,
-            lambda a, w=grid_s: (
-                f"timestamp_seconds(CAST(floor(unix_timestamp({a[0]}) / {w}) "
-                f"* {w} AS BIGINT))"
-            ),
-        )
-    out = _rewrite_call(
-        out, "toStartOfSecond", lambda a: f"date_trunc('second', {a[0]})"
-    )
-    # toTime: keep the time of day, pin the date to 1970-01-02 (the
-    # engine's convention)
-    out = _rewrite_call(
-        out, "toTime",
-        lambda a: (
-            f"timestamp_seconds(86400 + pmod(unix_timestamp({a[0]}), 86400))"
-        ),
-    )
-    out = _rewrite_call(
-        out, "YYYYMMDDToDate",
-        lambda a: f"to_date(CAST({a[0]} AS STRING), 'yyyyMMdd')",
-    )
-    # toDayOfWeek default mode 0: Monday=1 … Sunday=7 (Spark dayofweek
-    # is Sunday=1 — a bare rename would shift every weekday)
-    out = _rewrite_call(
-        out, "toDayOfWeek",
-        lambda a: f"(pmod(dayofweek({a[0]}) + 5, 7) + 1)",
-    )
-
-    def _parse_datetime(a: list[str]) -> str:
-        lit = re.fullmatch(r"'((?:[^']|'')*)'", a[1].strip())
-        if not lit:
-            raise ValueError("parseDateTime: literal format string only")
-        fmt = lit.group(1)
-        for ch_tok, sp_tok in _FMT_TOKENS.items():
-            fmt = fmt.replace(ch_tok, sp_tok)
-        return f"to_timestamp({a[0]}, '{fmt}')"
-
-    out = _rewrite_call(out, "parseDateTime", _parse_datetime, nargs=2)
-    out = _rewrite_call(
-        out, "parseDateTimeBestEffortOrNull",
-        lambda a: f"TRY_CAST({a[0]} AS TIMESTAMP)",
-    )
-    out = _rewrite_call(
-        out, "parseDateTimeBestEffort", lambda a: f"CAST({a[0]} AS TIMESTAMP)"
-    )
-    # numeric trunc/truncate toward zero with optional precision; the
-    # 2-arg STRING form stays Spark's date trunc(date, fmt)
-    def _trunc_num(a: list[str]) -> str:
-        if len(a) == 2 and not re.fullmatch(r"-?\d+", a[1].strip()):
-            return f"trunc({', '.join(a)})"
-        n = int(a[1]) if len(a) == 2 else 0
-        p = 10 ** n
-        return f"(CAST(CAST(({a[0]}) * {p} AS BIGINT) AS DOUBLE) / {p})"
-
-    out = _rewrite_call(out, "truncate", _trunc_num)
-    out = _rewrite_call(out, "trunc", _trunc_num)
-
-    # rounding ladders: roundDown picks the greatest element <= x
-    # (falling back to the smallest element), roundDuration is
-    # roundDown over the engine's fixed duration ladder, roundAge uses
-    # the engine's age bands, roundToExp2 the floor power of two
-    def _round_down(a: list[str]) -> str:
-        return (
-            f"coalesce(array_max(filter({a[1]}, __e -> __e <= ({a[0]}))), "
-            f"array_min({a[1]}))"
-        )
-
-    out = _rewrite_call(out, "roundDown", _round_down, nargs=2)
-    out = _rewrite_call(
-        out, "roundDuration",
-        lambda a: _round_down(
-            [a[0], "[0, 1, 10, 30, 60, 120, 180, 240, 300, 600, "
-                   "1200, 1800, 3600, 7200, 18000, 36000]"]
-        ),
-    )
-    out = _rewrite_call(
-        out, "roundAge",
-        lambda a: (
-            f"(CASE WHEN ({a[0]}) < 1 THEN 0 WHEN ({a[0]}) < 18 THEN 17 "
-            f"WHEN ({a[0]}) < 25 THEN 18 WHEN ({a[0]}) < 35 THEN 25 "
-            f"WHEN ({a[0]}) < 45 THEN 35 WHEN ({a[0]}) < 55 THEN 45 "
-            f"ELSE 55 END)"
-        ),
-    )
-    out = _rewrite_call(
-        out, "roundToExp2",
-        lambda a: (
-            f"(CASE WHEN ({a[0]}) < 1 THEN 0 ELSE "
-            f"shiftleft(CAST(1 AS BIGINT), "
-            f"CAST(floor(log2({a[0]})) AS INT)) END)"
-        ),
-    )
-    out = _rewrite_call(
-        out, "max2", lambda a: f"greatest({a[0]}, {a[1]})", nargs=2
-    )
-    out = _rewrite_call(
-        out, "min2", lambda a: f"least({a[0]}, {a[1]})", nargs=2
-    )
-    out = _rewrite_call(
-        out, "clamp",
-        lambda a: f"least(greatest({a[0]}, {a[1]}), {a[2]})", nargs=3,
-    )
-    out = _rewrite_call(
-        out, "ifNotFinite",
-        lambda a: (
-            f"(CASE WHEN isnan({a[0]}) OR abs({a[0]}) = "
-            f"CAST('Infinity' AS DOUBLE) THEN {a[1]} ELSE {a[0]} END)"
-        ),
-        nargs=2,
-    )
-    out = _rewrite_call(out, "xor", lambda a: f"(({a[0]}) <> ({a[1]}))", nargs=2)
-    # battery-5 array sweeps
-    out = _rewrite_call(
-        out, "arrayDotProduct",
-        lambda a: (
-            f"aggregate(zip_with({a[0]}, {a[1]}, "
-            f"(__x, __y) -> CAST(__x AS DOUBLE) * __y), "
-            f"CAST(0 AS DOUBLE), (__a, __e) -> __a + __e)"
-        ),
-        nargs=2,
-    )
-    out = _rewrite_call(
-        out, "arrayJaccardIndex",
-        lambda a: (
-            f"(CAST(size(array_intersect({a[0]}, {a[1]})) AS DOUBLE) "
-            f"/ size(array_union({a[0]}, {a[1]})))"
-        ),
-        nargs=2,
-    )
-
-    def _array_rotate(a: list[str], right: bool) -> str:
-        n = f"-({a[1]})" if right else a[1]
-        k = f"pmod({n}, greatest(size({a[0]}), 1))"
-        return (
-            f"(CASE WHEN size({a[0]}) = 0 THEN {a[0]} ELSE "
-            f"concat(slice({a[0]}, {k} + 1, size({a[0]}) - {k}), "
-            f"slice({a[0]}, 1, {k})) END)"
-        )
-
-    out = _rewrite_call(
-        out, "arrayRotateLeft", lambda a: _array_rotate(a, False), nargs=2
-    )
-    out = _rewrite_call(
-        out, "arrayRotateRight", lambda a: _array_rotate(a, True), nargs=2
-    )
-
-    def _array_shift(a: list[str], right: bool) -> str:
-        arr = a[0]
-        n = f"(-({a[1]}))" if right else f"({a[1]})"
-        pad = a[2] if len(a) == 3 else f"try_element_at({arr}, size({arr}) + 1)"
-        k = f"least(greatest({n}, -size({arr})), size({arr}))"
-        return (
-            f"(CASE WHEN {k} >= 0 THEN "
-            f"concat(slice({arr}, {k} + 1, size({arr}) - {k}), "
-            f"array_repeat({pad}, {k})) "
-            f"ELSE concat(array_repeat({pad}, -{k}), "
-            f"slice({arr}, 1, size({arr}) + {k})) END)"
-        )
-
-    out = _rewrite_call(
-        out, "arrayShiftLeft", lambda a: _array_shift(a, False), nargs=2
-    )
-    out = _rewrite_call(
-        out, "arrayShiftRight", lambda a: _array_shift(a, True), nargs=2
-    )
-    out = _rewrite_call(
-        out, "arrayEnumerateUniq",
-        lambda a: (
-            f"transform({a[0]}, (__x, __i) -> "
-            f"size(filter(slice({a[0]}, 1, __i + 1), __e -> __e <=> __x)))"
-        ),
-    )
-    out = _rewrite_call(
-        out, "hasSubstr",
-        lambda a: (
-            f"(CASE WHEN size({a[1]}) = 0 THEN true "
-            f"WHEN size({a[0]}) < size({a[1]}) THEN false "
-            f"ELSE exists(sequence(1, size({a[0]}) - size({a[1]}) + 1), "
-            f"__i -> slice({a[0]}, __i, size({a[1]})) = {a[1]}) END)"
-        ),
-        nargs=2,
-    )
-    # binary hash digests: Spark's md5/sha1/sha2 return HEX STRINGS;
-    # unhex restores ClickHouse's FixedString binary so hex(MD5(x))
-    # round-trips identically
-    out = _rewrite_call(out, "MD5", lambda a: f"unhex(md5({a[0]}))")
-    out = _rewrite_call(out, "SHA1", lambda a: f"unhex(sha1({a[0]}))")
-    for sha_bits in (224, 256, 384, 512):
-        out = _rewrite_call(
-            out, f"SHA{sha_bits}",
-            lambda a, b=sha_bits: f"unhex(sha2({a[0]}, {b}))",
-        )
-    # battery-5 conversions
-    out = _rewrite_call(
-        out, r"toFloat(?:32|64)OrZero",
-        lambda a: f"coalesce(TRY_CAST({a[0]} AS DOUBLE), CAST(0 AS DOUBLE))",
-    )
-    out = _rewrite_call(
-        out, r"toFloat(?:32|64)OrNull",
-        lambda a: f"TRY_CAST({a[0]} AS DOUBLE)",
-    )
-    out = _rewrite_call(
-        out, r"toU?Int(?:8|16|32|64)OrNull",
-        lambda a: f"TRY_CAST({a[0]} AS BIGINT)",
-    )
-    out = _rewrite_call(
-        out, "toDateOrNull", lambda a: f"TRY_CAST({a[0]} AS DATE)"
-    )
-    out = _rewrite_call(
-        out, "toDateOrZero",
-        lambda a: f"coalesce(TRY_CAST({a[0]} AS DATE), DATE'1970-01-01')",
-    )
-    out = _rewrite_call(
-        out, "toDateTimeOrNull", lambda a: f"TRY_CAST({a[0]} AS TIMESTAMP)"
-    )
-    out = _rewrite_call(
-        out, "toDateTimeOrZero",
-        lambda a: (
-            f"coalesce(TRY_CAST({a[0]} AS TIMESTAMP), "
-            f"TIMESTAMP'1970-01-01 00:00:00')"
-        ),
-    )
-
-    def _accurate_cast(a: list[str], try_: bool) -> str:
-        t = a[1].strip().strip("'\"")
-        sqlt = _CH_CAST_TYPES.get(t)
-        if not sqlt:
-            raise ValueError(f"accurateCast: unsupported type {t!r}")
-        return f"{'TRY_CAST' if try_ else 'CAST'}({a[0]} AS {sqlt})"
-
-    out = _rewrite_call(
-        out, "accurateCastOrNull", lambda a: _accurate_cast(a, True), nargs=2
-    )
-    out = _rewrite_call(
-        out, "accurateCast", lambda a: _accurate_cast(a, False), nargs=2
-    )
-    for dec_name, dec_prec in (
-        ("toDecimal32", 9), ("toDecimal64", 18), ("toDecimal128", 38),
+def _date_diff(a: list[str]) -> str:
+    """dateDiff('unit', a, b) counts crossed UNIT BOUNDARIES in
+    ClickHouse (dateDiff('hour', 22:58, 23:05) = 1), while Spark's
+    timestampdiff counts COMPLETE elapsed units (= 0 there) — so the
+    operands are date_trunc'ed to the unit first.  age('unit', a, b)
+    is ClickHouse's complete-units form: plain timestampdiff."""
+    unit = a[0].strip().strip("'\"").upper()
+    if unit not in (
+        "SECOND", "MINUTE", "HOUR", "DAY", "WEEK",
+        "MONTH", "QUARTER", "YEAR",
     ):
-        out = _rewrite_call(
-            out, dec_name,
-            lambda a, p=dec_prec: (
-                f"CAST({a[0]} AS DECIMAL({p}, {int(a[1])}))"
-            ),
-            nargs=2,
+        raise ValueError(f"dateDiff: unsupported unit {unit!r}")
+    return (
+        f"timestampdiff({unit}, date_trunc('{unit}', {a[1]}), "
+        f"date_trunc('{unit}', {a[2]}))"
+    )
+
+
+def _grid(w: int):
+    """Floor a timestamp to a ``w``-second grid."""
+    return lambda a: (
+        f"timestamp_seconds(CAST(floor(unix_timestamp({a[0]}) / {w}) "
+        f"* {w} AS BIGINT))"
+    )
+
+
+def _ch_divide(a: list[str]) -> str:
+    """divide() is ALWAYS Float64 division in ClickHouse, with IEEE
+    zero-divisor results (x/0 → ±Inf, 0/0 → NaN).  Spark 4's ANSI
+    mode throws DIVIDE_BY_ZERO for EVERY numeric type incl. double,
+    so the zero-divisor branches are spelled out (a -0.0 divisor loses
+    its sign — documented delta)."""
+    num, den = f"CAST({a[0]} AS DOUBLE)", f"CAST({a[1]} AS DOUBLE)"
+    return (
+        f"(CASE WHEN {num} IS NULL OR {den} IS NULL "
+        f"THEN CAST(NULL AS DOUBLE) "
+        f"WHEN {den} = 0.0 THEN "
+        f"CASE WHEN isnan({num}) OR {num} = 0.0 THEN CAST('NaN' AS DOUBLE) "
+        f"WHEN {num} > 0 THEN CAST('Infinity' AS DOUBLE) "
+        f"ELSE CAST('-Infinity' AS DOUBLE) END "
+        f"ELSE {num} / {den} END)"
+    )
+
+
+def _gcd_expr(x: str, y: str) -> str:
+    """gcd/lcm: Euclid unrolled as an aggregate() fold — 92 iterations
+    bound the worst case for 64-bit inputs (consecutive Fibonacci
+    numbers), each step a no-op once the remainder hits 0."""
+    return (
+        f"aggregate(sequence(1, 92), "
+        f"named_struct('a', abs(CAST({x} AS BIGINT)), "
+        f"'b', abs(CAST({y} AS BIGINT))), "
+        f"(__s, __i) -> IF(__s.b = 0, __s, "
+        f"named_struct('a', __s.b, 'b', __s.a % __s.b)), __s -> __s.a)"
+    )
+
+
+def _erf_expr(x: str) -> str:
+    """erf via Abramowitz-Stegun 7.1.26 (|error| <= 1.5e-7): Spark has
+    no gamma/error functions; the rational approximation is pure
+    arithmetic and stays inside whole-stage codegen."""
+    t = f"(1 / (1 + 0.3275911 * abs({x})))"
+    poly = (
+        f"({t} * (0.254829592 + {t} * (-0.284496736 + {t} * "
+        f"(1.421413741 + {t} * (-1.453152027 + {t} * 1.061405429)))))"
+    )
+    return f"(sign({x}) * (1 - {poly} * exp(-(({x}) * ({x})))))"
+
+
+def _ch_extract(a: list[str]) -> str:
+    """CH extract(s, re) returns the first match (first capture group
+    if the pattern has one).  Only the 2-arg COMMA form is rewritten,
+    so SQL's EXTRACT(field FROM ts) passes through."""
+    if len(a) != 2:
+        return f"extract({', '.join(a)})"
+    idx = 0
+    lit = re.fullmatch(r"'((?:[^']|'')*)'", a[1].strip())
+    if lit and re.compile(lit.group(1).replace("''", "'")).groups > 0:
+        idx = 1
+    return f"regexp_extract({a[0]}, {a[1]}, {idx})"
+
+
+def _ch_format(a: list[str]) -> str:
+    """format('{} and {}', …) → format_string('%s and %s', …); {N} is
+    0-based positional in ClickHouse, %N$s is 1-based in Java."""
+    lit = re.fullmatch(r"'((?:[^']|'')*)'", a[0].strip())
+    if not lit:
+        raise ValueError("format(): the format string must be a literal")
+    s = lit.group(1).replace("%", "%%")
+    s = re.sub(r"\{(\d+)\}", lambda m2: f"%{int(m2.group(1)) + 1}$s", s)
+    s = s.replace("{}", "%s")
+    return f"format_string('{s}', {', '.join(a[1:])})"
+
+
+def _ch_transform(a: list[str]) -> str:
+    """CH transform(x, [from…], [to…][, default]) is the lookup-table
+    form; Spark's 2-arg transform(arr, lambda) HOF passes through."""
+    if len(a) < 3:
+        return f"transform({', '.join(a)})"
+    mapped = f"try_element_at(map_from_arrays({a[1]}, {a[2]}), {a[0]})"
+    return f"coalesce({mapped}, {a[3] if len(a) == 4 else a[0]})"
+
+
+def _tuple_element(a: list[str]) -> str:
+    """tupleElement reads the tuple() render's positional ``_N``
+    fields back (literal index only)."""
+    if not re.fullmatch(r"\d+", a[1].strip()):
+        raise ValueError(
+            "tupleElement: literal positional index only (the tuple() "
+            "render names fields _1, _2, …)"
         )
-    out = _rewrite_call(out, "toBool", lambda a: f"CAST({a[0]} AS BOOLEAN)")
-    out = _rewrite_call(out, "toNullable", lambda a: f"({a[0]})")
-    # battery-5 aggregates
-    out = _rewrite_parametric(
-        out, "quantileDeterministic",
-        lambda ps, a: f"percentile_approx({a[0]}, {ps[0]})",
+    return f"({a[0]})._{a[1].strip()}"
+
+
+def _array_intersect_fold(a: list[str]) -> str:
+    expr = a[0]
+    for nxt in a[1:]:
+        expr = f"array_intersect({expr}, {nxt})"
+    return expr
+
+
+def _array_resize(a: list[str]) -> str:
+    """arrayResize pads with the element type's NULL (ClickHouse pads
+    with the type DEFAULT — documented delta) unless a pad is given;
+    try_element_at past the end is a TYPED null of the element type."""
+    pad = a[2] if len(a) == 3 else f"try_element_at({a[0]}, size({a[0]}) + 1)"
+    return (
+        f"CASE WHEN ({a[1]}) <= size({a[0]}) THEN slice({a[0]}, 1, ({a[1]})) "
+        f"ELSE concat({a[0]}, array_repeat({pad}, ({a[1]}) - size({a[0]}))) END"
     )
 
-    def _topk_weighted(ps: list[str], a: list[str]) -> str:
-        n = int(ps[0])
-        lst = f"collect_list(named_struct('x', {a[0]}, 'w', {a[1]}))"
-        ranked = (
-            f"array_sort(transform(array_distinct(transform({lst}, "
-            f"__s -> __s.x)), __v -> named_struct('neg', "
-            f"-aggregate(filter({lst}, __s -> __s.x <=> __v), "
-            f"CAST(0 AS DOUBLE), (__a2, __s) -> __a2 + __s.w), 'v', __v)))"
-        )
-        return f"transform(slice({ranked}, 1, {n}), __s -> __s.v)"
 
-    out = _rewrite_parametric(out, "topKWeighted", _topk_weighted)
-    out = _rewrite_parametric(
-        out, "groupConcat",
-        lambda ps, a: f"array_join(collect_list({a[0]}), {ps[0]})",
-    )
-    out = _rewrite_call(
-        out, "groupConcat",
-        lambda a: f"array_join(collect_list({a[0]}), '')",
-    )
+def _lambda_parts(text: str) -> tuple[str, str]:
+    m2 = re.match(r"^\(?\s*(\w+)\s*\)?\s*->\s*(.+)$", text.strip(), re.DOTALL)
+    if not m2:
+        raise ValueError(f"expected a 1-arg lambda, got {text!r}")
+    return m2.group(1), m2.group(2)
 
-    def _entropy(a: list[str]) -> str:
-        lst = f"collect_list({a[0]})"
-        cnt = f"size(filter({lst}, __e -> __e <=> __v))"
+
+def _array_sort_by(a: list[str], desc: bool) -> str:
+    """arraySort/arrayReverseSort by-key lambda forms → array_sort with
+    a three-way comparator over the key expression."""
+    if len(a) == 1:
         return (
-            f"(log2(size({lst})) - aggregate(transform("
-            f"array_distinct({lst}), __v -> CAST({cnt} AS DOUBLE) "
-            f"* log2({cnt})), CAST(0 AS DOUBLE), "
-            f"(__a2, __e2) -> __a2 + __e2) / size({lst}))"
+            f"reverse(sort_array({a[0]}))" if desc else f"sort_array({a[0]})"
         )
+    p, body = _lambda_parts(a[0])
+    fl = re.sub(rf"\b{p}\b", "__l", body)
+    fr = re.sub(rf"\b{p}\b", "__r", body)
+    lo, hi = ("1", "-1") if desc else ("-1", "1")
+    return (
+        f"array_sort({a[1]}, (__l, __r) -> CASE WHEN ({fl}) < ({fr}) "
+        f"THEN {lo} WHEN ({fl}) > ({fr}) THEN {hi} ELSE 0 END)"
+    )
 
-    out = _rewrite_call(out, "entropy", _entropy)
-    # simpleLinearRegression(x, y) → Tuple(k, b), named _1/_2 to
-    # compose with the tupleElement render
-    # try_divide: a single-point / constant-x group has var_pop = 0,
-    # which ANSI division would turn into a query-killing error
-    # (ClickHouse yields nan there; NULL is the documented analog)
-    out = _rewrite_call(
-        out, "simpleLinearRegression",
-        lambda a: (
-            f"named_struct('_1', try_divide(covar_pop({a[0]}, {a[1]}), "
-            f"var_pop({a[0]})), '_2', avg({a[1]}) "
-            f"- try_divide(covar_pop({a[0]}, {a[1]}), var_pop({a[0]})) "
-            f"* avg({a[0]}))"
-        ),
-        nargs=2,
+
+def _array_index_of_match(a: list[str], last: bool) -> str:
+    p, body = _lambda_parts(a[0])
+    return (
+        f"coalesce(try_element_at(filter(transform({a[1]}, "
+        f"({p}, __ci) -> IF({body}, __ci + 1, CAST(NULL AS INT))), "
+        f"__v -> __v IS NOT NULL), {-1 if last else 1}), 0)"
     )
-    # --- round-12 probe-battery closures (each verified against the
-    # ClickHouse docs semantics; one render per name, no UDFs) ---
-    # bit scalar functions → operators (Spark's bit_and/bit_or/bit_xor
-    # are AGGREGATES; the scalar forms are &, |, ^, ~)
-    out = _rewrite_call(out, "bitAnd", lambda a: f"({a[0]} & {a[1]})", nargs=2)
-    out = _rewrite_call(out, "bitOr", lambda a: f"({a[0]} | {a[1]})", nargs=2)
-    out = _rewrite_call(out, "bitXor", lambda a: f"({a[0]} ^ {a[1]})", nargs=2)
-    out = _rewrite_call(out, "bitNot", lambda a: f"(~({a[0]}))")
-    out = re.sub(r"\bbitShiftLeft\s*\(", "shiftleft(", out)
-    out = re.sub(r"\bbitShiftRight\s*\(", "shiftright(", out)
-    out = re.sub(r"\broundBankers\s*\(", "bround(", out)  # HALF_EVEN
-    out = re.sub(r"\bconcatWithSeparator\s*\(", "concat_ws(", out)
-    out = re.sub(r"\bhasAny\s*\(", "arrays_overlap(", out)
-    out = _rewrite_call(
-        out,
-        "hasAll",
-        lambda a: f"forall({a[1]}, __e -> array_contains({a[0]}, __e))",
-        nargs=2,
-    )
-    out = _rewrite_call(
-        out,
-        "multiSearchAny",
-        lambda a: f"exists({a[1]}, __n -> contains({a[0]}, __n))",
-        nargs=2,
-    )
-    out = _rewrite_call(
-        out,
-        "countSubstrings",
-        lambda a: (
-            f"CAST((length({a[0]}) - length(replace({a[0]}, {a[1]}, ''))) "
-            f"/ length({a[1]}) AS INT)"
-        ),
-        nargs=2,
-    )
-    out = _rewrite_call(
-        out,
-        "positionCaseInsensitive",
-        lambda a: f"instr(lower({a[0]}), lower({a[1]}))",
-        nargs=2,
-    )
-    out = _rewrite_call(out, "toString", lambda a: f"CAST({a[0]} AS STRING)")
-    out = _rewrite_call(
-        out, "reinterpretAsString", lambda a: f"CAST({a[0]} AS STRING)"
-    )
-    out = _rewrite_call(out, "assumeNotNull", lambda a: f"({a[0]})")
-    # empty/notEmpty: the STRING forms (s = '' / s != ''); ClickHouse
-    # also defines them on arrays — use arrayUniq/size for those
-    out = _rewrite_call(out, "notEmpty", lambda a: f"(length({a[0]}) > 0)")
-    out = _rewrite_call(out, "empty", lambda a: f"(length({a[0]}) = 0)")
-    # arraySum/arrayAvg: rendered as aggregate() folds; results widen
-    # to DOUBLE (one render can't preserve ClickHouse's Int64-for-int
-    # return without type introspection)
-    out = _rewrite_call(
-        out,
-        "arraySum",
-        lambda a: (
-            f"aggregate({a[0]}, CAST(0 AS DOUBLE), (__a, __e) -> __a + __e)"
-        ),
-    )
-    out = _rewrite_call(
-        out,
-        "arrayAvg",
-        lambda a: (
-            f"(aggregate({a[0]}, CAST(0 AS DOUBLE), (__a, __e) -> __a + __e)"
-            f" / nullif(size({a[0]}), 0))"
-        ),
-    )
-    out = _rewrite_call(
-        out,
-        "arrayEnumerate",
-        lambda a: (
-            f"CASE WHEN size({a[0]}) = 0 THEN array() "
-            f"ELSE sequence(1, size({a[0]})) END"
-        ),
-    )
-    # range(n) → [0 … n-1]; ClickHouse range(0) is []
-    out = _rewrite_call(
-        out,
-        "range",
-        lambda a: (
-            f"CASE WHEN ({a[0]}) <= 0 THEN array() "
-            f"ELSE sequence(0, ({a[0]}) - 1) END"
-        ),
-    )
-    # numbers(N) / numbers(start, count) table function → Spark's
-    # range() table with the engine's `number` column name.  MUST run
-    # after the scalar range()→array rewrite just above, which would
-    # otherwise consume the range() emitted here.
-    out = _rewrite_call(
-        out,
-        "numbers",
-        lambda a: (
-            f"(SELECT id AS number FROM range({a[0]}))"
-            if len(a) == 1
-            else f"(SELECT id AS number FROM range({a[0]}, ({a[0]}) + ({a[1]})))"
-        ),
-    )
-    # toStartOfInterval(t, INTERVAL n unit) — second-based units only
-    # (month/quarter/year grids are not fixed-width; those raise)
-    def _to_start_of_interval(a: list[str]) -> str:
-        m2 = re.fullmatch(
-            r"INTERVAL\s+(\d+)\s+(\w+?)S?", a[1].strip(), re.IGNORECASE
+
+
+def _array_reduce(a: list[str]) -> str:
+    """arrayReduce('agg', arr) for the aggregate names with a pure
+    array-expression equivalent; others raise (a string cannot carry
+    an arbitrary aggregate through one rewrite)."""
+    nm = a[0].strip().strip("'\"").lower()
+    arr = a[1]
+    fold_sum = f"aggregate({arr}, CAST(0 AS DOUBLE), (__a, __e) -> __a + __e)"
+    renders = {
+        "sum": fold_sum,
+        "min": f"array_min({arr})",
+        "max": f"array_max({arr})",
+        "avg": f"({fold_sum} / nullif(size({arr}), 0))",
+        "count": f"size({arr})",
+        "any": f"try_element_at({arr}, 1)",
+        "anylast": f"try_element_at({arr}, -1)",
+        "uniq": f"size(array_distinct({arr}))",
+        "uniqexact": f"size(array_distinct({arr}))",
+        "grouparray": arr,
+    }
+    if nm not in renders:
+        raise ValueError(
+            f"arrayReduce: unsupported aggregate {nm!r} (supported: "
+            f"{sorted(renders)})"
         )
-        mult = (
-            {"SECOND": 1, "MINUTE": 60, "HOUR": 3600, "DAY": 86400}.get(
-                m2.group(2).upper()
-            )
-            if m2
-            else None
+    return renders[nm]
+
+
+def _empty_array(sql_type: str):
+    """emptyArray<T>() → a typed empty array; a call with arguments is
+    left as written."""
+    return lambda a: f"CAST(array() AS ARRAY<{sql_type}>)" if a == [""] else None
+
+
+#: -Array combinators: aggregate over every element of every row's
+#: array (sums widen to DOUBLE, same trade as arraySum)
+_FOLD_SUM = "aggregate({e}, CAST(0 AS DOUBLE), (__a, __e) -> __a + __e)"
+
+
+def _readable_size(a: list[str]) -> str:
+    """Human-readable formatters: CASE ladders over the unit
+    thresholds (binary KiB/MiB/… for sizes, decimal thousand/million/…
+    for quantities — the engine's exact unit names and 2-dp
+    rendering)."""
+    b = f"CAST({a[0]} AS DOUBLE)"
+    whens = " ".join(
+        f"WHEN abs({b}) < {float(1024 ** (i + 1))} THEN "
+        f"format_string('%.2f {u}', {b} / {float(1024 ** i)})"
+        for i, u in enumerate(["B", "KiB", "MiB", "GiB", "TiB"])
+    )
+    return (
+        f"(CASE {whens} ELSE format_string('%.2f PiB', "
+        f"{b} / {float(1024 ** 5)}) END)"
+    )
+
+
+def _readable_qty(a: list[str]) -> str:
+    b = f"CAST({a[0]} AS DOUBLE)"
+    whens = " ".join(
+        f"WHEN abs({b}) < {hi} THEN format_string('%.2f{u}', {b} / {dv})"
+        for hi, u, dv in [
+            ("1000.0", "", "1.0"),
+            ("1000000.0", " thousand", "1000.0"),
+            ("1.0E9", " million", "1000000.0"),
+            ("1.0E12", " billion", "1.0E9"),
+        ]
+    )
+    return (
+        f"(CASE {whens} ELSE format_string('%.2f trillion', "
+        f"{b} / 1.0E12) END)"
+    )
+
+
+def _file_fn(a: list[str]) -> str:
+    """file(path, format) table function → Spark's path-based table
+    (format.`path`) for on-disk formats."""
+    pm = re.fullmatch(r"'([^']+)'", a[0].strip())
+    fm = re.fullmatch(r"'(\w+)'", a[1].strip())
+    if not pm or not fm:
+        raise ValueError("file(): literal path and format required")
+    fmt = {
+        "parquet": "parquet", "orc": "orc", "json": "json",
+        "jsoneachrow": "json", "csv": "csv",
+    }.get(fm.group(1).lower())
+    if fmt is None:
+        raise ValueError(
+            f"file(): unsupported format {fm.group(1)!r} "
+            f"(Parquet/ORC/JSONEachRow/CSV)"
         )
-        if m2 is None or mult is None:
-            raise ValueError(
-                "toStartOfInterval: INTERVAL n SECOND/MINUTE/HOUR/DAY only"
-            )
-        w = int(m2.group(1)) * mult
+    return f"{fmt}.`{pm.group(1)}`"
+
+
+def _week0_expr(d: str) -> str:
+    """toWeek/toYearWeek: ClickHouse default mode 0 = Sunday-start
+    weeks numbered 0-53 from the year's first Sunday; mode 3 = ISO.
+    The year-week rolls back into the PREVIOUS year's last week for
+    days before the first Sunday (MySQL YEARWEEK semantics)."""
+    dd = f"CAST({d} AS DATE)"
+    fs = f"next_day(date_sub(trunc({dd}, 'YEAR'), 1), 'SU')"
+    return (
+        f"CASE WHEN datediff({dd}, {fs}) < 0 THEN 0 "
+        f"ELSE CAST(floor(datediff({dd}, {fs}) / 7) AS INT) + 1 END"
+    )
+
+
+def _to_week(a: list[str]) -> str:
+    mode = a[1].strip() if len(a) > 1 else "0"
+    if mode == "3":
+        return f"weekofyear({a[0]})"
+    if mode != "0":
+        raise ValueError("toWeek: modes 0 (Sunday, 0-53) and 3 (ISO) only")
+    return f"({_week0_expr(a[0])})"
+
+
+def _to_year_week(a: list[str]) -> str:
+    mode = a[1].strip() if len(a) > 1 else "0"
+    if mode == "3":
         return (
-            f"timestamp_seconds(CAST(floor(unix_timestamp({a[0]}) / {w}) "
-            f"* {w} AS BIGINT))"
+            f"(extract(YEAROFWEEK FROM {a[0]}) * 100 "
+            f"+ weekofyear({a[0]}))"
         )
+    if mode != "0":
+        raise ValueError(
+            "toYearWeek: modes 0 (Sunday, 0-53) and 3 (ISO) only"
+        )
+    d31 = f"date_sub(trunc(CAST({a[0]} AS DATE), 'YEAR'), 1)"
+    return (
+        f"(CASE WHEN ({_week0_expr(a[0])}) = 0 "
+        f"THEN (year({a[0]}) - 1) * 100 + ({_week0_expr(d31)}) "
+        f"ELSE year({a[0]}) * 100 + ({_week0_expr(a[0])}) END)"
+    )
 
-    out = _rewrite_call(out, "toStartOfInterval", _to_start_of_interval, nargs=2)
-    out = _rewrite_call(
-        out,
-        "toYYYYMMDD",
-        lambda args: f"CAST(date_format({args[0]}, 'yyyyMMdd') AS INT)",
-    )
-    # --- aggregate-side probe-battery closures ---
-    # moment statistics: Spark's skewness is the POPULATION form
-    # (ClickHouse skewPop) and kurtosis is EXCESS population kurtosis
-    # (ClickHouse kurtPop − 3); the Samp forms divide by the SAMPLE
-    # stddev instead, i.e. scale by (σ/s)^k
-    out = re.sub(r"\bskewPop\s*\(", "skewness(", out)
-    out = _rewrite_call(
-        out,
-        "skewSamp",
-        lambda a: (
-            f"(skewness({a[0]}) * pow(stddev_pop({a[0]}) "
-            f"/ stddev_samp({a[0]}), 3))"
-        ),
-    )
-    out = _rewrite_call(out, "kurtPop", lambda a: f"(kurtosis({a[0]}) + 3)")
-    out = _rewrite_call(
-        out,
-        "kurtSamp",
-        lambda a: (
-            f"((kurtosis({a[0]}) + 3) * pow(stddev_pop({a[0]}) "
-            f"/ stddev_samp({a[0]}), 4))"
-        ),
-    )
-    out = re.sub(r"\buniqCombined(?:64)?\s*\(", "approx_count_distinct(", out)
-    out = re.sub(r"\buniqHLL12\s*\(", "approx_count_distinct(", out)
-    # anyHeavy is ClickHouse's approximate majority element; mode() is
-    # the deterministic heavy-hitter analog
-    out = re.sub(r"\banyHeavy\s*\(", "mode(", out)
-    out = re.sub(r"\bcountDistinct\s*\(", "count(DISTINCT ", out)
-    out = re.sub(r"\bgroupArrayDistinct\s*\(", "collect_set(", out)
-    out = re.sub(r"\bgroupBitAnd\s*\(", "bit_and(", out)
-    out = re.sub(r"\bgroupBitOr\s*\(", "bit_or(", out)
-    out = re.sub(r"\bgroupBitXor\s*\(", "bit_xor(", out)
-    # quantileExactWeighted(p)(x, w) → percentile's 3-arg frequency form
-    out = _rewrite_parametric(
-        out,
-        "quantileExactWeighted",
-        lambda ps, a: f"percentile({a[0]}, {ps[0]}, {a[1]})",
-    )
-    out = _rewrite_call(
-        out,
-        "avgWeighted",
-        lambda a: f"(sum(({a[0]}) * ({a[1]})) / sum({a[1]}))",
-        nargs=2,
-    )
-    out = _rewrite_call(
-        out,
-        "sumCount",
-        lambda a: f"struct(sum({a[0]}) AS sum, count({a[0]}) AS count)",
-    )
-    out = _rewrite_call(
-        out,
-        "singleValueOrNull",
-        lambda a: f"(CASE WHEN count(DISTINCT {a[0]}) = 1 THEN max({a[0]}) END)",
-    )
-    out = _rewrite_call(
-        out,
-        "countEqual",
-        lambda a: f"size(filter({a[0]}, __e -> __e <=> {a[1]}))",
-        nargs=2,
-    )
-    out = _rewrite_call(
-        out,
-        "arrayCount",
-        lambda a: (
-            f"size(filter({a[1]}, {a[0]}))"
-            if len(a) == 2
-            else f"size(filter({a[0]}, __e -> __e <> 0))"
-        ),
-    )
-    # running-scan array forms (ClickHouse returns the input's numeric
-    # type; these widen to DOUBLE, same documented trade as arraySum)
-    out = _rewrite_call(
-        out,
-        "arrayCumSum",
-        lambda a: (
-            f"aggregate({a[0]}, CAST(array() AS ARRAY<DOUBLE>), "
-            f"(__acc, __e) -> array_append(__acc, "
-            f"coalesce(try_element_at(__acc, -1), CAST(0 AS DOUBLE)) + __e))"
-        ),
-    )
-    out = _rewrite_call(
-        out,
-        "arrayDifference",
-        lambda a: (
-            f"transform({a[0]}, (__x, __i) -> CASE WHEN __i = 0 "
-            f"THEN __x - __x ELSE __x - element_at({a[0]}, __i) END)"
-        ),
-    )
-    out = re.sub(r"\barrayZip\s*\(", "arrays_zip(", out)
-    # arrayFold(lambda, arr, init) → aggregate(arr, init, lambda)
-    # (same (acc, x) lambda shape; CH's multi-array form has no
-    # single-HOF Spark analog and raises with the zip shape named)
-    def _array_fold(a: list[str]) -> str:
-        if len(a) != 3:
-            raise ValueError(
-                "arrayFold over multiple arrays is not supported — "
-                "arrays_zip them first and fold the struct array"
-            )
-        return f"aggregate({a[1]}, {a[2]}, {a[0]})"
 
-    out = _rewrite_call(out, "arrayFold", _array_fold, nargs=3)
-    # map-merging aggregates over a MAP column: collect the group's
-    # maps and fold with map_zip_with (key union; NULL side = absent
-    # key).  One expression — no explode/re-aggregate stage.  Key
-    # ORDER in the result map is engine-arbitrary (ClickHouse returns
-    # key-sorted maps; Spark maps are unordered — documented
-    # divergence).  The two-parallel-ARRAYS ClickHouse form still
-    # raises with the registered query named.
-    def _map_merge(a: list[str], combine: str, what: str) -> str:
+def _parse_datetime(a: list[str]) -> str:
+    lit = re.fullmatch(r"'((?:[^']|'')*)'", a[1].strip())
+    if not lit:
+        raise ValueError("parseDateTime: literal format string only")
+    fmt = lit.group(1)
+    for ch_tok, sp_tok in _FMT_TOKENS.items():
+        fmt = fmt.replace(ch_tok, sp_tok)
+    return f"to_timestamp({a[0]}, '{fmt}')"
+
+
+def _trunc_num(a: list[str]) -> str:
+    """Numeric trunc/truncate toward zero with optional precision; the
+    2-arg STRING form stays Spark's date trunc(date, fmt)."""
+    if len(a) == 2 and not re.fullmatch(r"-?\d+", a[1].strip()):
+        return f"trunc({', '.join(a)})"
+    n = int(a[1]) if len(a) == 2 else 0
+    p = 10 ** n
+    return f"(CAST(CAST(({a[0]}) * {p} AS BIGINT) AS DOUBLE) / {p})"
+
+
+def _round_down(a: list[str]) -> str:
+    """roundDown picks the greatest element <= x (falling back to the
+    smallest element); roundDuration is roundDown over the engine's
+    fixed duration ladder."""
+    return (
+        f"coalesce(array_max(filter({a[1]}, __e -> __e <= ({a[0]}))), "
+        f"array_min({a[1]}))"
+    )
+
+
+def _array_rotate(a: list[str], right: bool) -> str:
+    n = f"-({a[1]})" if right else a[1]
+    k = f"pmod({n}, greatest(size({a[0]}), 1))"
+    return (
+        f"(CASE WHEN size({a[0]}) = 0 THEN {a[0]} ELSE "
+        f"concat(slice({a[0]}, {k} + 1, size({a[0]}) - {k}), "
+        f"slice({a[0]}, 1, {k})) END)"
+    )
+
+
+def _array_shift(a: list[str], right: bool) -> str:
+    arr = a[0]
+    n = f"(-({a[1]}))" if right else f"({a[1]})"
+    pad = a[2] if len(a) == 3 else f"try_element_at({arr}, size({arr}) + 1)"
+    k = f"least(greatest({n}, -size({arr})), size({arr}))"
+    return (
+        f"(CASE WHEN {k} >= 0 THEN "
+        f"concat(slice({arr}, {k} + 1, size({arr}) - {k}), "
+        f"array_repeat({pad}, {k})) "
+        f"ELSE concat(array_repeat({pad}, -{k}), "
+        f"slice({arr}, 1, size({arr}) + {k})) END)"
+    )
+
+
+def _accurate_cast(a: list[str], try_: bool) -> str:
+    t = a[1].strip().strip("'\"")
+    sqlt = _CH_CAST_TYPES.get(t)
+    if not sqlt:
+        raise ValueError(f"accurateCast: unsupported type {t!r}")
+    return f"{'TRY_CAST' if try_ else 'CAST'}({a[0]} AS {sqlt})"
+
+
+def _entropy(a: list[str]) -> str:
+    lst = f"collect_list({a[0]})"
+    cnt = f"size(filter({lst}, __e -> __e <=> __v))"
+    return (
+        f"(log2(size({lst})) - aggregate(transform("
+        f"array_distinct({lst}), __v -> CAST({cnt} AS DOUBLE) "
+        f"* log2({cnt})), CAST(0 AS DOUBLE), "
+        f"(__a2, __e2) -> __a2 + __e2) / size({lst}))"
+    )
+
+
+def _array_fold(a: list[str]) -> str:
+    """arrayFold(lambda, arr, init) → aggregate(arr, init, lambda)
+    (same (acc, x) lambda shape; CH's multi-array form has no
+    single-HOF Spark analog and raises with the zip shape named)."""
+    if len(a) != 3:
+        raise ValueError(
+            "arrayFold over multiple arrays is not supported — "
+            "arrays_zip them first and fold the struct array"
+        )
+    return f"aggregate({a[1]}, {a[2]}, {a[0]})"
+
+
+def _map_merge(what: str, combine: str):
+    """Map-merging aggregates over a MAP column: collect the group's
+    maps and fold with map_zip_with (key union; NULL side = absent
+    key).  One expression — no explode/re-aggregate stage.  Key ORDER
+    in the result map is engine-arbitrary (ClickHouse returns
+    key-sorted maps; Spark maps are unordered — documented
+    divergence).  The two-parallel-ARRAYS ClickHouse form raises with
+    the registered query named."""
+    combine = (
+        f"CASE WHEN __a IS NULL THEN __b WHEN __b IS NULL THEN __a "
+        f"ELSE {combine} END"
+    )
+
+    def render(a: list[str]) -> str:
         if len(a) != 1:
             raise ValueError(
                 f"{what}(keys, values) over parallel arrays needs an "
@@ -2814,496 +1679,1218 @@ def translate(sql: str) -> str:
             f"(__k, __a, __b) -> {combine}))"
         )
 
-    out = _rewrite_call(
-        out, "sumMap",
-        lambda a: _map_merge(
-            a,
-            "CASE WHEN __a IS NULL THEN __b WHEN __b IS NULL THEN __a "
-            "ELSE __a + __b END",
-            "sumMap",
-        ),
+    return render
+
+
+def _dict_get(args: list[str]) -> str:
+    """dictGet('d', 'attr', k) → correlated scalar subquery against the
+    registered dict view (functions/dicts.register_dict); Catalyst
+    decorrelates it into a (broadcast-able) left join — per-row lookup
+    semantics, no UDF.  dictHas('d', k) → EXISTS."""
+    d, attr, key = args[0].strip("'\""), args[1].strip("'\""), args[2]
+    return f"(SELECT `{attr}` FROM `{d}` WHERE `{d}`.`key` = {key})"
+
+
+def _json_extract(args: list[str]) -> str:
+    """JSONExtractString(j, 'k') → get_json_object(j, '$.k'): ClickHouse
+    takes a bare key, Spark needs a JSONPath — a pure rename would
+    silently return NULL for every call.  Non-literal or already-
+    JSONPath keys pass through unprefixed."""
+    m = re.fullmatch(r"'([^'$][^']*)'", args[1])
+    key = f"'$.{m.group(1)}'" if m else args[1]
+    return f"get_json_object({args[0]}, {key})"
+
+
+def _json_typed(sql_type: str):
+    """Typed JSONExtract variants: extract, then TRY_CAST — two
+    documented deltas vs ClickHouse, both degrading to NULL rather
+    than 0/0.0/false: (1) missing key → NULL (ClickHouse: zero-value);
+    (2) malformed / non-numeric value → NULL (ClickHouse: 0).
+    TRY_CAST, not CAST: under Spark 4's default ANSI mode a plain CAST
+    on a non-numeric JSON string throws at runtime and kills the query
+    — a crash-on-data failure a compat shim must not add."""
+    return lambda args: f"TRY_CAST({_json_extract(args)} AS {sql_type})"
+
+
+def _json_has(args: list[str]) -> str:
+    """JSONHas: key PRESENCE, not value non-nullness.  For the literal
+    bare-key form we probe json_object_keys so {"k": null} counts as
+    present (ClickHouse returns 1 there; get_json_object returns NULL
+    and would read as absent).  coalesce(…, false): invalid JSON
+    yields NULL keys → absent, matching ClickHouse's 0.  Non-literal /
+    JSONPath keys keep the IS NOT NULL probe — a documented JSON-null
+    delta for nested paths only."""
+    m = re.fullmatch(r"'([^'$][^']*)'", args[1])
+    if m:
+        return (
+            f"coalesce(array_contains(json_object_keys({args[0]}),"
+            f" '{m.group(1)}'), false)"
+        )
+    return f"({_json_extract(args)} IS NOT NULL)"
+
+
+def _json_array_raw(args: list[str]) -> str:
+    if len(args) == 1:
+        j, base = args[0], "$"
+    else:
+        m2 = re.fullmatch(r"'([^'$][^']*)'", args[1])
+        if not m2:
+            raise ValueError("JSONExtractArrayRaw: literal bare key only")
+        j, base = args[0], f"$.{m2.group(1)}"
+    ln = f"json_array_length(get_json_object({j}, '{base}'))"
+    return (
+        f"(CASE WHEN coalesce({ln}, 0) = 0 "
+        f"THEN CAST(array() AS ARRAY<STRING>) "
+        f"ELSE transform(sequence(0, {ln} - 1), __i -> "
+        f"get_json_object({j}, concat('{base}[', __i, ']'))) END)"
     )
-    out = _rewrite_call(
-        out, "minMap",
-        lambda a: _map_merge(
-            a,
-            "CASE WHEN __a IS NULL THEN __b WHEN __b IS NULL THEN __a "
-            "ELSE least(__a, __b) END",
-            "minMap",
-        ),
+
+
+def _json_length(args: list[str]) -> str:
+    target = args[0] if len(args) == 1 else _json_extract(args)
+    return (
+        f"coalesce(json_array_length({target}), "
+        f"size(json_object_keys({target})))"
     )
-    out = _rewrite_call(
-        out, "maxMap",
-        lambda a: _map_merge(
-            a,
-            "CASE WHEN __a IS NULL THEN __b WHEN __b IS NULL THEN __a "
-            "ELSE greatest(__a, __b) END",
-            "maxMap",
-        ),
+
+
+def _first_sig_subdomain(a: list[str]) -> str:
+    parts = f"split(parse_url({a[0]}, 'HOST'), '\\\\.')"
+    return (
+        f"(CASE WHEN size({parts}) <= 1 THEN try_element_at({parts}, 1) "
+        f"WHEN size({parts}) >= 3 AND try_element_at({parts}, -2) IN "
+        f"('com', 'net', 'org', 'co') THEN try_element_at({parts}, -3) "
+        f"ELSE try_element_at({parts}, -2) END)"
     )
+
+
+def _to_start_of_interval(a: list[str]) -> str:
+    """toStartOfInterval(t, INTERVAL n unit) — second-based units only
+    (month/quarter/year grids are not fixed-width; those raise)."""
+    m2 = re.fullmatch(
+        r"INTERVAL\s+(\d+)\s+(\w+?)S?", a[1].strip(), re.IGNORECASE
+    )
+    mult = (
+        {"SECOND": 1, "MINUTE": 60, "HOUR": 3600, "DAY": 86400}.get(
+            m2.group(2).upper()
+        )
+        if m2
+        else None
+    )
+    if m2 is None or mult is None:
+        raise ValueError(
+            "toStartOfInterval: INTERVAL n SECOND/MINUTE/HOUR/DAY only"
+        )
+    return _grid(int(m2.group(1)) * mult)(a)
+
+
+def _refuse(message: str):
+    """Render for a name with no Spark expression: raise ``message``,
+    which points at the registered DataFrame query or operator, rather
+    than let Spark fail with an opaque UNRESOLVED_ROUTINE."""
+
+    def render(a: list[str]) -> str:
+        raise ValueError(message)
+
+    return render
+
+
+#: names that need operators, and data-order scans → why, and what to
+#: use instead
+_UNSUPPORTED = {
+    # data-ORDER-dependent scans — an aggregate rewrite has no row
+    # order to scan; use a window over an explicit sort
+    "deltaSum": "is a data-order scan — use a sum over a lag() "
+                "window with an explicit ORDER BY (q_win_running shape)",
+    "deltaSumTimestamp": "is a data-order scan — use a sum over a "
+                         "lag() window ordered by the timestamp",
+    "runningDifference": "is a data-order scan — use lag() over an "
+                         "explicit ORDER BY window",
+    "neighbor": "is a data-order scan — use lag()/lead() over an "
+                "explicit ORDER BY window",
+    "maxIntersections": "needs an interval sweep — use the "
+                        "range-join operator (operators/rangejoin.py)",
+    "lgamma": "has no Spark builtin — precompute or use a pandas_udf",
+    "tgamma": "has no Spark builtin — precompute or use a pandas_udf",
+    "ngramDistance": "needs shingle sets — use the n-gram Jaccard "
+                     "dedup operator (operators/dedup.py)",
+    "arrayAUC": "needs tie-averaged ranks over a sort — use a "
+                "rank() window over exploded scores",
+    "proportionsZTest": "confidence bounds need the normal inverse "
+                        "CDF — compute z from counts and use erf()",
+    "studentTTest": "p-values need the t CDF (incomplete beta) — "
+                    "compute the t statistic from moment aggregates",
+    "welchTTest": "p-values need the t CDF (incomplete beta) — "
+                  "compute the t statistic from moment aggregates",
+    "mannWhitneyUTest": "needs global ranks — use a rank() window "
+                        "then the U statistic as plain aggregates",
+    "cramersV": "needs pair counts (a two-level GROUP BY), not one "
+                "aggregate expression",
+    "contingency": "needs pair counts (a two-level GROUP BY), not "
+                   "one aggregate expression",
+    "theilsU": "needs pair counts (a two-level GROUP BY), not one "
+               "aggregate expression",
+    "groupArrayMovingSum": "is a data-order scan — use sum() over "
+                           "a sliding window with an explicit sort",
+    "groupArrayMovingAvg": "is a data-order scan — use avg() over "
+                           "a sliding window with an explicit sort",
+    "JSONType": "has no single-expression analog — probe with "
+                "json_array_length / json_object_keys instead",
+}
+
+
+class _Fn(NamedTuple):
+    """How one ClickHouse name is rewritten; an entry may carry several
+    forms.  ``param`` renders the parametric call ``name(params)(args)``
+    from both argument lists.  Otherwise ``call`` renders ``name(args)``
+    from its top-level arguments once at least ``nargs`` are given
+    (``with_tail`` also passes the text after the close paren) and may
+    return None to leave the call as written.  ``rename`` replaces the
+    head ``name(`` and keeps the arguments verbatim; it also covers
+    the calls ``call`` leaves alone.  ``emits`` names the other table
+    entries whose Spark namesake the render's output calls on purpose
+    (the driver never rewrites a render's output)."""
+
+    rename: str | None = None
+    call: Callable[..., str | None] | None = None
+    nargs: int = 1
+    with_tail: bool = False
+    param: Callable[[list[str], list[str]], str] | None = None
+    emits: tuple[str, ...] = ()
+
+
+def _r(head: str) -> _Fn:
+    """A plain rename to the call head ``head``."""
+    return _Fn(rename=head)
+
+
+def _c(render: Callable[..., str | None], nargs: int = 1, **kw) -> _Fn:
+    """A call render needing at least ``nargs`` arguments."""
+    return _Fn(call=render, nargs=nargs, **kw)
+
+
+def _p(render: Callable[[list[str], list[str]], str]) -> _Fn:
+    """A parametric render."""
+    return _Fn(param=render)
+
+
+_INT_TYPES = [f"{u}Int{b}" for u in ("", "U") for b in (8, 16, 32, 64)]
+_UNITS = [
+    ("Hours", "HOUR"), ("Minutes", "MINUTE"), ("Seconds", "SECOND"),
+    ("Weeks", "WEEK"), ("Quarters", "QUARTER"), ("Years", "YEAR"),
+]
+
+#: ClickHouse name → its rewrite.  Every render emits final Spark SQL.
+#: Rendered calls that are table names too: rand(), extract(),
+#: transform() and trunc(), which their own entries also pass through
+#: unchanged, and the range() table that numbers() emits.
+_FNS: dict[str, _Fn] = {
+    # --- 1:1 renames (same argument order and meaning).  Names whose
+    # semantics diverge between the dialects (toDayOfWeek's weekday
+    # origin, splitByChar's reversed args, …) have renders below.
+    # ClickHouse's bare `any` is not here: it collides with SQL's
+    # `= ANY(subquery)` and has its own statement pass.
+    **{
+        ch: _r(f"{sp}(")
+        for ch, sp in {
+            "toYear": "year", "toMonth": "month", "toDayOfMonth": "dayofmonth",
+            "toHour": "hour", "toDate": "to_date", "lowerUTF8": "lower",
+            "upperUTF8": "upper", "countIf": "count_if",
+            "uniq": "approx_count_distinct", "arrayJoin": "explode",
+            "has": "array_contains", "groupUniqArray": "collect_set",
+            "argMax": "max_by", "argMin": "min_by", "intDiv": "div",
+            "cityHash64": "xxhash64", "startsWith": "startswith",
+            "endsWith": "endswith", "match": "regexp_like",
+            "replaceRegexpAll": "regexp_replace", "replaceAll": "replace",
+            "indexOf": "array_position", "arrayDistinct": "array_distinct",
+            "arrayReverse": "reverse", "lengthUTF8": "length",
+            "substringUTF8": "substring",
+            "position": "instr",  # CH position(haystack, needle) = instr order
+            "ifNull": "coalesce", "today": "current_date",
+            "stddevPop": "stddev_pop", "stddevSamp": "stddev_samp",
+            "varPop": "var_pop", "varSamp": "var_samp",
+            "covarPop": "covar_pop", "covarSamp": "covar_samp",
+            "leftPad": "lpad", "rightPad": "rpad", "modulo": "mod",
+            "bitCount": "bit_count", "base64Encode": "base64",
+            "generateUUIDv4": "uuid", "currentDatabase": "current_database",
+            "currentUser": "current_user",
+            "toTypeName": "typeof",  # Spark type names, not ClickHouse's
+            "toISOWeek": "weekofyear",  # Spark weekofyear is the ISO week
+            "mapKeys": "map_keys", "mapValues": "map_values",
+            "mapContains": "map_contains_key",
+            "substringIndex": "substring_index",
+            "toLastDayOfMonth": "last_day", "makeDate": "make_date",
+            "makeDateTime": "make_timestamp",
+            "toUnixTimestamp64Milli": "unix_millis",
+            "fromUnixTimestamp64Milli": "timestamp_millis",
+            "positionUTF8": "instr",  # CH (haystack, needle) = instr order
+            "uniqTheta": "approx_count_distinct",
+            "now64": "now",  # µs vs the engine's configurable sub-second scale
+            "JSONExtractKeys": "json_object_keys",
+            # 64-bit hash families: deterministic xxhash64 stands in for
+            # the engine's sip/farm/wy/halfMD5 (different algorithm,
+            # same bucketing/sampling contract — the cityHash64 precedent)
+            "sipHash64": "xxhash64", "farmHash64": "xxhash64",
+            "wyHash64": "xxhash64", "halfMD5": "xxhash64",
+            "toMinute": "minute", "toSecond": "second",
+            "toQuarter": "quarter", "toDayOfYear": "dayofyear",
+            "trimBoth": "trim", "trimLeft": "ltrim", "trimRight": "rtrim",
+            "arrayMin": "array_min", "arrayMax": "array_max",
+            "arrayFlatten": "flatten", "arrayConcat": "concat",
+            "bitShiftLeft": "shiftleft", "bitShiftRight": "shiftright",
+            "roundBankers": "bround",  # HALF_EVEN
+            "concatWithSeparator": "concat_ws", "hasAny": "arrays_overlap",
+            # moment statistics: Spark's skewness is the POPULATION form
+            "skewPop": "skewness",
+            "uniqCombined": "approx_count_distinct",
+            "uniqCombined64": "approx_count_distinct",
+            "uniqHLL12": "approx_count_distinct",
+            # anyHeavy is ClickHouse's approximate majority element;
+            # mode() is the deterministic heavy-hitter analog
+            "anyHeavy": "mode",
+            "groupArrayDistinct": "collect_set", "groupBitAnd": "bit_and",
+            "groupBitOr": "bit_or", "groupBitXor": "bit_xor",
+            "arrayZip": "arrays_zip",
+            "toUnixTimestamp": "unix_timestamp",
+            "fromUnixTimestamp": "from_unixtime",
+            "randCanonical": "rand",
+        }.items()
+    },
+    # count_distinct is not a SQL name
+    "uniqExact": _r("count(DISTINCT "),
+    "countDistinct": _r("count(DISTINCT "),
+    "sumDistinct": _r("sum(DISTINCT "),
+    "avgDistinct": _r("avg(DISTINCT "),
+    # --- casts
+    **{f"to{t}": _c(lambda a: f"CAST({a[0]} AS BIGINT)") for t in _INT_TYPES},
+    "toFloat32": _c(lambda a: f"CAST({a[0]} AS DOUBLE)"),
+    "toFloat64": _c(lambda a: f"CAST({a[0]} AS DOUBLE)"),
+    "toDateTime": _c(lambda a: f"CAST({a[0]} AS TIMESTAMP)"),
+    **{
+        f"to{t}OrNull": _c(lambda a: f"TRY_CAST({a[0]} AS BIGINT)")
+        for t in _INT_TYPES
+    },
+    **{
+        f"to{t}OrZero": _c(lambda a: f"coalesce(try_cast({a[0]} AS BIGINT), 0)")
+        for t in _INT_TYPES
+    },
+    **{
+        f"toFloat{b}OrZero": _c(
+            lambda a: f"coalesce(TRY_CAST({a[0]} AS DOUBLE), CAST(0 AS DOUBLE))"
+        )
+        for b in (32, 64)
+    },
+    **{
+        f"toFloat{b}OrNull": _c(lambda a: f"TRY_CAST({a[0]} AS DOUBLE)")
+        for b in (32, 64)
+    },
+    "toDateOrNull": _c(lambda a: f"TRY_CAST({a[0]} AS DATE)"),
+    "toDateOrZero": _c(
+        lambda a: f"coalesce(TRY_CAST({a[0]} AS DATE), DATE'1970-01-01')"
+    ),
+    "toDateTimeOrNull": _c(lambda a: f"TRY_CAST({a[0]} AS TIMESTAMP)"),
+    "toDateTimeOrZero": _c(
+        lambda a: (
+            f"coalesce(TRY_CAST({a[0]} AS TIMESTAMP), "
+            f"TIMESTAMP'1970-01-01 00:00:00')"
+        )
+    ),
+    "accurateCastOrNull": _c(lambda a: _accurate_cast(a, True), 2),
+    "accurateCast": _c(lambda a: _accurate_cast(a, False), 2),
+    **{
+        f"toDecimal{bits}": _c(
+            lambda a, p=prec: f"CAST({a[0]} AS DECIMAL({p}, {int(a[1])}))", 2
+        )
+        for bits, prec in ((32, 9), (64, 18), (128, 38))
+    },
+    "toBool": _c(lambda a: f"CAST({a[0]} AS BOOLEAN)"),
+    "toNullable": _c(lambda a: f"({a[0]})"),
+    "toString": _c(lambda a: f"CAST({a[0]} AS STRING)"),
+    "reinterpretAsString": _c(lambda a: f"CAST({a[0]} AS STRING)"),
+    "assumeNotNull": _c(lambda a: f"({a[0]})"),
+    **{f"emptyArray{t}": _c(_empty_array("BIGINT"), 0) for t in _INT_TYPES},
+    "emptyArrayFloat32": _c(_empty_array("DOUBLE"), 0),
+    "emptyArrayFloat64": _c(_empty_array("DOUBLE"), 0),
+    "emptyArrayString": _c(_empty_array("STRING"), 0),
+    "emptyArrayDateTime": _c(_empty_array("TIMESTAMP"), 0),
+    "emptyArrayDate": _c(_empty_array("DATE"), 0),
+    # --- aggregates
+    # uniqUpTo(N)(x) → LEAST(count(DISTINCT x), N+1) — ClickHouse's
+    # capped distinct saturates at N+1 ("more than N?" predicate)
+    "uniqUpTo": _p(
+        lambda ps, a: f"LEAST(count(DISTINCT {a[0]}), {int(ps[0]) + 1})"
+    ),
+    "topK": _p(_topk),
+    "topKWeighted": _p(_topk_weighted),
+    "sumIf": _c(_if_agg("sum", "0"), 2, with_tail=True),
+    "avgIf": _c(_if_agg("avg", "CAST('NaN' AS DOUBLE)"), 2, with_tail=True),
+    "minIf": _c(_if_agg("min"), 2),
+    "maxIf": _c(_if_agg("max"), 2),
+    # any_value and last need ignoreNulls=true or the NULL from a
+    # non-matching row wins; uniq keeps the approx/exact split
+    "anyIf": _c(lambda a: f"any_value(CASE WHEN {a[1]} THEN {a[0]} END, true)", 2),
+    "anyLastIf": _c(lambda a: f"last(CASE WHEN {a[1]} THEN {a[0]} END, true)", 2),
+    "uniqIf": _c(
+        lambda a: f"approx_count_distinct(CASE WHEN {a[1]} THEN {a[0]} END)", 2
+    ),
+    "uniqExactIf": _c(
+        lambda a: f"count(DISTINCT CASE WHEN {a[1]} THEN {a[0]} END)", 2
+    ),
+    "argMaxIf": _c(lambda a: f"max_by({a[0]}, CASE WHEN {a[2]} THEN {a[1]} END)", 3),
+    "argMinIf": _c(lambda a: f"min_by({a[0]}, CASE WHEN {a[2]} THEN {a[1]} END)", 3),
+    # anyLast(x): last NON-NULL value in ClickHouse
+    "anyLast": _c(lambda a: f"last_value({a[0]}, true)"),
+    # quantileExact(p)(x) is exact percentile, quantile(p)(x) the
+    # sketch form, quantiles(p…)(x) the array form
+    "quantileExact": _p(lambda ps, a: f"percentile({a[0]}, {ps[0]})"),
+    "quantiles": _p(
+        lambda ps, a: f"percentile_approx({a[0]}, array({', '.join(ps)}))"
+    ),
+    "quantile": _p(lambda ps, a: f"percentile_approx({a[0]}, {ps[0]})"),
+    "quantilesExact": _p(
+        lambda ps, a: f"percentile({a[0]}, array({', '.join(ps)}))"
+    ),
+    "quantilesTDigest": _p(
+        lambda ps, a: f"percentile_approx({a[0]}, array({', '.join(ps)}))"
+    ),
+    "quantileTDigest": _p(lambda ps, a: f"percentile_approx({a[0]}, {ps[0]})"),
+    "quantileDeterministic": _p(
+        lambda ps, a: f"percentile_approx({a[0]}, {ps[0]})"
+    ),
+    # quantileExactWeighted(p)(x, w) → percentile's 3-arg frequency form
+    "quantileExactWeighted": _p(
+        lambda ps, a: f"percentile({a[0]}, {ps[0]}, {a[1]})"
+    ),
+    "median": _c(lambda a: f"percentile_approx({a[0]}, 0.5)"),
+    "medianExact": _c(lambda a: f"percentile({a[0]}, 0.5)"),
+    # sequenceMatch('pattern')(ts, cond1, …) / sequenceCount — the
+    # general pattern aggregates (operators/seqmatch.py is the
+    # DataFrame form; this is the same bitset-string + regex
+    # compilation rendered as pure aggregate SQL)
+    "sequenceMatch": _p(lambda ps, a: _sequence_sql(ps, a, False)),
+    "sequenceCount": _p(lambda ps, a: _sequence_sql(ps, a, True)),
+    "windowFunnel": _p(_window_funnel_sql),
+    "sequenceNextNode": _p(_sequence_next_node_sql),
+    "sequenceMatchEvents": _p(_sequence_match_events_sql),
+    "retention": _c(_retention_sql),
+    # parametric groupArray(N)(x) caps the collected list; the Sample
+    # form keeps a deterministic prefix (ClickHouse samples randomly —
+    # documented delta, same cardinality contract)
+    "groupArray": _Fn(
+        rename="collect_list(",
+        param=lambda ps, a: f"slice(collect_list({a[0]}), 1, {ps[0]})",
+    ),
+    "groupArraySample": _p(
+        lambda ps, a: f"slice(collect_list({a[0]}), 1, {ps[0]})"
+    ),
+    "groupConcat": _Fn(
+        call=lambda a: f"array_join(collect_list({a[0]}), '')",
+        param=lambda ps, a: f"array_join(collect_list({a[0]}), {ps[0]})",
+    ),
+    "sumArray": _c(lambda a: f"sum({_FOLD_SUM.format(e=a[0])})"),
+    "minArray": _c(lambda a: f"min(array_min({a[0]}))"),
+    "maxArray": _c(lambda a: f"max(array_max({a[0]}))"),
+    "avgArray": _c(
+        lambda a: f"(sum({_FOLD_SUM.format(e=a[0])}) / sum(size({a[0]})))"
+    ),
+    "countArray": _c(lambda a: f"sum(size({a[0]}))"),
+    # boundingRatio(x, y) = slope between the min-x and max-x points
+    "boundingRatio": _c(
+        lambda a: (
+            f"((max_by({a[1]}, {a[0]}) - min_by({a[1]}, {a[0]})) "
+            f"/ CAST(max({a[0]}) - min({a[0]}) AS DOUBLE))"
+        ),
+        2,
+    ),
+    "entropy": _c(_entropy),
+    # simpleLinearRegression(x, y) → Tuple(k, b), named _1/_2 to
+    # compose with tupleElement.  try_divide: a single-point /
+    # constant-x group has var_pop = 0, which ANSI division would turn
+    # into a query-killing error (ClickHouse yields nan there; NULL is
+    # the documented analog)
+    "simpleLinearRegression": _c(
+        lambda a: (
+            f"named_struct('_1', try_divide(covar_pop({a[0]}, {a[1]}), "
+            f"var_pop({a[0]})), '_2', avg({a[1]}) "
+            f"- try_divide(covar_pop({a[0]}, {a[1]}), var_pop({a[0]})) "
+            f"* avg({a[0]}))"
+        ),
+        2,
+    ),
+    # kurtosis is EXCESS population kurtosis (ClickHouse kurtPop − 3);
+    # the Samp forms divide by the SAMPLE stddev instead, i.e. scale
+    # by (σ/s)^k
+    "skewSamp": _c(
+        lambda a: (
+            f"(skewness({a[0]}) * pow(stddev_pop({a[0]}) "
+            f"/ stddev_samp({a[0]}), 3))"
+        )
+    ),
+    "kurtPop": _c(lambda a: f"(kurtosis({a[0]}) + 3)"),
+    "kurtSamp": _c(
+        lambda a: (
+            f"((kurtosis({a[0]}) + 3) * pow(stddev_pop({a[0]}) "
+            f"/ stddev_samp({a[0]}), 4))"
+        )
+    ),
+    "avgWeighted": _c(lambda a: f"(sum(({a[0]}) * ({a[1]})) / sum({a[1]}))", 2),
+    "sumCount": _c(lambda a: f"struct(sum({a[0]}) AS sum, count({a[0]}) AS count)"),
+    "singleValueOrNull": _c(
+        lambda a: f"(CASE WHEN count(DISTINCT {a[0]}) = 1 THEN max({a[0]}) END)"
+    ),
+    "sumMap": _c(_map_merge("sumMap", "__a + __b")),
+    "minMap": _c(_map_merge("minMap", "least(__a, __b)")),
+    "maxMap": _c(_map_merge("maxMap", "greatest(__a, __b)")),
     # uniqState / uniqMerge — the partial-aggregation pair, mapped to
     # Spark's Datasketches HLL: the STATE is a real mergeable sketch
     # (binary column, storable in a SummingMergeTree-style partial
     # table), uniqMerge unions and estimates.  Same ±2% class as
     # ClickHouse's uniq sketch.
-    out = _rewrite_call(
-        out, "uniqState",
+    "uniqState": _c(
         lambda a: (
             f"hll_sketch_agg({a[0]})"
             if len(a) == 1
             else f"hll_sketch_agg(xxhash64({', '.join(a)}))"
-        ),
-    )
-    out = _rewrite_call(
-        out, "uniqMerge",
-        lambda a: f"hll_sketch_estimate(hll_union_agg({a[0]}))",
-    )
-    # aggregates that genuinely need operators, and data-order scans —
-    # point at the registered DataFrame query instead of failing with
-    # an opaque UNRESOLVED_ROUTINE
-    for unr, pointer in (
-        # battery 4: data-ORDER-dependent scans — an aggregate rewrite
-        # has no row order to scan; use a window over an explicit sort
-        ("deltaSum", "is a data-order scan — use a sum over a lag() "
-                     "window with an explicit ORDER BY (q_win_running shape)"),
-        ("deltaSumTimestamp", "is a data-order scan — use a sum over a "
-                              "lag() window ordered by the timestamp"),
-        ("runningDifference", "is a data-order scan — use lag() over an "
-                              "explicit ORDER BY window"),
-        ("neighbor", "is a data-order scan — use lag()/lead() over an "
-                     "explicit ORDER BY window"),
-        ("maxIntersections", "needs an interval sweep — use the "
-                             "range-join operator (operators/rangejoin.py)"),
-        ("lgamma", "has no Spark builtin — precompute or use a pandas_udf"),
-        ("tgamma", "has no Spark builtin — precompute or use a pandas_udf"),
-        # battery 5
-        ("ngramDistance", "needs shingle sets — use the n-gram Jaccard "
-                          "dedup operator (operators/dedup.py)"),
-        ("arrayAUC", "needs tie-averaged ranks over a sort — use a "
-                     "rank() window over exploded scores"),
-        ("proportionsZTest", "confidence bounds need the normal inverse "
-                             "CDF — compute z from counts and use erf()"),
-        ("studentTTest", "p-values need the t CDF (incomplete beta) — "
-                         "compute the t statistic from moment aggregates"),
-        ("welchTTest", "p-values need the t CDF (incomplete beta) — "
-                       "compute the t statistic from moment aggregates"),
-        ("mannWhitneyUTest", "needs global ranks — use a rank() window "
-                             "then the U statistic as plain aggregates"),
-        ("cramersV", "needs pair counts (a two-level GROUP BY), not one "
-                     "aggregate expression"),
-        ("contingency", "needs pair counts (a two-level GROUP BY), not "
-                        "one aggregate expression"),
-        ("theilsU", "needs pair counts (a two-level GROUP BY), not one "
-                    "aggregate expression"),
-        ("groupArrayMovingSum", "is a data-order scan — use sum() over "
-                                "a sliding window with an explicit sort"),
-        ("groupArrayMovingAvg", "is a data-order scan — use avg() over "
-                                "a sliding window with an explicit sort"),
-        ("JSONType", "has no single-expression analog — probe with "
-                     "json_array_length / json_object_keys instead"),
-    ):
-        mu = re.search(rf"\b{unr}\s*\(", out)
-        if mu and not in_literal(out, mu.start()):
-            raise ValueError(f"{unr} {pointer}")
-    out = re.sub(r"\btoUnixTimestamp\s*\(", "unix_timestamp(", out)
-    out = re.sub(r"\bfromUnixTimestamp\s*\(", "from_unixtime(", out)
-    # URL functions → parse_url
-    out = _rewrite_call(out, "protocol", lambda a: f"lower(parse_url({a[0]}, 'PROTOCOL'))")
-    out = _rewrite_call(out, "domain", lambda a: f"parse_url({a[0]}, 'HOST')")
-    out = _rewrite_call(out, "path", lambda a: f"parse_url({a[0]}, 'PATH')")
-    out = _rewrite_call(
-        out,
-        "extractURLParameter",
-        lambda a: f"parse_url({a[0]}, 'QUERY', {a[1]})",
-        nargs=2,
-    )
-    # dictGet('d', 'attr', k) → correlated scalar subquery against the
-    # registered dict view (functions/dicts.register_dict); Catalyst
-    # decorrelates it into a (broadcast-able) left join — per-row
-    # lookup semantics, no UDF.  dictHas('d', k) → EXISTS.
-    def _dict_get(args: list[str]) -> str:
-        d, attr, key = args[0].strip("'\""), args[1].strip("'\""), args[2]
-        return f"(SELECT `{attr}` FROM `{d}` WHERE `{d}`.`key` = {key})"
-
-    out = _rewrite_call(out, "dictGetOrDefault", lambda a: f"coalesce({_dict_get(a)}, {a[3]})", nargs=4)
-    out = _rewrite_call(out, "dictGet", _dict_get, nargs=3)
-    out = _rewrite_call(
-        out,
-        "dictHas",
-        lambda a: f"EXISTS (SELECT 1 FROM `{a[0].strip(chr(39))}` WHERE `{a[0].strip(chr(39))}`.`key` = {a[1]})",
-        nargs=2,
-    )
-    out = _rewrite_call(
-        out,
-        r"toU?Int(?:8|16|32|64)OrZero",
-        lambda args: f"coalesce(try_cast({args[0]} AS BIGINT), 0)",
-    )
-    out = _rewrite_call(
-        out,
-        "toYYYYMM",
-        lambda args: f"CAST(date_format({args[0]}, 'yyyyMM') AS INT)",
-    )
-    out = re.sub(r"\byesterday\(\s*\)", "date_sub(current_date(), 1)", out)
-    # toStartOfWeek default mode 0 starts weeks on SUNDAY; Spark's
-    # date_trunc('week') is Monday-based, so shift by one day around it.
-    out = _rewrite_call(
-        out,
-        "toStartOfWeek",
-        lambda args: f"date_sub(date_trunc('week', date_add({args[0]}, 1)), 1)",
-    )
-    # JSONExtractString(j, 'k') → get_json_object(j, '$.k'): ClickHouse
-    # takes a bare key, Spark needs a JSONPath — a pure rename would
-    # silently return NULL for every call.  Non-literal or already-
-    # JSONPath keys pass through unprefixed.
-    def _json_extract(args: list[str]) -> str:
-        m = re.fullmatch(r"'([^'$][^']*)'", args[1])
-        key = f"'$.{m.group(1)}'" if m else args[1]
-        return f"get_json_object({args[0]}, {key})"
-
-    out = _rewrite_call(out, "JSONExtractString", _json_extract, nargs=2)
-    # typed variants: extract, then TRY_CAST — two documented deltas vs
-    # ClickHouse, both degrading to NULL rather than 0/0.0/false:
-    #   (1) missing key → NULL (ClickHouse: zero-value);
-    #   (2) malformed / non-numeric value → NULL (ClickHouse: 0).
-    # TRY_CAST, not CAST: under Spark 4's default ANSI mode a plain
-    # CAST on a non-numeric JSON string throws at runtime and kills
-    # the query — a crash-on-data failure a compat shim must not add.
-    for ch, sqltype in (
-        ("JSONExtractInt", "BIGINT"),
-        ("JSONExtractUInt", "BIGINT"),
-        ("JSONExtractFloat", "DOUBLE"),
-        ("JSONExtractBool", "BOOLEAN"),
-    ):
-        out = _rewrite_call(
-            out,
-            ch,
-            lambda args, t=sqltype: f"TRY_CAST({_json_extract(args)} AS {t})",
-            nargs=2,
         )
-
-    # JSONHas: key PRESENCE, not value non-nullness.  For the literal
-    # bare-key form we probe json_object_keys so {"k": null} counts as
-    # present (ClickHouse returns 1 there; get_json_object returns
-    # NULL and would read as absent).  coalesce(…, false): invalid
-    # JSON yields NULL keys → absent, matching ClickHouse's 0.
-    # Non-literal / JSONPath keys keep the IS NOT NULL probe — a
-    # documented JSON-null delta for nested paths only.
-    def _json_has(args: list[str]) -> str:
-        m = re.fullmatch(r"'([^'$][^']*)'", args[1])
-        if m:
-            return (
-                f"coalesce(array_contains(json_object_keys({args[0]}),"
-                f" '{m.group(1)}'), false)"
-            )
-        return f"({_json_extract(args)} IS NOT NULL)"
-
-    out = _rewrite_call(out, "JSONHas", _json_has, nargs=2)
-    # --- battery-5 JSON surface (build on _json_extract's literal-key
-    # JSONPath prefixing) ---
+    ),
+    "uniqMerge": _c(lambda a: f"hll_sketch_estimate(hll_union_agg({a[0]}))"),
+    # --- conditionals and arithmetic
+    "multiIf": _c(_multi_if, 3),
+    # named arithmetic → operators
+    "plus": _c(lambda a: f"(({a[0]}) + ({a[1]}))", 2),
+    "minus": _c(lambda a: f"(({a[0]}) - ({a[1]}))", 2),
+    "multiply": _c(lambda a: f"(({a[0]}) * ({a[1]}))", 2),
+    "divide": _c(_ch_divide, 2),
+    "negate": _c(lambda a: f"(-({a[0]}))"),
+    "intDivOrZero": _c(
+        lambda a: f"CASE WHEN ({a[1]}) = 0 THEN 0 ELSE div({a[0]}, {a[1]}) END", 2
+    ),
+    "moduloOrZero": _c(
+        lambda a: f"CASE WHEN ({a[1]}) = 0 THEN 0 ELSE ({a[0]}) % ({a[1]}) END", 2
+    ),
+    "gcd": _c(lambda a: f"({_gcd_expr(a[0], a[1])})", 2),
+    "lcm": _c(
+        lambda a: (
+            f"div(abs(CAST({a[0]} AS BIGINT) * CAST({a[1]} AS BIGINT)), "
+            f"{_gcd_expr(a[0], a[1])})"
+        ),
+        2,
+    ),
+    "exp2": _c(lambda a: f"pow(2, {a[0]})"),
+    "exp10": _c(lambda a: f"pow(10, {a[0]})"),
+    "intExp2": _c(lambda a: f"shiftleft(CAST(1 AS BIGINT), CAST({a[0]} AS INT))"),
+    "intExp10": _c(lambda a: f"CAST(round(pow(10, {a[0]})) AS BIGINT)"),
+    "erfc": _c(lambda a: f"(1 - {_erf_expr(a[0])})"),
+    "erf": _c(lambda a: _erf_expr(a[0])),
+    "isFinite": _c(
+        lambda a: (
+            f"(NOT isnan({a[0]}) AND abs({a[0]}) <> CAST('Infinity' AS DOUBLE))"
+        )
+    ),
+    "isInfinite": _c(lambda a: f"(abs({a[0]}) = CAST('Infinity' AS DOUBLE))"),
+    "ifNotFinite": _c(
+        lambda a: (
+            f"(CASE WHEN isnan({a[0]}) OR abs({a[0]}) = "
+            f"CAST('Infinity' AS DOUBLE) THEN {a[1]} ELSE {a[0]} END)"
+        ),
+        2,
+    ),
+    "max2": _c(lambda a: f"greatest({a[0]}, {a[1]})", 2),
+    "min2": _c(lambda a: f"least({a[0]}, {a[1]})", 2),
+    "clamp": _c(lambda a: f"least(greatest({a[0]}, {a[1]}), {a[2]})", 3),
+    "xor": _c(lambda a: f"(({a[0]}) <> ({a[1]}))", 2),
+    "truncate": _c(_trunc_num),
+    "trunc": _c(_trunc_num),
+    # rounding ladders: roundAge uses the engine's age bands,
+    # roundToExp2 the floor power of two
+    "roundDown": _c(_round_down, 2),
+    "roundDuration": _c(
+        lambda a: _round_down(
+            [a[0], "[0, 1, 10, 30, 60, 120, 180, 240, 300, 600, "
+                   "1200, 1800, 3600, 7200, 18000, 36000]"]
+        )
+    ),
+    "roundAge": _c(
+        lambda a: (
+            f"(CASE WHEN ({a[0]}) < 1 THEN 0 WHEN ({a[0]}) < 18 THEN 17 "
+            f"WHEN ({a[0]}) < 25 THEN 18 WHEN ({a[0]}) < 35 THEN 25 "
+            f"WHEN ({a[0]}) < 45 THEN 35 WHEN ({a[0]}) < 55 THEN 45 "
+            f"ELSE 55 END)"
+        )
+    ),
+    "roundToExp2": _c(
+        lambda a: (
+            f"(CASE WHEN ({a[0]}) < 1 THEN 0 ELSE "
+            f"shiftleft(CAST(1 AS BIGINT), "
+            f"CAST(floor(log2({a[0]})) AS INT)) END)"
+        )
+    ),
+    # bit scalar functions → operators (Spark's bit_and/bit_or/bit_xor
+    # are AGGREGATES; the scalar forms are &, |, ^, ~)
+    "bitAnd": _c(lambda a: f"({a[0]} & {a[1]})", 2),
+    "bitOr": _c(lambda a: f"({a[0]} | {a[1]})", 2),
+    "bitXor": _c(lambda a: f"({a[0]} ^ {a[1]})", 2),
+    "bitNot": _c(lambda a: f"(~({a[0]}))"),
+    "bitTest": _c(
+        lambda a: (
+            f"CAST(shiftright(CAST({a[0]} AS BIGINT), CAST({a[1]} AS INT)) "
+            f"& 1 AS INT)"
+        ),
+        2,
+    ),
+    "bitmaskToList": _c(
+        lambda a: (
+            f"array_join(filter(transform(sequence(0, 62), __i -> "
+            f"IF((shiftright(CAST({a[0]} AS BIGINT), __i) & 1) = 1, "
+            f"CAST(shiftleft(CAST(1 AS BIGINT), __i) AS STRING), NULL)), "
+            f"__v -> __v IS NOT NULL), ',')"
+        )
+    ),
+    # ClickHouse rand() is uniform UInt32, not [0,1) — a bare rename
+    # would silently change every derived distribution
+    "rand": _c(lambda a: "CAST(floor(rand() * 4294967296) AS BIGINT)", 0),
+    # sleep() is an engine-side throttle; rendered as its return value
+    "sleepEachRow": _c(lambda a: "0"),
+    "sleep": _c(lambda a: "0"),
+    # binary hash digests: Spark's md5/sha1/sha2 return HEX STRINGS;
+    # unhex restores ClickHouse's FixedString binary so hex(MD5(x))
+    # round-trips identically
+    "MD5": _c(lambda a: f"unhex(md5({a[0]}))"),
+    "SHA1": _c(lambda a: f"unhex(sha1({a[0]}))"),
+    **{
+        f"SHA{bits}": _c(lambda a, b=bits: f"unhex(sha2({a[0]}, {b}))")
+        for bits in (224, 256, 384, 512)
+    },
+    # --- dates and times
+    "formatDateTime": _c(_fmt_datetime, 2),
+    "parseDateTime": _c(_parse_datetime, 2),
+    "parseDateTimeBestEffortOrNull": _c(lambda a: f"TRY_CAST({a[0]} AS TIMESTAMP)"),
+    "parseDateTimeBestEffort": _c(lambda a: f"CAST({a[0]} AS TIMESTAMP)"),
+    "dateDiff": _c(_date_diff, 3),
+    "date_diff": _c(_date_diff, 3),
+    "age": _c(
+        lambda a: f"timestampdiff({a[0].strip(chr(39)).upper()}, {a[1]}, {a[2]})",
+        3,
+    ),
+    "addDays": _c(lambda a: f"date_add({a[0]}, {a[1]})", 2),
+    "subtractDays": _c(lambda a: f"date_sub({a[0]}, {a[1]})", 2),
+    "addMonths": _c(lambda a: f"add_months({a[0]}, {a[1]})", 2),
+    "subtractMonths": _c(lambda a: f"add_months({a[0]}, -({a[1]}))", 2),
+    # the other units render as timestampadd (n may be any expression,
+    # so the INTERVAL literal form doesn't apply)
+    **{
+        f"add{unit}": _c(lambda a, u=sp: f"timestampadd({u}, {a[1]}, {a[0]})", 2)
+        for unit, sp in _UNITS
+    },
+    **{
+        f"subtract{unit}": _c(
+            lambda a, u=sp: f"timestampadd({u}, -({a[1]}), {a[0]})", 2
+        )
+        for unit, sp in _UNITS
+    },
+    "toMonday": _c(lambda a: f"to_date(date_trunc('week', {a[0]}))"),
+    # toStartOfWeek default mode 0 starts weeks on SUNDAY; Spark's
+    # date_trunc('week') is Monday-based, so shift by one day around it
+    "toStartOfWeek": _c(
+        lambda a: f"date_sub(date_trunc('week', date_add({a[0]}, 1)), 1)"
+    ),
+    **{
+        ch: _c(lambda a, u=unit: f"date_trunc('{u}', {a[0]})")
+        for ch, unit in {
+            "toStartOfHour": "hour", "toStartOfDay": "day",
+            "toStartOfMonth": "month", "toStartOfQuarter": "quarter",
+            "toStartOfYear": "year", "toStartOfMinute": "minute",
+            "toStartOfSecond": "second",
+        }.items()
+    },
+    # timeSlot = toStartOfInterval(t, 30 MINUTE)
+    "timeSlot": _c(_grid(1800)),
+    "toStartOfFiveMinutes": _c(_grid(300)),
+    "toStartOfTenMinutes": _c(_grid(600)),
+    "toStartOfFifteenMinutes": _c(_grid(900)),
+    "toStartOfInterval": _c(_to_start_of_interval, 2),
+    # toRelative*Num is the epoch count in the unit (ClickHouse counts
+    # from 1970 in server TZ; the engine session pins UTC so
+    # unix_timestamp matches)
+    **{
+        f"toRelative{unit}Num": _c(
+            lambda a, dv=div: f"CAST(floor(unix_timestamp({a[0]}) / {dv}) AS BIGINT)"
+        )
+        for unit, div in [
+            ("Second", 1), ("Minute", 60), ("Hour", 3600), ("Day", 86400),
+        ]
+    },
+    "toISOYear": _c(lambda a: f"extract(YEAROFWEEK FROM {a[0]})"),
+    "toYearWeek": _c(_to_year_week),
+    "toWeek": _c(_to_week),
+    # toTime: keep the time of day, pin the date to 1970-01-02 (the
+    # engine's convention)
+    "toTime": _c(
+        lambda a: f"timestamp_seconds(86400 + pmod(unix_timestamp({a[0]}), 86400))"
+    ),
+    "YYYYMMDDToDate": _c(lambda a: f"to_date(CAST({a[0]} AS STRING), 'yyyyMMdd')"),
+    # toDayOfWeek default mode 0: Monday=1 … Sunday=7 (Spark dayofweek
+    # is Sunday=1 — a bare rename would shift every weekday)
+    "toDayOfWeek": _c(lambda a: f"(pmod(dayofweek({a[0]}) + 5, 7) + 1)"),
+    "toYYYYMMDD": _c(lambda a: f"CAST(date_format({a[0]}, 'yyyyMMdd') AS INT)"),
+    "toYYYYMM": _c(lambda a: f"CAST(date_format({a[0]}, 'yyyyMM') AS INT)"),
+    "yesterday": _c(lambda a: "date_sub(current_date(), 1)" if a == [""] else None, 0),
+    # --- strings
+    "splitByChar": _c(lambda a: f"split({a[1]}, {a[0]})", 2),
+    "splitByRegexp": _c(lambda a: f"split({a[1]}, {a[0]})", 2),
+    # splitByString(sep, s): args reversed vs split(), and the
+    # separator is a PLAIN string, so it is regex-quoted with \Q…\E
+    "splitByString": _c(
+        lambda a: f"split({a[1]}, concat('\\\\Q', {a[0]}, '\\\\E'))", 2
+    ),
+    "extractAll": _c(lambda a: f"regexp_extract_all({a[0]}, {a[1]}, 0)", 2),
+    "extract": _c(_ch_extract, 2),
+    "format": _c(_ch_format, 2),
+    "alphaTokens": _c(lambda a: f"regexp_extract_all({a[0]}, '[a-zA-Z]+', 0)"),
+    "countMatches": _c(lambda a: f"size(regexp_extract_all({a[0]}, {a[1]}, 0))", 2),
+    "countSubstrings": _c(
+        lambda a: (
+            f"CAST((length({a[0]}) - length(replace({a[0]}, {a[1]}, ''))) "
+            f"/ length({a[1]}) AS INT)"
+        ),
+        2,
+    ),
+    "positionCaseInsensitive": _c(
+        lambda a: f"instr(lower({a[0]}), lower({a[1]}))", 2
+    ),
+    "multiSearchFirstIndex": _c(
+        lambda a: (
+            f"coalesce(try_element_at(filter(transform({a[1]}, "
+            f"(__n, __i) -> IF(contains({a[0]}, __n), __i + 1, "
+            f"CAST(NULL AS INT))), __v -> __v IS NOT NULL), 1), 0)"
+        ),
+        2,
+    ),
+    "multiSearchAllPositions": _c(
+        lambda a: f"transform({a[1]}, __n -> instr({a[0]}, __n))", 2
+    ),
+    "multiSearchAny": _c(lambda a: f"exists({a[1]}, __n -> contains({a[0]}, __n))", 2),
+    # empty/notEmpty: the STRING forms (s = '' / s != ''); ClickHouse
+    # also defines them on arrays — use arrayUniq/size for those
+    "notEmpty": _c(lambda a: f"(length({a[0]}) > 0)"),
+    "empty": _c(lambda a: f"(length({a[0]}) = 0)"),
+    "base64Decode": _c(lambda a: f"CAST(unbase64({a[0]}) AS STRING)"),
+    "formatReadableSize": _c(_readable_size),
+    "formatReadableQuantity": _c(_readable_qty),
+    "IPv4NumToString": _c(
+        lambda a: (
+            f"concat(CAST(shiftright(CAST({a[0]} AS BIGINT), 24) & 255 AS STRING), "
+            f"'.', CAST(shiftright(CAST({a[0]} AS BIGINT), 16) & 255 AS STRING), "
+            f"'.', CAST(shiftright(CAST({a[0]} AS BIGINT), 8) & 255 AS STRING), "
+            f"'.', CAST(CAST({a[0]} AS BIGINT) & 255 AS STRING))"
+        )
+    ),
+    "IPv4StringToNum": _c(
+        lambda a: (
+            f"aggregate(transform(split({a[0]}, '\\\\.'), "
+            f"__o -> CAST(__o AS BIGINT)), CAST(0 AS BIGINT), "
+            f"(__a, __o) -> __a * 256 + __o)"
+        )
+    ),
+    # greatCircleDistance(lon1, lat1, lon2, lat2) → meters, haversine
+    # on ClickHouse's sphere radius 6372797.560856 m
+    "greatCircleDistance": _c(
+        lambda a: (
+            f"(2 * 6372797.560856 * asin(sqrt("
+            f"pow(sin(radians(({a[3]}) - ({a[1]})) / 2), 2) "
+            f"+ cos(radians({a[1]})) * cos(radians({a[3]})) "
+            f"* pow(sin(radians(({a[2]}) - ({a[0]})) / 2), 2))))"
+        ),
+        4,
+    ),
+    # --- arrays (argument order / shape differences)
+    "arrayMap": _c(lambda a: f"transform({a[1]}, {a[0]})", 2),
+    "arrayFilter": _c(lambda a: f"filter({a[1]}, {a[0]})", 2),
+    "arrayExists": _c(lambda a: f"exists({a[1]}, {a[0]})", 2),
+    "arrayAll": _c(lambda a: f"forall({a[1]}, {a[0]})", 2),
+    "arrayUniq": _c(lambda a: f"size(array_distinct({a[0]}))"),
+    "arrayStringConcat": _c(_array_string_concat),
+    # arraySlice: ClickHouse's 2-arg form means "offset to end"
+    # (Spark's slice requires exactly 3 args); non-negative lengths
+    # map 1:1.  ClickHouse NEGATIVE lengths ("all but the last |n|")
+    # have no Spark equivalent and pass through for a loud analysis
+    # error.
+    "arraySlice": _c(
+        lambda a: (
+            f"slice({a[0]}, {a[1]}, {a[2]})"
+            if len(a) == 3
+            else f"slice({a[0]}, {a[1]}, 2147483647)"
+        ),
+        2,
+    ),
+    "arrayElement": _c(lambda a: f"try_element_at({a[0]}, {a[1]})", 2),
+    "arrayIntersect": _c(_array_intersect_fold, 2),
+    "arrayPushBack": _c(lambda a: f"concat({a[0]}, array({a[1]}))", 2),
+    "arrayPushFront": _c(lambda a: f"concat(array({a[1]}), {a[0]})", 2),
+    "arrayPopBack": _c(lambda a: f"slice({a[0]}, 1, greatest(size({a[0]}) - 1, 0))"),
+    "arrayPopFront": _c(lambda a: f"slice({a[0]}, 2, greatest(size({a[0]}) - 1, 0))"),
+    "arrayWithConstant": _c(lambda a: f"array_repeat({a[1]}, CAST({a[0]} AS INT))", 2),
+    "arrayResize": _c(_array_resize, 2),
+    # arrayCompact: keep element i iff it differs from element i-1
+    # (consecutive-dup collapse, null-safe <=>)
+    "arrayCompact": _c(
+        lambda a: (
+            f"filter({a[0]}, (__x, __i) -> __i = 0 "
+            f"OR NOT (__x <=> try_element_at({a[0]}, __i)))"
+        )
+    ),
+    "arrayReverseSort": _c(lambda a: _array_sort_by(a, True)),
+    "arraySort": _c(
+        lambda a: _array_sort_by(a, False) if len(a) == 2 else f"sort_array({a[0]})"
+    ),
+    "arrayFirstIndex": _c(lambda a: _array_index_of_match(a, False), 2),
+    "arrayLastIndex": _c(lambda a: _array_index_of_match(a, True), 2),
+    "arrayFirst": _c(lambda a: f"try_element_at(filter({a[1]}, {a[0]}), 1)", 2),
+    "arrayLast": _c(lambda a: f"try_element_at(filter({a[1]}, {a[0]}), -1)", 2),
+    "arrayReduce": _c(_array_reduce, 2),
+    # arraySum/arrayAvg/arrayCumSum/arrayDifference: aggregate() folds
+    # whose results widen to DOUBLE (one render can't preserve
+    # ClickHouse's Int64-for-int return without type introspection)
+    "arraySum": _c(lambda a: _FOLD_SUM.format(e=a[0])),
+    "arrayAvg": _c(
+        lambda a: f"({_FOLD_SUM.format(e=a[0])} / nullif(size({a[0]}), 0))"
+    ),
+    "arrayCumSum": _c(
+        lambda a: (
+            f"aggregate({a[0]}, CAST(array() AS ARRAY<DOUBLE>), "
+            f"(__acc, __e) -> array_append(__acc, "
+            f"coalesce(try_element_at(__acc, -1), CAST(0 AS DOUBLE)) + __e))"
+        )
+    ),
+    "arrayDifference": _c(
+        lambda a: (
+            f"transform({a[0]}, (__x, __i) -> CASE WHEN __i = 0 "
+            f"THEN __x - __x ELSE __x - element_at({a[0]}, __i) END)"
+        )
+    ),
+    "arrayEnumerate": _c(
+        lambda a: (
+            f"CASE WHEN size({a[0]}) = 0 THEN array() "
+            f"ELSE sequence(1, size({a[0]})) END"
+        )
+    ),
+    "arrayEnumerateUniq": _c(
+        lambda a: (
+            f"transform({a[0]}, (__x, __i) -> "
+            f"size(filter(slice({a[0]}, 1, __i + 1), __e -> __e <=> __x)))"
+        )
+    ),
+    "arrayCount": _c(
+        lambda a: (
+            f"size(filter({a[1]}, {a[0]}))"
+            if len(a) == 2
+            else f"size(filter({a[0]}, __e -> __e <> 0))"
+        )
+    ),
+    "countEqual": _c(lambda a: f"size(filter({a[0]}, __e -> __e <=> {a[1]}))", 2),
+    "arrayFold": _c(_array_fold, 3),
+    "arrayDotProduct": _c(
+        lambda a: (
+            f"aggregate(zip_with({a[0]}, {a[1]}, "
+            f"(__x, __y) -> CAST(__x AS DOUBLE) * __y), "
+            f"CAST(0 AS DOUBLE), (__a, __e) -> __a + __e)"
+        ),
+        2,
+    ),
+    "arrayJaccardIndex": _c(
+        lambda a: (
+            f"(CAST(size(array_intersect({a[0]}, {a[1]})) AS DOUBLE) "
+            f"/ size(array_union({a[0]}, {a[1]})))"
+        ),
+        2,
+    ),
+    "arrayRotateLeft": _c(lambda a: _array_rotate(a, False), 2),
+    "arrayRotateRight": _c(lambda a: _array_rotate(a, True), 2),
+    "arrayShiftLeft": _c(lambda a: _array_shift(a, False), 2),
+    "arrayShiftRight": _c(lambda a: _array_shift(a, True), 2),
+    "hasAll": _c(lambda a: f"forall({a[1]}, __e -> array_contains({a[0]}, __e))", 2),
+    "hasSubstr": _c(
+        lambda a: (
+            f"(CASE WHEN size({a[1]}) = 0 THEN true "
+            f"WHEN size({a[0]}) < size({a[1]}) THEN false "
+            f"ELSE exists(sequence(1, size({a[0]}) - size({a[1]}) + 1), "
+            f"__i -> slice({a[0]}, __i, size({a[1]})) = {a[1]}) END)"
+        ),
+        2,
+    ),
+    "transform": _c(_ch_transform, 2),
+    # range(n) → [0 … n-1]; ClickHouse range(0) is []
+    "range": _c(
+        lambda a: (
+            f"CASE WHEN ({a[0]}) <= 0 THEN array() "
+            f"ELSE sequence(0, ({a[0]}) - 1) END"
+        )
+    ),
+    # --- tuples: tuple(…) → named_struct with positional _N names
+    "tuple": _c(
+        lambda a: (
+            "named_struct("
+            + ", ".join(f"'_{i + 1}', {arg}" for i, arg in enumerate(a))
+            + ")"
+        )
+    ),
+    "tupleElement": _c(_tuple_element, 2),
+    # untuple(t) expands a tuple into its element columns (select-list
+    # only in CH too).  inline(array(t)) is the Spark generator that
+    # expands ANY struct expression — `t.*` only resolves for column
+    # references (probe battery 9).  Spark allows one generator per
+    # select list; a second untuple fails loudly at analysis.
+    "untuple": _c(lambda a: f"inline(array({a[0]}))"),
+    # --- table functions
+    "file": _c(_file_fn, 2),
+    # numbers(N) / numbers(start, count) → Spark's range() table with
+    # the engine's `number` column name
+    "numbers": _c(
+        lambda a: (
+            f"(SELECT id AS number FROM range({a[0]}))"
+            if len(a) == 1
+            else f"(SELECT id AS number FROM range({a[0]}, ({a[0]}) + ({a[1]})))"
+        ),
+        emits=("range",),
+    ),
+    "dictGetOrDefault": _c(lambda a: f"coalesce({_dict_get(a)}, {a[3]})", 4),
+    "dictGet": _c(_dict_get, 3),
+    "dictHas": _c(
+        lambda a: (
+            f"EXISTS (SELECT 1 FROM `{a[0].strip(chr(39))}` WHERE "
+            f"`{a[0].strip(chr(39))}`.`key` = {a[1]})"
+        ),
+        2,
+    ),
+    # --- JSON
+    "JSONExtractString": _c(_json_extract, 2),
     # JSONExtractRaw: get_json_object returns raw JSON for objects and
     # arrays but UNQUOTED scalars (ClickHouse keeps string quotes) —
     # documented delta on scalar values
-    out = _rewrite_call(out, "JSONExtractRaw", _json_extract, nargs=2)
-
-    def _json_array_raw(args: list[str]) -> str:
-        if len(args) == 1:
-            j, base = args[0], "$"
-        else:
-            m2 = re.fullmatch(r"'([^'$][^']*)'", args[1])
-            if not m2:
-                raise ValueError("JSONExtractArrayRaw: literal bare key only")
-            j, base = args[0], f"$.{m2.group(1)}"
-        ln = f"json_array_length(get_json_object({j}, '{base}'))"
-        return (
-            f"(CASE WHEN coalesce({ln}, 0) = 0 "
-            f"THEN CAST(array() AS ARRAY<STRING>) "
-            f"ELSE transform(sequence(0, {ln} - 1), __i -> "
-            f"get_json_object({j}, concat('{base}[', __i, ']'))) END)"
-        )
-
-    out = _rewrite_call(out, "JSONExtractArrayRaw", _json_array_raw)
-
-    def _json_length(args: list[str]) -> str:
-        target = args[0] if len(args) == 1 else _json_extract(args)
-        return (
-            f"coalesce(json_array_length({target}), "
-            f"size(json_object_keys({target})))"
-        )
-
-    out = _rewrite_call(out, "JSONLength", _json_length)
+    "JSONExtractRaw": _c(_json_extract, 2),
+    "JSONExtractInt": _c(_json_typed("BIGINT"), 2),
+    "JSONExtractUInt": _c(_json_typed("BIGINT"), 2),
+    "JSONExtractFloat": _c(_json_typed("DOUBLE"), 2),
+    "JSONExtractBool": _c(_json_typed("BOOLEAN"), 2),
+    "JSONHas": _c(_json_has, 2),
+    "JSONExtractArrayRaw": _c(_json_array_raw),
+    "JSONLength": _c(_json_length),
     # '$'-probe: invalid JSON → NULL (valid scalar/object returns its
     # text).  ClickHouse's isValidJSON('null') = 1 is a delta (NULL
     # probe reads as invalid here).
-    out = _rewrite_call(
-        out, "isValidJSON",
-        lambda a: f"(get_json_object({a[0]}, '$') IS NOT NULL)",
-    )
-    # --- battery-5 URL surface ---
-    out = _rewrite_call(
-        out, "queryString", lambda a: f"parse_url({a[0]}, 'QUERY')"
-    )
-    out = _rewrite_call(out, "fragment", lambda a: f"parse_url({a[0]}, 'REF')")
-    out = _rewrite_call(
-        out, "netloc", lambda a: f"parse_url({a[0]}, 'AUTHORITY')"
-    )
-    out = _rewrite_call(
-        out, "topLevelDomain",
+    "isValidJSON": _c(lambda a: f"(get_json_object({a[0]}, '$') IS NOT NULL)"),
+    # --- URLs → parse_url
+    "protocol": _c(lambda a: f"lower(parse_url({a[0]}, 'PROTOCOL'))"),
+    "domain": _c(lambda a: f"parse_url({a[0]}, 'HOST')"),
+    "path": _c(lambda a: f"parse_url({a[0]}, 'PATH')"),
+    "extractURLParameter": _c(lambda a: f"parse_url({a[0]}, 'QUERY', {a[1]})", 2),
+    "queryString": _c(lambda a: f"parse_url({a[0]}, 'QUERY')"),
+    "fragment": _c(lambda a: f"parse_url({a[0]}, 'REF')"),
+    "netloc": _c(lambda a: f"parse_url({a[0]}, 'AUTHORITY')"),
+    "topLevelDomain": _c(
         lambda a: (
             f"regexp_extract(parse_url({a[0]}, 'HOST'), "
             f"'\\\\.([^.]+)$', 1)"
-        ),
-    )
-    out = _rewrite_call(
-        out, "cutQueryString",
-        lambda a: f"regexp_replace({a[0]}, '\\\\?[^#]*', '')",
-    )
-    out = _rewrite_call(
-        out, "pathFull",
+        )
+    ),
+    "cutQueryString": _c(lambda a: f"regexp_replace({a[0]}, '\\\\?[^#]*', '')"),
+    "pathFull": _c(
         lambda a: (
             f"regexp_replace({a[0]}, "
             f"'^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*', '')"
-        ),
-    )
-
-    def _first_sig_subdomain(a: list[str]) -> str:
-        parts = f"split(parse_url({a[0]}, 'HOST'), '\\\\.')"
-        return (
-            f"(CASE WHEN size({parts}) <= 1 THEN try_element_at({parts}, 1) "
-            f"WHEN size({parts}) >= 3 AND try_element_at({parts}, -2) IN "
-            f"('com', 'net', 'org', 'co') THEN try_element_at({parts}, -3) "
-            f"ELSE try_element_at({parts}, -2) END)"
         )
+    ),
+    "firstSignificantSubdomain": _c(_first_sig_subdomain),
+    # --- names with no single-expression analog: raise with a pointer
+    **{n: _c(_refuse(f"{n} {why}"), 0) for n, why in _UNSUPPORTED.items()},
+}
 
-    out = _rewrite_call(out, "firstSignificantSubdomain", _first_sig_subdomain)
-    # anyLast(x): last NON-NULL value in ClickHouse — needs the
-    # ignoreNulls flag, so it can't live in the 1:1 _FN_RENAMES table
-    # (that entry stays for arrayReduce('anyLast', ...) name lookups;
-    # call positions are consumed here first).
-    out = _rewrite_call(out, "anyLast", lambda a: f"last_value({a[0]}, true)")
-    # toStartOf* → date_trunc
-    for ch, unit in _START_OF.items():
-        out = _rewrite_call(out, ch, lambda args, u=unit: f"date_trunc('{u}', {args[0]})")
-    # simple function renames (word-boundary, call position only) —
-    # applied per non-literal segment so a mapped name INSIDE a string
-    # constant ('note: trimBoth(x)') is never rewritten
-    segs = split_quoted(out)
-    for k, (lit, txt) in enumerate(segs):
-        if lit:
+#: a call head: an identifier, then its open paren
+_CALL_HEAD = re.compile(r"\b([A-Za-z_]\w*)\s*\(")
+
+
+def _translate_calls(sql: str) -> str:
+    """Rewrite every call of a ``_FNS`` name outside string literals in
+    one left-to-right pass.  A call's arguments are rewritten first
+    (innermost calls first), so each render sees translated arguments;
+    a render's output is never scanned again.  A call that never
+    closes is not rendered: a rename still applies to its head, and
+    the calls inside it are rewritten as usual."""
+    out, i = [], 0
+    for m in iter_code(sql, _CALL_HEAD):
+        if m.start() < i:
+            continue  # inside a call already rewritten
+        fn = _FNS.get(m.group(1))
+        if fn is None:
             continue
-        for ch, sp in _FN_RENAMES.items():
-            if ch in _START_OF:
+        close = matching_close(sql, m.end() - 1)
+        out.append(sql[i : m.start()])
+        if close is None:
+            out.append(fn.rename or m.group())
+            i = m.end()
+            continue
+        inner = _translate_calls(sql[m.end() : close])
+        i = close + 1
+        if fn.param and sql.startswith("(", i):
+            args_close = matching_close(sql, i)
+            if args_close is not None:
+                out.append(
+                    fn.param(
+                        split_top(inner, keep_empty=True),
+                        split_top(
+                            _translate_calls(sql[i + 1 : args_close]),
+                            keep_empty=True,
+                        ),
+                    )
+                )
+                i = args_close + 1
                 continue
-            txt = re.sub(rf"\b{ch}\s*\(", f"{sp}(", txt)
-        segs[k] = (False, txt)
-    out = "".join(t for _, t in segs)
-    # ClickHouse's bare `any(x)` aggregate (first NON-NULL value) —
-    # lowercase call position only, and never after a comparison
-    # operator, so SQL's quantified `= ANY(subquery)` is untouched.
-    # A bare rename in _FN_RENAMES would hit that collision; worse,
-    # leaving it be makes Spark parse any(bool_col) as bool_or —
-    # silently wrong.  Rendered any_value(x, true): ClickHouse any()
-    # SKIPS NULLs, Spark's default does not (ADVICE r12).  Edits apply
-    # ONE at a time with a re-scan of the mutated string: a
-    # pre-computed edit list went stale when one any() nested inside
-    # another — the inner insert shifted the outer's cached close
-    # paren (ADVICE r13).
-    _any_pat = re.compile(r"\bany\s*\(")
+        rendered = None
+        if fn.call:
+            args = split_top(inner, keep_empty=True)
+            if len(args) >= fn.nargs:
+                rendered = (
+                    fn.call(args, sql[i:]) if fn.with_tail else fn.call(args)
+                )
+        if rendered is None:
+            rendered = f"{fn.rename or m.group()}{inner})"
+        out.append(rendered)
+    out.append(sql[i:])
+    return "".join(out)
+
+
+def _sub_code(sql: str, pattern: str, repl: str | Callable) -> str:
+    """``re.sub`` over the matches of ``pattern`` that start outside
+    string literals."""
+    out, pos = [], 0
+    for m in iter_code(sql, pattern):
+        out.append(sql[pos : m.start()])
+        out.append(repl(m) if callable(repl) else m.expand(repl))
+        pos = m.end()
+    out.append(sql[pos:])
+    return "".join(out)
+
+
+def _rewrite_any_aggregate(sql: str) -> str:
+    """ClickHouse's bare ``any(x)`` aggregate (first NON-NULL value) →
+    ``any_value(x, true)`` — lowercase call position only, and never
+    after a comparison operator, so SQL's quantified ``= ANY(subquery)``
+    is untouched.  Left alone, Spark would parse any(bool_col) as
+    bool_or — silently wrong; ClickHouse any() SKIPS NULLs, Spark's
+    default does not (ADVICE r12).  Edits apply ONE at a time with a
+    re-scan of the mutated string: a pre-computed edit list went stale
+    when one any() nested inside another — the inner insert shifted
+    the outer's cached close paren (ADVICE r13)."""
     pos = 0
-    while (m_any := find_code(out, _any_pat, pos)) is not None:
-        prev = out[: m_any.start()].rstrip()
-        close = matching_close(out, m_any.end() - 1)
+    while (m := find_code(sql, r"\bany\s*\(", pos)) is not None:
+        prev = sql[: m.start()].rstrip()
+        close = matching_close(sql, m.end() - 1)
         if (prev and prev[-1] in "=<>!") or close is None:
-            # a quantified comparison, not the aggregate — or unbalanced,
-            # left for Spark's parser
-            pos = m_any.end()
+            # a quantified comparison, not the aggregate — or
+            # unbalanced, left for Spark's parser
+            pos = m.end()
             continue
-        out = out[:close] + ", true" + out[close:]
-        out = out[: m_any.start()] + "any_value(" + out[m_any.end() :]
-        pos = m_any.start()  # re-scan: a nested any( may still be inside
+        sql = sql[:close] + ", true" + sql[close:]
+        sql = sql[: m.start()] + "any_value(" + sql[m.end() :]
+        pos = m.start()  # re-scan: a nested any( may still be inside
+    return sql
+
+
+def _frac(text: str) -> float:
+    # ClickHouse spells both 0.1 and 1/10
+    num, _, den = text.partition("/")
+    return float(num) / float(den) if den else float(num)
+
+
+def _rewrite_sample(sql: str) -> str:
+    """SAMPLE k (fraction or n/m) → TABLESAMPLE (… PERCENT); SAMPLE n
+    (n > 1, approximate row target) → TABLESAMPLE (n ROWS).  SAMPLE k
+    OFFSET m (both fractions) → a deterministic md5 hash-range
+    predicate over the table's REGISTERED sampling key (set_sample_key
+    — ClickHouse's own model: SAMPLE BY is table metadata, and OFFSET
+    selects the [m, m+k) slice of the key-hash space, repeatable and
+    disjoint across workers).  The first 8 md5 hex chars compare as a
+    monotone proxy for the 32-bit hash value, so any engine computes
+    the identical row set (probe battery 9)."""
+    m = find_code(sql, r"\bSAMPLE\s+(\d+(?:\.\d+)?)(\s*/\s*(\d+))?(\s+OFFSET\b)?")
+    if m is None:
+        return sql
+    if not m.group(4):
+        if m.group(3):
+            frac = float(m.group(1)) / float(m.group(3))
+            repl = f"TABLESAMPLE ({frac * 100:g} PERCENT)"
+        else:
+            # k in [0, 1] is a FRACTION in ClickHouse (SAMPLE 1 = the
+            # whole table); only k > 1 is an approximate row target
+            v = float(m.group(1))
+            repl = (
+                f"TABLESAMPLE ({v * 100:g} PERCENT)"
+                if v <= 1
+                else f"TABLESAMPLE ({int(v)} ROWS)"
+            )
+        return sql[: m.start()] + repl + sql[m.end() :]
+    m_off = find_code(
+        sql,
+        r"(?is)\b(?P<tbl>\w+(?:\.\w+)?)\s+SAMPLE\s+"
+        r"(?P<k>\d+(?:\.\d+)?(?:\s*/\s*\d+(?:\.\d+)?)?)"
+        r"\s+OFFSET\s+"
+        r"(?P<m>\d+(?:\.\d+)?(?:\s*/\s*\d+(?:\.\d+)?)?)",
+    )
+    if m_off is None:
+        raise ValueError("SAMPLE … OFFSET: could not locate the sampled table")
+    tbl = m_off.group("tbl")
+    k, m_frac = _frac(m_off.group("k")), _frac(m_off.group("m"))
+    if not (0 < k <= 1 and 0 <= m_frac < 1):
+        raise ValueError(
+            "SAMPLE k OFFSET m supports fractional k, m in [0, 1] "
+            "(ClickHouse's relative-sample form)"
+        )
+    # qualified names look up db.table first, then the bare table; the
+    # subquery alias is the LAST segment so later references to the
+    # table name keep resolving
+    alias = tbl.split(".")[-1]
+    key = _SAMPLE_KEYS.get(tbl.lower()) or _SAMPLE_KEYS.get(alias.lower())
+    if key is None:
+        raise ValueError(
+            f"SAMPLE … OFFSET needs a sampling key for {tbl!r} — "
+            f"declare one with sql_compat.set_sample_key"
+            f"('{tbl}', '<column>') (ClickHouse reads it from the "
+            f"table's SAMPLE BY clause)"
+        )
+    h = f"substr(md5(CAST({key} AS STRING)), 1, 8)"
+    lo = format(int(m_frac * 16**8), "08x")
+    preds = [f"{h} >= '{lo}'"]
+    if m_frac + k < 1:
+        hi = format(int((m_frac + k) * 16**8), "08x")
+        preds.append(f"{h} < '{hi}'")
+    sub = f"(SELECT * FROM {tbl} WHERE {' AND '.join(preds)}) {alias}"
+    return sql[: m_off.start()] + sub + sql[m_off.end() :]
+
+
+def _replace_modifier(m: re.Match) -> str:
+    """SELECT * [EXCEPT (cols)] REPLACE (expr AS col, …) → * EXCEPT
+    (excepted + replaced), exprs (Spark has EXCEPT natively but no
+    REPLACE; the replaced columns move to the end of the projection —
+    documented divergence, and immaterial to the driver's name-sorted
+    compare).  The CH canonical modifier order EXCEPT → REPLACE folds
+    both into one EXCEPT (probe battery 6 s2)."""
+    entries = split_top(m.group(2))
+    cols = [
+        c.strip().strip("`") for c in (m.group(1) or "").split(",") if c.strip()
+    ]
+    for e in entries:
+        rm = re.match(r"(?s)(.+)\s+AS\s+(\w+)\s*$", e.strip(), re.IGNORECASE)
+        if not rm:
+            # `v * replace(s, 'a', 'b')` is ARITHMETIC times the
+            # renamed replace() function, not the modifier — only
+            # all-`expr AS col` entry lists are the REPLACE form
+            return m.group(0)
+        cols.append(rm.group(2))
+    return f"* EXCEPT ({', '.join(cols)}), " + ", ".join(e.strip() for e in entries)
+
+
+def _system_view(m: re.Match) -> str:
+    return "(SELECT 1 AS dummy)" if m.group(1) == "one" else f"system_{m.group(1)}"
+
+
+def _dot_chain(m: re.Match) -> str:
+    return m.group(1) + re.sub(r"\.\s*(\d+)", r"._\1", m.group(2))
+
+
+def translate(sql: str) -> str:
+    """Rewrite ClickHouse SQL to Spark SQL."""
+    # system tables: system.one is the engine's 1-row dummy relation;
+    # the rest map to the system_* views the Warehouse registers
+    # (register_system_views) — system.tables/columns/parts/databases
+    out = _sub_code(sql, r"\bsystem\.(\w+)", _system_view)
+    # system.columns/parts use the engine's real column names `table`
+    # and `rows`, which Spark's ANSI parser reserves — backtick the
+    # bare identifiers, but only in statements touching those views.
+    # A lowercase window frame (`rows between …`, `rows 3 preceding`,
+    # `rows unbounded/current …`) in the same statement is frame
+    # SYNTAX, not the system-view column — quoting it is a parse error
+    # (ADVICE r12)
+    if re.search(r"\bsystem_(columns|parts)\b", out):
+        out = _sub_code(
+            out,
+            r"(?<!`)\b(table|rows)\b(?!`)"
+            r"(?!\s+(?i:between|unbounded|current)\b)(?!\s+\d)",
+            r"`\1`",
+        )
+    # db-qualified tables: git.commits → commits (our views are flat)
+    out = _sub_code(out, r"\b(?:git|default)\.(\w+)", r"\1")
+    # bare count() → count(*)
+    out = _sub_code(out, r"(?i)\bcount\(\s*\)", "count(*)")
+    # x::Type positional casts → CAST(x AS type); a cast literal is
+    # already a string
+    for pat, repl in (
+        (r"(\w+)::DateTime\('UTC'\)", r"CAST(\1 AS TIMESTAMP)"),
+        (r"(\w+)::DateTime\b", r"CAST(\1 AS TIMESTAMP)"),
+        (r"(\w+)::String\b", r"CAST(\1 AS STRING)"),
+        (r"(\w+)::U?Int\d+\b", r"CAST(\1 AS BIGINT)"),
+        (r"(?<=')::String\b", ""),
+    ):
+        out = _sub_code(out, pat, repl)
+    # tuple positional access `t.1` → the tuple() render's `_N` struct
+    # fields, including chains (`t.1.2` reads a nested tuple).  The
+    # token before the first dot must be an identifier or a
+    # close-paren — a digit stays a decimal literal (1.5; the
+    # digit-lookbehind guards only the identifier head, so
+    # `tuple(a, 3).1` still rewrites) — and string literals are inert
+    # (probe battery 9).
+    out = _sub_code(
+        out, r"((?<!\d)\b[A-Za-z_]\w*|\))((?:\s*\.\s*\d+)+)(?!\w)", _dot_chain
+    )
+    out = _translate_calls(out)
+    out = _rewrite_any_aggregate(out)
     # PREWHERE is ClickHouse's manual predicate-pushdown hint; Catalyst
     # pushes predicates itself, so it is plain WHERE here.  When BOTH
     # clauses appear, ClickHouse applies their conjunction — merge the
-    # PREWHERE predicate into the WHERE clause (both sides
-    # parenthesized so OR-predicates keep their binding).
+    # PREWHERE predicate into the WHERE clause; a PREWHERE with no
+    # WHERE to merge into is renamed, in any case (ADVICE r12)
     out = _merge_prewhere(out)
-    # fallback rename for a PREWHERE with no WHERE to merge into —
-    # any case (ADVICE r12), literal-safe like every other pass
-    out = "".join(
-        t if lit else re.sub(r"\bPREWHERE\b", "WHERE", t, flags=re.IGNORECASE)
-        for lit, t in split_quoted(out)
-    )
-    # QUALIFY: the post-window filter — wrap, filter, drop the helper
+    out = _sub_code(out, r"(?i)\bPREWHERE\b", "WHERE")
     out = _rewrite_qualify(out)
-    # SAMPLE k (fraction or n/m) → TABLESAMPLE (… PERCENT); SAMPLE n
-    # (n ≥ 1, approximate row target) → TABLESAMPLE (n ROWS).
-    # SAMPLE k OFFSET m (both fractions) → a deterministic md5
-    # hash-range predicate over the table's REGISTERED sampling key
-    # (set_sample_key — ClickHouse's own model: SAMPLE BY is table
-    # metadata, and OFFSET selects the [m, m+k) slice of the key-hash
-    # space, repeatable and disjoint across workers).  The first 8
-    # md5 hex chars compare as a monotone proxy for the 32-bit hash
-    # value, so any engine computes the identical row set (probe
-    # battery 9; closes the last loud SAMPLE ValueError).
-    m_smp = re.search(
-        r"\bSAMPLE\s+(\d+(?:\.\d+)?)(\s*/\s*(\d+))?(\s+OFFSET\b)?", out
-    )
-    if m_smp and not in_literal(out, m_smp.start()):
-        if m_smp.group(4):
-            m_off = re.search(
-                r"(?is)\b(?P<tbl>\w+(?:\.\w+)?)\s+SAMPLE\s+"
-                r"(?P<k>\d+(?:\.\d+)?(?:\s*/\s*\d+(?:\.\d+)?)?)"
-                r"\s+OFFSET\s+"
-                r"(?P<m>\d+(?:\.\d+)?(?:\s*/\s*\d+(?:\.\d+)?)?)",
-                out,
-            )
-            if not m_off or in_literal(out, m_off.start()):
-                raise ValueError(
-                    "SAMPLE … OFFSET: could not locate the sampled table"
-                )
-            tbl = m_off.group("tbl")
-
-            def _frac(text: str) -> float:
-                # ClickHouse spells both 0.1 and 1/10
-                num, _, den = text.partition("/")
-                return float(num) / float(den) if den else float(num)
-
-            k, m_frac = _frac(m_off.group("k")), _frac(m_off.group("m"))
-            if not (0 < k <= 1 and 0 <= m_frac < 1):
-                raise ValueError(
-                    "SAMPLE k OFFSET m supports fractional k, m in [0, 1] "
-                    "(ClickHouse's relative-sample form)"
-                )
-            # qualified names look up db.table first, then the bare
-            # table; the subquery alias is the LAST segment so later
-            # references to the table name keep resolving
-            alias = tbl.split(".")[-1]
-            key = _SAMPLE_KEYS.get(tbl.lower()) or _SAMPLE_KEYS.get(
-                alias.lower()
-            )
-            if key is None:
-                raise ValueError(
-                    f"SAMPLE … OFFSET needs a sampling key for {tbl!r} — "
-                    f"declare one with sql_compat.set_sample_key"
-                    f"('{tbl}', '<column>') (ClickHouse reads it from the "
-                    f"table's SAMPLE BY clause)"
-                )
-            h = f"substr(md5(CAST({key} AS STRING)), 1, 8)"
-            lo = format(int(m_frac * 16**8), "08x")
-            preds = [f"{h} >= '{lo}'"]
-            if m_frac + k < 1:
-                hi = format(int((m_frac + k) * 16**8), "08x")
-                preds.append(f"{h} < '{hi}'")
-            sub = (
-                f"(SELECT * FROM {tbl} WHERE {' AND '.join(preds)}) {alias}"
-            )
-            out = out[: m_off.start()] + sub + out[m_off.end() :]
-        else:
-            if m_smp.group(3):
-                frac = float(m_smp.group(1)) / float(m_smp.group(3))
-                repl = f"TABLESAMPLE ({frac * 100:g} PERCENT)"
-            else:
-                # k in [0, 1] is a FRACTION in ClickHouse (SAMPLE 1 =
-                # the whole table); only k > 1 is an approximate row
-                # target
-                v = float(m_smp.group(1))
-                repl = (
-                    f"TABLESAMPLE ({v * 100:g} PERCENT)"
-                    if v <= 1
-                    else f"TABLESAMPLE ({int(v)} ROWS)"
-                )
-            out = out[: m_smp.start()] + repl + out[m_smp.end() :]
-    # GROUP BY … WITH TOTALS → GROUPING SETS ((cols), ()): the totals
-    # row is the empty grouping set (its group columns read NULL, like
-    # ClickHouse's zero-value row).  Non-greedy up to WITH TOTALS keeps
-    # trailing HAVING/ORDER BY/LIMIT intact.  ``GROUP BY ALL WITH
-    # TOTALS`` (probe battery 8) first expands ALL to the
-    # non-aggregate select items — GROUPING SETS ((ALL), ()) is not a
-    # thing; plain GROUP BY ALL without TOTALS stays Spark-native.
+    out = _rewrite_sample(out)
+    # GROUP BY ALL WITH TOTALS first expands ALL to the non-aggregate
+    # select items — GROUPING SETS ((ALL), ()) is not a thing
     out = _expand_group_by_all_totals(out)
     out = _rewrite_with_totals(out)
-    # now() is identical.  FINAL: route `<table> FINAL` to the
-    # registered `<table>_final` dedup view (catalog.register_final_views)
-    # so the ReplacingMergeTree read semantics survive translation; a
-    # bare trailing FINAL with no preceding table name is dropped.
-    # Both subs are literal-guarded (VERDICT r14 finding 2: `SELECT
-    # 'run OPTIMIZE TABLE t FINAL now'` was corrupted in place).
-    out = _sub_outside_literals(out, r"\b(\w+)\s+FINAL\b", r"\1_final")
-    out = _sub_outside_literals(out, r"\bFINAL\b", "")
-    # [1, 2, 3] array literals → array(1, 2, 3); x[1] subscripts kept
+    # FINAL: route `<table> FINAL` to the registered `<table>_final`
+    # dedup view (catalog.register_final_views) so the
+    # ReplacingMergeTree read semantics survive translation; a bare
+    # trailing FINAL with no preceding table name is dropped
+    out = _sub_code(out, r"(?i)\b(\w+)\s+FINAL\b", r"\1_final")
+    out = _sub_code(out, r"(?i)\bFINAL\b", "")
     out = _rewrite_array_literals(out)
-    # --- statement-level passes (round-12 probe battery 3) ---
     # trailing FORMAT <name> (output format is a transport concern —
     # the CLI's --format flag) and SETTINGS k = v, … (engine knobs;
     # Catalyst plans without hints) are stripped
-    for pat in (r"\sFORMAT\s+\w+\s*$", r"\sSETTINGS\s+\w+\s*=[^;]*$"):
-        m3 = re.search(pat, out, re.IGNORECASE)
-        if m3 and not in_literal(out, m3.start()):
-            out = out[: m3.start()]
-    # ClickHouse scalar WITH: `WITH <expr> AS <ident>, …` binds an
-    # EXPRESSION to a name (CH substitutes it at every use — distinct
-    # from the CTE form `ident AS (subquery)`, which stays a CTE).
-    # Covers literals, scalar subqueries `(SELECT max(v) FROM t) AS
-    # mx`, and column expressions `sum(v) AS total` (probe battery 6
-    # session 2) — all by textual substitution, exactly CH's model.
+    for pat in (r"(?i)\sFORMAT\s+\w+\s*$", r"(?i)\sSETTINGS\s+\w+\s*=[^;]*$"):
+        m = find_code(out, pat)
+        if m is not None:
+            out = out[: m.start()]
     out = _rewrite_scalar_with(out)
     # GLOBAL IN / GLOBAL JOIN: a distributed-execution hint (ship the
     # set to every shard); Catalyst chooses broadcast vs shuffle
     # itself, so the keyword is dropped
-    segs3 = split_quoted(out)
-    out = "".join(
-        t if is_lit else re.sub(r"\bGLOBAL\s+", "", t) for is_lit, t in segs3
-    )
-    # ANY join strictness: at most one right row per key — rewrite the
-    # right table as a row_number()-deduped subquery over its ON-
-    # equality keys (ClickHouse keeps an arbitrary matching row; the
-    # key-ordered row_number is the deterministic analog)
+    out = _sub_code(out, r"\bGLOBAL\s+", "")
     out = _rewrite_any_join(out)
     # ClickHouse `LIMIT offset, n` comma form → LIMIT n OFFSET offset
-    # (must run AFTER _rewrite_limit_by would — but LIMIT BY has its
-    # own keyword, so the lookahead to a bare number is unambiguous)
-    out = re.sub(
-        r"\bLIMIT\s+(\d+)\s*,\s*(\d+)", r"LIMIT \2 OFFSET \1", out,
-        flags=re.IGNORECASE,
-    )
-    # SELECT * [EXCEPT (cols)] REPLACE (expr AS col, …) → * EXCEPT
-    # (excepted + replaced), exprs (Spark has EXCEPT natively but no
-    # REPLACE; the replaced columns move to the end of the projection
-    # — documented divergence, and immaterial to the driver's
-    # name-sorted compare).  The CH canonical modifier order EXCEPT
-    # → REPLACE folds both into one EXCEPT (probe battery 6 s2).
-    def _replace_mod(m4: re.Match) -> str:
-        entries = split_top(m4.group(2))
-        cols = [
-            c.strip().strip("`")
-            for c in (m4.group(1) or "").split(",")
-            if c.strip()
-        ]
-        for e in entries:
-            rm = re.match(r"(?s)(.+)\s+AS\s+(\w+)\s*$", e.strip(), re.IGNORECASE)
-            if not rm:
-                # `v * replace(s, 'a', 'b')` is ARITHMETIC times the
-                # renamed replace() function, not the modifier — only
-                # all-`expr AS col` entry lists are the REPLACE form
-                return m4.group(0)
-            cols.append(rm.group(2))
-        return (
-            f"* EXCEPT ({', '.join(cols)}), "
-            + ", ".join(e.strip() for e in entries)
-        )
-
-    out = re.sub(
-        r"\*\s+(?:EXCEPT\s*\(([^)]*)\)\s*)?"
-        r"REPLACE\s*\(([^()]*(?:\([^()]*\)[^()]*)*)\)",
-        _replace_mod,
+    # (LIMIT n BY has its own keyword, so the lookahead to a bare
+    # number is unambiguous)
+    out = _sub_code(out, r"(?i)\bLIMIT\s+(\d+)\s*,\s*(\d+)", r"LIMIT \2 OFFSET \1")
+    out = _sub_code(
         out,
-        flags=re.IGNORECASE,
+        r"(?i)\*\s+(?:EXCEPT\s*\(([^)]*)\)\s*)?"
+        r"REPLACE\s*\(([^()]*(?:\([^()]*\)[^()]*)*)\)",
+        _replace_modifier,
     )
     # structural clauses last, over the function-translated text
     out = _rewrite_array_join_clause(out)
     out = _rewrite_limit_by(out)
     out = _rewrite_limit_with_ties(out)
-    out = _rewrite_distinct_on(out)
-    return out
+    return _rewrite_distinct_on(out)
 
 
 def _rewrite_scalar_with(sql: str) -> str:
@@ -3350,14 +2937,13 @@ def _rewrite_any_join(sql: str) -> str:
     the right side to one row per ON-key before joining.  Supported
     subset: a named right TABLE and AND-ed `l.k = r.k` equalities
     (subquery right sides: dedupe them yourself)."""
-    m = re.search(
-        r"\bANY\s+(LEFT|INNER)?\s*JOIN\s+(`?\w+`?)(?:\s+(?:AS\s+)?(\w+))?"
-        r"\s+ON\s+(.*?)(?=\s+(?:WHERE|GROUP|ORDER|LIMIT|HAVING|UNION)\b|\s*$)",
+    m = find_code(
         sql,
-        re.IGNORECASE | re.DOTALL,
+        r"(?is)\bANY\s+(LEFT|INNER)?\s*JOIN\s+(`?\w+`?)(?:\s+(?:AS\s+)?(\w+))?"
+        r"\s+ON\s+(.*?)(?=\s+(?:WHERE|GROUP|ORDER|LIMIT|HAVING|UNION)\b|\s*$)",
     )
-    if not m:
-        if re.search(r"\bANY\s+(LEFT|INNER|RIGHT)?\s*JOIN\b", sql, re.IGNORECASE):
+    if m is None:
+        if find_code(sql, r"(?i)\bANY\s+(LEFT|INNER|RIGHT)?\s*JOIN\b"):
             raise ValueError(
                 "unsupported ANY JOIN form: named right table with ON "
                 "equality conditions is the supported dialect subset"
@@ -3433,10 +3019,9 @@ def parse_with_fill(sql: str):
     the result's column TYPES), so ``run`` executes the inner query
     and applies the DataFrame fill operator — the same delegation the
     windowFunnel strict modes use."""
-    m = _WITH_FILL_RE.search(sql)
-    if not m or in_literal(sql, m.start()):
-        loose = re.search(r"\bWITH\s+FILL\b", sql, re.IGNORECASE)
-        if loose and not in_literal(sql, loose.start()):
+    m = find_code(sql, _WITH_FILL_RE)
+    if m is None:
+        if find_code(sql, r"(?i)\bWITH\s+FILL\b"):
             raise ValueError(
                 "unsupported WITH FILL form: single-column ORDER BY with "
                 "optional FROM/TO/STEP/INTERPOLATE at statement end"
@@ -3480,14 +3065,13 @@ def _rewrite_asof_join(spark: SparkSession, sql: str) -> str:
     instead; documented divergence).  Plain ASOF JOIN (no LEFT) drops
     unmatched left rows, per ClickHouse.
     """
-    m = _ASOF_USING_RE.search(sql)
-    if not m or in_literal(sql, m.start()):
-        loose = re.search(r"\bASOF\b", sql, re.IGNORECASE)
-        if loose and not m and not in_literal(sql, loose.start()):
-                raise ValueError(
-                    "unsupported ASOF JOIN form: FROM t1 ASOF [LEFT] JOIN "
-                    "t2 USING (keys…, ts) is the supported dialect subset"
-                )
+    m = find_code(sql, _ASOF_USING_RE)
+    if m is None:
+        if find_code(sql, r"(?i)\bASOF\b"):
+            raise ValueError(
+                "unsupported ASOF JOIN form: FROM t1 ASOF [LEFT] JOIN "
+                "t2 USING (keys…, ts) is the supported dialect subset"
+            )
         return sql
     from clickhub_spark.operators.asof import asof_join
 
@@ -3526,16 +3110,14 @@ def _rewrite_star_apply(spark: SparkSession, sql: str) -> str:
     run()-level, session-aware rewrite (the asof-join pattern) —
     supported for a plain registered view/table FROM; other shapes
     raise with the supported form named."""
-    m = re.search(
-        r"SELECT\s+\*\s*(?:EXCEPT\s*\(([^)]*)\)\s*)?"
+    m = find_code(
+        sql,
+        r"(?i)SELECT\s+\*\s*(?:EXCEPT\s*\(([^)]*)\)\s*)?"
         r"(?:REPLACE\s*\(([^()]*(?:\([^()]*\)[^()]*)*)\)\s*)?"
         r"APPLY\s*\(\s*(\w+)\s*\)\s+FROM\s+`?(\w+)`?",
-        sql,
-        re.IGNORECASE,
     )
-    if not m or in_literal(sql, m.start()):
-        loose = re.search(r"\bAPPLY\s*\(", sql, re.IGNORECASE)
-        if loose and not in_literal(sql, loose.start()):
+    if m is None:
+        if find_code(sql, r"(?i)\bAPPLY\s*\("):
             raise ValueError(
                 "unsupported APPLY form: SELECT * [EXCEPT (…)] "
                 "[REPLACE (…)] APPLY(fn) FROM <registered table> is "

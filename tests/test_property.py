@@ -1031,6 +1031,16 @@ _KEYWORD_PHRASES = [
     "GROUP BY ALL WITH TOTALS",
     "any(x) OVER w",
     "GLOBAL IN (1, 2)",
+    "uniqExact(x)",
+    "skewPop(x)",
+    "hasAny(a, b)",
+    "toUnixTimestamp(x)",
+    "emptyArrayString()",
+    "yesterday()",
+    "count()",
+    "git.commits",
+    "x::String",
+    "LIMIT 1, 2",
 ]
 
 

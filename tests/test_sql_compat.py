@@ -2749,8 +2749,8 @@ def test_advice_r14_group_by_all_and_distinct_on(spark, b9):
 
 def test_nested_tuple_and_chained_dot_access(spark, b9):
     """Round-15 composition probing: a tuple() nested in another
-    tuple's ARGUMENTS survived one _rewrite_call pass (the scanner
-    resumes after each replaced call) — now fixpoint-looped; and
+    tuple's ARGUMENTS is rewritten too (the call driver rewrites a
+    call's arguments before the call itself); and
     ``t.1.2`` chains rewrite through nested _N fields, including
     after a digit-final argument list (the decimal-literal lookbehind
     guards only the identifier head)."""
@@ -2810,3 +2810,49 @@ def test_keyword_first_seen_in_literal(spark):
         "ORDER BY x",
     ).collect()
     assert [(r.s, r.x) for r in rows] == [("PREWHERE", 1)]
+
+
+# --- probes that must find their keyword past a literal spelling it ---
+
+
+def test_sample_probe_skips_a_quoted_sample():
+    out = translate("SELECT 'SAMPLE 0.1' AS s FROM t SAMPLE 0.5")
+    assert out == "SELECT 'SAMPLE 0.1' AS s FROM t TABLESAMPLE (50 PERCENT)"
+
+
+def test_unsupported_pointer_skips_a_quoted_call():
+    with pytest.raises(ValueError, match="deltaSum is a data-order scan"):
+        translate("SELECT 'deltaSum(x)' AS s, deltaSum(x) FROM t")
+
+
+def test_settings_strip_skips_a_quoted_settings():
+    out = translate("SELECT 'use SETTINGS a = 1' AS s FROM t SETTINGS max_threads = 1")
+    assert out == "SELECT 'use SETTINGS a = 1' AS s FROM t"
+
+
+def test_with_fill_probe_skips_a_quoted_with_fill():
+    from clickhub_spark.sql_compat import parse_with_fill
+
+    with pytest.raises(ValueError, match="unsupported WITH FILL form"):
+        parse_with_fill("SELECT 'WITH FILL' AS s FROM t ORDER BY a, b WITH FILL")
+    assert parse_with_fill("SELECT 'ORDER BY v WITH FILL' AS s FROM t") is None
+
+
+def test_asof_probe_skips_a_quoted_asof():
+    from clickhub_spark.sql_compat import _rewrite_asof_join
+
+    with pytest.raises(ValueError, match="unsupported ASOF JOIN form"):
+        _rewrite_asof_join(None, "SELECT 'ASOF' AS s FROM a ASOF JOIN b ON a.x = b.x")
+    sql = "SELECT 'FROM a ASOF JOIN b USING (k, ts)' AS s"
+    assert _rewrite_asof_join(None, sql) == sql
+
+
+def test_apply_probe_skips_a_quoted_apply():
+    from clickhub_spark.sql_compat import _rewrite_star_apply
+
+    with pytest.raises(ValueError, match="unsupported APPLY form"):
+        _rewrite_star_apply(
+            None, "SELECT 'APPLY(x)' AS s, * APPLY(max) FROM (SELECT 1 AS x)"
+        )
+    sql = "SELECT 'SELECT * APPLY(max) FROM t' AS s"
+    assert _rewrite_star_apply(None, sql) == sql
