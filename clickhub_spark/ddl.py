@@ -1526,7 +1526,7 @@ class Warehouse:
           (operators/mutate.delete/update_where_partitioned): only the
           named ``_partition_id`` directory is read and swapped — the
           100 TB mutation shape, flat-time-certified by
-          tools/smoke_mutation_pruned.py.
+          ``tools/scale mutation_pruned``.
         """
         from clickhub_spark.sql_compat import translate as _translate
 

@@ -518,7 +518,7 @@ def pq_rerank_topk(
     sim gaps between true neighbors shrink as the corpus grows, so a
     single-stage recall floor certified at small scale does not
     survive a 100× corpus (measured: recall@20 0.30 single-stage vs
-    0.86 two-stage at 50k clustered vectors, tools/smoke_ann_scale.py).
+    0.86 two-stage at 50k clustered vectors, ``tools/scale ann_scale``).
     The re-rank is a broadcast semi-join of ``rerank`` ids against
     the corpus — raw vectors are touched for candidates only, never
     scanned."""

@@ -61,22 +61,21 @@ def train_bigram_lm(df: DataFrame, text: str, id_col: str) -> tuple[DataFrame, D
     SECOND corpus scan + bigram explode + corpus-sized shuffle on
     ``prev``; they now derive from the vocab-bounded bigram table
     (``sum(cbw)`` over ``w`` ≡ the count of bigram instances per
-    ``prev`` — exact integer algebra, same rows).  The bigram
-    aggregate is lazily persisted so its one corpus pass is shared:
-    in the inline scoring plan both model joins read the cached
-    table, and in the store path the bigram write populates it and
-    the unigram write scans KBs instead of the corpus.  The cache
-    entry is model-sized (vocabulary-bounded, the docstring's
-    "typically broadcastable"), never corpus-sized, but the
-    CacheManager holds it until ``unpersist()``: ``write_lm_store``
-    releases it once both tables are written, and an inline caller
-    that is done scoring must call ``bigram_counts.unpersist()``.
-    ``vocab`` keeps its own corpus scan: it counts distinct tokens
-    over ALL documents, including single-token docs that contribute
-    no bigram."""
-    bg = _bigrams(df, text, id_col)
+    ``prev`` — exact integer algebra, same rows).  Nothing is cached
+    here: in the inline scoring plan both model joins sit on the same
+    bigram-aggregate exchange, which Spark's exchange reuse runs once,
+    and ``write_lm_store`` persists the bigram table only for the span
+    of its writes.  ``vocab`` keeps its own corpus scan: it counts
+    distinct tokens over ALL documents, including single-token docs
+    that contribute no bigram."""
+    # tokens are never NULL, so this filter drops nothing; it states
+    # up front the not-NULL constraints the scoring joins would
+    # otherwise infer differently for each model table, which keeps
+    # both tables on ONE bigram-aggregate exchange that Spark reuses
+    bg = _bigrams(df, text, id_col).where(
+        F.col("prev").isNotNull() & F.col("w").isNotNull()
+    )
     bigram_counts = bg.groupBy("prev", "w").agg(F.count("*").alias("cbw"))
-    bigram_counts = bigram_counts.persist()
     unigram_counts = bigram_counts.groupBy("prev").agg(
         F.sum("cbw").alias("cw")
     )
@@ -95,22 +94,24 @@ def write_lm_store(
     mode (mirrors write_minhash_store): at 100 TB the reference corpus
     is scored-against for months, so training must not rerun per batch.
     Model size is bounded by observed bigram vocabulary, so the store
-    is small (typically broadcastable on read).  Releases the cached
-    bigram table that ``train_bigram_lm`` persisted."""
+    is small (typically broadcastable on read).  The bigram table is
+    persisted for the span of the writes and released before return."""
     from concurrent.futures import ThreadPoolExecutor
 
     bigram_counts, unigram_counts, vocab = model
     # r17 (guide §2.6 — overlap independent jobs): the bigram and
     # vocab writes are independent corpus passes, so the vocab job
     # back-fills the bigram job's task tail instead of queuing behind
-    # it.  The unigram write waits for the bigram write: with
-    # train_bigram_lm's lazily persisted bigram table that ordering
-    # makes it a KB-scale cached-table scan, never a corpus pass.
+    # it.  The unigram write waits for the bigram write: the bigram
+    # table is lazily persisted here, so that ordering makes the
+    # unigram write (whose plan contains the bigram aggregate) a
+    # KB-scale cached-table scan, never a corpus pass.
     # coalesce(1): the model is vocabulary-bounded ("typically
     # broadcastable"), far under one target-size output file — and the
     # persisted bigram table would otherwise write one shard per
     # cached shuffle partition (the persist boundary blocks AQE's
     # write coalescing; measured 32 files for a 46 KB table).
+    bigram_counts.persist()
     try:
         with ThreadPoolExecutor(max_workers=2) as pool:
             fb = pool.submit(

@@ -233,7 +233,7 @@ def _mutate_partitions(
     never read, shuffle, or rewrite the rest.  This is the 100 TB
     mutation shape (ClickHouse's mutations likewise rewrite only the
     parts whose min/max index can match): cost scales with TOUCHED
-    data, not table size — tools/smoke_mutation_pruned.py certifies
+    data, not table size — ``tools/scale mutation_pruned`` certifies
     ~flat delete time as the table grows 10x with fixed partition
     size.  The partition column is a dir name, not a stored column:
     it is re-materialized as a literal for the transform's predicate

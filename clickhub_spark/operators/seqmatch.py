@@ -223,7 +223,7 @@ def _automaton_over_users(
     per-group DataFrame construction, which dominates
     groupBy().applyInPandas at hundreds of thousands of tiny groups
     (measured 73 s → single-digit seconds at 1M events / 300k users,
-    tools/smoke_seqmatch_scale.py).  ``per_user(entries)`` maps the
+    ``tools/scale seqmatch_scale``).  ``per_user(entries)`` maps the
     entry list [(ts, bitset)] to the output value."""
     import pandas as pd
 

@@ -34,7 +34,7 @@ regime the oracle-checked query (q_agg_topk_sketch) runs in; the
 eviction regime's invariants (lo ≤ true ≤ hi, heavy hitters with
 frequency > N/capacity always reported) are pinned by
 tests/test_topk_sketch.py and the 20M-row / 2M-key scale smoke
-(tools/smoke_topk_scale.py).
+(``tools/scale topk_scale``).
 """
 
 from __future__ import annotations
@@ -135,34 +135,35 @@ def topk_sketch(
         _misra_gries_rows(key_col, capacity, weight_col),
         schema="key string, cnt long, dec long",
     )
-    # the summary feeds TWO aggregations (per-key counters + the
-    # decrement total); without materialization each would re-run the
-    # full corpus scan + sketch.  The summary is ≤ (capacity+1)·P rows
-    # — a LAZY persist is enough for exactly-one corpus read: when the
-    # combined plan executes, the broadcast build of total_dec runs
-    # first and populates the cache, and the per_key branch then scans
-    # the tiny cached table.  Lazy also keeps this builder plan-only
-    # (explain/plan-dump consumers never trigger the corpus scan), and
-    # the (KB-scale) entry is reclaimed by the ContextCleaner when the
-    # plan is garbage-collected
-    rows = rows.persist()
-    per_key = (
-        rows.where(F.col("key").isNotNull())
-        .groupBy("key")
-        .agg(F.sum("cnt").alias("est"))
+    # per-key counters and the decrement total come from ONE
+    # aggregation of the summary (≤ (capacity+1)·P rows): a keyed
+    # group sums its counters, the sentinel rows (key NULL, one per
+    # partition) sum their D_p.  Both branches below read the same
+    # aggregate columns and split on n_keyed (0 only for the sentinel
+    # group), which the optimizer cannot push beneath the grouping, so
+    # they sit on ONE shuffle exchange and Spark's exchange reuse runs
+    # the corpus scan + sketch once.  Nothing is cached, and the
+    # builder stays plan-only (explain/plan-dump consumers never
+    # trigger the scan)
+    per_key = rows.groupBy("key").agg(
+        F.sum(
+            F.when(F.col("key").isNull(), F.col("dec")).otherwise(F.col("cnt"))
+        ).alias("c"),
+        F.count("key").alias("n_keyed"),
     )
     # Σ_p D_p rides a single-row broadcast cross join (house pattern:
     # totals meet the grid as a scalar, never a SinglePartition window)
-    total_dec = rows.where(F.col("key").isNull()).agg(
-        F.coalesce(F.sum("dec"), F.lit(0)).alias("total_dec")
+    total_dec = per_key.where(F.col("n_keyed") == 0).agg(
+        F.coalesce(F.sum("c"), F.lit(0)).alias("total_dec")
     )
     return (
-        per_key.crossJoin(F.broadcast(total_dec))
+        per_key.where(F.col("n_keyed") > 0)
+        .crossJoin(F.broadcast(total_dec))
         .select(
             "key",
-            "est",
-            F.col("est").alias("lo"),
-            (F.col("est") + F.col("total_dec")).alias("hi"),
+            F.col("c").alias("est"),
+            F.col("c").alias("lo"),
+            (F.col("c") + F.col("total_dec")).alias("hi"),
         )
         .orderBy(F.col("est").desc(), "key")
         .limit(k)

@@ -3061,9 +3061,14 @@ def q_agg_topk_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("user_id").isNotNull())
         .select(F.length(F.bin("user_id")).alias("kb"))
     )
-    # lazy persist: kb feeds both the sketch pass and the exact
-    # groupBy; one corpus read when the combined plan executes
-    ev = ev.persist()
+    # kb feeds both the sketch pass and the exact groupBy; a lazy
+    # local checkpoint makes that one corpus read when the combined
+    # plan executes.  Unlike persist() it registers nothing with the
+    # CacheManager: its blocks belong to the checkpointed RDD, which
+    # the ContextCleaner reclaims once the plan is garbage-collected.
+    # The price: a block lost with its executor cannot be recomputed,
+    # so an executor loss fails this certification query outright
+    ev = ev.localCheckpoint(eager=False)
     # k = 1 << 20 ≫ capacity·P: keep ALL surviving keys (no top-k cut
     # — the bound check must see the sketch's full report)
     sk = topk_sketch(ev, "kb", 1 << 20, capacity=_BOUNDS_CAP).select(
@@ -3072,42 +3077,35 @@ def q_agg_topk_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = ev.groupBy(F.col("kb").cast("string").alias("kb")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    tot = exact.agg(
+    tot = exact.agg(F.sum("cnt").cast("long").alias("n_events"))
+    graded = exact.crossJoin(F.broadcast(tot)).withColumn(
+        "heavy", F.col("cnt") * (_BOUNDS_CAP + 1) > F.col("n_events")
+    )
+    # the sketch is consumed ONCE (a second consumer would re-run it):
+    # sketch keys are unique, so the heavy keys it missed are n_heavy
+    # minus the heavy keys it reported
+    checked = sk.join(F.broadcast(graded), "kb", "left").agg(
+        F.count(
+            F.when(
+                F.col("cnt").isNull()
+                | (F.col("lo") > F.col("cnt"))
+                | (F.col("hi") < F.col("cnt")),
+                1,
+            )
+        ).alias("viol_bounds"),
+        F.count(F.when(F.col("heavy"), 1)).alias("heavy_reported"),
+    )
+    summary = graded.agg(
         F.sum("cnt").cast("long").alias("n_events"),
         F.count(F.lit(1)).alias("n_keys"),
+        F.count(F.when(F.col("heavy"), 1)).alias("n_heavy"),
     )
-    heavy = exact.crossJoin(F.broadcast(tot)).where(
-        F.col("cnt") * (_BOUNDS_CAP + 1) > F.col("n_events")
-    )
-    n_heavy = heavy.agg(F.count(F.lit(1)).alias("n_heavy"))
-    viol = (
-        sk.join(F.broadcast(exact), "kb", "left")
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("cnt").isNull()
-                        | (F.col("lo") > F.col("cnt"))
-                        | (F.col("hi") < F.col("cnt")),
-                        1,
-                    ).otherwise(0)
-                ),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("viol_bounds")
-        )
-    )
-    missing = (
-        heavy.select("kb")
-        .join(F.broadcast(sk.select("kb")), "kb", "left_anti")
-        .agg(F.count(F.lit(1)).alias("missing_heavy"))
-    )
-    return (
-        tot.crossJoin(F.broadcast(n_heavy))
-        .crossJoin(F.broadcast(viol))
-        .crossJoin(F.broadcast(missing))
-        .select("n_events", "n_keys", "n_heavy", "viol_bounds", "missing_heavy")
+    return summary.crossJoin(F.broadcast(checked)).select(
+        "n_events",
+        "n_keys",
+        "n_heavy",
+        "viol_bounds",
+        (F.col("n_heavy") - F.col("heavy_reported")).alias("missing_heavy"),
     )
 
 

@@ -17,84 +17,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhub_spark.catalog import load
+from clickhub_spark.plans.queries_funnel import FUNNEL_WINDOW_S, STRICT_WINDOW_ORACLE
 from clickhub_spark.plans.registry import query
 from clickhub_spark.sql_compat import run, set_sample_key
-
-
-#: windowFunnel window bound shared with q_funnel_strict_window
-_W = 86_400
 
 
 def _events_view(spark: SparkSession, sf_dir: str) -> None:
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
 
 
-@query(
-    "q_ch_sql_funnel_strict",
-    oracle=f"""
-    WITH e AS (
-        SELECT user_id,
-               substr(event_type, 1, 1) AS i,
-               epoch(ts) AS t,
-               row_number() OVER (PARTITION BY user_id
-                                  ORDER BY ts, event_id) AS rn
-        FROM events WHERE user_id IS NOT NULL
-    ), b AS (
-        SELECT *,
-               MIN(CASE WHEN i = 'v' THEN rn END)
-                   OVER (PARTITION BY user_id) AS first1
-        FROM e
-    ), q AS (
-        SELECT user_id, i, t, rn, first1,
-               (first1 IS NOT NULL AND rn >= first1) AS valid
-        FROM b
-    ), s0 AS (
-        SELECT *,
-               MAX(CASE WHEN valid AND i = 'v' THEN t END)
-                   OVER (PARTITION BY user_id ORDER BY rn
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                         AND 1 PRECEDING) AS a0
-        FROM q
-    ), s1 AS (
-        SELECT *,
-               (valid AND i = 'c' AND a0 IS NOT NULL
-                AND t <= a0 + {_W}) AS qual2
-        FROM s0
-    ), s2 AS (
-        SELECT *,
-               MAX(CASE WHEN qual2 THEN a0 END)
-                   OVER (PARTITION BY user_id ORDER BY rn
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                         AND 1 PRECEDING) AS a1
-        FROM s1
-    ), s3 AS (
-        SELECT *,
-               CASE WHEN valid AND i = 'p' AND a1 IS NOT NULL
-                         AND t <= a1 + {_W} THEN 3
-                    WHEN qual2 THEN 2
-                    WHEN valid AND i = 'v' THEN 1
-                    ELSE 0 END AS l,
-               (rn > first1
-                AND (COALESCE(i NOT IN ('v','c','p'), TRUE)
-                     OR (i = 'c' AND a0 IS NULL)
-                     OR (i = 'p' AND a1 IS NULL))) AS brk_m
-        FROM s2
-    ), s4 AS (
-        SELECT *,
-               MIN(CASE WHEN brk_m THEN rn END)
-                   OVER (PARTITION BY user_id) AS brk
-        FROM s3
-    ), u AS (
-        SELECT user_id,
-               COALESCE(MAX(CASE WHEN brk IS NULL OR rn < brk
-                                 THEN l END), 0) AS level
-        FROM s4 GROUP BY user_id
-    )
-    SELECT CAST(level AS INT) AS level,
-           CAST(COUNT(*) AS BIGINT) AS n_users
-    FROM u GROUP BY level
-    """,
-)
+@query("q_ch_sql_funnel_strict", oracle=STRICT_WINDOW_ORACLE)
 def q_ch_sql_funnel_strict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``windowFunnel(86400, 'strict_order')`` as a LITERAL
     ClickHouse-dialect statement through sql_compat (the round-12
@@ -108,7 +40,7 @@ def q_ch_sql_funnel_strict(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         SELECT CAST(level AS INT) AS level, count() AS n_users FROM (
             SELECT user_id,
-                   windowFunnel({_W}, 'strict_order')(
+                   windowFunnel({FUNNEL_WINDOW_S}, 'strict_order')(
                        ts,
                        substring(event_type, 1, 1) = 'v',
                        substring(event_type, 1, 1) = 'c',
@@ -1408,7 +1340,7 @@ def q_ch_ddl_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     PARTITION v WHERE p`` and ``… DROP PARTITION v`` statements — each
     routed to the partition-PRUNED rewrite (only the named
     ``_partition_id`` directory is read/swapped; flat-time-certified
-    at 10M rows by tools/smoke_mutation_pruned.py, the 100 TB
+    at 10M rows by ``tools/scale mutation_pruned``, the 100 TB
     mutation shape).  Content is fixed (sf-independent); the oracle
     is the hand-computed post-mutation table."""
     import os

@@ -20,9 +20,15 @@ from clickhub_spark.plans.registry import query
 from clickhub_spark.sources.pyds import register_sources
 
 
-# Absolute because builders receive only (spark, sf_dir); the TSV
-# fixture is reference-shaped ingest input, not driver testdata.
-COMMITS_TSV = "/root/repo/tests/fixtures/commits.tsv"
+# Absolute because builders receive only (spark, sf_dir) and the oracle
+# reads it from DuckDB; the TSV fixture is reference-shaped ingest
+# input, not driver testdata.
+COMMITS_TSV = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "tests",
+    "fixtures",
+    "commits.tsv",
+)
 
 
 @query(

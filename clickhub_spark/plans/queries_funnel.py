@@ -135,19 +135,20 @@ def q_funnel_strict(spark: SparkSession, sf_dir: str) -> DataFrame:
     return levels.groupBy("level").agg(F.count(F.lit(1)).alias("n_users"))
 
 
-#: windowFunnel window length for the bounded strict funnel: one day.
+#: windowFunnel window length for every windowed funnel query here and
+#: for q_ch_sql_funnel_strict: one day.
 #: Chosen against the testdata's inter-event gap distribution (median
 #: adjacent view→click gap ≈ 6.5 h) so every SF populates levels 1, 2
 #: AND 3 while still gating a measurable share of chains that the
 #: unbounded q_funnel_strict admits (sf0.001 under the true
 #: strict_order scan: windowed level counts (12,2,1) vs unbounded
 #: (10,3,2) users at levels 1/2/3).
-_FUNNEL_WINDOW_S = 86_400
+FUNNEL_WINDOW_S = 86_400
 
 
-@query(
-    "q_funnel_strict_window",
-    oracle=f"""
+#: DuckDB transcription of the windowed strict_order scan, shared with
+#: q_ch_sql_funnel_strict (same steps and window through the SQL shim).
+STRICT_WINDOW_ORACLE = f"""
     WITH e AS (
         SELECT user_id,
                substr(event_type, 1, 1) AS i,
@@ -174,7 +175,7 @@ _FUNNEL_WINDOW_S = 86_400
     ), s1 AS (
         SELECT *,
                (valid AND i = 'c' AND a0 IS NOT NULL
-                AND t <= a0 + {_FUNNEL_WINDOW_S}) AS qual2
+                AND t <= a0 + {FUNNEL_WINDOW_S}) AS qual2
         FROM s0
     ), s2 AS (
         SELECT *,
@@ -186,7 +187,7 @@ _FUNNEL_WINDOW_S = 86_400
     ), s3 AS (
         SELECT *,
                CASE WHEN valid AND i = 'p' AND a1 IS NOT NULL
-                         AND t <= a1 + {_FUNNEL_WINDOW_S} THEN 3
+                         AND t <= a1 + {FUNNEL_WINDOW_S} THEN 3
                     WHEN qual2 THEN 2
                     WHEN valid AND i = 'v' THEN 1
                     ELSE 0 END AS l,
@@ -209,8 +210,10 @@ _FUNNEL_WINDOW_S = 86_400
     SELECT CAST(level AS INT) AS level,
            CAST(COUNT(*) AS BIGINT) AS n_users
     FROM u GROUP BY level
-    """,
-)
+    """
+
+
+@query("q_funnel_strict_window", oracle=STRICT_WINDOW_ORACLE)
 def q_funnel_strict_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """windowFunnel WITH the window-length bound — ClickHouse
     ``windowFunnel(86400, 'strict_order')(ts, type='view', 'click',
@@ -244,7 +247,7 @@ def q_funnel_strict_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         order=["ts", "event_id"],
         steps=[ini == "v", ini == "c", ini == "p"],
         ts_col="ts",
-        window_s=_FUNNEL_WINDOW_S,
+        window_s=FUNNEL_WINDOW_S,
     )
     return levels.groupBy("level").agg(F.count(F.lit(1)).alias("n_users"))
 
@@ -259,10 +262,6 @@ def q_funnel_strict_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (operators/funnel.py module docstring derives why the greedy DP
 # collapses to running maxima).
 # --------------------------------------------------------------------------
-
-#: same 1-day window as q_funnel_strict_window.
-_FW = 86_400
-
 
 @query(
     "q_funnel_window",
@@ -283,7 +282,7 @@ _FW = 86_400
         FROM e
     ), s1 AS (
         SELECT *,
-               (i = 'c' AND a0 IS NOT NULL AND t <= a0 + {_FW}) AS qual2
+               (i = 'c' AND a0 IS NOT NULL AND t <= a0 + {FUNNEL_WINDOW_S}) AS qual2
         FROM s0
     ), s2 AS (
         SELECT *,
@@ -295,7 +294,7 @@ _FW = 86_400
     ), lvl AS (
         SELECT user_id,
                CASE WHEN i = 'p' AND a1 IS NOT NULL
-                         AND t <= a1 + {_FW} THEN 3
+                         AND t <= a1 + {FUNNEL_WINDOW_S} THEN 3
                     WHEN qual2 THEN 2
                     WHEN i = 'v' THEN 1
                     ELSE 0 END AS l
@@ -331,7 +330,7 @@ def q_funnel_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         order=["ts", "event_id"],
         steps=[ini == "v", ini == "c", ini == "p"],
         ts_col="ts",
-        window_s=_FW,
+        window_s=FUNNEL_WINDOW_S,
     )
     return levels.groupBy("level").agg(F.count(F.lit(1)).alias("n_users"))
 
@@ -448,7 +447,7 @@ def q_funnel_strict_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM e
     ), s1 AS (
         SELECT *,
-               (i = 'c' AND a0 IS NOT NULL AND t <= a0 + {_FW}
+               (i = 'c' AND a0 IS NOT NULL AND t <= a0 + {FUNNEL_WINDOW_S}
                 AND t > e0) AS qual2
         FROM s0
     ), s2 AS (
@@ -465,7 +464,7 @@ def q_funnel_strict_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), lvl AS (
         SELECT user_id,
                CASE WHEN i = 'p' AND a1 IS NOT NULL
-                         AND t <= a1 + {_FW} AND t > e1 THEN 3
+                         AND t <= a1 + {FUNNEL_WINDOW_S} AND t > e1 THEN 3
                     WHEN qual2 THEN 2
                     WHEN i = 'v' THEN 1
                     ELSE 0 END AS l
@@ -497,7 +496,7 @@ def q_funnel_strict_increase(spark: SparkSession, sf_dir: str) -> DataFrame:
         order=["ts", "event_id"],
         steps=[ini == "v", ini == "c", ini == "p"],
         ts_col="ts",
-        window_s=_FW,
+        window_s=FUNNEL_WINDOW_S,
         modes=("strict_increase",),
     )
     return levels.groupBy("level").agg(F.count(F.lit(1)).alias("n_users"))

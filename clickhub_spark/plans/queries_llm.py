@@ -2693,7 +2693,7 @@ def q_llm_dedup_passage(spark: SparkSession, sf_dir: str) -> DataFrame:
     land exactly on decimal halves (3/32 = .09375) where the engines'
     ROUND modes diverge.  Implementation:
     operators/textops.passage_dup_stats (shared with the 100× scale
-    smoke, tools/smoke_passage_dedup.py)."""
+    smoke, ``tools/scale passage_dedup``)."""
     from clickhub_spark.operators.textops import passage_dup_stats
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
@@ -3421,7 +3421,7 @@ def q_llm_bpe_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: ADC candidate depth of the certified two-stage configuration:
 #: 10 candidates per final slot (rerank = 10 * k = 200), the ratio
-#: tools/smoke_ann_scale.py certifies at 500k vectors.
+#: ``tools/scale ann_scale`` certifies at 500k vectors.
 _PQ_RERANK = 10 * _PQ_K
 
 

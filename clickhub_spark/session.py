@@ -65,7 +65,7 @@ def _builder(
         # sources so they also run on vanilla sessions.
         .config("spark.sql.python.filterPushdown.enabled", "true")
         # zstd, not the snappy default: measured on a 60M-row fact
-        # table (tools/smoke_codecs.py) it is 18% smaller AND ~3×
+        # table (``tools/scale codecs``) it is 18% smaller AND ~3×
         # faster to scan — at 100 TB that is ~18 TB of storage and
         # the dominant scan-cost term.  Transparent to readers.
         .config("spark.sql.parquet.compression.codec", "zstd")

@@ -26,3 +26,15 @@ def built_queries(spark):
     from clickhub_spark.plans import all_specs
 
     return {name: spec.builder(spark, SF_DIR) for name, spec in all_specs().items()}
+
+
+def cached_entries(spark) -> int:
+    """Entries in the session's CacheManager (persisted plans)."""
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def final_plan(df) -> str:
+    """The executed plan of an already-collected DataFrame as AQE
+    finalized it (exchange reuse applied), without the initial plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]

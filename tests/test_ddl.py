@@ -510,7 +510,7 @@ def test_mutations_in_partition_and_drop_partition(spark, wh):
     """``ALTER TABLE … DELETE/UPDATE … IN PARTITION v WHERE p`` routes
     to the partition-PRUNED rewrite — only the named _partition_id dir
     is read and swapped (flat-time-certified by
-    tools/smoke_mutation_pruned.py); ``ALTER TABLE … DROP PARTITION
+    ``tools/scale mutation_pruned``); ``ALTER TABLE … DROP PARTITION
     v`` removes the directory with no data read (the MergeTree
     partition drop)."""
     import os

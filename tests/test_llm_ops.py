@@ -3,11 +3,12 @@ harness — e.g. re-assembling the exploded centroid rows back into the
 vector shape a downstream consumer (IVF coarse quantizer) would use."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from clickhub_spark.plans import all_specs
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, cached_entries, final_plan
 
 
 def test_embed_centroid_assembles_to_correct_vectors(spark):
@@ -116,9 +117,9 @@ def test_lm_heldout_scoring_uses_smoothing_floor(spark):
 
 
 def test_lm_store_write_releases_bigram_cache(spark, tmp_path):
-    """train_bigram_lm persists the bigram table for the store writes;
-    write_lm_store must unpersist it, or the CacheManager holds it for
-    the life of a long-running Spark application."""
+    """write_lm_store persists the bigram table only for the span of its
+    writes; afterwards the CacheManager holds no more entries than it
+    did before, or a long-running Spark application would keep it."""
     from pyspark.storagelevel import StorageLevel
 
     from clickhub_spark.operators.lm import train_bigram_lm, write_lm_store
@@ -126,10 +127,39 @@ def test_lm_store_write_releases_bigram_cache(spark, tmp_path):
     train = spark.createDataFrame(
         [(1, "a b a b c"), (2, "a b c d")], "id long, text string"
     )
+    before = cached_entries(spark)
     model = train_bigram_lm(train, "text", "id")
-    assert model[0].storageLevel != StorageLevel.NONE
     write_lm_store(model, str(tmp_path / "lm"))
     assert model[0].storageLevel == StorageLevel.NONE
+    assert cached_entries(spark) == before
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_agg_topk_sketch",
+        "q_agg_topk_weighted",
+        "q_agg_topk_bounds",
+        "q_llm_perplexity",
+        "q_llm_perplexity_store",
+    ],
+)
+def test_query_leaves_no_cached_table(spark, name):
+    """Building and collecting a registered query leaves the
+    CacheManager with exactly the entries it had before: nothing
+    unpersists a builder's cache once its DataFrame is returned."""
+    before = cached_entries(spark)
+    all_specs()[name].builder(spark, SF_DIR).collect()
+    assert cached_entries(spark) == before
+
+
+def test_inline_perplexity_trains_bigrams_once(spark):
+    """Both model joins of the inline q_llm_perplexity plan read ONE
+    bigram aggregate: with nothing cached to share it, the executed
+    plan reuses its exchange instead of re-running the corpus pass."""
+    df = all_specs()["q_llm_perplexity"].builder(spark, SF_DIR)
+    df.collect()
+    assert "ReusedExchange" in final_plan(df)
 
 
 def test_lm_store_reuse_equals_inline_training(spark, tmp_path):
@@ -209,8 +239,6 @@ def test_deterministic_shuffle_is_seeded_and_uniform(spark, tmp_path):
     ).write.parquet(out)
     back = spark.read.parquet(out)
     assert back.count() == 200 and back.select("doc_id").distinct().count() == 200
-    import pytest
-
     with pytest.raises(ValueError):
         deterministic_shuffle(df, "doc_id", shard_bits=6)
 
@@ -219,8 +247,6 @@ def test_split_corpus_stable_under_growth(spark):
     """A doc's split label never changes when the corpus grows (the
     anti-contamination property), realized fractions track targets,
     and bad fractions are rejected."""
-    import pytest
-
     from clickhub_spark.operators.textops import split_corpus
 
     fr = {"train": 0.9, "val": 0.05, "test": 0.05}

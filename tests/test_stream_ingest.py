@@ -313,7 +313,7 @@ def test_swap_is_atomic_exchange_with_prev_generation(spark, tmp_path):
 def test_partition_pruned_mutations(spark, tmp_path):
     """VERDICT r13 item 5: delete/update_where_partitioned rewrite
     ONLY the named hive partitions (cost tracks touched data, not
-    table size — tools/smoke_mutation_pruned.py certifies ~flat time
+    table size — ``tools/scale mutation_pruned`` certifies ~flat time
     at 10x rows).  The partition column is usable in the predicate,
     untouched partitions keep their files byte-identical, and the
     scratch/parked dirs are underscore-prefixed so partition

@@ -14,6 +14,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from clickhub_spark.operators.topk import topk_sketch
+from tests.conftest import cached_entries, final_plan
 
 
 def _zipf_df(spark, n=20_000, n_keys=500, seed=7, parts=6):
@@ -119,3 +120,16 @@ def test_weighted_eviction_intervals(spark):
     assert got
     for r in got:
         assert r.lo <= truth.get(r.key, 0) <= r.hi, (r.key, r.lo, r.hi)
+
+
+def test_sketch_runs_once_and_caches_nothing(spark):
+    """The per-key counters and the decrement total share ONE sketch
+    pass through exchange reuse — the executed plan runs a single
+    MapInPandas — and no CacheManager entry outlives the query."""
+    before = cached_entries(spark)
+    df = spark.range(2000).select((F.col("id") % 50).cast("string").alias("key"))
+    out = topk_sketch(df, "key", 5, capacity=8)
+    out.collect()
+    plan = final_plan(out)
+    assert plan.count("MapInPandas") == 1 and "ReusedExchange" in plan
+    assert cached_entries(spark) == before
