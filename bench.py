@@ -116,7 +116,7 @@ def bench_set(
     return execs, detail
 
 
-def baseline_gate(now: dict[str, float]) -> dict | None:
+def baseline_gate(now: dict[str, float], cpus: int) -> dict | None:
     """Load-invariant regression gate (VERDICT r8 item 5 / r9 item 4).
 
     The absolute-seconds comparison against the pinned round-5 series
@@ -130,6 +130,9 @@ def baseline_gate(now: dict[str, float]) -> dict | None:
     concentrated in any minority of the 42 queries cannot move it.
     The verdict is the load-adjusted total ratio (gate ≤1.2) plus the
     per-query outliers — both independent of how busy the box was.
+
+    The pin is only comparable on its own core count (``cpus``): a
+    run on another count skips, like a run at another scale factor.
 
     Tiny rows (<0.05 s baseline) are excluded from the MEDIAN (their
     ratios are scheduler noise) but kept in the totals; queries whose
@@ -157,6 +160,12 @@ def baseline_gate(now: dict[str, float]) -> dict | None:
         # ambient load — the gate is only meaningful at the
         # baseline's own scale
         return {"skipped": f"run sf {sf} != baseline sf {base_doc.get('sf')}"}
+    if cpus != base_doc.get("cpus"):
+        # per-query speed-up from more cores is not uniform either
+        # (scan-parallel rows gain, single-task rows do not)
+        return {
+            "skipped": f"run cpus {cpus} != baseline cpus {base_doc.get('cpus')}"
+        }
     base = {
         **base_doc.get("queries", {}),
         **base_doc.get("tpch", {}),
@@ -232,6 +241,9 @@ def main() -> None:
         "queries": timings,
         "detail": detail,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        # cores of the local[N] session: the baseline gate compares
+        # only runs on the pin's own core count
+        "cpus": spark.sparkContext.defaultParallelism,
         # method provenance: r5+ reports EXEC time (best-of-3 on a
         # built-once DataFrame) in "queries"/"value", with per-query
         # one-time build cost split out in "detail" (build_sec /
@@ -355,7 +367,8 @@ def main() -> None:
     # ambient VM load the way the absolute totals do.  Only meaningful
     # at the baseline's own scale (sf0.1 full run).
     gate = baseline_gate(
-        {**timings, **out.get("tpch", {}), **out.get("pipeline", {})}
+        {**timings, **out.get("tpch", {}), **out.get("pipeline", {})},
+        out["cpus"],
     )
     if gate is not None:
         out["baseline_gate"] = gate
@@ -374,6 +387,7 @@ def main() -> None:
         "value": out["value"],
         "unit": out["unit"],
         "sf": out["sf"],
+        "cpus": out["cpus"],
         "tpch_total": out.get("tpch_total"),
         "pipeline_total": out.get("pipeline_total"),
         "worst_exec": max(

@@ -1377,8 +1377,8 @@ class Warehouse:
         """``MODIFY COLUMN name NewType`` — the ClickHouse mutation:
         rewrite the parts with the cast applied (through the same
         crash-safe swap OPTIMIZE uses), then update the declared
-        type.  The rewrite reads through :meth:`read` (declared
-        schema + rename history), so mixed-name files from an earlier
+        type.  The rewrite (:meth:`_rewrite`) reads under the declared
+        schema + rename history, so mixed-name files from an earlier
         instant RENAME are normalized — and the histories cleared —
         as a side effect."""
         cdef = _parse_column(rest)
@@ -1397,36 +1397,17 @@ class Warehouse:
                 f"{td.qualified} has detached partitions — ATTACH or "
                 f"DROP them before MODIFY COLUMN rewrites the table"
             )
-        data = os.path.join(self._dir(td.database, td.name), "data")
-        if os.path.isdir(data):
-            from clickhub_spark.sources.writer import compact
-
-            schema = _read_schema(td)
-
-            def transform(df, _td=td, _c=cdef):  # noqa: ANN001
-                df = _normalize_renames(df, _td)
-                return df.withColumn(
-                    _c.name, F.col(_c.name).cast(_c.spark_type)
-                )
-
-            compact(
-                spark,
-                data,
-                sort_cols=list(td.order_by),
-                partition_by=(
-                    ["_partition_id"] if td.partition_expr is not None
-                    else None
-                ),
-                transform=transform,
-                read_schema=schema,
-            )
+        self._rewrite(
+            td,
+            spark,
+            lambda df: df.withColumn(
+                cdef.name, F.col(cdef.name).cast(cdef.spark_type)
+            ),
+        )
         tgt.ch_type = cdef.ch_type
         tgt.spark_type = cdef.spark_type
         tgt.enum_labels = cdef.enum_labels
-        for c in td.columns:
-            c.renamed_from = []  # every file now carries current names
         self._persist(td)
-        self._bump_catalog()
         return "ok"
 
     def _drop_partition(self, m: re.Match) -> str:
@@ -1453,15 +1434,16 @@ class Warehouse:
         part = os.path.join(
             self._dir(td.database, td.name), "data", f"_partition_id={value}"
         )
-        # the partition's mutation scratch siblings
-        # (_mutpart__partition_id_<v>[.__prev/.__old/.__mutating_*/…])
-        # go too: they leak disk otherwise, and a crash-stranded
-        # .__old for this value would be RESURRECTED by recover_table
-        # on a later mutation of the same partition value (ADVICE r14)
+        # the partition's rewrite base and its scratch/parked siblings
+        # (operators/mutate.partition_base) go too: they leak disk
+        # otherwise, and a crash-stranded old generation for this value
+        # would be RESURRECTED by recover_table on a later mutation of
+        # the same partition value (ADVICE r14)
         import glob as _glob
 
-        data_dir = os.path.join(self._dir(td.database, td.name), "data")
-        scratch = os.path.join(data_dir, f"_mutpart__partition_id_{value}")
+        from clickhub_spark.operators.mutate import partition_base
+
+        scratch = partition_base(os.path.dirname(part), "_partition_id", value)
         stale = [p for p in [scratch, *_glob.glob(scratch + ".*")]
                  if os.path.isdir(p)]
         if not os.path.isdir(part):
@@ -1511,9 +1493,9 @@ class Warehouse:
 
         - ``ALTER TABLE t DELETE WHERE p`` / ``ALTER TABLE t UPDATE
           a = e, … WHERE p`` on a MergeTree table rewrite the parts
-          through writer.compact's crash-safe swap (the mutation IS a
-          forced merge in ClickHouse too); predicates/expressions run
-          through the dialect shim.
+          through :meth:`_rewrite` (the mutation IS a forced merge in
+          ClickHouse too); predicates/expressions run through the
+          dialect shim.
         - On a KeeperMap table they execute the reference importer's
           LITERAL coordination statements (repo/importer.py:146-147,
           175): ``UPDATE worker_id = 'w', started_time = '…' WHERE
@@ -1523,8 +1505,8 @@ class Warehouse:
           ``DELETE WHERE repo_name = 'r'`` is the release.
         - ``… DELETE/UPDATE … IN PARTITION <value> WHERE p`` on a
           PARTITION BY table routes to the partition-PRUNED rewrite
-          (operators/mutate.delete/update_where_partitioned): only the
-          named ``_partition_id`` directory is read and swapped — the
+          (operators/mutate._mutate_partitions): only the named
+          ``_partition_id`` directory is read and swapped — the
           100 TB mutation shape, flat-time-certified by
           ``tools/scale mutation_pruned``.
         """
@@ -1583,11 +1565,6 @@ class Warehouse:
         data = os.path.join(self._dir(td.database, td.name), "data")
         if not os.path.isdir(data):
             return "empty"
-        # mutations read/rewrite the raw files: normalize any pending
-        # instant-RENAME history first, or the sampled-footer read
-        # would silently drop whichever spelling it lacks — permanent
-        # data loss (review r15)
-        self._normalize_table_files(td, spark)
         cols = {c.name for c in td.columns}
         bad = [c for c in assigns if c not in cols]
         if bad:
@@ -1597,61 +1574,28 @@ class Warehouse:
                 "UPDATE of an ORDER BY key column is not allowed "
                 "(ClickHouse rejects sorting-key mutations)"
             )
-        pred_sql = _translate(pred)
-        if in_partition is not None:
-            from clickhub_spark.operators.mutate import (
-                delete_where_partitioned,
-                update_where_partitioned,
+        from clickhub_spark.operators.mutate import _mutate_partitions, update_transform
+
+        cond = F.coalesce(F.expr(_translate(pred)), F.lit(False))
+        if kind == "DELETE":
+            transform = lambda df: df.where(~cond)  # noqa: E731
+        else:
+            transform = update_transform(
+                cond, {c: F.expr(_translate(e)) for c, e in assigns.items()}
             )
-
-            if kind == "DELETE":
-                n = delete_where_partitioned(
-                    spark, data, "_partition_id", [in_partition],
-                    F.coalesce(F.expr(pred_sql), F.lit(False)),
-                    sort_cols=list(td.order_by),
-                )
-            else:
-                n = update_where_partitioned(
-                    spark, data, "_partition_id", [in_partition],
-                    F.coalesce(F.expr(pred_sql), F.lit(False)),
-                    {c: F.expr(_translate(e)) for c, e in assigns.items()},
-                    sort_cols=list(td.order_by),
-                )
-            self._bump_catalog()
-            return f"mutated partition {in_partition} to {n}"
-
-        def transform(df, _p=pred_sql, _a=assigns):  # noqa: ANN001
-            cond = F.expr(_p)
-            if kind == "DELETE":
-                return df.where(~F.coalesce(cond, F.lit(False)))
-            # ClickHouse (like standard SQL UPDATE) evaluates EVERY
-            # assignment expression against the PRE-mutation row:
-            # ``UPDATE a = b, b = a`` swaps.  One select with all
-            # assignments — a chained withColumn would let a later
-            # assignment read an earlier one's new value (ADVICE r13).
-            out = [
-                F.when(cond, F.expr(_translate(_a[c.name])))
-                .otherwise(F.col(c.name))
-                .alias(c.name)
-                if c.name in _a
-                else F.col(c.name)
-                for c in df.schema.fields
-            ]
-            return df.select(*out)
-
-        from clickhub_spark.sources.writer import compact
-
-        n = compact(
-            spark,
-            data,
+        if in_partition is None:
+            return f"mutated to {self._rewrite(td, spark, transform)}"
+        # the partition rewrite reads raw files: normalize any pending
+        # instant-RENAME history first, or the sampled-footer read
+        # would silently drop whichever spelling it lacks — permanent
+        # data loss (review r15)
+        self._normalize_table_files(td, spark)
+        n = _mutate_partitions(
+            spark, data, "_partition_id", [in_partition], transform,
             sort_cols=list(td.order_by),
-            partition_by=(
-                ["_partition_id"] if td.partition_expr is not None else None
-            ),
-            transform=transform,
         )
         self._bump_catalog()
-        return f"mutated to {n}"
+        return f"mutated partition {in_partition} to {n}"
 
     def _mutate_keeper(
         self, td: TableDef, kind: str, assigns: dict[str, str], pred: str
@@ -1705,48 +1649,66 @@ class Warehouse:
     def _normalize_table_files(self, td: TableDef, spark: SparkSession) -> None:
         """Rewrite the table's files to the DECLARED column names when
         an instant RENAME left old-name files behind — any path that
-        reads raw parquet (mutations, ADD COLUMN re-using a historical
-        name) must run through this first: Spark's sampled-footer read
-        of a mixed-name file set silently drops whichever spelling the
-        sampled file lacks (review r15).  Clears the histories; no-op
-        without history.  Refuses when DETACHed partitions exist —
-        they would keep old-name files past the history clear and read
-        as NULL after ATTACH."""
-        if not any(c.renamed_from for c in td.columns):
-            return
-        if self._has_detached(td):
+        reads raw parquet (partition-pruned mutations, ADD COLUMN
+        re-using a historical name) must run through this first:
+        Spark's sampled-footer read of a mixed-name file set silently
+        drops whichever spelling the sampled file lacks (review r15).
+        No-op without history; see :meth:`_rewrite`."""
+        if any(c.renamed_from for c in td.columns):
+            self._rewrite(td, spark)
+
+    def _rewrite(self, td: TableDef, spark: SparkSession, transform=None) -> int:
+        """The one way a statement rewrites a table's files (OPTIMIZE,
+        ALTER … DELETE/UPDATE, MODIFY COLUMN, rename normalization):
+        sources/writer.compact under the table's ORDER BY sort and
+        ``_partition_id`` layout.  The read runs under the declared
+        schema extended with the rename history, and renamed columns
+        are coalesced before ``transform``, so every file comes out
+        under the declared names and the histories are cleared.
+        Refuses while a rename history and DETACHed partitions
+        coexist — the detached files would keep old names past the
+        history clear and read as NULL after ATTACH (review r15).
+        Returns the rewritten row count (0 without a data dir)."""
+        renamed = any(c.renamed_from for c in td.columns)
+        if renamed and self._has_detached(td):
             raise DdlError(
                 f"{td.qualified} has detached partitions holding "
                 f"pre-rename column names — ATTACH or DROP them before "
                 f"an operation that rewrites the files"
             )
         data = os.path.join(self._dir(td.database, td.name), "data")
+        n = 0
         if os.path.isdir(data):
             from clickhub_spark.sources.writer import compact
 
-            compact(
+            def normalized(df):  # noqa: ANN001, ANN202
+                df = _normalize_renames(df, td)
+                return transform(df) if transform else df
+
+            n = compact(
                 spark,
                 data,
-                sort_cols=list(td.order_by),
+                td.order_by,
                 partition_by=(
-                    ["_partition_id"] if td.partition_expr is not None
-                    else None
+                    ["_partition_id"] if td.partition_expr is not None else None
                 ),
-                transform=lambda df, _td=td: _normalize_renames(df, _td),
+                transform=normalized,
                 read_schema=_read_schema(td),
             )
-        for c in td.columns:
-            c.renamed_from = []
-        self._persist(td)
+        if renamed:
+            for c in td.columns:
+                c.renamed_from = []
+            self._persist(td)
         self._bump_catalog()
+        return n
 
     def _optimize(self, sql: str, spark: SparkSession | None) -> str:
         """``OPTIMIZE TABLE t [FINAL] [DEDUPLICATE]`` — the MergeTree
-        background-merge, on demand: compacts the part files (writer.
-        compact's crash-safe swap), applying the engine's merge
-        semantics while rewriting — ReplacingMergeTree FINAL collapses
-        to the latest version per ORDER BY key; DEDUPLICATE drops
-        full-row duplicates."""
+        background-merge, on demand: compacts the part files
+        (:meth:`_rewrite`), applying the engine's merge semantics while
+        rewriting — ReplacingMergeTree FINAL collapses to the latest
+        version per ORDER BY key; DEDUPLICATE drops full-row
+        duplicates."""
         m = re.match(
             r"\s*OPTIMIZE\s+TABLE\s+(?:`?(\w+)`?\.)?`?(\w+)`?"
             r"(\s+FINAL)?(\s+DEDUPLICATE)?\s*$",
@@ -1765,8 +1727,8 @@ class Warehouse:
         data = os.path.join(self._dir(td.database, td.name), "data")
         if not os.path.isdir(data):
             return "empty"
-        transform = None
-        if final and td.engine == "ReplacingMergeTree":
+        final = final and td.engine == "ReplacingMergeTree"
+        if final:
             from clickhub_spark.operators.dedup import final_view
 
             keys = list(td.order_by)
@@ -1774,58 +1736,14 @@ class Warehouse:
             # collapse by ver, exactly like read_final; falling back
             # to keys here silently kept an ARBITRARY row per key
             # (found by the r13 concurrency race test)
-            version = (
-                self._engine_arg_cols(td)
-                or td.version_columns()
-                or keys
-            )
+            version = self._engine_arg_cols(td) or td.version_columns() or keys
 
-            def transform(df, _k=keys, _v=version):  # noqa: ANN001
-                return final_view(df, keys=_k, version=_v)
+        def transform(df):  # noqa: ANN001, ANN202
+            if final:
+                df = final_view(df, keys=keys, version=version)
+            return df.distinct() if dedup else df
 
-        if dedup:
-            inner = transform
-
-            def transform(df, _inner=inner):  # noqa: ANN001
-                return (_inner(df) if _inner else df).distinct()
-
-        from clickhub_spark.sources.writer import compact
-
-        inner2 = transform
-
-        def transform(df, _inner=inner2, _td=td):  # noqa: ANN001
-            # normalize any instant-RENAME history first: the merge
-            # rewrites every file to the declared column names (and
-            # the explicit read schema below keeps mixed-name file
-            # sets lossless)
-            df = _normalize_renames(df, _td)
-            return _inner(df) if _inner else df
-
-        if any(c.renamed_from for c in td.columns) and self._has_detached(td):
-            # clearing the history while detached partitions hold
-            # old-name files would make a later ATTACH read NULLs
-            # (review r15)
-            raise DdlError(
-                f"{td.qualified} has detached partitions holding "
-                f"pre-rename column names — ATTACH or DROP them before "
-                f"OPTIMIZE rewrites the table"
-            )
-        n = compact(
-            spark,
-            data,
-            sort_cols=list(td.order_by),
-            partition_by=(
-                ["_partition_id"] if td.partition_expr is not None else None
-            ),
-            transform=transform,
-            read_schema=_read_schema(td),
-        )
-        if any(c.renamed_from for c in td.columns):
-            for c in td.columns:
-                c.renamed_from = []
-            self._persist(td)
-        self._bump_catalog()
-        return f"optimized {n}"
+        return f"optimized {self._rewrite(td, spark, transform)}"
 
     # -- table access --------------------------------------------------------
 
@@ -1905,9 +1823,9 @@ class Warehouse:
         not read."""
         td = self._require(qualified)
         data = os.path.join(self._dir(td.database, td.name), "data")
-        # concurrency contract (writer.compact): on Linux the OPTIMIZE
-        # swap is one atomic renameat2 exchange and this branch is
-        # unreachable mid-swap; on fallback platforms the swap is two
+        # concurrency contract (writer.compact, the one rewrite path):
+        # on Linux the swap is one atomic renameat2 exchange and this
+        # branch is unreachable mid-swap; on fallback platforms it is two
         # renames, so a reader can observe the dir missing for an
         # instant.  Wait it out (bounded) when swap markers prove a
         # mutation is in flight; NEVER "recover" here — renaming
@@ -1915,17 +1833,14 @@ class Warehouse:
         # would make the writer's second rename fail and strand the
         # new data (only the next MUTATION may call recover_table).
         if not os.path.isdir(data):
-            import glob as _glob
             import time as _time
+
+            from clickhub_spark.operators.mutate import swap_in_flight
 
             for _ in range(100):
                 if os.path.isdir(data):
                     break
-                if not (
-                    os.path.isdir(f"{data}.__old")
-                    or _glob.glob(f"{data}.__compact_*")
-                    or _glob.glob(f"{data}.__mutating_*")
-                ):
+                if not swap_in_flight(data):
                     break  # genuinely empty table — fail fast below
                 _time.sleep(0.05)
         df = spark.read.schema(_read_schema(td)).parquet(data)

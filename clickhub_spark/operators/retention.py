@@ -105,8 +105,9 @@ def optimize_rollup(
     target_files: int = 8,
 ) -> int:
     """Physically rewrite the table as its retention rollup (the
-    GraphiteMergeTree merge).  Same writers-paused / recover contract
-    as the other mutations.  TERMINAL: the output schema is
+    GraphiteMergeTree merge) through sources/writer.compact, the one
+    table-rewrite path — same writers-paused / recover contract as the
+    other mutations.  TERMINAL: the output schema is
     (keys, bucket_s, bucket_start, n, total) — ``ts_col``/``value_col``
     are gone, so re-running this operator on its own output raises
     (UNRESOLVED_COLUMN), deliberately: there is no silent double
@@ -116,14 +117,14 @@ def optimize_rollup(
     that pair and no derived mean).  Periodic retention should roll
     the RAW table with updated cutoffs, not re-roll a rollup.
     Returns the surviving row count."""
-    from clickhub_spark.operators.mutate import _rewrite
+    from clickhub_spark.sources.writer import compact
 
-    return _rewrite(
+    return compact(
         spark,
         path,
-        lambda df: rollup_retention(
+        [*keys, "bucket_start"],
+        target_files=target_files,
+        transform=lambda df: rollup_retention(
             df, ts_col, keys, value_col, tiers, default_bucket_s
-        )
-        .repartition(target_files)
-        .sortWithinPartitions(*keys, "bucket_start"),
+        ),
     )

@@ -15,6 +15,10 @@ append — the MergeTree storage analog.
   (operators/dedup.final_view), exactly like ReplacingMergeTree
   absorbing duplicate keys at merge.
 
+- ``compact``: the one table-rewrite path — the MergeTree merge
+  behind compaction, OPTIMIZE … FINAL, mutations, TTL and the
+  retention rollup (operators/mutate, operators/retention, ddl).
+
 Scale notes (100 TB): partition column must be coarse (repo bucket /
 date, not raw repo_name — 128k repos would mean 128k dirs,
 reference repos.txt); `maxRecordsPerFile` bounds file sizes; writers
@@ -25,6 +29,7 @@ locks.
 from __future__ import annotations
 
 import os
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -186,71 +191,72 @@ def write_bucketed(
 def compact(
     spark: SparkSession,
     path: str,
-    sort_cols: list[str],
-    target_files: int = 8,
+    sort_cols: Sequence[str] = (),
+    target_files: int | None = 8,
     partition_by: list[str] | None = None,
     transform=None,
     read_schema=None,
+    scratch_base: str | None = None,
 ) -> int:
-    """Compact a table's small files (streaming foreachBatch appends
-    accumulate one file per micro-batch) into ``target_files`` sorted
-    files — the MergeTree background-merge analog.  Returns row count.
+    """The one table-rewrite path — the MergeTree merge analog behind
+    compaction (streaming foreachBatch appends accumulate one file per
+    micro-batch), OPTIMIZE … FINAL, mutations, TTL and the retention
+    rollup: read ``path`` (under ``read_schema`` when given), apply
+    ``transform``, write one zstd scratch dir, publish it with
+    operators/mutate._swap.  Returns the rewritten row count, observed
+    on the write job itself (no second pass over the table).
 
-    ``partition_by`` preserves a hive-partitioned layout (e.g. the
-    band-partitioned LSH signature store): rows are clustered by the
-    partition columns so each partition value lands in one task → one
-    compacted file per partition, and partition-pruned readers keep
-    pruning afterwards.
+    Layout is the caller's: ``partition_by`` keeps a hive-partitioned
+    layout (rows clustered by the partition columns, one file per
+    partition, so partition-pruned readers keep pruning); otherwise
+    ``target_files`` sorted files, or — ``target_files=None`` — the
+    input partitioning kept (a mutation leaves the file layout alone).
+    ``scratch_base`` relocates the scratch/parked siblings (partition
+    rewrites pass operators/mutate.partition_base).
+
+    An explicit ``read_schema`` makes MIXED-schema file sets safe (an
+    instant RENAME COLUMN leaves old-name files behind): Spark's
+    sampled-footer schema silently DROPS whichever spelling the
+    sampled file lacks — verified live in the ddl rename tests.
 
     Concurrency contract: run with WRITERS PAUSED (exactly like
     MergeTree merges, which lock the parts they rewrite) — a file
     appended between the snapshot read and the swap would be lost.
-    The dir swap is one atomic renameat2 RENAME_EXCHANGE where the
+    The swap is one atomic renameat2 RENAME_EXCHANGE where the
     platform supports it (Linux — a reader never sees the path
     missing, and the displaced data is parked one generation at
     ``<path>.__prev`` for in-flight scans); on platforms without it
     the fallback is two renames with a transient path-not-found
-    window readers should retry (operators/mutate._swap)."""
-    import os
-    import shutil
-    import uuid
+    window readers should retry.  A previous swap that died
+    mid-rename is recovered, and its stranded scratch swept, before
+    the read (operators/mutate.prepare_rewrite)."""
+    from pyspark.sql import Observation
 
-    from clickhub_spark.operators.mutate import _clean_stale_tmps, recover_table
+    from clickhub_spark.operators.mutate import _swap, prepare_rewrite, scratch_dir
 
-    recover_table(path)  # a previous swap may have died mid-rename
-    _clean_stale_tmps(path)  # crash-stranded scratch generations
-    # an explicit read_schema makes MIXED-schema file sets safe (an
-    # instant RENAME COLUMN leaves old-name files behind): Spark's
-    # sampled-footer schema silently DROPS whichever spelling the
-    # sampled file lacks — verified live in the ddl rename tests
-    reader = spark.read
-    if read_schema is not None:
-        reader = reader.schema(read_schema)
+    base = scratch_base or path
+    prepare_rewrite(path, base)
+    reader = spark.read if read_schema is None else spark.read.schema(read_schema)
     df = reader.parquet(path)
     if transform is not None:
-        # OPTIMIZE TABLE … FINAL/DEDUPLICATE (ddl.py): the merge pass
-        # applies the engine's merge semantics (final_view dedup,
-        # DISTINCT) while it rewrites — same swap contract
         df = transform(df)
-    n = df.count()
-    tmp = f"{path}.__compact_{uuid.uuid4().hex[:8]}"
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    sort = list(sort_cols)
     if partition_by:
-        (df.repartition(*[F.col(c) for c in partition_by])
-           .sortWithinPartitions(*partition_by, *sort_cols)
-           .write.mode("overwrite").option("compression", "zstd")
-           .partitionBy(*partition_by).parquet(tmp))
-    else:
-        (df.repartition(target_files).sortWithinPartitions(*sort_cols)
-           .write.mode("overwrite").option("compression", "zstd").parquet(tmp))
-    # swap: atomic renameat2 exchange when the platform has it (the
-    # path never transiently disappears — VERDICT r13 item 4), else
-    # the two-rename + recover_table fallback (operators/mutate._swap)
-    from clickhub_spark.operators.mutate import _swap
-
-    old = f"{path}.__old"
-    if os.path.isdir(old):  # stale leftover: table AND .__old exist,
-        shutil.rmtree(old)  # so the swap completed — drop the orphan
-    _swap(path, tmp)
+        df = df.repartition(*[F.col(c) for c in partition_by])
+        sort = [*partition_by, *sort]
+    elif target_files:
+        df = df.repartition(target_files)
+    if sort:
+        df = df.sortWithinPartitions(*sort)
+    writer = df.write.mode("overwrite").option("compression", "zstd")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    tmp = scratch_dir(base)
+    writer.parquet(tmp)
+    n = obs.get["n"]
+    _swap(path, tmp, base=base)
     return n
 
 

@@ -33,17 +33,17 @@ Exactly-once net accounting under at-least-once foreachBatch:
   restore the original checkpoint).  acc_path + checkpoint are a
   unit: relocate/copy them together (a copied checkpoint keeps its
   id and stays valid).
-- The compaction swap uses the same fixed-name two-rename +
-  ``recover_table`` contract as operators/mutate: a crash between the
-  renames leaves the state at ``<acc_path>.__old`` and every entry
-  point restores it before touching the table.
+- The compaction swap is the one table-rewrite path's
+  (operators/mutate._swap): an atomic exchange, or the fixed-name
+  two-rename fallback, where a crash between the renames leaves the
+  state at ``<acc_path>.__old`` and every entry point restores it
+  (``recover_table``) before touching the table.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import uuid
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,7 +54,12 @@ from clickhub_spark.operators.collapsing import (
     collapse_finalize,
     collapse_merge,
 )
-from clickhub_spark.operators.mutate import recover_table
+from clickhub_spark.operators.mutate import (
+    _swap,
+    prepare_rewrite,
+    recover_table,
+    scratch_dir,
+)
 from clickhub_spark.streaming.mv import read_event_stream
 
 #: Spark readers skip leading-underscore files, so the marker rides
@@ -199,13 +204,15 @@ def compact_accumulator(
     the checkpoint whose batch ids it records (the sink refuses to
     interpret it under any other checkpoint — batch ids are
     checkpoint-local).  Writers paused during the swap, same
-    fixed-name two-rename + recover contract as
-    operators/mutate.compact.  Returns surviving accumulator row
+    recovery, stale-scratch sweep, scratch names and swap as the one
+    table-rewrite path sources/writer.compact — the fold keeps its own
+    write only because the marker must land inside the scratch dir
+    before the swap publishes it.  Returns surviving accumulator row
     count (= live key count)."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    recover_table(acc_path)
+    prepare_rewrite(acc_path)
     ck_id = _checkpoint_id(checkpoint)
     prev_folded, prev_ck = _folded_through(acc_path)
     if prev_folded >= 0 and prev_ck is not None and prev_ck != ck_id:
@@ -222,7 +229,7 @@ def compact_accumulator(
     # and the batch lost — so derive it from the rows read, observed
     # on the write job itself
     obs = Observation()
-    tmp = f"{acc_path}.__compacting_{uuid.uuid4().hex[:8]}"
+    tmp = scratch_dir(acc_path)
     fold_obs = Observation()
     partials = partials.observe(
         fold_obs, F.max(F.col("batch_id")).alias("max_id")
@@ -237,7 +244,5 @@ def compact_accumulator(
     folded = max(max_id if max_id is not None else -1, prev_folded)
     with open(os.path.join(tmp, _MARKER), "w") as fh:
         json.dump({"folded_through": folded, "checkpoint_id": ck_id}, fh)
-    from clickhub_spark.operators.mutate import _swap
-
     _swap(acc_path, tmp)  # atomic exchange, or two-rename fallback
     return n

@@ -38,3 +38,20 @@ def final_plan(df) -> str:
     finalized it (exchange reuse applied), without the initial plan."""
     plan = df._jdf.queryExecution().executedPlan().toString()
     return plan.split("== Initial Plan ==")[0]
+
+
+def _last_execution(spark) -> int:
+    """Id of the newest SQL execution in the status store (ids are
+    sequential per JVM, so a difference counts the executions run in
+    between even after the store starts evicting old entries)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+
+def sql_executions(spark, fn):
+    """(fn(), number of SQL executions it ran)."""
+    before = _last_execution(spark)
+    out = fn()
+    return out, _last_execution(spark) - before

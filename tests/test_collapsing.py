@@ -479,3 +479,37 @@ def test_compaction_swap_crash_is_recoverable(spark, tmp_path):
         tuple(r) for r in read_collapsed(spark, acc, ["k"], ["seq"]).collect()
     )
     assert got == truth and os.path.isdir(acc)
+
+
+def test_compaction_sweeps_stranded_scratch(spark, tmp_path):
+    """A crash between the swap's exchange and its ``.__prev`` park
+    strands the displaced accumulator at a scratch name; the next
+    compaction sweeps it (the accumulator shares the one rewrite
+    path's scratch names and sweep).  The fold itself is one SQL
+    execution and keeps its ``target_files`` layout."""
+    import glob
+    import os
+
+    from clickhub_spark.operators import mutate
+    from clickhub_spark.operators.collapsing import collapse_accumulate
+    from clickhub_spark.streaming.collapse import compact_accumulator
+    from tests.conftest import sql_executions
+
+    acc = str(tmp_path / "acc")
+    rows = [(f"k{i}", 1, "v", 1) for i in range(20)]
+    for batch in (0, 1):
+        collapse_accumulate(
+            _log(spark, rows[batch::2]), ["k"], "sign", ["seq"]
+        ).write.parquet(f"{acc}/batch_id={batch}")
+    stranded = mutate.scratch_dir(acc)
+    os.makedirs(os.path.join(stranded, "batch_id=-1"))
+    n, execs = sql_executions(
+        spark,
+        lambda: compact_accumulator(
+            spark, acc, ["k"], ["seq"], target_files=4,
+            checkpoint=str(tmp_path / "ck"),
+        ),
+    )
+    assert (n, execs) == (20, 1)
+    assert not os.path.exists(stranded)
+    assert len(glob.glob(f"{acc}/batch_id=-1/part-*")) == 4

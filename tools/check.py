@@ -76,10 +76,6 @@ def normalize(rows, ndigits=6):
 
 
 def main() -> int:
-    import duckdb
-
-    import __spark_entry__ as entrymod
-
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
@@ -98,18 +94,33 @@ def main() -> int:
         from clickhub_spark.session import get_spark
 
         spark = get_spark("check")
+    n_pass, n_rowsonly, n_fail = tally(gate(spark, sf_dir, only))
+    print(f"\n{n_pass} pass, {n_rowsonly} rows-only, {n_fail} fail")
+    return 1 if n_fail else 0
+
+
+def gate(spark, sf_dir: str, only=()) -> dict[str, str]:
+    """The oracle gate: run each registered query (all, or the names in
+    ``only``) through the driver contract and compare it with its
+    DuckDB oracle.  Returns {name: "pass" | "rows" | "fail"} — "rows"
+    for a query without an oracle that built, collected and passed the
+    driver canon probe."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+    from clickhub_spark.catalog import TESTDATA_TABLES
+
     con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
+    for t in TESTDATA_TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    n_pass = n_fail = n_rowsonly = 0
+    results: dict[str, str] = {}
     for name, builder in sorted(qs.items()):
         if only and name not in only:
             continue
+        results[name] = "fail"
         t0 = time.time()
         try:
             sdf = builder(spark, sf_dir)
@@ -118,7 +129,6 @@ def main() -> int:
         except Exception:
             print(f"FAIL {name}: spark error")
             traceback.print_exc(limit=3)
-            n_fail += 1
             continue
         try:
             # driver-parity: the driver canonicalizes EVERY result —
@@ -126,11 +136,10 @@ def main() -> int:
             driver_canon_probe(cols, srows)
         except Exception as e:
             print(f"FAIL {name}: driver canon would crash: {e!r:.160}")
-            n_fail += 1
             continue
         if name not in oracles:
             print(f"rows {name}: {len(srows)} rows (rows-only) [{time.time()-t0:.1f}s]")
-            n_rowsonly += 1
+            results[name] = "rows"
             continue
         try:
             rel = con.sql(oracles[name])
@@ -139,7 +148,6 @@ def main() -> int:
         except Exception:
             print(f"FAIL {name}: duckdb error")
             traceback.print_exc(limit=3)
-            n_fail += 1
             continue
         order = sorted(range(len(raw_cols)), key=lambda i: raw_cols[i])
         dcols = [raw_cols[i] for i in order]
@@ -148,29 +156,26 @@ def main() -> int:
             driver_canon_probe(dcols, drows)
         except Exception as e:
             print(f"FAIL {name}: driver canon would crash on oracle: {e!r:.160}")
-            n_fail += 1
             continue
-        ok = True
         if [c.lower() for c in cols] != [c.lower() for c in dcols]:
             print(f"FAIL {name}: columns spark={cols} duck={dcols}")
-            ok = False
         elif len(srows) != len(drows):
             print(f"FAIL {name}: rowcount spark={len(srows)} duck={len(drows)}")
-            ok = False
         else:
             ns, nd = normalize(srows), normalize(drows)
             if ns != nd:
                 diffs = [(a, b) for a, b in zip(ns, nd) if a != b][:3]
                 print(f"FAIL {name}: values differ, e.g. {diffs}")
-                ok = False
-        if ok:
-            print(f"PASS {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
-            n_pass += 1
-        else:
-            n_fail += 1
+            else:
+                print(f"PASS {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
+                results[name] = "pass"
+    return results
 
-    print(f"\n{n_pass} pass, {n_rowsonly} rows-only, {n_fail} fail")
-    return 1 if n_fail else 0
+
+def tally(results: dict[str, str]) -> tuple[int, int, int]:
+    """(pass, rows-only, fail) counts of a :func:`gate` result."""
+    values = list(results.values())
+    return values.count("pass"), values.count("rows"), values.count("fail")
 
 
 if __name__ == "__main__":

@@ -8,7 +8,9 @@ from executors, objects captured in closures that don't serialize,
 AQE initialPartitionNum=2000 interactions with real Exchange nodes.
 ``local-cluster[N, cores, mem_mb]`` launches real separate executor
 JVMs with real RPC/shuffle, the closest local approximation of a
-multi-node cluster.
+multi-node cluster.  The oracle gate is ``tools/check.py``'s ``gate``
+(driver canon probe included) and the TPC-H timing is ``bench.py``'s
+``bench_set``, so this script only supplies the cluster session.
 
 Usage:  python tools/cluster_gate.py [sf_dir] [out_json]
 Env:    CLUSTER_SPEC (default "local-cluster[2,8,4096]")
@@ -24,18 +26,17 @@ import json
 import os
 import sys
 import time
-import traceback
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from check import normalize  # noqa: E402  (tools/ sibling)
+from check import gate, tally  # noqa: E402  (tools/ sibling)
+
+from bench import bench_set  # noqa: E402
 
 
 def main() -> int:
-    import duckdb
-
     from clickhub_spark.plans import all_specs
     from clickhub_spark.session import _builder, ship_package
 
@@ -58,70 +59,14 @@ def main() -> int:
     ship_package(spark)
     t_start = time.time()
 
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
-    specs = all_specs()
-    gate: dict[str, str] = {}
-    n_pass = n_fail = n_rowsonly = 0
-    for name, qspec in sorted(specs.items()):
-        t0 = time.time()
-        try:
-            sdf = qspec.builder(spark, sf_dir)
-            cols = sorted(sdf.columns)
-            srows = [tuple(r[c] for c in cols) for r in sdf.collect()]
-        except Exception:
-            print(f"FAIL {name}: spark error")
-            traceback.print_exc(limit=3)
-            gate[name] = "fail"
-            n_fail += 1
-            continue
-        if qspec.oracle is None:
-            print(f"rows {name}: {len(srows)} rows [{time.time() - t0:.1f}s]")
-            gate[name] = "rows"
-            n_rowsonly += 1
-            continue
-        try:
-            rel = con.sql(qspec.oracle)
-            raw_cols = rel.columns
-            raw_rows = rel.fetchall()
-        except Exception:
-            print(f"FAIL {name}: duckdb error")
-            traceback.print_exc(limit=3)
-            gate[name] = "fail"
-            n_fail += 1
-            continue
-        order = sorted(range(len(raw_cols)), key=lambda i: raw_cols[i])
-        dcols = [raw_cols[i] for i in order]
-        drows = [tuple(row[i] for i in order) for row in raw_rows]
-        ok = [c.lower() for c in cols] == [c.lower() for c in dcols]
-        if ok and len(srows) == len(drows):
-            ok = normalize(srows) == normalize(drows)
-        else:
-            ok = False
-        gate[name] = "pass" if ok else "fail"
-        if ok:
-            print(f"PASS {name}: {len(srows)} rows [{time.time() - t0:.1f}s]")
-            n_pass += 1
-        else:
-            print(f"FAIL {name}: mismatch vs oracle")
-            n_fail += 1
-
+    results = gate(spark, sf_dir)
+    n_pass, n_rowsonly, n_fail = tally(results)
     # TPC-H under the same session: warm build-once best-of-2 noop
-    tpch: dict[str, float] = {}
-    for i in range(1, 23):
-        name = f"q_tpch_q{i}"
-        df = specs[name].builder(spark, sf_dir)
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        tpch[name] = round(best, 3)
-        print(f"tpch {name}: {tpch[name]}s")
+    tpch, _ = bench_set(
+        spark, all_specs(), [f"q_tpch_q{i}" for i in range(1, 23)], sf_dir, runs=2
+    )
+    for name, sec in tpch.items():
+        print(f"tpch {name}: {sec}s")
 
     out = {
         "master": spec,
@@ -130,7 +75,7 @@ def main() -> int:
         "n_pass": n_pass,
         "n_rowsonly": n_rowsonly,
         "n_fail": n_fail,
-        "gate": gate,
+        "gate": results,
         "tpch": tpch,
         "tpch_total": round(sum(tpch.values()), 3),
         "wall_sec": round(time.time() - t_start, 1),
