@@ -269,6 +269,7 @@ def main(argv: list[str] | None = None) -> int:
             wid,
             tsv_for=lambda repo: os.path.join(args.tsv_dir, repo.replace("/", "%2F") + ".tsv"),
             max_polls=args.polls,
+            sleep_time=cfg["sleep_time"],
         )
         print(f"{wid} imported {done}; failures {orch.queue.failures}")
     elif args.cmd == "update_all_repos":
@@ -290,8 +291,9 @@ def main(argv: list[str] | None = None) -> int:
         print(f"serving /add_new_repo on {args.host}:{args.port}")
         serve(orch, args.host, args.port)
     elif args.cmd == "sql":
-        from clickhub_spark.catalog import register_final_views, register_views
+        from clickhub_spark.catalog import STORED_SCHEMAS, register_final_views, register_views
         from clickhub_spark.ddl import Warehouse
+        from clickhub_spark.sources.writer import read_table
         from clickhub_spark.sql_compat import run
 
         if not args.query and not args.file:
@@ -299,10 +301,10 @@ def main(argv: list[str] | None = None) -> int:
             return 2
         if args.sf_dir:
             register_views(spark, args.sf_dir)
-        for table in ("commits", "file_changes", "line_changes"):
-            path = os.path.join(data_dir, table)
-            if os.path.isdir(path):
-                spark.read.parquet(path).createOrReplaceTempView(table)
+        for table, schema in STORED_SCHEMAS.items():
+            df = read_table(spark, os.path.join(data_dir, table), schema)
+            if df is not None:
+                df.createOrReplaceTempView(table)
         register_final_views(spark, data_dir)
         wh = Warehouse(args.warehouse or os.path.join(data_dir, "warehouse"))
         wh.register_views(spark)

@@ -111,20 +111,19 @@ def register_final_views(spark: SparkSession, base_path: str) -> list[str]:
     """Register ``<table>_final`` temp views applying the FINAL dedup
     over each stored git fact table — the view-level form of the
     'auto-FINAL' Catalyst rule (SURVEY §7 optional item): SQL users
-    query ``commits_final`` and never see duplicate versions."""
+    query ``commits_final`` and never see duplicate versions.  Tables
+    are read under their ``STORED_SCHEMAS`` entry; absent ones are
+    skipped."""
     from clickhub_spark.operators.dedup import final_view
-
-    import os
+    from clickhub_spark.sources.writer import read_table
 
     registered = []
     for table, (keys, version) in FINAL_KEYS.items():
-        path = f"{base_path}/{table}"
-        if not os.path.exists(path):
-            continue  # table absent; real read errors propagate below
-        df = spark.read.parquet(path)
-        final_view(df, keys=keys, version=version).createOrReplaceTempView(
-            f"{table}_final"
-        )
+        df = read_table(spark, f"{base_path}/{table}", STORED_SCHEMAS[table])
+        if df is None:
+            continue
+        view = final_view(df, keys=keys, version=version)
+        view.createOrReplaceTempView(f"{table}_final")
         registered.append(f"{table}_final")
     return registered
 
@@ -240,6 +239,18 @@ LINE_CHANGES_SCHEMA = StructType(
         _str("repo_name"),
     ]
 )
+
+#: each git fact table as stored: its TSV ingest schema plus the
+#: MATERIALIZED ``updated_at`` stamp (sources/tsv.stamp_updated_at) —
+#: the schema every read of a stored git table runs under.
+STORED_SCHEMAS = {
+    table: StructType([*schema.fields, _ts("updated_at")])
+    for table, schema in (
+        ("commits", COMMITS_SCHEMA),
+        ("file_changes", FILE_CHANGES_SCHEMA),
+        ("line_changes", LINE_CHANGES_SCHEMA),
+    )
+}
 
 #: git.github_events (subset) — reference create_db.py:69-128: enum
 #: event_type, actor/repo, event-time, arrays of labels/assignees.

@@ -69,6 +69,15 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from clickhub_spark.operators.collapsing import collapse_final, collapse_final_versioned
+from clickhub_spark.operators.dedup import final_view
+from clickhub_spark.operators.mutate import (
+    _mutate_partitions,
+    delete_transform,
+    partition_base,
+    update_transform,
+)
+from clickhub_spark.sources.writer import compact, read_table, write_sorted
 from clickhub_spark.sqltext import (
     find_code,
     find_top,
@@ -388,10 +397,50 @@ def _parse_column(entry: str) -> ColumnDef:
 
 
 def _key_list(text: str) -> list[str]:
+    """The column list of a key clause: ``(a, f(b))``, ``a, b`` or
+    ``tuple()`` (no key)."""
     text = text.strip()
-    if text.startswith("(") and text.endswith(")"):
+    if text.startswith("(") and matching_close(text, 0) == len(text) - 1:
         text = text[1:-1]
+    if text.replace(" ", "") == "tuple()":
+        return []
     return [c.strip().strip("`") for c in split_top(text)]
+
+
+#: the clause keywords after a CREATE TABLE column list
+_TABLE_CLAUSE = re.compile(
+    r"\b(ENGINE|PARTITION\s+BY|ORDER\s+BY|PRIMARY\s+KEY|SAMPLE\s+BY|TTL|"
+    r"SETTINGS|COMMENT)\b",
+    re.IGNORECASE,
+)
+
+
+def _table_clauses(tail: str) -> dict[str, str]:
+    """The clauses of a CREATE TABLE tail, keyed by upper-cased,
+    single-spaced keyword.  Each clause runs to the next clause keyword
+    outside literals and brackets, so an expression is read whole
+    (``PARTITION BY k % 3``, ``ORDER BY (k, toDate(ts))``)."""
+    out: dict[str, str] = {}
+    m = find_top(tail, _TABLE_CLAUSE)
+    while m:
+        nxt = find_top(tail, _TABLE_CLAUSE, m.end())
+        end = nxt.start() if nxt else len(tail)
+        out[" ".join(m.group(1).upper().split())] = tail[m.end() : end].strip()
+        m = nxt
+    return out
+
+
+def _engine(text: str) -> tuple[str, list[str]]:
+    """``= Name[(args)]`` of an ENGINE clause → (name, args)."""
+    em = re.fullmatch(r"=\s*(\w+)\s*(?:\((.*)\))?", text, re.DOTALL)
+    if not em:
+        raise DdlError(f"bad ENGINE clause: {text[:80]!r}")
+    return em.group(1), [a.strip("'") for a in split_top(em.group(2) or "")]
+
+
+def _expr(text: str | None) -> str | None:
+    """A clause expression, unquoting a lone backticked identifier."""
+    return text[1:-1] if text and re.fullmatch(r"`\w+`", text) else text
 
 
 def parse_create_table(sql: str) -> TableDef:
@@ -417,45 +466,17 @@ def parse_create_table(sql: str) -> TableDef:
     columns = [_parse_column(entry) for entry in split_top(body)]
     if not columns:
         raise DdlError("CREATE TABLE with empty column list")
-    tail = sql[end + 1 :]
-
-    em = re.search(r"ENGINE\s*=\s*(\w+)\s*(\(([^)]*)\))?", tail, re.IGNORECASE)
-    if not em:
+    clauses = _table_clauses(sql[end + 1 :])
+    if "ENGINE" not in clauses:
         raise DdlError("CREATE TABLE without ENGINE clause")
-    engine = em.group(1)
-    engine_args = (
-        [a.strip().strip("'") for a in split_top(em.group(3))]
-        if em.group(3)
-        else []
-    )
-
-    def clause(kw: str) -> list[str]:
-        cm = re.search(
-            kw + r"\s+(\([^)]*\)|[\w`.]+)", tail, re.IGNORECASE
-        )
-        return _key_list(cm.group(1)) if cm else []
-
-    order_by = clause(r"ORDER\s+BY")
-    primary_key = clause(r"PRIMARY\s+KEY")
-    pm = re.search(
-        r"PARTITION\s+BY\s+(\w+\s*\([^)]*\)|\([^)]*\)|[\w`]+)",
-        tail,
-        re.IGNORECASE,
-    )
-    partition_expr = pm.group(1).strip().strip("`") if pm else None
-    sb = re.search(
-        r"SAMPLE\s+BY\s+(\w+\s*\([^)]*\)|\([^)]*\)|[\w`]+)",
-        tail,
-        re.IGNORECASE,
-    )
-    sample_by = sb.group(1).strip().strip("`") if sb else None
+    engine, engine_args = _engine(clauses["ENGINE"])
+    order_by = _key_list(clauses.get("ORDER BY", ""))
+    primary_key = _key_list(clauses.get("PRIMARY KEY", ""))
     settings: dict[str, str] = {}
-    sm = re.search(r"SETTINGS\s+(.*)$", tail, re.IGNORECASE | re.DOTALL)
-    if sm:
-        for kv in split_top(sm.group(1)):
-            k, _, v = kv.partition("=")
-            if k.strip():
-                settings[k.strip()] = v.strip()
+    for kv in split_top(clauses.get("SETTINGS", "")):
+        k, _, v = kv.partition("=")
+        if k.strip():
+            settings[k.strip()] = v.strip()
     return TableDef(
         database=database,
         name=name,
@@ -466,8 +487,8 @@ def parse_create_table(sql: str) -> TableDef:
         primary_key=primary_key or order_by[:1],
         settings=settings,
         if_not_exists=if_not_exists,
-        partition_expr=partition_expr,
-        sample_by=sample_by,
+        partition_expr=_expr(clauses.get("PARTITION BY")),
+        sample_by=_expr(clauses.get("SAMPLE BY")),
     )
 
 
@@ -983,9 +1004,8 @@ class Warehouse:
             if if_not_exists:
                 return "exists"
             raise DdlError(f"table {db}.{name} already exists")
-        clauses = m.group(4)
-        em = re.search(r"ENGINE\s*=\s*(\w+)", clauses, re.IGNORECASE)
-        engine = em.group(1) if em else "MergeTree"
+        clauses = _table_clauses(m.group(4))
+        engine = _engine(clauses["ENGINE"])[0]
         if engine not in _MERGE_TREE_ENGINES:
             raise DdlError(f"CTAS supports MergeTree engines, not {engine}")
         if engine in ("CollapsingMergeTree", "VersionedCollapsingMergeTree"):
@@ -993,19 +1013,7 @@ class Warehouse:
                 f"CTAS does not parse {engine}'s sign/version engine "
                 f"args — CREATE TABLE explicitly, then INSERT … SELECT"
             )
-        # capture through the next clause keyword (or end), so an
-        # unparenthesized multi-key ORDER BY k1, k2 is not silently
-        # truncated to its first key (which would dedup on the wrong
-        # key in every _final read)
-        om = re.search(
-            r"ORDER\s+BY\s+(.+?)(?:\s+(?:PARTITION\s+BY|PRIMARY\s+KEY|"
-            r"SETTINGS)\b.*)?$",
-            clauses,
-            re.IGNORECASE | re.DOTALL,
-        )
-        order_by = _key_list(om.group(1).strip()) if om else []
-        if order_by == ["tuple()"]:
-            order_by = []
+        order_by = _key_list(clauses.get("ORDER BY", ""))
         self.register_views(spark)
         src = _run(spark, m.group(5))
         cols = []
@@ -1119,8 +1127,6 @@ class Warehouse:
             if dst in self._tables:
                 raise DdlError(f"RENAME target {dst} already exists")
             moves.append((src, dst_db, dst_name))
-        import shutil
-
         for src, dst_db, dst_name in moves:
             td = self._tables.pop(src)
             old_dir = self._dir(td.database, td.name)
@@ -1423,8 +1429,6 @@ class Warehouse:
         validated against path traversal before any filesystem use
         ('202401/..' would otherwise resolve to the data dir itself
         and rmtree the whole table)."""
-        import shutil as _shutil
-
         db, name = m.group(1) or "default", m.group(2)
         value = m.group(3) if m.group(3) is not None else m.group(4)
         _check_partition_value(value)
@@ -1437,22 +1441,20 @@ class Warehouse:
         # the partition's rewrite base and its scratch/parked siblings
         # (operators/mutate.partition_base) go too: they leak disk
         # otherwise, and a crash-stranded old generation for this value
-        # would be RESURRECTED by recover_table on a later mutation of
-        # the same partition value (ADVICE r14)
+        # would be RESURRECTED by the crash recovery of a later
+        # mutation of the same partition value
         import glob as _glob
-
-        from clickhub_spark.operators.mutate import partition_base
 
         scratch = partition_base(os.path.dirname(part), "_partition_id", value)
         stale = [p for p in [scratch, *_glob.glob(scratch + ".*")]
                  if os.path.isdir(p)]
         if not os.path.isdir(part):
             for p in stale:
-                _shutil.rmtree(p, ignore_errors=True)
+                shutil.rmtree(p, ignore_errors=True)
             return f"dropped 0 partitions (no partition {value})"
-        _shutil.rmtree(part)
+        shutil.rmtree(part)
         for p in stale:
-            _shutil.rmtree(p, ignore_errors=True)
+            shutil.rmtree(p, ignore_errors=True)
         self._bump_catalog()
         return f"dropped partition {value}"
 
@@ -1574,11 +1576,9 @@ class Warehouse:
                 "UPDATE of an ORDER BY key column is not allowed "
                 "(ClickHouse rejects sorting-key mutations)"
             )
-        from clickhub_spark.operators.mutate import _mutate_partitions, update_transform
-
-        cond = F.coalesce(F.expr(_translate(pred)), F.lit(False))
+        cond = F.expr(_translate(pred))
         if kind == "DELETE":
-            transform = lambda df: df.where(~cond)  # noqa: E731
+            transform = delete_transform(cond)
         else:
             transform = update_transform(
                 cond, {c: F.expr(_translate(e)) for c, e in assigns.items()}
@@ -1679,8 +1679,6 @@ class Warehouse:
         data = os.path.join(self._dir(td.database, td.name), "data")
         n = 0
         if os.path.isdir(data):
-            from clickhub_spark.sources.writer import compact
-
             def normalized(df):  # noqa: ANN001, ANN202
                 df = _normalize_renames(df, td)
                 return transform(df) if transform else df
@@ -1729,8 +1727,6 @@ class Warehouse:
             return "empty"
         final = final and td.engine == "ReplacingMergeTree"
         if final:
-            from clickhub_spark.operators.dedup import final_view
-
             keys = list(td.order_by)
             # ENGINE-ARG version first — ReplacingMergeTree(ver) must
             # collapse by ver, exactly like read_final; falling back
@@ -1774,8 +1770,6 @@ class Warehouse:
     def insert(self, spark: SparkSession, qualified: str, df: DataFrame) -> None:
         """Append a batch: align to the ingest schema, stamp
         MATERIALIZED now() columns, sort-cluster on ORDER BY."""
-        from clickhub_spark.sources.writer import write_sorted
-
         td = self._require(qualified)
         if td.engine not in _MERGE_TREE_ENGINES:
             raise DdlError(f"{qualified} ({td.engine}) is not insertable parquet")
@@ -1818,32 +1812,21 @@ class Warehouse:
     def read(self, spark: SparkSession, qualified: str) -> DataFrame:
         """Schema-on-read projection: the DECLARED schema drives the
         scan, so pre-ALTER files serve ADDed columns as NULL (then
-        their DEFAULT below — ClickHouse computes defaults on read
-        for old parts the same way) and DROPped columns are simply
-        not read."""
-        td = self._require(qualified)
+        their DEFAULT below — ClickHouse computes defaults on read for
+        old parts the same way) and DROPped columns are simply not
+        read.  Raises DdlError when the table holds no data."""
+        df = self._read(spark, self._require(qualified))
+        if df is None:
+            raise DdlError(f"{qualified} holds no data")
+        return df
+
+    def _read(self, spark: SparkSession, td: TableDef) -> DataFrame | None:
+        """:meth:`read` of ``td``, None when it holds no data (the read
+        rules are sources/writer.read_table's)."""
         data = os.path.join(self._dir(td.database, td.name), "data")
-        # concurrency contract (writer.compact, the one rewrite path):
-        # on Linux the swap is one atomic renameat2 exchange and this
-        # branch is unreachable mid-swap; on fallback platforms it is two
-        # renames, so a reader can observe the dir missing for an
-        # instant.  Wait it out (bounded) when swap markers prove a
-        # mutation is in flight; NEVER "recover" here — renaming
-        # .__old back while the writer is between its two renames
-        # would make the writer's second rename fail and strand the
-        # new data (only the next MUTATION may call recover_table).
-        if not os.path.isdir(data):
-            import time as _time
-
-            from clickhub_spark.operators.mutate import swap_in_flight
-
-            for _ in range(100):
-                if os.path.isdir(data):
-                    break
-                if not swap_in_flight(data):
-                    break  # genuinely empty table — fail fast below
-                _time.sleep(0.05)
-        df = spark.read.schema(_read_schema(td)).parquet(data)
+        df = read_table(spark, data, _read_schema(td))
+        if df is None:
+            return None
         df = _normalize_renames(df, td)
         for c in td.columns:
             if c.default is not None:
@@ -1880,8 +1863,6 @@ class Warehouse:
           version) from the engine args."""
         from pyspark.sql.types import NumericType
 
-        from clickhub_spark.operators.dedup import final_view
-
         td = self._require(qualified)
         df = self.read(spark, qualified)
         keys = list(td.order_by)
@@ -1912,16 +1893,10 @@ class Warehouse:
                 out = out.where(keep)
             return out.select(*[c.name for c in td.columns])
         if td.engine == "CollapsingMergeTree":
-            from clickhub_spark.operators.collapsing import collapse_final
-
             sign = args[0]
             order = td.version_columns() or keys
             return collapse_final(df, keys=keys, sign=sign, order=order)
         if td.engine == "VersionedCollapsingMergeTree":
-            from clickhub_spark.operators.collapsing import (
-                collapse_final_versioned,
-            )
-
             sign, version = args[0], args[1]
             order = td.version_columns() or [version]
             # ClickHouse requires the version as the LAST ORDER BY
@@ -1976,10 +1951,10 @@ class Warehouse:
             if td.engine not in _MERGE_TREE_ENGINES:
                 continue
             base = f"{td.database}_{td.name}"
-            data_dir = os.path.join(self._dir(td.database, td.name), "data")
-            if not os.path.isdir(data_dir):
+            df = self._read(spark, td)
+            if df is None:
                 continue
-            self.read(spark, q).createOrReplaceTempView(base)
+            df.createOrReplaceTempView(base)
             if td.sample_by:
                 # the declared SAMPLE BY key powers SAMPLE … OFFSET's
                 # deterministic hash-range render (ClickHouse's model:
@@ -2009,16 +1984,10 @@ class Warehouse:
                 try:
                     if td.engine == "MaterializedView":
                         tgt = self._tables.get(td.mv_target)
-                        if tgt is None:
+                        df = None if tgt is None else self._read(spark, tgt)
+                        if df is None:
                             continue
-                        data_dir = os.path.join(
-                            self._dir(tgt.database, tgt.name), "data"
-                        )
-                        if not os.path.isdir(data_dir):
-                            continue
-                        self.read(spark, td.mv_target).createOrReplaceTempView(
-                            base
-                        )
+                        df.createOrReplaceTempView(base)
                     else:
                         from clickhub_spark.sql_compat import run as _run
 

@@ -16,8 +16,9 @@ concurrent reader never sees a half-written table NOR a missing path,
 and the displaced generation is parked at ``<path>.__prev`` so
 executors mid-scan keep their file handles until the next mutation
 retires it.  On platforms without the syscall the swap falls back to
-two renames, whose brief path-not-found window readers must retry —
-the legacy contract ``recover_table`` repairs after a crash.
+two renames, whose brief path-not-found window
+sources/writer.read_table waits out — the legacy contract
+``recover_table`` repairs after a crash.
 
 Scale notes: mutations here are for the small coordination/metadata
 tables (the queue holds ≤10k rows, reference config.yml:11).  Fact
@@ -29,11 +30,13 @@ absorbs re-imports; nothing rewrites terabytes in place).
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from clickhub_spark.sources.writer import compact
 
@@ -133,11 +136,10 @@ def partition_base(path: str, partition_col: str, value) -> str:
 
 
 def swap_in_flight(path: str) -> bool:
-    """Whether swap siblings of ``path`` exist — the evidence a reader
-    that finds the path missing waits on."""
-    import glob as _glob
-
-    return os.path.isdir(path + _OLD) or bool(_glob.glob(f"{path}{_SCRATCH}*"))
+    """Whether swap siblings of ``path`` exist — the evidence
+    sources/writer.read_table waits on when it finds the path
+    missing."""
+    return os.path.isdir(path + _OLD) or bool(glob.glob(f"{path}{_SCRATCH}*"))
 
 
 def recover_table(path: str, old: str | None = None) -> bool:
@@ -145,9 +147,9 @@ def recover_table(path: str, old: str | None = None) -> bool:
     mutation died between its two renames, the table dir is missing
     and the data sits at the FIXED ``<path>.__old`` name (or the
     caller's ``old`` override for partition-scoped swaps) — restore
-    it.  Returns True if a recovery happened.  Called automatically
-    at the start of every rewrite; exposed for readers that find the
-    path missing."""
+    it.  Returns True if a recovery happened.  Called at the start of
+    every rewrite, and by sources/writer.read_table when the path is
+    still missing after its wait (no writer is alive)."""
     old = old or path + _OLD
     if not os.path.exists(path) and os.path.isdir(old):
         os.rename(old, path)
@@ -162,15 +164,13 @@ def prepare_rewrite(path: str, base: str | None = None) -> None:
     the atomic exchange and the ``.__prev`` park leaves the displaced
     data at a random scratch name no reader needs) and an ``.__old``
     that survives recovery (table AND ``.__old`` exist, so that swap
-    completed).  They leak disk and make Warehouse.read's
+    completed).  They leak disk and make read_table's
     swap-in-flight wait spin.  Safe under the documented
     single-mutator contract: any such sibling existing when a NEW
     rewrite starts must be a crash leftover."""
-    import glob as _glob
-
     base = base or path
     recover_table(path, old=base + _OLD)
-    for stale in [base + _OLD, *_glob.glob(f"{base}{_SCRATCH}*")]:
+    for stale in [base + _OLD, *glob.glob(f"{base}{_SCRATCH}*")]:
         shutil.rmtree(stale, ignore_errors=True)
 
 
@@ -187,8 +187,8 @@ def _swap(path: str, tmp: str, base: str | None = None) -> None:
     hive partition discovery (Spark skips ``_*`` paths — a
     ``day=3.__prev`` sibling would otherwise be discovered as a bogus
     partition value).  Fallback (no renameat2): the documented
-    two-rename + recover_table contract, where readers wait out the
-    brief window."""
+    two-rename + recover_table contract, where sources/writer.read_table
+    waits out the brief window."""
     base = base or path
     if exchange_dirs(tmp, path):
         prev = base + _PREV
@@ -207,8 +207,6 @@ def update_transform(predicate: Column, assignments: dict[str, Column]):
     PRE-mutation row (ClickHouse and standard SQL: ``UPDATE a = b,
     b = a`` swaps) — chained ``withColumn`` calls would let a later
     assignment, and the predicate, see an earlier one's new value."""
-    from pyspark.sql import functions as F
-
     def transform(df: DataFrame) -> DataFrame:
         return df.select(
             *[
@@ -224,9 +222,18 @@ def update_transform(predicate: Column, assignments: dict[str, Column]):
     return transform
 
 
+def delete_transform(predicate: Column):
+    """The DELETE rewrite: drop the rows ``predicate`` selects.  A NULL
+    predicate counts as false, so its row stays (ClickHouse and
+    standard SQL) — a bare ``where(~predicate)`` would drop it too."""
+    keep = ~F.coalesce(predicate, F.lit(False))
+    return lambda df: df.where(keep)
+
+
 def delete_where(spark: SparkSession, path: str, predicate: Column) -> int:
-    """DELETE FROM <path> WHERE predicate; returns remaining row count."""
-    return compact(spark, path, target_files=None, transform=lambda df: df.where(~predicate))
+    """DELETE FROM <path> WHERE predicate (see ``delete_transform``);
+    returns remaining row count."""
+    return compact(spark, path, target_files=None, transform=delete_transform(predicate))
 
 
 def update_where(
@@ -260,8 +267,6 @@ def _mutate_partitions(
     name, not a stored column: it is re-materialized as a literal for
     the transform's predicate and dropped again before the write.
     Returns surviving rows across the touched partitions."""
-    from pyspark.sql import functions as F
-
     total = 0
     for v in values:
         part = os.path.join(path, f"{partition_col}={v}")
@@ -289,12 +294,13 @@ def delete_where_partitioned(
     sort_cols: list[str] | None = None,
 ) -> int:
     """DELETE … WHERE on a hive-partitioned table touching only the
-    ``values`` partitions (see ``_mutate_partitions``).  The predicate
-    may reference ``partition_col``.  Returns surviving rows in the
-    touched partitions."""
+    ``values`` partitions (see ``_mutate_partitions`` and
+    ``delete_transform``).  The predicate may reference
+    ``partition_col``.  Returns surviving rows in the touched
+    partitions."""
     return _mutate_partitions(
         spark, path, partition_col, values,
-        lambda df: df.where(~predicate), sort_cols=sort_cols,
+        delete_transform(predicate), sort_cols=sort_cols,
     )
 
 
@@ -371,15 +377,14 @@ def optimize_final_collapsing(
 
 def apply_ttl(spark: SparkSession, path: str, ts_col: str, cutoff) -> int:
     """``TTL <ts_col> + INTERVAL …`` analog: drop rows older than
-    ``cutoff`` (copy-on-write).  At 100 TB, date-partitioned tables
-    should instead drop whole partition directories — this rewrite
-    form is for the small state tables, same as the other mutations
-    here.  Returns the surviving row count."""
-    from pyspark.sql import functions as F
-
+    ``cutoff`` (copy-on-write; a NULL ``ts_col`` never expires, see
+    ``delete_transform``).  At 100 TB, date-partitioned tables should
+    instead drop whole partition directories — this rewrite form is
+    for the small state tables, same as the other mutations here.
+    Returns the surviving row count."""
     return compact(
         spark, path, target_files=None,
-        transform=lambda df: df.where(F.col(ts_col) >= F.lit(cutoff)),
+        transform=delete_transform(F.col(ts_col) < F.lit(cutoff)),
     )
 
 
@@ -522,8 +527,6 @@ def snapshot_diff(
     compared as a struct, so any column change is an update.  The
     changefeed a downstream incremental consumer replays instead of
     re-reading the whole table."""
-    from pyspark.sql import functions as F
-
     a = read_snapshot(spark, table_dir, v_from)
     b = read_snapshot(spark, table_dir, v_to)
     # value columns = UNION of both versions' non-key columns, with

@@ -19,11 +19,11 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from clickhub_spark.catalog import COMMITS_SCHEMA, FINAL_KEYS
+from clickhub_spark.catalog import COMMITS_SCHEMA, FINAL_KEYS, STORED_SCHEMAS
 from clickhub_spark.operators.dedup import final_view
 from clickhub_spark.queue import AlreadyScheduled, QueueFull, WorkQueue
 from clickhub_spark.sources.tsv import read_positional_tsv, stamp_updated_at
-from clickhub_spark.sources.writer import incremental_append
+from clickhub_spark.sources.writer import incremental_append, read_table
 
 
 @dataclass
@@ -38,13 +38,17 @@ class Orchestrator:
         self.commits_path = commits_path
         self.queue = queue
 
+    def _commits(self):
+        """The stored commits table (sources/writer.read_table under its
+        declared schema); empty before the first import."""
+        schema = STORED_SCHEMAS["commits"]
+        df = read_table(self.spark, self.commits_path, schema)
+        return self.spark.createDataFrame([], schema) if df is None else df
+
     # -- membership probe (≙ SELECT COUNT(repo_name) FROM git.commits
     #    WHERE repo_name='X', reference app.py:48-50) -------------------
     def is_processed(self, repo_name: str) -> bool:
-        try:
-            df = self.spark.read.parquet(self.commits_path)
-        except Exception:
-            return False
+        df = self._commits()
         return bool(df.where(F.col("repo_name") == repo_name).limit(1).take(1))
 
     # -- /add_new_repo (reference app.py:41-61) -------------------------
@@ -79,9 +83,7 @@ class Orchestrator:
         visibility, reference README.md:133), with the same keys and
         tie-break as the registered ``commits_final`` SQL view."""
         keys, version = FINAL_KEYS["commits"]
-        return final_view(
-            self.spark.read.parquet(self.commits_path), keys=keys, version=version
-        )
+        return final_view(self._commits(), keys=keys, version=version)
 
     # -- update_all_repos (≙ clickhub.py:109-114 →
     #    repo/schedule.py:71-107: the biggest query in the app) ---------
@@ -91,10 +93,7 @@ class Orchestrator:
         minus currently-scheduled — the reference does the minus with
         1000-element IN-probes + Python set difference
         (repo/schedule.py:84-100); here it's a left-anti join."""
-        try:
-            commits = self.spark.read.parquet(self.commits_path)
-        except Exception:
-            return []
+        commits = self._commits()
         # The collect below is control-plane by design, but bound it by
         # the queue's capacity: scheduling past max_queue_length always
         # raises QueueFull, so a misconfigured limit can never pull an
@@ -127,12 +126,17 @@ class Orchestrator:
 
     # -- worker loop (≙ clickhub.py start_worker →
     #    repo/importer.py:161-179) --------------------------------------
-    def run_worker(self, worker_id: str, tsv_for, max_polls: int = 1) -> list[str]:
+    def run_worker(
+        self, worker_id: str, tsv_for, max_polls: int = 1, sleep_time: float = 0.0
+    ) -> list[str]:
         """Claim → import → always release.  ``tsv_for(repo_name)``
         resolves the repo's git-import TSV (the clone+git-import step
-        is the out-of-engine producer, SURVEY §2.A5)."""
+        is the out-of-engine producer, SURVEY §2.A5).  ``sleep_time``
+        is the wait after an empty poll (config ``sleep_time``,
+        reference config.yml:17)."""
         return self.queue.work(
             worker_id,
             lambda job: self.import_repo(job.repo_name, tsv_for(job.repo_name)),
             max_polls=max_polls,
+            sleep_time=sleep_time,
         )

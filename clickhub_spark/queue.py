@@ -80,14 +80,16 @@ class _WorkLoop:
         """Handler failures are swallowed like the reference worker loop
         (repo/importer.py:161-179 keeps the worker alive; the job is
         dropped, not retried — comment repo/importer.py:174).  Failed
-        repo names are recorded on ``self.failures``.
+        repo names are recorded on ``self.failures``.  An empty poll
+        waits ``sleep_time`` seconds before the next one (none after
+        the last).
         """
         done = []
         self.failures: list[tuple[str, str]] = []
-        for _ in range(max_polls):
+        for poll in range(max_polls):
             job = self.claim(worker_id)
             if job is None:
-                if sleep_time:
+                if sleep_time and poll + 1 < max_polls:
                     time.sleep(sleep_time)
                 continue
             try:

@@ -11,6 +11,9 @@ Response contract, byte-for-byte the reference's bodies/codes
 - 200 ``ALREADY_PROCESSING``  — job queued or claimed (in flight)
 - 403 ``QUEUE IS FULL``       — queue at max_queue_length
 - 201 ``OK``                  — scheduled
+- 500 (``send_error`` page)   — the orchestrator raised, e.g. on an
+  unreadable commits table (the reference's Flask app answers 500 on
+  an unhandled exception too)
 
 Two deliberate divergences, both documented in SURVEY §3:
 - app.py:51 compares ``COUNT(...) >= 0`` — always true, which makes
@@ -27,6 +30,7 @@ The server is a ThreadingHTTPServer; the orchestrator's Spark reads
 
 from __future__ import annotations
 
+import logging
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -68,7 +72,12 @@ def make_server(
                 # the reference schedules HTTP-submitted repos at
                 # priority 1, above the bulk/update default 0
                 # (app.py:54)
-                r = orch.add_new_repo(repo, priority=1)
+                try:
+                    r = orch.add_new_repo(repo, priority=1)
+                except Exception:
+                    logging.getLogger(__name__).exception("add_new_repo %r", repo)
+                    self.send_error(500)
+                    return
                 code, body = r.code, _BODY[r.status]
             data = body.encode()
             self.send_response(code)

@@ -15,6 +15,10 @@ append — the MergeTree storage analog.
   (operators/dedup.final_view), exactly like ReplacingMergeTree
   absorbing duplicate keys at merge.
 
+- ``read_table``: the one table-read path — every open of a stored
+  table directory, with one rule each for an absent table, a swap in
+  flight, a dead swap, the schema and errors.
+
 - ``compact``: the one table-rewrite path — the MergeTree merge
   behind compaction, OPTIMIZE … FINAL, mutations, TTL and the
   retention rollup (operators/mutate, operators/retention, ddl).
@@ -29,10 +33,14 @@ locks.
 from __future__ import annotations
 
 import os
+import shutil
+import time
+import uuid
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def write_sorted(
@@ -87,13 +95,55 @@ def write_sorted(
     writer.parquet(path)
 
 
-def high_water_mark(spark: SparkSession, path: str, time_col: str, key_col: str, key: str):
+def read_table(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame | None:
+    """Open the stored table directory ``path`` — the only function
+    that does.  The read rules:
+
+    - **Absent table:** ``None`` when there is no directory, or when it
+      holds only entries Spark's file listing skips (``.``-prefixed,
+      or ``_``-prefixed without ``=`` — e.g. the ``_staging_*`` dir of
+      an in-flight first ``incremental_append``).  Each caller decides
+      what an absent table means for it.
+    - **Swap in flight:** when the directory is missing but swap
+      siblings exist (operators/mutate.swap_in_flight — the two-rename
+      fallback of ``_swap`` is between its renames), wait for the
+      writer to publish, polling for at most 5 s.
+    - **Dead swap:** if the directory is still missing after the wait,
+      no writer is alive: restore the half-swapped generation
+      (operators/mutate.recover_table) and read it.
+    - **Schema:** read under ``schema`` when given — the table's
+      declared schema, which spares the footer-inference Spark job and
+      keeps a mixed-schema file set (an instant RENAME COLUMN) whole.
+    - **Errors:** every other error propagates.  An unreadable table is
+      an error, never "no rows"."""
+    from clickhub_spark.operators.mutate import recover_table, swap_in_flight
+
+    local = path.removeprefix("file:")
+    for _ in range(100):
+        if os.path.isdir(local) or not swap_in_flight(local):
+            break
+        time.sleep(0.05)
+    else:
+        recover_table(local)
+    if not os.path.isdir(local) or all(
+        e.startswith(".") or (e.startswith("_") and "=" not in e)
+        for e in os.listdir(local)
+    ):
+        return None
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+
+
+def high_water_mark(
+    spark: SparkSession, path: str, time_col: str, key_col: str, key: str, schema=None
+):
     """Read the incremental watermark (≙ SELECT max(time) … WHERE
-    repo_name=…, reference repo/importer.py:95).  Returns None when
-    the table doesn't exist yet or holds no rows for the key."""
-    try:
-        existing = spark.read.parquet(path)
-    except Exception:
+    repo_name=…, reference repo/importer.py:95) under ``schema``.
+    Returns None when the table doesn't exist yet or holds no rows for
+    the key."""
+    existing = read_table(spark, path, schema)
+    if existing is None:
         return None
     row = (
         existing.where(F.col(key_col) == key)
@@ -135,12 +185,7 @@ def incremental_append(
     Local/NFS filesystems here; on an object store this function is
     the seam to swap for a committer or table format with atomic
     multi-file commit."""
-    import shutil
-    import uuid
-
-    from pyspark.sql import Observation
-
-    hwm = high_water_mark(spark, path, time_col, key_col, key)
+    hwm = high_water_mark(spark, path, time_col, key_col, key, df.schema)
     fresh = df if hwm is None else df.where(F.col(time_col) > F.lit(hwm))
     if fresh.isEmpty():
         return 0
@@ -173,7 +218,6 @@ def write_bucketed(
     sharding MergeTree tables by sort-key prefix: at 100 TB the big
     fact↔fact joins (lineitem↔orders) should both be bucketed on the
     join key so neither side exchanges at query time."""
-    import shutil
     from urllib.parse import urlparse
 
     spark = df.sparkSession
@@ -201,10 +245,12 @@ def compact(
     """The one table-rewrite path — the MergeTree merge analog behind
     compaction (streaming foreachBatch appends accumulate one file per
     micro-batch), OPTIMIZE … FINAL, mutations, TTL and the retention
-    rollup: read ``path`` (under ``read_schema`` when given), apply
-    ``transform``, write one zstd scratch dir, publish it with
-    operators/mutate._swap.  Returns the rewritten row count, observed
-    on the write job itself (no second pass over the table).
+    rollup: read ``path`` through :func:`read_table` (under
+    ``read_schema`` when given; an absent table raises
+    FileNotFoundError), apply ``transform``, write one zstd scratch
+    dir, publish it with operators/mutate._swap.  Returns the rewritten
+    row count, observed on the write job itself (no second pass over
+    the table).
 
     Layout is the caller's: ``partition_by`` keeps a hive-partitioned
     layout (rows clustered by the partition columns, one file per
@@ -217,7 +263,7 @@ def compact(
     An explicit ``read_schema`` makes MIXED-schema file sets safe (an
     instant RENAME COLUMN leaves old-name files behind): Spark's
     sampled-footer schema silently DROPS whichever spelling the
-    sampled file lacks — verified live in the ddl rename tests.
+    sampled file lacks.
 
     Concurrency contract: run with WRITERS PAUSED (exactly like
     MergeTree merges, which lock the parts they rewrite) — a file
@@ -227,17 +273,16 @@ def compact(
     missing, and the displaced data is parked one generation at
     ``<path>.__prev`` for in-flight scans); on platforms without it
     the fallback is two renames with a transient path-not-found
-    window readers should retry.  A previous swap that died
+    window that read_table waits out.  A previous swap that died
     mid-rename is recovered, and its stranded scratch swept, before
     the read (operators/mutate.prepare_rewrite)."""
-    from pyspark.sql import Observation
-
     from clickhub_spark.operators.mutate import _swap, prepare_rewrite, scratch_dir
 
     base = scratch_base or path
     prepare_rewrite(path, base)
-    reader = spark.read if read_schema is None else spark.read.schema(read_schema)
-    df = reader.parquet(path)
+    df = read_table(spark, path, read_schema)
+    if df is None:
+        raise FileNotFoundError(f"no table to rewrite at {path!r}")
     if transform is not None:
         df = transform(df)
     obs = Observation()

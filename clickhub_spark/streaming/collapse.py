@@ -35,9 +35,11 @@ Exactly-once net accounting under at-least-once foreachBatch:
   id and stays valid).
 - The compaction swap is the one table-rewrite path's
   (operators/mutate._swap): an atomic exchange, or the fixed-name
-  two-rename fallback, where a crash between the renames leaves the
-  state at ``<acc_path>.__old`` and every entry point restores it
-  (``recover_table``) before touching the table.
+  two-rename fallback.  A crash between its renames leaves the state
+  at ``<acc_path>.__old``; the next compaction or maintenance run
+  restores it before writing, and ``read_collapsed`` reads through
+  sources/writer.read_table, which waits out a live swap and restores
+  a dead one.
 """
 
 from __future__ import annotations
@@ -46,7 +48,8 @@ import json
 import os
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from clickhub_spark.operators.collapsing import (
@@ -60,6 +63,7 @@ from clickhub_spark.operators.mutate import (
     recover_table,
     scratch_dir,
 )
+from clickhub_spark.sources.writer import read_table
 from clickhub_spark.streaming.mv import read_event_stream
 
 #: Spark readers skip leading-underscore files, so the marker rides
@@ -105,6 +109,26 @@ def _checkpoint_id(checkpoint: str) -> str | None:
         return None
 
 
+def _bound_marker(acc_path: str, checkpoint: str) -> tuple[int, str | None]:
+    """(highest folded batch id, ``checkpoint``'s id).  Batch ids are
+    checkpoint-local, so a marker bound to a DIFFERENT checkpoint can
+    distinguish nothing — dropping a batch loses new data, appending
+    it double-counts the fold — and this raises instead.  The
+    changelog table is the source of truth: the recovery is a rebuild
+    (fresh acc_path + checkpoint) or restoring the original
+    checkpoint."""
+    folded, fold_ck = _folded_through(acc_path)
+    mine = _checkpoint_id(checkpoint)
+    if folded >= 0 and fold_ck is not None and fold_ck != mine:
+        raise RuntimeError(
+            f"accumulator {acc_path!r} was folded under checkpoint id "
+            f"{fold_ck!r}, not {mine!r}; batch ids are checkpoint-local — "
+            "restore the original checkpoint, or rebuild the state from "
+            "the changelog with a fresh acc_path + checkpoint"
+        )
+    return folded, mine
+
+
 def maintain_collapsed(
     spark: SparkSession,
     changelog_table: str,
@@ -126,26 +150,7 @@ def maintain_collapsed(
     stream = read_event_stream(spark, changelog_table, schema, max_files)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        folded, fold_ck = _folded_through(acc_path)
-        if folded >= 0 and fold_ck is not None:
-            mine = _checkpoint_id(checkpoint)
-            if mine != fold_ck:
-                # batch ids are checkpoint-local: against a DIFFERENT
-                # checkpoint the marker can distinguish nothing —
-                # dropping loses new data, appending double-counts the
-                # fold.  Refuse loudly; the changelog table is the
-                # source of truth, so the documented recovery is a
-                # rebuild (fresh acc_path + fresh checkpoint) or
-                # restoring the original checkpoint.
-                raise RuntimeError(
-                    f"accumulator {acc_path!r} was compacted under "
-                    f"checkpoint id {fold_ck!r} but this stream runs "
-                    f"{mine!r}; batch-id replay detection is invalid "
-                    "across checkpoints — restore the original "
-                    "checkpoint, or rebuild the state from the "
-                    "changelog with a fresh acc_path + checkpoint"
-                )
-        if batch_id <= folded:
+        if batch_id <= _bound_marker(acc_path, checkpoint)[0]:
             return  # replay of a batch already inside the fold
         collapse_accumulate(batch_df, keys, sign, order).write.mode(
             "overwrite"
@@ -168,20 +173,19 @@ def read_collapsed(
     schema_hint: str | None = None,
 ) -> DataFrame:
     """The FINAL read view: merge all accumulator partials and
-    finalize.  Restores a half-swapped table first; only a genuinely
-    absent table (before the first batch) falls back to the empty
+    finalize.  The read follows sources/writer.read_table's rules; only
+    an absent table (before the first batch) falls back to the empty
     frame (``schema_hint`` required then) — read errors on an existing
     table propagate instead of masquerading as 'no data yet'."""
-    recover_table(acc_path)
-    if not os.path.exists(acc_path):
+    partials = read_table(spark, acc_path)
+    if partials is None:
         if schema_hint is None:
             raise FileNotFoundError(
                 f"accumulator table {acc_path!r} does not exist; pass "
                 "schema_hint to poll from t=0"
             )
         return spark.createDataFrame([], schema_hint)
-    partials = spark.read.parquet(acc_path).drop("batch_id")
-    return collapse_finalize(collapse_merge(partials, keys, order))
+    return collapse_finalize(collapse_merge(partials.drop("batch_id"), keys, order))
 
 
 def compact_accumulator(
@@ -209,20 +213,11 @@ def compact_accumulator(
     write only because the marker must land inside the scratch dir
     before the swap publishes it.  Returns surviving accumulator row
     count (= live key count)."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
     prepare_rewrite(acc_path)
-    ck_id = _checkpoint_id(checkpoint)
-    prev_folded, prev_ck = _folded_through(acc_path)
-    if prev_folded >= 0 and prev_ck is not None and prev_ck != ck_id:
-        raise RuntimeError(
-            f"accumulator {acc_path!r} carries a fold marker for "
-            f"checkpoint id {prev_ck!r}; compacting it under "
-            f"{ck_id!r} would mix checkpoint-local batch ids — pass "
-            "the stream's own checkpoint"
-        )
-    partials = spark.read.parquet(acc_path)
+    prev_folded, ck_id = _bound_marker(acc_path, checkpoint)
+    partials = read_table(spark, acc_path)
+    if partials is None:
+        raise FileNotFoundError(f"no accumulator table at {acc_path!r}")
     # the marker must reflect batches whose DATA is in the fold: an
     # uncommitted batch dir (crash mid-write leaves no committed
     # part-files) must NOT advance it, or its replay would be dropped

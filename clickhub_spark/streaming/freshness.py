@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from clickhub_spark.sources.writer import read_table
 from clickhub_spark.streaming.ingest import stream_ingest
 from clickhub_spark.streaming.mv import read_event_stream
 
@@ -47,6 +48,9 @@ EVENTS_SCHEMA = (
     .add("value", "double")
     .add("props", "string")
 )
+
+#: the stars partials as stored (the MV SELECT's output)
+STARS_SCHEMA = StructType().add("user_id", "long").add("stars", "long")
 
 
 #: the stars MV SELECT, the reference's literal shape
@@ -102,10 +106,9 @@ def read_stars(spark: SparkSession, stars_path: str) -> DataFrame:
     """The MV's read view: collapse appended partials (SummingMergeTree
     FINAL).  Returns an empty 2-column frame before the first event so
     callers can poll from t=0."""
-    try:
-        partials = spark.read.parquet(stars_path)
-    except Exception:
-        return spark.createDataFrame([], "user_id long, stars long")
+    partials = read_table(spark, stars_path, STARS_SCHEMA)
+    if partials is None:
+        return spark.createDataFrame([], STARS_SCHEMA)
     return partials.groupBy("user_id").agg(F.sum("stars").alias("stars"))
 
 

@@ -1381,3 +1381,48 @@ def test_detach_attach_partition(spark, wh):
     )
     with pytest.raises(DdlError, match="PARTITION BY"):
         wh.execute("ALTER TABLE git.nopart DETACH PARTITION '1'")
+
+
+# --------------------------------------------------------------------------
+# CREATE TABLE clauses read whole, up to the next clause keyword
+# --------------------------------------------------------------------------
+
+_CLAUSE_BASE = (
+    "CREATE TABLE ana.c (`k` Int64, `ts` DateTime) ENGINE = MergeTree "
+)
+
+
+@pytest.mark.parametrize(
+    "tail, field, stored",
+    [
+        ("PARTITION BY k % 3 ORDER BY (k)", "partition_expr", "k % 3"),
+        (
+            "PARTITION BY toYYYYMM(toDate(ts)) ORDER BY (k)",
+            "partition_expr",
+            "toYYYYMM(toDate(ts))",
+        ),
+        ("ORDER BY (k, toDate(ts))", "order_by", ["k", "toDate(ts)"]),
+        (
+            "ORDER BY (k) SAMPLE BY intHash32(k) % 10",
+            "sample_by",
+            "intHash32(k) % 10",
+        ),
+    ],
+)
+def test_create_table_clause_read_whole(tail, field, stored):
+    assert getattr(parse_create_table(_CLAUSE_BASE + tail), field) == stored
+
+
+def test_partition_by_expression_makes_one_dir_per_value(spark, wh):
+    import os
+
+    wh.execute("CREATE DATABASE ana")
+    wh.execute(
+        "CREATE TABLE ana.m (`k` Int64) ENGINE = MergeTree "
+        "PARTITION BY k % 3 ORDER BY (k)"
+    )
+    wh.insert(spark, "ana.m", spark.range(50).withColumnRenamed("id", "k"))
+    data = os.path.join(wh.root, "ana", "m", "data")
+    assert sorted(d for d in os.listdir(data) if d.startswith("_partition_id=")) == [
+        "_partition_id=0", "_partition_id=1", "_partition_id=2"
+    ]

@@ -162,3 +162,27 @@ def test_drop_expired_partitions(spark, tmp_path):
     assert after.where(F.col("day").cast("string") == "2024-01-04").count() == 10
     # idempotent: nothing below cutoff remains
     assert drop_expired_partitions(path, "day", "2024-01-03") == 0
+
+
+def test_worker_sleeps_the_configured_period_on_an_empty_poll(tmp_path, monkeypatch):
+    """`start_worker` waits config ``sleep_time`` after an empty poll
+    (reference config.yml:17) — and not after its last poll."""
+    import time
+    import types
+
+    from clickhub_spark import queue as queue_mod
+    from clickhub_spark.__main__ import main
+
+    slept = []
+    monkeypatch.setattr(
+        queue_mod, "time", types.SimpleNamespace(time=time.time, sleep=slept.append)
+    )
+    cfg = tmp_path / "config.yml"
+    cfg.write_text("sleep_time: 3\n")
+    rc = main(
+        [
+            "--data-dir", str(tmp_path / "data"), "-c", str(cfg),
+            "start_worker", "--tsv-dir", str(tmp_path), "--polls", "2",
+        ]
+    )
+    assert rc == 0 and slept == [3]

@@ -215,3 +215,25 @@ def test_update_where_assignments_see_the_pre_update_row(spark, tmp_path):
     )
     got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
     assert got == [(1, 0), (1, 9)]
+
+
+def test_delete_keeps_rows_whose_predicate_is_null(spark, tmp_path):
+    """DELETE drops only the rows its predicate selects: a NULL
+    predicate is false, as in the statement path and ClickHouse."""
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, 5), (2, None), (3, 50)], "id int, x int"
+    ).write.parquet(path)
+    assert mutate.delete_where(spark, path, F.col("x") > 10) == 2
+    got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert got == [(1, 5), (2, None)]
+
+
+def test_ttl_keeps_rows_with_null_timestamp(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, datetime(2024, 1, 1)), (2, None), (3, datetime(2024, 3, 1))],
+        "id int, ts timestamp",
+    ).write.parquet(path)
+    assert mutate.apply_ttl(spark, path, "ts", datetime(2024, 2, 1)) == 2
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == [2, 3]

@@ -105,3 +105,25 @@ def test_default_bind_is_loopback():
         assert srv.server_address[0] == "127.0.0.1"
     finally:
         srv.server_close()
+
+
+def test_internal_error_answers_500(spark, tmp_path, monkeypatch):
+    """An orchestrator error (an unreadable commits table, say) is a
+    500, not a dropped connection."""
+    orch = Orchestrator(
+        spark, str(tmp_path / "commits_tbl"), WorkQueue(str(tmp_path / "queue"))
+    )
+
+    def broken(repo_name):
+        raise RuntimeError("unreadable commits table")
+
+    monkeypatch.setattr(orch, "is_processed", broken)
+    srv = make_server(orch, host="127.0.0.1", port=0)
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    try:
+        url = f"http://127.0.0.1:{srv.server_address[1]}/add_new_repo?repo=a/b"
+        assert _get(url)[0] == 500
+    finally:
+        srv.shutdown()
+        t.join(timeout=5)

@@ -266,7 +266,7 @@ def test_compact_crash_recovery_fixed_old_name(spark, tmp_path):
     )
     # simulate the crash window: table renamed away, new dir not yet in
     os.rename(table, table + ".__old")
-    assert recover_table(table)  # reader-side recovery contract
+    assert recover_table(table)  # what read_table does for a dead swap
     n = compact(spark, table, ["id"], target_files=1)
     assert n == 100
     # and compact itself recovers when called directly on a crashed swap
