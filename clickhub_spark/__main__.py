@@ -292,7 +292,7 @@ def main(argv: list[str] | None = None) -> int:
         serve(orch, args.host, args.port)
     elif args.cmd == "sql":
         from clickhub_spark.catalog import STORED_SCHEMAS, register_final_views, register_views
-        from clickhub_spark.ddl import Warehouse
+        from clickhub_spark.ddl import STATEMENT_VERBS, Warehouse
         from clickhub_spark.sources.writer import read_table
         from clickhub_spark.sql_compat import run
 
@@ -313,11 +313,8 @@ def main(argv: list[str] | None = None) -> int:
             with open(args.file, encoding="utf-8") as f:
                 text = f.read()
         for stmt in split_top(text, ";"):
-            verb = stmt.lstrip().split(None, 1)[0].upper() if stmt.strip() else ""
-            if verb in (
-                "CREATE", "DROP", "TRUNCATE", "INSERT", "ALTER", "OPTIMIZE",
-                "SHOW", "DESCRIBE", "DESC", "EXISTS", "RENAME",
-            ):
+            verb = stmt.split(None, 1)[0].upper() if stmt.strip() else ""
+            if verb in STATEMENT_VERBS:
                 print(wh.execute(stmt, spark=spark))
                 wh.register_views(spark)  # new tables visible to later SELECTs
             else:

@@ -37,13 +37,17 @@ Table metadata persists as ``_ddl.json`` beside the data so a new
 session (or a crashed one) reloads the warehouse from disk — the
 analog of ClickHouse's metadata/*.sql files.
 
-Statement text is split with the shared lexical primitives of
-sqltext.py (string literals, bracket depth, matching close paren,
-top-level separators) — the same rules the SELECT shim uses.
+One table, :data:`_STATEMENTS`, holds every statement form the
+Warehouse runs: a whole-statement grammar and a handler each, all
+naming tables through one grammar fragment.  Inside a statement, text
+is split with the shared lexical primitives of sqltext.py (string
+literals, bracket depth, matching close paren, top-level separators)
+— the same rules the SELECT shim uses.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
@@ -284,6 +288,8 @@ def create_statement(td: TableDef) -> str:
         out += f" PRIMARY KEY ({', '.join(td.primary_key)})"
     if td.order_by:
         out += f" ORDER BY ({', '.join(td.order_by)})"
+    elif td.engine in _MERGE_TREE_ENGINES:
+        out += " ORDER BY tuple()"
     if td.settings:
         out += " SETTINGS " + ", ".join(
             f"{k} = {v}" for k, v in td.settings.items()
@@ -367,6 +373,47 @@ def parse_type(ch: str) -> tuple[DataType, dict[int, str] | None]:
 
 
 # --------------------------------------------------------------------------
+# Statement grammar — the pieces every entry of the statement table
+# (:data:`_STATEMENTS`, after the Warehouse) is built from
+# --------------------------------------------------------------------------
+
+
+def _name(p: str = "") -> str:
+    """The table-name grammar, ``[`db`.]`name` ``, spelled once; ``p``
+    prefixes its group names when a statement names two tables."""
+    return rf"(?:`?(?P<{p}db>\w+)`?\.)?`?(?P<{p}name>\w+)`?"
+
+
+_T, _TO = _name(), _name("to_")
+
+
+def _db(m: re.Match, p: str = "") -> str:
+    """The database a statement names — ``default`` when it names none."""
+    return m[f"{p}db"] or "default"
+
+
+def _qualified(m: re.Match, p: str = "") -> str:
+    return f"{_db(m, p)}.{m[f'{p}name']}"
+
+
+def _grammar(verb: str, rest: str) -> re.Pattern:
+    """A whole statement: ``verb`` (``A|B`` for synonyms), then
+    ``rest``, then an optional trailing ``;``."""
+    return re.compile(
+        rf"\s*(?:{verb})\s+{rest}\s*;?\s*", re.IGNORECASE | re.DOTALL
+    )
+
+
+_IF_NOT_EXISTS = r"(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
+_SELECT = r"(?P<select>(?:SELECT|WITH)\b.*?)"
+_RENAME_PAIR = re.compile(rf"\s*{_T}\s+TO\s+{_TO}\s*", re.IGNORECASE)
+_CREATE_TABLE = _grammar(
+    "CREATE", rf"TABLE\s+{_IF_NOT_EXISTS}{_T}\s*(?P<rest>\(.*?)"
+)
+_INSERT = _grammar("INSERT", rf"INTO\s+{_T}\s*(?P<rest>.*?)")
+
+
+# --------------------------------------------------------------------------
 # CREATE TABLE parsing
 # --------------------------------------------------------------------------
 
@@ -447,29 +494,31 @@ def parse_create_table(sql: str) -> TableDef:
     """Parse a ClickHouse ``CREATE TABLE`` statement verbatim —
     tolerates the reference's trailing column comma
     (create_db.py:44) and arbitrary whitespace/newlines."""
-    m = re.match(
-        r"\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?"
-        r"(?:`?(\w+)`?\.)?`?(\w+)`?\s*\(",
-        sql,
-        re.IGNORECASE,
-    )
+    m = _CREATE_TABLE.fullmatch(sql)
     if not m:
         raise DdlError(f"not a CREATE TABLE statement: {sql[:80]!r}")
-    if_not_exists = m.group(1) is not None
-    database = m.group(2) or "default"
-    name = m.group(3)
-    start = m.end() - 1
-    end = matching_close(sql, start)
+    return _table_def(m)
+
+
+def _table_def(m: re.Match) -> TableDef:
+    """The TableDef of a :data:`_CREATE_TABLE` match — the one clause
+    parse behind both CREATE forms (CTAS builds its CREATE TABLE text
+    from the SELECT's schema)."""
+    rest = m["rest"]
+    end = matching_close(rest, 0)
     if end is None:
         raise DdlError("unbalanced parens in CREATE TABLE")
-    body = sql[start + 1 : end]
-    columns = [_parse_column(entry) for entry in split_top(body)]
+    columns = [_parse_column(entry) for entry in split_top(rest[1:end])]
     if not columns:
         raise DdlError("CREATE TABLE with empty column list")
-    clauses = _table_clauses(sql[end + 1 :])
+    clauses = _table_clauses(rest[end + 1 :])
     if "ENGINE" not in clauses:
         raise DdlError("CREATE TABLE without ENGINE clause")
     engine, engine_args = _engine(clauses["ENGINE"])
+    if engine in _MERGE_TREE_ENGINES and "ORDER BY" not in clauses:
+        # ``ORDER BY tuple()`` is the keyless sorting key; leaving the
+        # clause out is an error, as in ClickHouse
+        raise DdlError(f"{engine} requires ORDER BY")
     order_by = _key_list(clauses.get("ORDER BY", ""))
     primary_key = _key_list(clauses.get("PRIMARY KEY", ""))
     settings: dict[str, str] = {}
@@ -478,41 +527,21 @@ def parse_create_table(sql: str) -> TableDef:
         if k.strip():
             settings[k.strip()] = v.strip()
     return TableDef(
-        database=database,
-        name=name,
+        database=_db(m),
+        name=m["name"],
         columns=columns,
         engine=engine,
         engine_args=engine_args,
         order_by=order_by,
         primary_key=primary_key or order_by[:1],
         settings=settings,
-        if_not_exists=if_not_exists,
+        if_not_exists=m["ine"] is not None,
         partition_expr=_expr(clauses.get("PARTITION BY")),
         sample_by=_expr(clauses.get("SAMPLE BY")),
     )
 
 
 # --------------------------------------------------------------------------
-#: ``INSERT INTO db.t [(cols)] SELECT …`` — the ETL form; the source
-#: SELECT runs through the dialect shim against the session's views
-#: (incl. the warehouse's own), columns match by POSITION like the
-#: server.
-_INSERT_SELECT_RE = re.compile(
-    r"\s*INSERT\s+INTO\s+(?:`?(\w+)`?\.)?`?(\w+)`?\s*"
-    r"(?:\(([^)]*)\)\s*)?(SELECT\b.*|WITH\b.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-#: ``CREATE TABLE db.t ENGINE = … [ORDER BY …] AS SELECT …`` — the
-#: schema is derived from the SELECT result (ch_type_of), then the
-#: result is the first inserted batch.
-_CTAS_RE = re.compile(
-    r"\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(?:`?(\w+)`?\.)?`?(\w+)`?\s+"
-    r"(ENGINE\s*=.*?)\s+AS\s+(SELECT\b.*|WITH\b.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-
 # INSERT … VALUES parsing (reference test.py:35)
 # --------------------------------------------------------------------------
 
@@ -527,16 +556,16 @@ def parse_insert_values(sql: str):
     first ``)`` inside a parenthesized entry); entries that are
     not bare column names — expressions, DEFAULT — are rejected with
     a clear error rather than mis-parsed."""
-    m = re.match(
-        r"\s*INSERT\s+INTO\s+(?:`?(\w+)`?\.)?`?(\w+)`?\s*(.*)$",
-        sql,
-        re.IGNORECASE | re.DOTALL,
-    )
+    m = _INSERT.fullmatch(sql)
     if not m:
         raise DdlError(f"not an INSERT … VALUES statement: {sql[:80]!r}")
-    database = m.group(1) or "default"
-    table = m.group(2)
-    rest = m.group(3).lstrip()
+    return _insert_values(m)
+
+
+def _insert_values(m: re.Match):
+    """:func:`parse_insert_values` of an :data:`_INSERT` match."""
+    sql = m.string
+    rest = m["rest"].lstrip()
     cols = None
     if rest.startswith("("):
         # everything inside the matching close paren is the column
@@ -546,14 +575,13 @@ def parse_insert_values(sql: str):
             raise DdlError(
                 f"unbalanced column list in INSERT: {sql[:80]!r}"
             )
-        after = rest[i + 1 :].lstrip()
-        mv = re.match(r"VALUES\b(.*)$", after, re.IGNORECASE | re.DOTALL)
-        if not mv:
-            raise DdlError(
-                f"not an INSERT … VALUES statement: {sql[:80]!r}"
-            )
-        entries = split_top(rest[1:i])
-        bad = [e for e in entries if not re.fullmatch(r"`?\w+`?", e)]
+        cols = split_top(rest[1:i])
+        rest = rest[i + 1 :].lstrip()
+    mv = re.match(r"VALUES\b(.*)$", rest, re.IGNORECASE | re.DOTALL)
+    if not mv:
+        raise DdlError(f"not an INSERT … VALUES statement: {sql[:80]!r}")
+    if cols is not None:
+        bad = [e for e in cols if not re.fullmatch(r"`?\w+`?", e)]
         if bad:
             raise DdlError(
                 "INSERT column list supports bare column names only "
@@ -561,24 +589,16 @@ def parse_insert_values(sql: str):
                 "not supported; use INSERT … SELECT for computed "
                 "columns"
             )
-        cols = [e.strip("`") for e in entries]
-        rest = mv.group(1)
-    else:
-        mv = re.match(r"VALUES\b(.*)$", rest, re.IGNORECASE | re.DOTALL)
-        if not mv:
-            raise DdlError(
-                f"not an INSERT … VALUES statement: {sql[:80]!r}"
-            )
-        rest = mv.group(1)
+        cols = [e.strip("`") for e in cols]
     rows = []
-    for tup in split_top(rest.strip()):
+    for tup in split_top(mv.group(1).strip()):
         tup = tup.strip()
         if not (tup.startswith("(") and tup.endswith(")")):
             raise DdlError(f"bad VALUES tuple: {tup!r}")
         rows.append([_literal(v) for v in split_top(tup[1:-1])])
     if not rows:
         raise DdlError("INSERT with no VALUES tuples")
-    return database, table, cols, rows
+    return _db(m), m["name"], cols, rows
 
 
 def _literal(text: str):
@@ -678,6 +698,16 @@ _MERGE_TREE_ENGINES = {
 }
 
 
+def _forget_sample_keys(td: TableDef) -> None:
+    """Drop the SAMPLE BY registrations of ``td``'s view names (DROP
+    and RENAME) — a stale key would silently slice a LATER same-named
+    table by the wrong column (review r15)."""
+    from clickhub_spark.sql_compat import _SAMPLE_KEYS
+
+    _SAMPLE_KEYS.pop(td.name.lower(), None)
+    _SAMPLE_KEYS.pop(f"{td.database}_{td.name}".lower(), None)
+
+
 class Warehouse:
     """Executes DDL/DML statements against a directory-backed catalog.
 
@@ -701,7 +731,7 @@ class Warehouse:
 
     def _reload(self) -> None:
         for meta in sorted(
-            __import__("glob").glob(os.path.join(self.root, "*", "*", "_ddl.json"))
+            glob.glob(os.path.join(self.root, "*", "*", "_ddl.json"))
         ):
             with open(meta, encoding="utf-8") as f:
                 d = json.load(f)
@@ -726,101 +756,51 @@ class Warehouse:
 
     def execute(self, sql: str, spark: SparkSession | None = None) -> str:
         """Execute one DDL/DML statement; returns a short status tag.
-        SELECTs belong to sql_compat.run — rejected here explicitly."""
-        head = sql.strip().split(None, 2)
-        verb = (head[0].upper() if head else "") + (
-            " " + head[1].upper() if len(head) > 1 else ""
-        )
-        if verb.startswith("CREATE DATABASE"):
-            return self._create_database(sql)
-        if verb.startswith(("CREATE VIEW", "CREATE MATERIALIZED")):
-            return self._create_view(sql, spark)
-        if verb.startswith(("DROP VIEW", "DROP MATERIALIZED")):
-            return self._drop_table(
-                re.sub(
-                    r"DROP\s+(MATERIALIZED\s+)?VIEW", "DROP TABLE", sql,
-                    count=1, flags=re.IGNORECASE,
-                )
-            )
-        if verb.startswith("CREATE TABLE"):
-            m_ctas = _CTAS_RE.match(sql)
-            if m_ctas:
-                return self._create_table_as(m_ctas, spark)
-            return self._create_table(sql)
-        if verb.startswith("DROP TABLE"):
-            return self._drop_table(sql)
-        if verb.startswith("TRUNCATE"):
-            return self._truncate(sql)
-        if verb.startswith("INSERT"):
-            m_sel = _INSERT_SELECT_RE.match(sql)
-            if m_sel:
-                return self._insert_select(m_sel, spark)
-            return self._insert(sql, spark)
-        if verb.startswith("ALTER TABLE"):
-            if re.match(
-                r"\s*ALTER\s+TABLE\s+(?:`?\w+`?\.)?`?\w+`?\s+(DELETE|UPDATE)\b",
-                sql,
-                re.IGNORECASE,
-            ):
-                return self._mutate(sql, spark)
-            m_drop = re.match(
-                r"\s*ALTER\s+TABLE\s+(?:`?(\w+)`?\.)?`?(\w+)`?\s+"
-                r"DROP\s+PARTITION\s+(?:'([^']*)'|(\w+))\s*$",
-                sql,
-                re.IGNORECASE,
-            )
-            if m_drop:
-                return self._drop_partition(m_drop)
-            m_det = re.match(
-                r"\s*ALTER\s+TABLE\s+(?:`?(\w+)`?\.)?`?(\w+)`?\s+"
-                r"(DETACH|ATTACH)\s+PARTITION\s+(?:'([^']*)'|(\w+))\s*$",
-                sql,
-                re.IGNORECASE,
-            )
-            if m_det:
-                return self._detach_attach_partition(m_det)
-            return self._alter(sql, spark)
-        if verb.startswith("OPTIMIZE"):
-            return self._optimize(sql, spark)
-        if verb.startswith("SHOW"):
-            return self._show(sql)
-        if verb.startswith(("DESCRIBE", "DESC")):
-            return self._describe(sql)
-        if verb.startswith("EXISTS"):
-            return self._exists(sql)
-        if verb.startswith("RENAME"):
-            return self._rename(sql)
+        The first :data:`_STATEMENTS` grammar that matches the whole
+        statement picks its handler.  SELECTs belong to
+        sql_compat.run — rejected here explicitly."""
+        for _, grammar, handler in _STATEMENTS:
+            m = grammar.fullmatch(sql)
+            if m:
+                return handler(self, m, spark)
+        verb = sql.split(None, 1)[0].upper() if sql.strip() else ""
+        if verb in STATEMENT_VERBS:
+            raise DdlError(f"unparseable {verb}: {sql[:80]!r}")
         raise DdlError(
             f"not a DDL/DML statement (SELECTs go through sql_compat.run): "
             f"{sql[:60]!r}"
         )
 
-    def _create_database(self, sql: str) -> str:
-        m = re.match(
-            r"\s*CREATE\s+DATABASE\s+(IF\s+NOT\s+EXISTS\s+)?`?(\w+)`?\s*$",
-            sql,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise DdlError(f"unparseable CREATE DATABASE: {sql!r}")
-        path = os.path.join(self.root, m.group(2))
-        if os.path.exists(path) and not m.group(1):
-            raise DdlError(f"database {m.group(2)} already exists")
+    def _name_free(
+        self, qualified: str, if_not_exists: bool, what: str = "table"
+    ) -> bool:
+        """False when ``qualified`` exists and the statement said IF
+        NOT EXISTS; raises when it exists otherwise."""
+        if qualified not in self._tables:
+            return True
+        if if_not_exists:
+            return False
+        raise DdlError(f"{what} {qualified} already exists")
+
+    def _create_database(self, m: re.Match, spark: SparkSession | None) -> str:
+        path = os.path.join(self.root, m["db"])
+        if os.path.exists(path) and not m["ine"]:
+            raise DdlError(f"database {m['db']} already exists")
         os.makedirs(path, exist_ok=True)
         return "ok"
 
-    def _create_table(self, sql: str) -> str:
-        td = parse_create_table(sql)
-        if td.qualified in self._tables:
-            if td.if_not_exists:
-                return "exists"
-            raise DdlError(f"table {td.qualified} already exists")
+    def _create_table(self, m: re.Match, spark: SparkSession | None) -> str:
+        return self._define(_table_def(m))
+
+    def _define(self, td: TableDef) -> str:
+        """Validate a parsed CREATE TABLE and persist it — the one
+        tail of both CREATE forms."""
+        if not self._name_free(td.qualified, td.if_not_exists):
+            return "exists"
         if td.engine == "KeeperMap":
             if not td.primary_key:
                 raise DdlError("KeeperMap requires PRIMARY KEY")
         elif td.engine in _MERGE_TREE_ENGINES:
-            if not td.order_by:
-                raise DdlError(f"{td.engine} requires ORDER BY")
             known = {c.name for c in td.columns}
             missing = [k for k in td.order_by if k not in known]
             if missing:
@@ -850,43 +830,21 @@ class Warehouse:
         self._tables[td.qualified] = td
         return "ok"
 
-    def _drop_table(self, sql: str) -> str:
-        m = re.match(
-            r"\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?(?:`?(\w+)`?\.)?`?(\w+)`?\s*$",
-            sql,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise DdlError(f"unparseable DROP TABLE: {sql!r}")
-        db, name = m.group(2) or "default", m.group(3)
-        q = f"{db}.{name}"
+    def _drop_table(self, m: re.Match, spark: SparkSession | None) -> str:
+        q = _qualified(m)
         if q not in self._tables:
-            if m.group(1):
+            if m["ie"]:
                 return "absent"
             raise DdlError(f"table {q} does not exist")
-        shutil.rmtree(self._dir(db, name), ignore_errors=True)
-        self._tables.pop(q)
+        td = self._tables.pop(q)
+        shutil.rmtree(self._dir(td.database, td.name), ignore_errors=True)
         self._queues.pop(q, None)
-        # drop the table's sampling-key registrations too — a stale
-        # key would silently slice a LATER same-named table by the
-        # wrong column (review r15)
-        from clickhub_spark.sql_compat import _SAMPLE_KEYS
-
-        _SAMPLE_KEYS.pop(name.lower(), None)
-        _SAMPLE_KEYS.pop(f"{db}_{name}".lower(), None)
+        _forget_sample_keys(td)
         self._bump_catalog()
         return "ok"
 
-    def _truncate(self, sql: str) -> str:
-        m = re.match(
-            r"\s*TRUNCATE\s+(?:TABLE\s+)?(?:`?(\w+)`?\.)?`?(\w+)`?\s*$",
-            sql,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise DdlError(f"unparseable TRUNCATE: {sql!r}")
-        db, name = m.group(1) or "default", m.group(2)
-        td = self._require(f"{db}.{name}")
+    def _truncate(self, m: re.Match, spark: SparkSession | None) -> str:
+        td = self._require(_qualified(m))
         for sub in ("data", "queue"):
             shutil.rmtree(
                 os.path.join(self._dir(td.database, td.name), sub),
@@ -895,8 +853,8 @@ class Warehouse:
         self._bump_catalog()
         return "ok"
 
-    def _insert(self, sql: str, spark: SparkSession | None) -> str:
-        db, table, cols, rows = parse_insert_values(sql)
+    def _insert(self, m: re.Match, spark: SparkSession | None) -> str:
+        db, table, cols, rows = _insert_values(m)
         td = self._require(f"{db}.{table}")
         if td.engine == "KeeperMap":
             # enqueue semantics (reference test.py:35 inserts into
@@ -963,21 +921,20 @@ class Warehouse:
             raise DdlError("INSERT … SELECT needs a SparkSession")
         from clickhub_spark.sql_compat import run as _run
 
-        db, table = m.group(1) or "default", m.group(2)
-        td = self._require(f"{db}.{table}")
+        td = self._require(_qualified(m))
         if td.engine == "KeeperMap":
             raise DdlError("INSERT … SELECT into KeeperMap is not supported")
         schema = td.ingest_schema()
         names = (
-            [c.strip().strip("`") for c in split_top(m.group(3))]
-            if m.group(3)
+            [c.strip().strip("`") for c in split_top(m["cols"])]
+            if m["cols"]
             else [f.name for f in schema.fields]
         )
         unknown = [n for n in names if n not in schema.fieldNames()]
         if unknown:
             raise DdlError(f"INSERT references unknown columns {unknown}")
         self.register_views(spark)
-        src = _run(spark, m.group(4))
+        src = _run(spark, m["select"])
         if len(src.columns) != len(names):
             raise DdlError(
                 f"INSERT … SELECT provides {len(src.columns)} columns, "
@@ -990,96 +947,56 @@ class Warehouse:
         return f"inserted select into {td.qualified}"
 
     def _create_table_as(self, m: re.Match, spark: SparkSession | None) -> str:
-        """``CREATE TABLE db.t ENGINE = … [ORDER BY …] AS SELECT …`` —
-        the column set comes from the SELECT result (Spark types →
-        ClickHouse text via ch_type_of), the result is the first
-        batch.  MergeTree-family engines only."""
+        """``CREATE TABLE db.t ENGINE = … AS SELECT …`` — a front end
+        to CREATE TABLE: the column list comes from the SELECT's schema
+        (Spark types → ClickHouse text via ch_type_of), every clause
+        after it goes through the same parse and validation, and the
+        result is the first batch.  MergeTree-family engines only."""
         if spark is None:
             raise DdlError("CREATE TABLE … AS SELECT needs a SparkSession")
         from clickhub_spark.sql_compat import run as _run
 
-        if_not_exists = m.group(1) is not None
-        db, name = m.group(2) or "default", m.group(3)
-        if f"{db}.{name}" in self._tables:
-            if if_not_exists:
-                return "exists"
-            raise DdlError(f"table {db}.{name} already exists")
-        clauses = _table_clauses(m.group(4))
-        engine = _engine(clauses["ENGINE"])[0]
-        if engine not in _MERGE_TREE_ENGINES:
-            raise DdlError(f"CTAS supports MergeTree engines, not {engine}")
-        if engine in ("CollapsingMergeTree", "VersionedCollapsingMergeTree"):
-            raise DdlError(
-                f"CTAS does not parse {engine}'s sign/version engine "
-                f"args — CREATE TABLE explicitly, then INSERT … SELECT"
-            )
-        order_by = _key_list(clauses.get("ORDER BY", ""))
+        q = _qualified(m)
+        if not self._name_free(q, m["ine"] is not None):
+            return "exists"
         self.register_views(spark)
-        src = _run(spark, m.group(5))
-        cols = []
-        for f_ in src.schema.fields:
-            ch = ch_type_of(f_.dataType)
-            spark_type, labels = parse_type(ch)
-            cols.append(ColumnDef(f_.name, ch, spark_type, labels))
-        missing = [k for k in order_by if k not in {c.name for c in cols}]
-        if missing:
-            raise DdlError(f"ORDER BY references absent columns {missing}")
-        td = TableDef(
-            database=db, name=name, columns=cols, engine=engine,
-            order_by=order_by, if_not_exists=if_not_exists,
+        src = _run(spark, m["select"])
+        cols = ", ".join(
+            f"`{f.name}` {ch_type_of(f.dataType)}" for f in src.schema.fields
         )
-        os.makedirs(self._dir(db, name), exist_ok=True)
-        self._persist(td)
-        self._tables[td.qualified] = td
-        names = [c.name for c in cols]
+        td = parse_create_table(f"CREATE TABLE {q} ({cols}) {m['clauses']}")
+        if td.engine not in _MERGE_TREE_ENGINES:
+            raise DdlError(f"CTAS supports MergeTree engines, not {td.engine}")
+        self._define(td)
+        schema = td.ingest_schema()
         src = src.select(
-            *[F.col(n).cast(td.ingest_schema()[n].dataType).alias(n) for n in names]
+            *[F.col(n).cast(schema[n].dataType).alias(n) for n in schema.names]
         )
-        self._finish_insert(spark, td, src, names)
+        self._finish_insert(spark, td, src, schema.names)
         return f"created {td.qualified} as select"
 
     # -- introspection statements --------------------------------------------
 
-    def _show(self, sql: str) -> str:
-        s = sql.strip().rstrip(";").strip()
-        if re.fullmatch(r"SHOW\s+DATABASES", s, re.IGNORECASE):
-            on_disk = (
-                d for d in os.listdir(self.root)
-                if os.path.isdir(os.path.join(self.root, d))
-            )
-            return "\n".join(
-                sorted({td.database for td in self._tables.values()} | set(on_disk))
-            )
-        m = re.fullmatch(
-            r"SHOW\s+TABLES(?:\s+FROM\s+`?(\w+)`?)?", s, re.IGNORECASE
+    def _show_databases(self, m: re.Match, spark: SparkSession | None) -> str:
+        on_disk = (
+            d for d in os.listdir(self.root)
+            if os.path.isdir(os.path.join(self.root, d))
         )
-        if m:
-            db = m.group(1) or "default"
-            return "\n".join(
-                sorted(
-                    td.name for td in self._tables.values() if td.database == db
-                )
-            )
-        m = re.fullmatch(
-            r"SHOW\s+CREATE\s+TABLE\s+(?:`?(\w+)`?\.)?`?(\w+)`?",
-            s,
-            re.IGNORECASE,
+        return "\n".join(
+            sorted({td.database for td in self._tables.values()} | set(on_disk))
         )
-        if m:
-            return create_statement(
-                self._require(f"{m.group(1) or 'default'}.{m.group(2)}")
-            )
-        raise DdlError(f"unsupported SHOW form: {sql[:60]!r}")
 
-    def _describe(self, sql: str) -> str:
-        m = re.fullmatch(
-            r"(?:DESCRIBE|DESC)\s+(?:TABLE\s+)?(?:`?(\w+)`?\.)?`?(\w+)`?\s*;?\s*",
-            sql.strip(),
-            re.IGNORECASE,
+    def _show_tables(self, m: re.Match, spark: SparkSession | None) -> str:
+        db = _db(m)
+        return "\n".join(
+            sorted(td.name for td in self._tables.values() if td.database == db)
         )
-        if not m:
-            raise DdlError(f"unparseable DESCRIBE: {sql[:60]!r}")
-        td = self._require(f"{m.group(1) or 'default'}.{m.group(2)}")
+
+    def _show_create(self, m: re.Match, spark: SparkSession | None) -> str:
+        return create_statement(self._require(_qualified(m)))
+
+    def _describe(self, m: re.Match, spark: SparkSession | None) -> str:
+        td = self._require(_qualified(m))
         lines = []
         for c in td.columns:
             extra = ""
@@ -1090,45 +1007,26 @@ class Warehouse:
             lines.append(f"{c.name}\t{c.ch_type}{extra}")
         return "\n".join(lines)
 
-    def _exists(self, sql: str) -> str:
-        m = re.fullmatch(
-            r"EXISTS\s+(?:TABLE\s+)?(?:`?(\w+)`?\.)?`?(\w+)`?\s*;?\s*",
-            sql.strip(),
-            re.IGNORECASE,
-        )
-        if not m:
-            raise DdlError(f"unparseable EXISTS: {sql[:60]!r}")
-        return "1" if f"{m.group(1) or 'default'}.{m.group(2)}" in self._tables else "0"
+    def _exists(self, m: re.Match, spark: SparkSession | None) -> str:
+        return "1" if _qualified(m) in self._tables else "0"
 
-    def _rename(self, sql: str) -> str:
+    def _rename(self, m: re.Match, spark: SparkSession | None) -> str:
         """``RENAME TABLE a.b TO c.d[, …]`` — move the table directory
         (metadata travels inside it) and re-persist under the new
         identity; an instant metadata operation like the engine's."""
-        m = re.fullmatch(
-            r"RENAME\s+TABLE\s+(.+)", sql.strip().rstrip(";"),
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise DdlError(f"unparseable RENAME TABLE: {sql[:60]!r}")
         moves = []
-        for pair in split_top(m.group(1)):
-            pm = re.fullmatch(
-                r"\s*(?:`?(\w+)`?\.)?`?(\w+)`?\s+TO\s+"
-                r"(?:`?(\w+)`?\.)?`?(\w+)`?\s*",
-                pair,
-                re.IGNORECASE,
-            )
+        for pair in split_top(m["pairs"]):
+            pm = _RENAME_PAIR.fullmatch(pair)
             if not pm:
                 raise DdlError(f"unparseable RENAME pair: {pair!r}")
-            src = f"{pm.group(1) or 'default'}.{pm.group(2)}"
-            dst_db, dst_name = pm.group(3) or "default", pm.group(4)
-            dst = f"{dst_db}.{dst_name}"
+            src, dst = _qualified(pm), _qualified(pm, "to_")
             self._require(src)
             if dst in self._tables:
                 raise DdlError(f"RENAME target {dst} already exists")
-            moves.append((src, dst_db, dst_name))
+            moves.append((src, _db(pm, "to_"), pm["to_name"]))
         for src, dst_db, dst_name in moves:
             td = self._tables.pop(src)
+            _forget_sample_keys(td)
             old_dir = self._dir(td.database, td.name)
             os.makedirs(os.path.join(self.root, dst_db), exist_ok=True)
             shutil.move(old_dir, self._dir(dst_db, dst_name))
@@ -1140,7 +1038,7 @@ class Warehouse:
 
     # -- views and materialized views ------------------------------------------
 
-    def _create_view(self, sql: str, spark: SparkSession | None) -> str:
+    def _create_view(self, m: re.Match, spark: SparkSession | None) -> str:
         """``CREATE VIEW db.v AS SELECT …`` (a stored SELECT,
         registered as a session view) and ``CREATE MATERIALIZED VIEW
         db.mv TO db.target AS SELECT …`` — ClickHouse's INSERT-trigger
@@ -1149,49 +1047,34 @@ class Warehouse:
         target (no global recompute; aggregates land as partial states
         the target engine merges on read, e.g. SummingMergeTree).
         The implicit-inner-table form (no TO) is not supported."""
-        m = re.match(
-            r"\s*CREATE\s+(MATERIALIZED\s+)?VIEW\s+(IF\s+NOT\s+EXISTS\s+)?"
-            r"(?:`?(\w+)`?\.)?`?(\w+)`?\s*"
-            r"(?:TO\s+(?:`?(\w+)`?\.)?`?(\w+)`?\s+)?AS\s+(SELECT\b.*|WITH\b.*)$",
-            sql,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise DdlError(f"unparseable CREATE VIEW: {sql[:80]!r}")
-        materialized = m.group(1) is not None
-        db, name = m.group(3) or "default", m.group(4)
-        if f"{db}.{name}" in self._tables:
-            if m.group(2):
-                return "exists"
-            raise DdlError(f"view {db}.{name} already exists")
-        select = m.group(7).strip()
+        materialized = m["mat"] is not None
+        if not self._name_free(_qualified(m), m["ine"] is not None, "view"):
+            return "exists"
+        select = m["select"].strip()
         mv_target = mv_source = None
         if materialized:
-            if m.group(6) is None:
+            if m["to_name"] is None:
                 raise DdlError(
                     "CREATE MATERIALIZED VIEW needs an explicit TO table "
                     "(implicit .inner tables are not supported)"
                 )
-            mv_target = f"{m.group(5) or 'default'}.{m.group(6)}"
+            mv_target = _qualified(m, "to_")
             self._require(mv_target)
-            fm = re.search(
-                r"\bFROM\s+(?:`?(\w+)`?\.)?`?(\w+)`?", select, re.IGNORECASE
-            )
+            fm = re.search(rf"\bFROM\s+{_T}", select, re.IGNORECASE)
             if not fm:
                 raise DdlError("MATERIALIZED VIEW SELECT needs a FROM table")
-            mv_source = f"{fm.group(1) or 'default'}.{fm.group(2)}"
-        elif m.group(6) is not None:
+            mv_source = _qualified(fm)
+        elif m["to_name"] is not None:
             raise DdlError("TO is only valid for MATERIALIZED VIEW")
         td = TableDef(
-            database=db,
-            name=name,
+            database=_db(m),
+            name=m["name"],
             columns=[],
             engine="MaterializedView" if materialized else "View",
             select=select,
             mv_target=mv_target,
             mv_source=mv_source,
         )
-        os.makedirs(self._dir(db, name), exist_ok=True)
         self._persist(td)
         self._tables[td.qualified] = td
         if spark is not None:
@@ -1257,7 +1140,7 @@ class Warehouse:
         finally:
             self._mv_depth -= 1
 
-    def _alter(self, sql: str, spark: SparkSession | None = None) -> str:
+    def _alter(self, m: re.Match, spark: SparkSession | None) -> str:
         """``ALTER TABLE t ADD COLUMN [IF NOT EXISTS] name Type
         [DEFAULT expr]`` / ``DROP COLUMN [IF EXISTS] name`` /
         ``RENAME COLUMN [IF EXISTS] a TO b`` — pure metadata updates,
@@ -1273,27 +1156,9 @@ class Warehouse:
         here — exactly ClickHouse, where MODIFY COLUMN is a mutation
         that rewrites parts with the cast applied (only metadata-ish
         changes like comments are instant there)."""
-        m = re.match(
-            r"\s*ALTER\s+TABLE\s+(?:`?(\w+)`?\.)?`?(\w+)`?\s+"
-            r"(ADD|DROP|MODIFY|RENAME)\s+COLUMN\s+"
-            r"(IF\s+(?:NOT\s+)?EXISTS\s+)?(.*)$",
-            sql,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise DdlError(
-                f"unsupported ALTER TABLE form (ADD/DROP/MODIFY/RENAME "
-                f"COLUMN, DROP/DETACH/ATTACH PARTITION, DELETE, UPDATE): "
-                f"{sql[:80]!r}"
-            )
-        db, name, action, guarded, rest = (
-            m.group(1) or "default",
-            m.group(2),
-            m.group(3).upper(),
-            m.group(4) is not None,
-            m.group(5).strip().rstrip(";").strip(),
-        )
-        td = self._require(f"{db}.{name}")
+        action, guarded = m["action"].upper(), m["guard"] is not None
+        rest = m["rest"].strip().rstrip(";").strip()
+        td = self._require(_qualified(m))
         if action == "DROP":
             col = rest.strip().strip("`")
             present = any(c.name == col for c in td.columns)
@@ -1416,66 +1281,49 @@ class Warehouse:
         self._persist(td)
         return "ok"
 
-    def _drop_partition(self, m: re.Match) -> str:
-        """``ALTER TABLE t DROP PARTITION <value>`` — remove the whole
-        ``_partition_id=<value>`` directory: no data read, no rewrite,
-        O(1) filesystem metadata work (the MergeTree partition-drop,
-        the reference's retention story at scale; the TTL analog
-        operators/mutate.drop_expired_partitions does the same by
-        cutoff).  Whole-directory removal is atomic from a reader's
-        LISTING perspective; in-flight readers of the dropped
-        partition fail like any vacuumed table — run during a
-        maintenance window, same as the reference.  The value is
-        validated against path traversal before any filesystem use
-        ('202401/..' would otherwise resolve to the data dir itself
-        and rmtree the whole table)."""
-        db, name = m.group(1) or "default", m.group(2)
-        value = m.group(3) if m.group(3) is not None else m.group(4)
-        _check_partition_value(value)
-        td = self._require(f"{db}.{name}")
-        if td.partition_expr is None:
-            raise DdlError("DROP PARTITION requires a PARTITION BY table")
-        part = os.path.join(
-            self._dir(td.database, td.name), "data", f"_partition_id={value}"
-        )
-        # the partition's rewrite base and its scratch/parked siblings
-        # (operators/mutate.partition_base) go too: they leak disk
-        # otherwise, and a crash-stranded old generation for this value
-        # would be RESURRECTED by the crash recovery of a later
-        # mutation of the same partition value
-        import glob as _glob
+    def _partition(self, m: re.Match, spark: SparkSession | None) -> str:
+        """``ALTER TABLE t DROP | DETACH | ATTACH PARTITION <value>`` —
+        O(1) filesystem metadata work on the ``_partition_id=<value>``
+        directory at any table size: no data read, no rewrite.  The
+        value is validated against path traversal before any
+        filesystem use ('202401/..' would otherwise resolve to the data
+        dir itself and rmtree the whole table).
 
-        scratch = partition_base(os.path.dirname(part), "_partition_id", value)
-        stale = [p for p in [scratch, *_glob.glob(scratch + ".*")]
-                 if os.path.isdir(p)]
-        if not os.path.isdir(part):
-            for p in stale:
-                shutil.rmtree(p, ignore_errors=True)
-            return f"dropped 0 partitions (no partition {value})"
-        shutil.rmtree(part)
-        for p in stale:
-            shutil.rmtree(p, ignore_errors=True)
-        self._bump_catalog()
-        return f"dropped partition {value}"
-
-    def _detach_attach_partition(self, m: re.Match) -> str:
-        """``ALTER TABLE t DETACH PARTITION v`` / ``ATTACH PARTITION
-        v`` — move the ``_partition_id=<v>`` directory out of (into)
-        the data dir, under the table's ``detached/`` sibling:
-        ClickHouse's take-a-partition-offline primitive (backup,
-        quarantine, re-ingest), O(1) filesystem metadata at any table
-        size — one rename, no data read.  Readers never see detached
-        data (it lives outside the data root); ATTACH is the reverse
-        rename and fails if the partition already exists in data."""
-        db, name = m.group(1) or "default", m.group(2)
-        action = m.group(3).upper()
-        value = m.group(4) if m.group(4) is not None else m.group(5)
+        - DROP removes the directory: the MergeTree partition-drop, the
+          reference's retention story at scale (the TTL analog
+          operators/mutate.drop_expired_partitions does the same by
+          cutoff).  Whole-directory removal is atomic from a reader's
+          LISTING perspective; in-flight readers of the dropped
+          partition fail like any vacuumed table — run during a
+          maintenance window, same as the reference.
+        - DETACH / ATTACH move it out of (into) the data dir, under the
+          table's ``detached/`` sibling: ClickHouse's
+          take-a-partition-offline primitive (backup, quarantine,
+          re-ingest) — one rename.  Readers never see detached data (it
+          lives outside the data root); ATTACH fails if the partition
+          already exists in data."""
+        action = m["action"].upper()
+        value = m["qval"] if m["qval"] is not None else m["val"]
         _check_partition_value(value)
-        td = self._require(f"{db}.{name}")
+        td = self._require(_qualified(m))
         if td.partition_expr is None:
             raise DdlError(f"{action} PARTITION requires a PARTITION BY table")
         tdir = self._dir(td.database, td.name)
         live = os.path.join(tdir, "data", f"_partition_id={value}")
+        if action == "DROP":
+            # the partition's rewrite base and its scratch/parked
+            # siblings (operators/mutate.partition_base) go too: they
+            # leak disk otherwise, and a crash-stranded old generation
+            # for this value would be RESURRECTED by the crash recovery
+            # of a later mutation of the same partition value
+            scratch = partition_base(os.path.dirname(live), "_partition_id", value)
+            for p in [scratch, *glob.glob(scratch + ".*")]:
+                shutil.rmtree(p, ignore_errors=True)
+            if not os.path.isdir(live):
+                return f"dropped 0 partitions (no partition {value})"
+            shutil.rmtree(live)
+            self._bump_catalog()
+            return f"dropped partition {value}"
         parked = os.path.join(tdir, "detached", f"_partition_id={value}")
         src, dst = (live, parked) if action == "DETACH" else (parked, live)
         if not os.path.isdir(src):
@@ -1490,7 +1338,7 @@ class Warehouse:
         self._bump_catalog()
         return f"{action.lower()}ed partition {value}"
 
-    def _mutate(self, sql: str, spark: SparkSession | None) -> str:
+    def _mutate(self, m: re.Match, spark: SparkSession | None) -> str:
         """ClickHouse mutations as statements:
 
         - ``ALTER TABLE t DELETE WHERE p`` / ``ALTER TABLE t UPDATE
@@ -1514,15 +1362,8 @@ class Warehouse:
         """
         from clickhub_spark.sql_compat import translate as _translate
 
-        m = re.match(
-            r"\s*ALTER\s+TABLE\s+(?:`?(\w+)`?\.)?`?(\w+)`?\s+"
-            r"(DELETE|UPDATE)\b\s*(.*)$",
-            sql,
-            re.IGNORECASE | re.DOTALL,
-        )
-        db, name = m.group(1) or "default", m.group(2)
-        td = self._require(f"{db}.{name}")
-        kind, rest = m.group(3).upper(), m.group(4).strip()
+        td = self._require(_qualified(m))
+        kind, rest = m["kind"].upper(), m["rest"].strip()
         in_partition: str | None = None
         # the keyword inside a string literal is data, not clause (a
         # predicate like note = 'IN PARTITION 5 WHERE x' must not
@@ -1700,24 +1541,15 @@ class Warehouse:
         self._bump_catalog()
         return n
 
-    def _optimize(self, sql: str, spark: SparkSession | None) -> str:
+    def _optimize(self, m: re.Match, spark: SparkSession | None) -> str:
         """``OPTIMIZE TABLE t [FINAL] [DEDUPLICATE]`` — the MergeTree
         background-merge, on demand: compacts the part files
         (:meth:`_rewrite`), applying the engine's merge semantics while
         rewriting — ReplacingMergeTree FINAL collapses to the latest
         version per ORDER BY key; DEDUPLICATE drops full-row
         duplicates."""
-        m = re.match(
-            r"\s*OPTIMIZE\s+TABLE\s+(?:`?(\w+)`?\.)?`?(\w+)`?"
-            r"(\s+FINAL)?(\s+DEDUPLICATE)?\s*$",
-            sql,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise DdlError(f"unparseable OPTIMIZE TABLE: {sql[:80]!r}")
-        db, name = m.group(1) or "default", m.group(2)
-        final, dedup = m.group(3) is not None, m.group(4) is not None
-        td = self._require(f"{db}.{name}")
+        final, dedup = m["final"] is not None, m["dedup"] is not None
+        td = self._require(_qualified(m))
         if td.engine not in _MERGE_TREE_ENGINES:
             raise DdlError(f"OPTIMIZE applies to MergeTree tables, not {td.engine}")
         if spark is None:
@@ -2082,6 +1914,60 @@ class Warehouse:
         self._sys_views_key = cache_key
         return ["system_tables", "system_columns", "system_parts",
                 "system_databases", "system_detached_parts"]
+
+
+# --------------------------------------------------------------------------
+# The statement table
+# --------------------------------------------------------------------------
+
+
+def _stmt(verb: str, rest: str, handler) -> tuple:
+    return verb, _grammar(verb, rest), handler
+
+
+#: Every statement form :meth:`Warehouse.execute` runs, as (verb,
+#: whole-statement grammar, handler).  The first grammar that matches
+#: the whole statement wins, so order is data: CTAS before CREATE
+#: TABLE, INSERT … SELECT before INSERT … VALUES.  CREATE TABLE and
+#: INSERT … VALUES share their grammars with parse_create_table and
+#: parse_insert_values.
+_STATEMENTS = [
+    _stmt("CREATE", rf"DATABASE\s+{_IF_NOT_EXISTS}`?(?P<db>\w+)`?",
+          Warehouse._create_database),
+    _stmt("CREATE", rf"(?P<mat>MATERIALIZED\s+)?VIEW\s+{_IF_NOT_EXISTS}{_T}\s*"
+          rf"(?:TO\s+{_TO}\s+)?AS\s+{_SELECT}", Warehouse._create_view),
+    _stmt("DROP", rf"(?:TABLE|(?:MATERIALIZED\s+)?VIEW)\s+"
+          rf"(?P<ie>IF\s+EXISTS\s+)?{_T}", Warehouse._drop_table),
+    _stmt("CREATE", rf"TABLE\s+{_IF_NOT_EXISTS}{_T}\s+"
+          rf"(?P<clauses>ENGINE\s*=.*?)\s+AS\s+{_SELECT}",
+          Warehouse._create_table_as),
+    ("CREATE", _CREATE_TABLE, Warehouse._create_table),
+    _stmt("TRUNCATE", rf"(?:TABLE\s+)?{_T}", Warehouse._truncate),
+    _stmt("INSERT", rf"INTO\s+{_T}\s*(?:\((?P<cols>[^)]*)\)\s*)?{_SELECT}",
+          Warehouse._insert_select),
+    ("INSERT", _INSERT, Warehouse._insert),
+    _stmt("ALTER", rf"TABLE\s+{_T}\s+(?P<kind>DELETE|UPDATE)\b\s*(?P<rest>.*?)",
+          Warehouse._mutate),
+    _stmt("ALTER", rf"TABLE\s+{_T}\s+(?P<action>DROP|DETACH|ATTACH)\s+"
+          r"PARTITION\s+(?:'(?P<qval>[^']*)'|(?P<val>\w+))", Warehouse._partition),
+    _stmt("ALTER", rf"TABLE\s+{_T}\s+(?P<action>ADD|DROP|MODIFY|RENAME)\s+"
+          r"COLUMN\s+(?P<guard>IF\s+(?:NOT\s+)?EXISTS\s+)?(?P<rest>.*?)",
+          Warehouse._alter),
+    _stmt("OPTIMIZE", rf"TABLE\s+{_T}(?P<final>\s+FINAL)?(?P<dedup>\s+DEDUPLICATE)?",
+          Warehouse._optimize),
+    _stmt("SHOW", r"DATABASES", Warehouse._show_databases),
+    _stmt("SHOW", r"TABLES(?:\s+FROM\s+`?(?P<db>\w+)`?)?", Warehouse._show_tables),
+    _stmt("SHOW", rf"CREATE\s+TABLE\s+{_T}", Warehouse._show_create),
+    _stmt("DESCRIBE|DESC", rf"(?:TABLE\s+)?{_T}", Warehouse._describe),
+    _stmt("EXISTS", rf"(?:TABLE\s+)?{_T}", Warehouse._exists),
+    _stmt("RENAME", r"TABLE\s+(?P<pairs>.+?)", Warehouse._rename),
+]
+
+#: the leading words the statement table owns — the CLI sends these
+#: statements to :meth:`Warehouse.execute` and the rest to sql_compat
+STATEMENT_VERBS = frozenset(
+    v for verb, _, _ in _STATEMENTS for v in verb.split("|")
+)
 
 
 def _tabledef_to_json(td: TableDef) -> dict:

@@ -9,9 +9,9 @@ applies replacement lazily at merge time; we apply it lazily at read
 time, which yields the same visible semantics for any query routed
 through the view.
 
-Scale notes (100 TB): both strategies shuffle once on the dedup key;
-the default max_by-aggregate form additionally collapses partials
-map-side (measured ~3× the window form locally).  If the table is
+Scale notes (100 TB): the view shuffles once on the dedup key and
+its max_by aggregate collapses partials map-side (measured ~3× a
+row_number window locally).  If the table is
 bucketed/partitioned by the key the shuffle is avoided entirely
 (Catalyst recognizes the existing distribution).  Supply enough
 version columns to make the ordering total and survivors are
@@ -31,14 +31,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-_RN = "__final_rn"
-
 
 def final_view(
     df: DataFrame,
     keys: Sequence[str],
     version: Sequence[str],
-    strategy: str = "agg",
 ) -> DataFrame:
     """Latest-version-per-key view (ReplacingMergeTree FINAL).
 
@@ -47,38 +44,33 @@ def final_view(
     to make the ordering total or the survivor among exact ties is
     arbitrary (ClickHouse keeps an arbitrary row there too).
 
-    ``strategy``:
-    - ``"agg"`` (default): ``groupBy(keys)`` +
-      ``max_by(struct(non-key columns), struct(version))`` — a hash
-      aggregate with map-side partial combine; measured ~3× faster
-      than the window form at sf0.1 and strictly better at 100 TB (no
-      per-key sort, partials collapse before the shuffle).  Struct
-      comparison is lexicographic over the version columns, exactly
-      the ORDER BY ... DESC of the window form.  The key columns come
-      out of the grouping itself (they are constant per group, so the
-      survivor is unchanged), which keeps them visible to Catalyst: a
-      predicate on keys is pushed below the aggregate into the scan
-      (parquet row-group statistics skip other keys' row groups), and a
-      projection of keys only drops the ``max_by`` and plans a
-      distinct.  When every column is a key the view is that distinct.
-    - ``"window"``: row_number over (keys ORDER BY version DESC) —
-      kept for plans that already carry the right partitioning (a
-      window over a pre-bucketed table avoids re-shuffling partials).
-
-    Both strategies return the input's column names, order and types.
+    The view is ``groupBy(keys)`` + ``max_by(struct(non-key columns),
+    struct(version))`` — a hash aggregate with map-side partial
+    combine; measured ~3× faster than a row_number window at sf0.1 and
+    strictly better at 100 TB (no per-key sort, partials collapse
+    before the shuffle).  Struct comparison is lexicographic over the
+    version columns, exactly a window's ORDER BY ... DESC.  The key
+    columns come out of the grouping itself (they are constant per
+    group, so the survivor is unchanged), which keeps them visible to
+    Catalyst: a predicate on keys is pushed below the aggregate into
+    the scan (parquet row-group statistics skip other keys' row
+    groups), and a projection of keys only drops the ``max_by`` and
+    plans a distinct.  When every column is a key the view is that
+    distinct.  No keys (``ORDER BY tuple()``) make the whole input one
+    group.  The input's column names, order and types are kept.
     """
-    if strategy == "agg":
-        key_set = set(keys)
-        rest = [c for c in df.columns if c not in key_set]
-        if not rest:
-            return df.distinct()
-        latest = F.max_by(F.struct(*rest), F.struct(*[F.col(c) for c in version]))
-        out = [F.col(c) if c in key_set else F.col("__r")[c].alias(c) for c in df.columns]
-        return df.groupBy(*keys).agg(latest.alias("__r")).select(*out)
-    if strategy != "window":
-        raise ValueError(f"unknown dedup strategy {strategy!r}; use 'agg' or 'window'")
-    w = Window.partitionBy(*keys).orderBy(*[F.desc(c) for c in version])
-    return df.withColumn(_RN, F.row_number().over(w)).where(F.col(_RN) == 1).drop(_RN)
+    key_set = set(keys)
+    rest = [c for c in df.columns if c not in key_set]
+    if not rest:
+        return df.distinct()
+    latest = F.max_by(F.struct(*rest), F.struct(*[F.col(c) for c in version]))
+    out = [F.col(c) if c in key_set else F.col("__r")[c].alias(c) for c in df.columns]
+    grouped = df.groupBy(*keys).agg(latest.alias("__r"))
+    if not keys:
+        # a keyless table (ORDER BY tuple()) is one group, and a global
+        # aggregate answers an empty input with one all-NULL row
+        grouped = grouped.where(F.col("__r").isNotNull())
+    return grouped.select(*out)
 
 
 def exact_dup_groups(df: DataFrame, content: str, id_col: str) -> DataFrame:

@@ -86,7 +86,8 @@ def write_sorted(
         # reads ~1/32 of the files instead of all of them, which is the
         # entire point of a sort-clustered copy at 100 TB.
         out = out.repartitionByRange(*[F.col(c) for c in sort_cols])
-    out = out.sortWithinPartitions(*sort_cols)
+    if sort_cols:  # a keyless table (ORDER BY tuple()) keeps input order
+        out = out.sortWithinPartitions(*sort_cols)
     writer = out.write.mode(mode).option("compression", compression)
     for col in bloom_cols or []:
         writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")

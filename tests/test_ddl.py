@@ -1426,3 +1426,348 @@ def test_partition_by_expression_makes_one_dir_per_value(spark, wh):
     assert sorted(d for d in os.listdir(data) if d.startswith("_partition_id=")) == [
         "_partition_id=0", "_partition_id=1", "_partition_id=2"
     ]
+
+
+# --------------------------------------------------------------------------
+# The statement table: every form, every table-name spelling
+# --------------------------------------------------------------------------
+
+#: spelling → (database, how ``name`` is written)
+_SPELLINGS = {
+    "backticked": ("ana", "`ana`.`{}`"),
+    "dotted": ("ana", "ana.{}"),
+    "bare": ("default", "{}"),
+}
+
+#: (form, setup, statement, expected status) — ``{t}``/``{u}``/``{v}``
+#: are the table names ``t``/``u``/``v`` in the case's spelling, ``{q}``
+#: ``{qu}``/``{qv}`` their ``db.name``, ``{db}`` the database.  setup:
+#: None (empty database), "table" (``t`` exists), "rows" (``t`` holds
+#: k = 1..4 in partitions 0 and 1), "detached" (partition 1 detached),
+#: "view" (``v`` is a view over ``t``).
+_FORMS = [
+    ("create_table", None,
+     "CREATE TABLE {t} (`k` Int64, `v` Int64) ENGINE = MergeTree ORDER BY (k)",
+     "ok"),
+    ("create_table_as", None,
+     "CREATE TABLE {t} ENGINE = MergeTree ORDER BY (k) AS SELECT 1 AS k",
+     "created {q} as select"),
+    ("create_view", "table", "CREATE VIEW {v} AS SELECT k FROM {t}",
+     "created view {qv}"),
+    ("create_materialized_view", "table",
+     "CREATE MATERIALIZED VIEW {v} TO {t} AS SELECT k, v FROM {t}",
+     "created view {qv}"),
+    ("drop_table", "table", "DROP TABLE {t}", "ok"),
+    ("drop_view", "view", "DROP VIEW {v}", "ok"),
+    ("truncate", "rows", "TRUNCATE TABLE {t}", "ok"),
+    ("insert_values", "table", "INSERT INTO {t} (k, v) VALUES (5, 50)",
+     "inserted 1"),
+    ("insert_select", "table", "INSERT INTO {t} (k, v) SELECT 5, 50",
+     "inserted select into {q}"),
+    ("alter_delete", "rows", "ALTER TABLE {t} DELETE WHERE k = 1",
+     "mutated to 3"),
+    ("alter_update", "rows", "ALTER TABLE {t} UPDATE v = 0 WHERE k = 1",
+     "mutated to 4"),
+    ("drop_partition", "rows", "ALTER TABLE {t} DROP PARTITION 1",
+     "dropped partition 1"),
+    ("detach_partition", "rows", "ALTER TABLE {t} DETACH PARTITION '1'",
+     "detached partition 1"),
+    ("attach_partition", "detached", "ALTER TABLE {t} ATTACH PARTITION '1'",
+     "attached partition 1"),
+    ("add_column", "table", "ALTER TABLE {t} ADD COLUMN `w` String", "ok"),
+    ("drop_column", "table", "ALTER TABLE {t} DROP COLUMN v", "ok"),
+    ("modify_column", "rows", "ALTER TABLE {t} MODIFY COLUMN v Float64", "ok"),
+    ("rename_column", "table", "ALTER TABLE {t} RENAME COLUMN v TO w", "ok"),
+    ("optimize", "rows", "OPTIMIZE TABLE {t} FINAL DEDUPLICATE", "optimized 4"),
+    ("show_databases", "table", "SHOW DATABASES", None),
+    ("show_tables", "table", "SHOW TABLES{from_db}", "t"),
+    ("show_create", "table", "SHOW CREATE TABLE {t}", None),
+    ("describe", "table", "DESCRIBE TABLE {t}", "k\tInt64\nv\tInt64"),
+    ("desc", "table", "DESC {t}", "k\tInt64\nv\tInt64"),
+    ("exists", "table", "EXISTS TABLE {t}", "1"),
+    ("rename_table", "table", "RENAME TABLE {t} TO {u}", "renamed 1"),
+]
+
+
+@pytest.mark.parametrize("spelling", list(_SPELLINGS))
+@pytest.mark.parametrize(
+    "form, setup, stmt, want", _FORMS, ids=[f[0] for f in _FORMS]
+)
+def test_statement_forms_take_every_table_spelling(
+    spark, wh, form, setup, stmt, want, spelling
+):
+    """Each statement form names its table(s) through the one
+    table-name grammar: a backticked, a dotted and a bare name (the
+    ``default`` database) all reach the same table."""
+    db, spell = _SPELLINGS[spelling]
+    names = {k: spell.format(k) for k in ("t", "u", "v")}
+    quals = {"q": f"{db}.t", "qu": f"{db}.u", "qv": f"{db}.v"}
+    from_db = "" if db == "default" else " FROM " + spell.split(".")[0]
+    fmt = {**names, **quals, "db": db, "from_db": from_db}
+    if setup is not None:
+        wh.execute(
+            f"CREATE TABLE {db}.t (`k` Int64, `v` Int64) ENGINE = MergeTree "
+            "PARTITION BY k % 2 ORDER BY (k)"
+        )
+    if setup in ("rows", "detached"):
+        wh.execute(
+            f"INSERT INTO {db}.t VALUES (1, 10), (2, 20), (3, 30), (4, 40)",
+            spark=spark,
+        )
+    if setup == "detached":
+        wh.execute(f"ALTER TABLE {db}.t DETACH PARTITION '1'")
+    if setup == "view":
+        wh.execute(f"CREATE VIEW {db}.v AS SELECT k FROM {db}_t")
+    out = wh.execute(stmt.format(**fmt), spark=spark)
+    if want is not None:
+        assert out == want.format(**fmt)
+    q = quals["q"]
+    if form == "show_databases":
+        assert db in out.split("\n")
+    elif form == "show_create":
+        assert out.startswith(f"CREATE TABLE {q} (")
+    elif form in ("create_table", "create_table_as"):
+        assert wh.has_table(q)
+    elif form == "create_materialized_view":
+        td = wh.table_def(quals["qv"])
+        assert (td.mv_target, td.mv_source) == (q, q)
+    elif form in ("drop_table", "drop_view"):
+        assert not wh.has_table(quals["qv" if form == "drop_view" else "q"])
+    elif form == "rename_table":
+        assert (wh.has_table(q), wh.has_table(quals["qu"])) == (False, True)
+    elif form in ("truncate", "alter_delete", "drop_partition",
+                  "detach_partition", "attach_partition"):
+        left = {"truncate": set(), "alter_delete": {2, 3, 4},
+                "drop_partition": {2, 4}, "detach_partition": {2, 4},
+                "attach_partition": {1, 2, 3, 4}}[form]
+        data = wh._read(spark, wh.table_def(q))
+        assert (set() if data is None else {r.k for r in data.collect()}) == left
+    elif form in ("add_column", "drop_column", "rename_column", "modify_column"):
+        cols = [(c.name, c.ch_type) for c in wh.table_def(q).columns]
+        assert cols == {
+            "add_column": [("k", "Int64"), ("v", "Int64"), ("w", "String")],
+            "drop_column": [("k", "Int64")],
+            "rename_column": [("k", "Int64"), ("w", "Int64")],
+            "modify_column": [("k", "Int64"), ("v", "Float64")],
+        }[form]
+
+
+def test_unmatched_statement_names_its_verb(wh):
+    """A statement whose verb the table owns but whose form it does not
+    is ``unparseable <verb>``; any other text is not a statement."""
+    for stmt, verb in [
+        ("ALTER TABLE t FREEZE", "ALTER"),
+        ("create table t", "CREATE"),
+        ("OPTIMIZE t", "OPTIMIZE"),
+        ("SHOW PROCESSLIST", "SHOW"),
+        ("DESC", "DESC"),
+    ]:
+        with pytest.raises(DdlError, match=f"^unparseable {verb}: "):
+            wh.execute(stmt)
+    with pytest.raises(DdlError, match="not a DDL/DML statement"):
+        wh.execute("WITH 1 AS x SELECT x")
+
+
+def test_statement_trailing_semicolon(spark, wh):
+    """Every form takes an optional trailing ``;`` — the grammar ends
+    each statement the same way."""
+    wh.execute("CREATE DATABASE ana;")
+    wh.execute("CREATE TABLE ana.t (`k` Int64) ENGINE = MergeTree ORDER BY (k);")
+    assert wh.execute("INSERT INTO ana.t VALUES (1), (2);", spark=spark) == (
+        "inserted 2"
+    )
+    assert wh.execute("ALTER TABLE ana.t DELETE WHERE k = 1;", spark=spark) == (
+        "mutated to 1"
+    )
+    assert wh.execute("DROP TABLE ana.t ;") == "ok"
+
+
+def test_table_name_grammar_spelled_once():
+    """Layout guard: ddl.py spells the table-name grammar once, defaults
+    the database in one place, and keeps no second CREATE path; the CLI
+    keeps no verb list of its own."""
+    import inspect
+    import re
+
+    from clickhub_spark import __main__ as cli
+    from clickhub_spark import ddl
+
+    src = inspect.getsource(ddl)
+    assert src.count(r"`?\.)?") == 1
+    assert len(re.findall(r"""or ["']default["']""", src)) == 1
+    assert "_CTAS_RE" not in src and "re.sub(" not in inspect.getsource(
+        ddl.Warehouse.execute
+    )
+    assert '"OPTIMIZE"' not in inspect.getsource(cli)
+
+
+def test_cli_routes_every_table_verb(spark, tmp_path, capsys, monkeypatch):
+    """`sql --file` sends each statement whose leading word the
+    statement table owns to Warehouse.execute — one statement per
+    verb, in any case — and everything else to the SELECT shim."""
+    from clickhub_spark import ddl
+    from clickhub_spark.__main__ import main
+
+    stmts = [
+        "CREATE DATABASE x", "drop table x.t", "TRUNCATE x.t",
+        "INSERT INTO x.t VALUES (1)", "ALTER TABLE x.t DROP COLUMN c",
+        "optimize TABLE x.t", "SHOW TABLES", "DESCRIBE x.t", "desc x.t",
+        "EXISTS x.t", "RENAME TABLE x.t TO x.u",
+    ]
+    routed = []
+    monkeypatch.setattr(
+        ddl.Warehouse, "execute", lambda self, s, spark=None: routed.append(s) or "routed"
+    )
+    boot = tmp_path / "verbs.sql"
+    boot.write_text(";\n".join(stmts) + ";\nSELECT 41 + 1 AS answer\n")
+    rc = main(["--data-dir", str(tmp_path / "data"), "sql", "--file",
+               str(boot), "--format", "csv"])
+    assert rc in (0, None)
+    assert [s.strip() for s in routed] == stmts
+    assert {s.split()[0].upper() for s in stmts} == ddl.STATEMENT_VERBS
+    out = capsys.readouterr().out
+    assert out.count("routed") == len(stmts) and "answer\n42" in out
+
+
+# --------------------------------------------------------------------------
+# CTAS is a front end to CREATE TABLE
+# --------------------------------------------------------------------------
+
+
+@pytest.fixture()
+def ana_src(spark, wh):
+    wh.execute("CREATE DATABASE ana")
+    wh.execute(
+        "CREATE TABLE ana.src (`k` Int64, `u` Int64, `s` Int8) "
+        "ENGINE = MergeTree ORDER BY (k)"
+    )
+    wh.insert(
+        spark, "ana.src",
+        spark.range(30).selectExpr("id AS k", "id * 7 AS u", "CAST(1 AS TINYINT) AS s"),
+    )
+    return wh
+
+
+def test_ctas_keeps_every_create_table_clause(spark, ana_src):
+    import os
+
+    wh = ana_src
+    out = wh.execute(
+        "CREATE TABLE ana.c ENGINE = MergeTree PARTITION BY k % 3 "
+        "PRIMARY KEY (k) ORDER BY (k, u) SAMPLE BY u "
+        "SETTINGS index_granularity = 1024 AS SELECT k, u FROM ana_src",
+        spark=spark,
+    )
+    assert out == "created ana.c as select"
+    td = wh.table_def("ana.c")
+    assert (td.partition_expr, td.primary_key, td.order_by, td.sample_by) == (
+        "k % 3", ["k"], ["k", "u"], "u"
+    )
+    assert td.settings == {"index_granularity": "1024"}
+    data = os.path.join(wh.root, "ana", "c", "data")
+    assert sorted(d for d in os.listdir(data) if d.startswith("_partition_id=")) == [
+        "_partition_id=0", "_partition_id=1", "_partition_id=2"
+    ]
+    assert wh.read(spark, "ana.c").count() == 30
+
+
+def test_ctas_collapsing_engine_validated_like_create_table(spark, ana_src):
+    wh = ana_src
+    wh.execute(
+        "CREATE TABLE ana.col ENGINE = CollapsingMergeTree(s) ORDER BY (k) "
+        "AS SELECT k, s FROM ana_src",
+        spark=spark,
+    )
+    assert wh.read_final(spark, "ana.col").count() == 30
+    with pytest.raises(
+        DdlError,
+        match=r"CollapsingMergeTree engine args reference unknown columns \['s'\]",
+    ):
+        wh.execute(
+            "CREATE TABLE ana.col2 ENGINE = CollapsingMergeTree(s) "
+            "ORDER BY (k) AS SELECT k FROM ana_src",
+            spark=spark,
+        )
+
+
+@pytest.mark.parametrize(
+    "stmt, err",
+    [
+        ("CREATE TABLE ana.bad ENGINE = MergeTree ORDER BY (nope) "
+         "AS SELECT k FROM ana_src", r"ORDER BY references unknown columns \['nope'\]"),
+        ("CREATE TABLE ana.bad ENGINE = MergeTree AS SELECT k FROM ana_src",
+         "MergeTree requires ORDER BY"),
+        ("CREATE TABLE ana.bad ENGINE = VersionedCollapsingMergeTree(s) "
+         "ORDER BY (k) AS SELECT k, s FROM ana_src", "needs 2 engine argument"),
+        ("CREATE TABLE ana.bad ENGINE = KeeperMap('q') PRIMARY KEY k "
+         "AS SELECT k FROM ana_src", "CTAS supports MergeTree engines"),
+        ("CREATE TABLE ana.bad ENGINE = MergeTree ORDER BY (k) "
+         "AS SELECT k, map(1, 2) AS m FROM ana_src", "no ClickHouse type mapping"),
+    ],
+)
+def test_ctas_failing_validation_leaves_nothing(spark, ana_src, stmt, err):
+    import os
+
+    wh = ana_src
+    with pytest.raises(DdlError, match=err):
+        wh.execute(stmt, spark=spark)
+    assert not wh.has_table("ana.bad")
+    assert not os.path.exists(os.path.join(wh.root, "ana", "bad"))
+    assert not Warehouse(wh.root).has_table("ana.bad")
+
+
+@pytest.mark.parametrize("form", ["create_table", "create_table_as"])
+def test_order_by_tuple_is_a_keyless_sorting_key(spark, ana_src, form):
+    """``ORDER BY tuple()`` — ClickHouse's keyless MergeTree — through
+    both CREATE forms, INSERT, FINAL read, OPTIMIZE and SHOW CREATE."""
+    wh = ana_src
+    if form == "create_table":
+        wh.execute(
+            "CREATE TABLE ana.kl (`k` Int64, `u` Int64) "
+            "ENGINE = ReplacingMergeTree(u) ORDER BY tuple()"
+        )
+        wh.execute("INSERT INTO ana.kl SELECT k, u FROM ana_src", spark=spark)
+    else:
+        wh.execute(
+            "CREATE TABLE ana.kl ENGINE = ReplacingMergeTree(u) "
+            "ORDER BY tuple() AS SELECT k, u FROM ana_src",
+            spark=spark,
+        )
+    assert wh.table_def("ana.kl").order_by == []
+    wh.execute("INSERT INTO ana.kl (k, u) VALUES (99, 1)", spark=spark)
+    assert wh.read(spark, "ana.kl").count() == 31
+    # every row shares the empty key: FINAL keeps the highest version
+    assert [tuple(r) for r in wh.read_final(spark, "ana.kl").collect()] == [(29, 203)]
+    assert wh.execute("OPTIMIZE TABLE ana.kl FINAL", spark=spark) == "optimized 1"
+    assert wh.read(spark, "ana.kl").count() == 1
+    # an emptied keyless table has no FINAL row (not one all-NULL row)
+    wh.execute("ALTER TABLE ana.kl DELETE WHERE k >= 0", spark=spark)
+    assert wh.read_final(spark, "ana.kl").collect() == []
+    stmt = wh.execute("SHOW CREATE TABLE ana.kl")
+    assert stmt.endswith("ORDER BY tuple()")
+    assert parse_create_table(stmt).order_by == []
+    with pytest.raises(DdlError, match="MergeTree requires ORDER BY"):
+        wh.execute("CREATE TABLE ana.no (`k` Int64) ENGINE = MergeTree")
+
+
+def test_rename_table_forgets_sample_key(spark, wh):
+    """RENAME TABLE drops the source's SAMPLE BY registration the way
+    DROP TABLE does: a new table under the old name with no SAMPLE BY
+    must not be sliced by the old key."""
+    from clickhub_spark.sql_compat import run
+
+    wh.execute("CREATE DATABASE ana")
+    wh.execute(
+        "CREATE TABLE ana.t (`k` Int64, `u` Int64) ENGINE = MergeTree "
+        "ORDER BY (k, u) SAMPLE BY u"
+    )
+    wh.execute("INSERT INTO ana.t VALUES (1, 2), (3, 4)", spark=spark)
+    wh.register_views(spark)
+    wh.execute("RENAME TABLE ana.t TO ana.t_old")
+    wh.execute(
+        "CREATE TABLE ana.t (`k` Int64, `v` Int64) ENGINE = MergeTree ORDER BY (k)"
+    )
+    wh.execute("INSERT INTO ana.t VALUES (1, 2)", spark=spark)
+    wh.register_views(spark)
+    with pytest.raises(Exception, match="needs a sampling key"):
+        run(spark, "SELECT count() FROM ana_t SAMPLE 1/2 OFFSET 1/2").collect()

@@ -4,6 +4,7 @@ pruned scan schemas, broadcast joins, partial aggregation, top-k
 without full sort, codegen in the hot path."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from clickhub_spark.plans import all_specs
 
@@ -88,6 +89,19 @@ def test_partition_pruning_on_sorted_write(spark, tmp_path):
     # PartitionFilters (attribute ids like event_type#14 vary by run)
     pf_lines = [l for l in plan.splitlines() if "PartitionFilters" in l]
     assert pf_lines and "= click)" in pf_lines[0] and "isnotnull(event_type" in pf_lines[0]
+
+
+@pytest.mark.parametrize("partition_by", [None, "p"])
+def test_write_sorted_without_sort_key(spark, tmp_path, partition_by):
+    """A keyless table (``ORDER BY tuple()``) has no sort columns:
+    write_sorted skips the range repartition and the in-file sort
+    instead of calling sortWithinPartitions() with no columns."""
+    from clickhub_spark.sources.writer import write_sorted
+
+    path = str(tmp_path / "keyless")
+    df = spark.range(10).selectExpr("id AS k", "CAST(id % 2 AS STRING) AS p")
+    write_sorted(df, path, partition_by, [])
+    assert sorted(r.k for r in spark.read.parquet(path).collect()) == list(range(10))
 
 
 def test_bucketed_join_avoids_shuffle(spark):

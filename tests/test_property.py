@@ -3,6 +3,8 @@ reference's test suite lacks entirely (SURVEY §5)."""
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from clickhub_spark.operators.dedup import final_view
 
@@ -65,9 +67,9 @@ keyed_rows_strategy = st.lists(
     shape=st.sampled_from(["versioned", "version_is_keys", "all_keys"]),
 )
 def test_final_view_agg_matches_window(spark, rows, shape):
-    """For ANY rows with null and in-batch duplicate keys, the "agg"
-    strategy returns the same rows and schema (names, order, types) as
-    the "window" strategy.  Shapes: a total version order; version ==
+    """For ANY rows with null and in-batch duplicate keys, final_view's
+    max_by aggregate returns the same rows and schema (names, order,
+    types) as the row_number window form.  Shapes: a total version order; version ==
     keys (the DDL fallback for a ReplacingMergeTree with no version
     column, where each key's rows are exact re-imports, so the
     survivor is unique); and a table whose columns are all keys."""
@@ -85,7 +87,9 @@ def test_final_view_agg_matches_window(spark, rows, shape):
         df = df.select("k2", "k1")
         version = keys
     agg = final_view(df, keys=keys, version=version)
-    win = final_view(df, keys=keys, version=version, strategy="window")
+    # reference: the row_number window form of the same view
+    w = Window.partitionBy(*keys).orderBy(*[F.desc(c) for c in version])
+    win = df.withColumn("__rn", F.row_number().over(w)).where("__rn = 1").drop("__rn")
     assert [(f.name, f.dataType) for f in agg.schema] == [
         (f.name, f.dataType) for f in win.schema
     ]
