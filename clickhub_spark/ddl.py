@@ -698,14 +698,19 @@ _MERGE_TREE_ENGINES = {
 }
 
 
-def _forget_sample_keys(td: TableDef) -> None:
-    """Drop the SAMPLE BY registrations of ``td``'s view names (DROP
-    and RENAME) — a stale key would silently slice a LATER same-named
-    table by the wrong column (review r15)."""
+def _forget_session_names(td: TableDef, spark: SparkSession | None) -> None:
+    """Forget what sessions know of ``td`` under its ``db_t`` view name
+    (DROP and RENAME): its SAMPLE BY key, which would slice a later
+    same-named table by the wrong column, and, given a session, the
+    ``db_t`` / ``db_t_final`` temp views, so a read of the old name
+    fails as table-not-found instead of on a moved or deleted path."""
     from clickhub_spark.sql_compat import _SAMPLE_KEYS
 
-    _SAMPLE_KEYS.pop(td.name.lower(), None)
-    _SAMPLE_KEYS.pop(f"{td.database}_{td.name}".lower(), None)
+    base = f"{td.database}_{td.name}"
+    _SAMPLE_KEYS.pop(base.lower(), None)
+    if spark is not None:
+        for view in (base, f"{base}_final"):
+            spark.catalog.dropTempView(view)
 
 
 class Warehouse:
@@ -836,12 +841,16 @@ class Warehouse:
             if m["ie"]:
                 return "absent"
             raise DdlError(f"table {q} does not exist")
-        td = self._tables.pop(q)
-        shutil.rmtree(self._dir(td.database, td.name), ignore_errors=True)
-        self._queues.pop(q, None)
-        _forget_sample_keys(td)
-        self._bump_catalog()
+        self._remove(self._tables[q], spark)
         return "ok"
+
+    def _remove(self, td: TableDef, spark: SparkSession | None) -> None:
+        """Drop ``td`` from the catalog, the disk and the session."""
+        del self._tables[td.qualified]
+        shutil.rmtree(self._dir(td.database, td.name), ignore_errors=True)
+        self._queues.pop(td.qualified, None)
+        _forget_session_names(td, spark)
+        self._bump_catalog()
 
     def _truncate(self, m: re.Match, spark: SparkSession | None) -> str:
         td = self._require(_qualified(m))
@@ -951,7 +960,8 @@ class Warehouse:
         to CREATE TABLE: the column list comes from the SELECT's schema
         (Spark types → ClickHouse text via ch_type_of), every clause
         after it goes through the same parse and validation, and the
-        result is the first batch.  MergeTree-family engines only."""
+        result is the first batch — a SELECT that fails at write time
+        leaves no table behind.  MergeTree-family engines only."""
         if spark is None:
             raise DdlError("CREATE TABLE … AS SELECT needs a SparkSession")
         from clickhub_spark.sql_compat import run as _run
@@ -972,7 +982,11 @@ class Warehouse:
         src = src.select(
             *[F.col(n).cast(schema[n].dataType).alias(n) for n in schema.names]
         )
-        self._finish_insert(spark, td, src, schema.names)
+        try:
+            self._finish_insert(spark, td, src, schema.names)
+        except BaseException:
+            self._remove(td, spark)
+            raise
         return f"created {td.qualified} as select"
 
     # -- introspection statements --------------------------------------------
@@ -1026,7 +1040,7 @@ class Warehouse:
             moves.append((src, _db(pm, "to_"), pm["to_name"]))
         for src, dst_db, dst_name in moves:
             td = self._tables.pop(src)
-            _forget_sample_keys(td)
+            _forget_session_names(td, spark)
             old_dir = self._dir(td.database, td.name)
             os.makedirs(os.path.join(self.root, dst_db), exist_ok=True)
             shutil.move(old_dir, self._dir(dst_db, dst_name))
@@ -1794,7 +1808,6 @@ class Warehouse:
                 from clickhub_spark.sql_compat import set_sample_key
 
                 set_sample_key(base, td.sample_by)
-                set_sample_key(td.name, td.sample_by)
             out.append(base)
             if td.engine in self._FINAL_ENGINES:
                 self.read_final(spark, q).createOrReplaceTempView(f"{base}_final")

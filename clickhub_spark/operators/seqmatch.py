@@ -35,6 +35,9 @@ Two execution paths, chosen by the pattern:
 ``sequence_count`` counts NON-OVERLAPPING matches, resuming after
 each complete match (the engine's scan-restart), which for the regex
 path is exactly Java's left-to-right non-overlapping find semantics.
+
+``sequence_next_node`` (sequenceNextNode) needs no entry list: a
+fixed chain is a run of lead() tests over one per-user window.
 """
 
 from __future__ import annotations
@@ -44,6 +47,7 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 #: entry alphabet: bitset value 1..63 → one letter (6 conditions max;
 #: letters only, so no regex metacharacter ever appears in a string)
@@ -411,3 +415,82 @@ def sequence_match_events(
         df, user_col, ts_col, order, conds, per_user,
         "event_times array<double>", "event_times", user_type,
     )
+
+
+#: (direction, base) pairs sequenceNextNode defines meaningfully —
+#: head pairs with forward, tail with backward, the match bases with
+#: either direction.  The operator and the SQL render both check here.
+_NEXT_NODE_COMBOS = frozenset({
+    ("forward", "head"),
+    ("backward", "tail"),
+    ("forward", "first_match"),
+    ("forward", "last_match"),
+    ("backward", "first_match"),
+    ("backward", "last_match"),
+})
+
+
+def check_next_node_combo(direction: str, base: str) -> None:
+    if (direction, base) not in _NEXT_NODE_COMBOS:
+        raise ValueError(
+            f"sequenceNextNode({direction!r}, {base!r}) is not a "
+            "meaningful direction/base combination"
+        )
+
+
+def sequence_next_node(
+    df: DataFrame,
+    user_col: str,
+    order: Sequence[str],
+    event_col: str,
+    direction: str,
+    base: str,
+    base_cond: Column,
+    chain: Sequence[Column],
+) -> DataFrame:
+    """sequenceNextNode(direction, base)(ts, event_col, base_cond,
+    chain…): per user, the ``event_col`` value of the event that
+    follows the matched chain in traversal order (time order for
+    ``forward``, reversed for ``backward``) — NULL when the chain
+    closes the stream.  The chain matches at position p when
+    ``base_cond`` and ``chain[0]`` hold at p and ``chain[k]`` at
+    p + k (a NULL condition is false).  ``head``/``tail`` test only
+    the first position in traversal order; ``first_match`` /
+    ``last_match`` take the first / last matching position.  Users
+    without a match have no row.  ``order`` must be a per-user total
+    order (unique tiebreaker).
+
+    One window partitioned by ``user_col`` carries the next node and
+    the chain test, so the plan has one ``user_col`` exchange.
+    head/tail rank in that same Window; the match bases filter on the
+    chain first and then keep rank 1, which Spark prunes as a
+    WindowGroupLimit.  Returns (user_col, next_node)."""
+    check_next_node_combo(direction, base)
+    if not chain:
+        raise ValueError("sequenceNextNode needs at least one chain event")
+    asc = [F.col(c).asc() for c in order]
+    desc = [F.col(c).desc() for c in order]
+    trav, rev = (asc, desc) if direction == "forward" else (desc, asc)
+    w = Window.partitionBy(user_col).orderBy(*trav)
+    chain_ok = base_cond & chain[0]
+    for k, c in enumerate(chain[1:], 1):
+        chain_ok = chain_ok & F.lead(c, k).over(w)
+    cols = [
+        F.lead(event_col, len(chain)).over(w).alias("next_node"),
+        F.coalesce(chain_ok, F.lit(False)).alias("__ok"),
+    ]
+    if base in ("head", "tail"):
+        hits = df.select(
+            user_col, *cols, F.row_number().over(w).alias("__rn")
+        ).where((F.col("__rn") == 1) & F.col("__ok"))
+    else:
+        rank = Window.partitionBy(user_col).orderBy(
+            *(trav if base == "first_match" else rev)
+        )
+        hits = (
+            df.select(user_col, *order, *cols)
+            .where(F.col("__ok"))
+            .withColumn("__rn", F.row_number().over(rank))
+            .where(F.col("__rn") == 1)
+        )
+    return hits.select(user_col, "next_node")

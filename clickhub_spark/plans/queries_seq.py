@@ -18,6 +18,39 @@ from clickhub_spark.catalog import load
 from clickhub_spark.plans.registry import query
 
 
+def _next_nodes(
+    spark: SparkSession,
+    sf_dir: str,
+    direction: str,
+    base: str,
+    base_type: str,
+    *chain: str,
+    drop_null_users: bool = True,
+) -> DataFrame:
+    """operators/seqmatch.sequence_next_node over events in (ts,
+    event_id) order, each condition an ``event_type = …`` test."""
+    from clickhub_spark.operators.seqmatch import sequence_next_node
+
+    ev = load(spark, sf_dir, "events")
+    if drop_null_users:
+        ev = ev.where(F.col("user_id").isNotNull())
+    ty = F.col("event_type")
+    return sequence_next_node(
+        ev, "user_id", ["ts", "event_id"], "event_type", direction, base,
+        ty == base_type, [ty == c for c in chain],
+    )
+
+
+def _or_end():
+    """next_node with '<end>' for a chain that closes the stream."""
+    return F.coalesce(F.col("next_node"), F.lit("<end>")).alias("next_node")
+
+
+def _node_counts(nodes: DataFrame) -> DataFrame:
+    """Users per next node ('<end>' included)."""
+    return nodes.groupBy(_or_end()).agg(F.count(F.lit(1)).alias("n_users"))
+
+
 @query(
     "q_seq_match",
     oracle="""
@@ -177,25 +210,13 @@ def q_seq_next_node(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_seq_match/q_seq_count/q_funnel): for each user, the event type
     immediately FOLLOWING their first 'view' event in time order —
     NULL when the view is the user's last event, exactly
-    sequenceNextNode('forward','first_match')'s contract.
-
-    100 TB shape: ONE user_id exchange feeds both windows (lead and
-    the first-match row_number run over the same partitioning —
-    Catalyst reuses the sort), so cost is the sessionize shape: one
-    shuffle of the facts, zero joins, no SinglePartition anywhere.
-    Both windows carry the (ts, event_id) unique tiebreaker so the
-    selected row is deterministic across engines."""
-    from pyspark.sql.window import Window
-
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    nxt = ev.withColumn("next_type", F.lead("event_type").over(w))
-    first_view = (
-        nxt.where(F.col("event_type") == "view")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
+    sequenceNextNode('forward','first_match')'s contract."""
+    out = _next_nodes(
+        spark, sf_dir, "forward", "first_match", "view", "view",
+        drop_null_users=False,
     )
-    return first_view.select("user_id", "next_type").orderBy("user_id")
+    nxt = F.col("next_node").alias("next_type")
+    return out.select("user_id", nxt).orderBy("user_id")
 
 
 @query(
@@ -225,35 +246,9 @@ def q_seq_next_node_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type = 'view', event_type = 'view', event_type =
     'click')``): for each user, the event that FOLLOWS the first
     consecutive view→click pair in the time-ordered stream ('<end>'
-    when the chain closes the stream).  Completes the family next to
-    q_seq_next_node (above), which covers the single-event
-    base.
-
-    One user_id exchange shared by the lead pair scan and the
-    first-match rank; the aggregate runs on <=1 row per user."""
-    from pyspark.sql.window import Window
-
-    ev = load(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    o = ev.select(
-        "user_id",
-        "event_type",
-        F.lead("event_type", 1).over(w).alias("nxt1"),
-        F.lead("event_type", 2).over(w).alias("nxt2"),
-        F.row_number().over(w).alias("rn"),
-    )
-    m = o.where(
-        (F.col("event_type") == "view") & (F.col("nxt1") == "click")
-    ).withColumn(
-        "mr",
-        F.row_number().over(
-            Window.partitionBy("user_id").orderBy("rn")
-        ),
-    )
-    return (
-        m.where(F.col("mr") == 1)
-        .groupBy(F.coalesce(F.col("nxt2"), F.lit("<end>")).alias("next_node"))
-        .agg(F.count(F.lit(1)).alias("n_users"))
+    when the chain closes the stream), counted per next node."""
+    return _node_counts(
+        _next_nodes(spark, sf_dir, "forward", "first_match", "view", "view", "click")
     )
 
 
@@ -573,30 +568,9 @@ def q_seq_next_node_backward(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type = 'click', event_type = 'click')`` — VERDICT r11 #5):
     for each user whose LAST event is a click, the event immediately
     BEFORE it in time ('<end>' when the click is the user's only
-    event), aggregated to next_node counts.
-
-    Same shape as the forward family with the traversal reversed: one
-    user_id exchange feeds the descending rank and the descending
-    lead (= previous event in time); the aggregate runs on <=1 row
-    per user."""
-    from pyspark.sql.window import Window
-
-    ev = load(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    wd = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    o = ev.select(
-        "user_id",
-        "event_type",
-        F.row_number().over(wd).alias("rd"),
-        F.lead("event_type").over(wd).alias("prev_type"),
-    )
-    return (
-        o.where((F.col("rd") == 1) & (F.col("event_type") == "click"))
-        .groupBy(
-            F.coalesce(F.col("prev_type"), F.lit("<end>")).alias("next_node")
-        )
-        .agg(F.count(F.lit(1)).alias("n_users"))
+    event), aggregated to next_node counts."""
+    return _node_counts(
+        _next_nodes(spark, sf_dir, "backward", "tail", "click", "click")
     )
 
 
@@ -625,29 +599,9 @@ def q_seq_next_node_last_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type = 'view', event_type = 'view')`` — VERDICT r11 #5):
     for each user, the event type immediately following their LAST
     'view' event in time order ('<end>' when that view closes the
-    stream).  Mirrors q_seq_next_node (r7, first_match) with the
-    match rank reversed; both windows share the single user_id
-    exchange and sort."""
-    from pyspark.sql.window import Window
-
-    ev = load(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    o = ev.select(
-        "user_id",
-        "event_type",
-        F.lead("event_type").over(w).alias("next_type"),
-        F.row_number().over(w).alias("rn"),
-    )
-    v = o.where(F.col("event_type") == "view").withColumn(
-        "mr",
-        F.row_number().over(
-            Window.partitionBy("user_id").orderBy(F.col("rn").desc())
-        ),
-    )
-    return v.where(F.col("mr") == 1).select(
-        "user_id",
-        F.coalesce(F.col("next_type"), F.lit("<end>")).alias("next_node"),
-    )
+    stream)."""
+    out = _next_nodes(spark, sf_dir, "forward", "last_match", "view", "view")
+    return out.select("user_id", _or_end())
 
 
 @query(
@@ -673,29 +627,9 @@ def q_seq_next_node_head(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose FIRST event is an error, the event immediately after it
     ('<end>' when the error is the only event), aggregated to
     next_node counts ('error' because every SF's testdata has users
-    opening with one; no user opens with a 'view' at sf0.001).
-    With q_seq_next_node (first_match, r7), q_seq_next_node_chain
-    (multi-event base, r11), and the r12 backward/last_match forms
-    this completes the engine's meaningful direction x base matrix.
-
-    One user_id exchange feeds the ascending rank and lead; the
-    aggregate runs on <=1 row per user."""
-    from pyspark.sql.window import Window
-
-    ev = load(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    o = ev.select(
-        "user_id",
-        "event_type",
-        F.lead("event_type").over(w).alias("next_type"),
-        F.row_number().over(w).alias("rn"),
-    )
-    return (
-        o.where((F.col("rn") == 1) & (F.col("event_type") == "error"))
-        .groupBy(
-            F.coalesce(F.col("next_type"), F.lit("<end>")).alias("next_node")
-        )
-        .agg(F.count(F.lit(1)).alias("n_users"))
+    opening with one; no user opens with a 'view' at sf0.001)."""
+    return _node_counts(
+        _next_nodes(spark, sf_dir, "forward", "head", "error", "error")
     )
 
 
@@ -727,26 +661,6 @@ def q_seq_next_node_backward_first(
     event_type, event_type = 'view', event_type = 'view')``): the
     first match in backward traversal is the user's LATEST view; the
     "next node" in backward direction is the event immediately BEFORE
-    it in time ('<end>' when that view opens the stream).  Per-user
-    rows, mirroring q_seq_next_node (forward/first_match) with the
-    traversal reversed — both windows share one user_id exchange."""
-    from pyspark.sql.window import Window
-
-    ev = load(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    wd = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    o = ev.select(
-        "user_id",
-        "event_type",
-        F.lead("event_type").over(wd).alias("prev_type"),
-        F.row_number().over(wd).alias("rd"),
-    )
-    v = o.where(F.col("event_type") == "view").withColumn(
-        "mr",
-        F.row_number().over(Window.partitionBy("user_id").orderBy("rd")),
-    )
-    return v.where(F.col("mr") == 1).select(
-        "user_id",
-        F.coalesce(F.col("prev_type"), F.lit("<end>")).alias("next_node"),
-    )
+    it in time ('<end>' when that view opens the stream)."""
+    out = _next_nodes(spark, sf_dir, "backward", "first_match", "view", "view")
+    return out.select("user_id", _or_end())

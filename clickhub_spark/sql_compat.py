@@ -57,6 +57,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
+from clickhub_spark.operators.seqmatch import check_next_node_combo
 from clickhub_spark.sqltext import (
     depth,
     find_code,
@@ -402,19 +403,6 @@ def _retention_sql(args: list[str]) -> str:
     return f"array({', '.join(cells)})"
 
 
-#: (direction, base) combinations the engine defines meaningfully —
-#: head pairs with forward, tail with backward, the match bases with
-#: either direction.
-_NEXT_NODE_COMBOS = {
-    ("forward", "head"),
-    ("backward", "tail"),
-    ("forward", "first_match"),
-    ("forward", "last_match"),
-    ("backward", "first_match"),
-    ("backward", "last_match"),
-}
-
-
 def _sequence_next_node_sql(params: list[str], args: list[str]) -> str:
     """Render ``sequenceNextNode(direction, base)(ts, event_col,
     base_cond, event1, …)`` as one sorted-entry-array aggregate: build
@@ -423,25 +411,21 @@ def _sequence_next_node_sql(params: list[str], args: list[str]) -> str:
     head/tail; first/last chain match otherwise, base_cond checked on
     the base point), and return the value of the NEXT entry in
     traversal order — NULL when the chain fails or closes the stream.
-    Mirrors the registered operators (q_seq_next_node* family), which
-    carry the oracle-checked window construction; this form exists for
-    dialect parity, trading the one-exchange window plan for a
-    per-group array (fine at SQL-shim scale, not the 100 TB path).
-    Cross-event timestamp ties order by (t, value, conds) — the
-    operators use the caller's unique tiebreaker instead; the engine's
-    own tie order is merge-nondeterministic, so any pinned order is a
-    determinism improvement."""
+    Mirrors operators/seqmatch.sequence_next_node, which carries the
+    oracle-checked window construction (the q_seq_next_node* family);
+    this form exists for dialect parity, trading the one-exchange
+    window plan for a per-group array (fine at SQL-shim scale, not the
+    100 TB path).  Cross-event timestamp ties order by (t, value,
+    conds) — the operator uses the caller's unique tiebreaker instead;
+    the engine's own tie order is merge-nondeterministic, so any
+    pinned order is a determinism improvement."""
     if len(params) != 2:
         raise ValueError(
             "sequenceNextNode takes exactly (direction, base) params"
         )
     direction = params[0].strip().strip("'\"")
     base = params[1].strip().strip("'\"")
-    if (direction, base) not in _NEXT_NODE_COMBOS:
-        raise ValueError(
-            f"sequenceNextNode({direction!r}, {base!r}) is not a "
-            "meaningful direction/base combination"
-        )
+    check_next_node_combo(direction, base)
     if len(args) < 4:
         raise ValueError(
             "sequenceNextNode needs (ts, event_col, base_cond, "

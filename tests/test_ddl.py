@@ -1771,3 +1771,85 @@ def test_rename_table_forgets_sample_key(spark, wh):
     wh.register_views(spark)
     with pytest.raises(Exception, match="needs a sampling key"):
         run(spark, "SELECT count() FROM ana_t SAMPLE 1/2 OFFSET 1/2").collect()
+
+
+def test_ctas_failing_at_write_leaves_nothing(spark, ana_src):
+    """A SELECT that fails only when the first insert runs (an ANSI
+    cast error) removes the table again, so the same CTAS with a valid
+    SELECT succeeds instead of answering ``already exists``."""
+    import os
+
+    wh = ana_src
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        wh.execute(
+            "CREATE TABLE ana.c ENGINE = MergeTree ORDER BY (k) "
+            "AS SELECT k, CAST('x' AS INT) + k AS bad FROM ana_src",
+            spark=spark,
+        )
+    assert not wh.has_table("ana.c")
+    assert not os.path.exists(os.path.join(wh.root, "ana", "c"))
+    assert wh.execute(
+        "CREATE TABLE ana.c ENGINE = MergeTree ORDER BY (k) "
+        "AS SELECT k, k + 1 AS bad FROM ana_src",
+        spark=spark,
+    ) == "created ana.c as select"
+    assert wh.read(spark, "ana.c").count() == 30
+
+
+@pytest.mark.parametrize(
+    "stmt", ["RENAME TABLE ana.t TO ana.t2", "DROP TABLE ana.t"]
+)
+def test_drop_and_rename_forget_session_views(spark, wh, stmt):
+    """DROP and RENAME unregister the old ``db_t`` / ``db_t_final``
+    views: reading the old name fails as table-not-found, not on the
+    moved or deleted files."""
+    from clickhub_spark.sql_compat import run
+
+    wh.execute("CREATE DATABASE ana")
+    wh.execute(
+        "CREATE TABLE ana.t (`k` Int64, `v` Int64) "
+        "ENGINE = ReplacingMergeTree ORDER BY (k)"
+    )
+    wh.execute("INSERT INTO ana.t VALUES (1, 2), (1, 3)", spark=spark)
+    assert {"ana_t", "ana_t_final"} <= set(wh.register_views(spark))
+    wh.execute(stmt, spark=spark)
+    for view in ("ana_t", "ana_t_final"):
+        with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND"):
+            run(spark, f"SELECT count() FROM {view}").collect()
+
+
+def test_same_named_tables_keep_their_own_sample_keys(spark, wh):
+    """``a.t SAMPLE BY u`` and ``b.t SAMPLE BY w`` each slice on their
+    own key, the bare name ``t`` holds neither, and dropping ``b.t``
+    leaves ``a_t``'s key in place."""
+    import hashlib
+    from unittest import mock
+
+    from clickhub_spark import sql_compat
+
+    def half(view):
+        sql = f"SELECT k FROM {view} SAMPLE 1/2 OFFSET 0"
+        return sorted(r.k for r in sql_compat.run(spark, sql).collect())
+
+    def want(key_of):
+        return sorted(
+            k for k in range(200)
+            if hashlib.md5(str(key_of(k)).encode()).hexdigest()[:8] < "80000000"
+        )
+
+    rows = ", ".join(f"({i}, {i}, {1000 - i})" for i in range(200))
+    with mock.patch.dict(sql_compat._SAMPLE_KEYS, clear=True):
+        for db, key in (("a", "u"), ("b", "w")):
+            wh.execute(f"CREATE DATABASE {db}")
+            wh.execute(
+                f"CREATE TABLE {db}.t (`k` Int64, `u` Int64, `w` Int64) "
+                f"ENGINE = MergeTree ORDER BY (k) SAMPLE BY {key}"
+            )
+            wh.execute(f"INSERT INTO {db}.t VALUES {rows}", spark=spark)
+        wh.register_views(spark)
+        assert half("a_t") == want(lambda k: k)
+        assert half("b_t") == want(lambda k: 1000 - k)
+        with pytest.raises(ValueError, match="needs a sampling key for 't'"):
+            sql_compat.translate("SELECT k FROM t SAMPLE 1/2 OFFSET 0")
+        wh.execute("DROP TABLE b.t", spark=spark)
+        assert half("a_t") == want(lambda k: k)

@@ -8,7 +8,7 @@ import pytest
 
 from clickhub_spark.plans import all_specs
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, final_plan
 
 
 def _plan(spark, name: str) -> str:
@@ -349,6 +349,25 @@ def test_sessionize_reuses_one_user_partitioning(spark):
     share a single user_id hash Exchange."""
     plan = _plan(spark, "q_sessionize")
     assert _n_nodes(plan, "Exchange") == 1
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_seq_next_node",
+        "q_seq_next_node_last_match",
+        "q_seq_next_node_backward_first",
+    ],
+)
+def test_next_node_match_bases_one_user_exchange(spark, name):
+    """sequence_next_node's first_match/last_match builders, as
+    executed: one user_id hash Exchange feeds the lead window and the
+    match rank, and the rank-1 filter runs as a WindowGroupLimit."""
+    df = all_specs()[name].builder(spark, SF_DIR)
+    df.collect()
+    plan = final_plan(df)
+    assert plan.count("Exchange hashpartitioning(user_id") == 1
+    assert "WindowGroupLimit" in plan
 
 
 def test_pivot_two_level_aggregate_no_expand(spark):
