@@ -2,45 +2,75 @@
 higher-order functions (zip_with / aggregate) so the arithmetic stays
 JVM-side inside whole-stage codegen — no Python boundary crossing
 (SURVEY §2.J6).
+
+The helpers are SQL-text builders: each takes SQL expressions as text
+(a plain column name is one) and returns SQL text, so helpers nest by
+string composition and the caller parses the finished expression with
+ONE ``F.expr`` — a single py4j round trip however many elements,
+literals and lambdas it holds.  Building the same trees from
+``F.lit`` Columns and Python lambdas costs a round trip per node:
+over 2,000 per build of the md5 LSH query, against about 230 as
+text.  Two rules of the text:
+
+- Double literals carry a ``D`` suffix (``0D``, ``127D``): a bare
+  ``1.0`` parses as DECIMAL, which would change every fold's type.
+- Lambda variables are ``__v``-prefixed (``__vx``, ``__vacc``): a SQL
+  lambda variable shadows a same-named column, and an argument is
+  inlined inside lambda bodies (the ``quantize_int8`` scale, the
+  ``nearest_centroid`` row vector), so a column named ``x`` or
+  ``acc`` must not be captured.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 
-def as_double(vec: Column) -> Column:
+def array_literal(values: Iterable[float]) -> str:
+    """SQL ``array(…)`` literal of doubles.  ``repr`` round-trips every
+    float64 exactly; a NaN/Inf would render as ``nanD``/``infD`` and
+    fail to parse at build time with an opaque ParseException, so it
+    fails here with the real cause."""
+    vals = [float(v) for v in values]
+    if not all(math.isfinite(v) for v in vals):
+        raise ValueError(
+            "non-finite coordinate (NaN/Inf) cannot be rendered as a "
+            f"SQL literal: {vals!r}"
+        )
+    return "array(" + ",".join(f"{v!r}D" for v in vals) + ")"
+
+
+def as_double(vec: str) -> str:
     """Cast array<float> → array<double>; fp32 parquet values promote
     exactly, and all downstream math is then double-deterministic."""
-    return F.transform(vec, lambda x: x.cast("double"))
+    return f"transform({vec}, __vx -> cast(__vx as double))"
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def dot(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, (__vx, __vy) -> __vx * __vy), "
+        "0D, (__vacc, __vx) -> __vacc + __vx)"
     )
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+def norm(a: str) -> str:
+    return f"sqrt(aggregate({a}, 0D, (__vacc, __vx) -> __vacc + __vx * __vx))"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+def cosine(a: str, b: str) -> str:
+    return f"{dot(a, b)} / ({norm(a)} * {norm(b)})"
 
 
-def maxabs(a: Column) -> Column:
-    return F.aggregate(a, F.lit(0.0), lambda acc, x: F.greatest(acc, F.abs(x)))
+def maxabs(a: str) -> str:
+    return f"aggregate({a}, 0D, (__vacc, __vx) -> greatest(__vacc, abs(__vx)))"
 
 
-def quantize_int8(vec: Column, scale: Column | None = None) -> Column:
+def quantize_int8(vec: str, scale: str | None = None) -> str:
     """Symmetric max-abs int8 quantization: q_i = round(v_i·127/maxabs)
     as tinyint.  With the per-vector ``maxabs`` scale stored alongside
     (see dequantize_int8), this is the 4×-smaller embedding storage
@@ -50,28 +80,26 @@ def quantize_int8(vec: Column, scale: Column | None = None) -> Column:
     no Python.
 
     Pass ``scale`` as a materialized column (``withColumn("s",
-    maxabs(v))``) in bulk-encode jobs: inlining the maxabs aggregate
-    into the per-element lambda makes the expression O(dim²) per row —
-    measured 5× slower at 64 dims."""
+    F.expr(maxabs(v)))``) in bulk-encode jobs: inlining the maxabs
+    aggregate into the per-element lambda makes the expression
+    O(dim²) per row — measured 5× slower at 64 dims."""
     s = maxabs(vec) if scale is None else scale
-    return F.transform(
-        vec,
-        lambda x: F.when(s == 0.0, F.lit(0))
-        .otherwise(F.round(x * 127.0 / s))
-        .cast("tinyint"),
+    return (
+        f"transform({vec}, __vx -> cast(CASE WHEN {s} = 0D THEN 0 "
+        f"ELSE round(__vx * 127D / {s}) END AS tinyint))"
     )
 
 
-def dequantize_int8(q: Column, scale: Column) -> Column:
+def dequantize_int8(q: str, scale: str) -> str:
     """Inverse of quantize_int8 given the stored maxabs scale."""
-    return F.transform(q, lambda c: c.cast("double") * scale / 127.0)
+    return f"transform({q}, __vc -> cast(__vc as double) * {scale} / 127D)"
 
 
 def nearest_centroid(
-    vec: Column,
+    vec: str,
     centroids: list[tuple[int, list[float]]],
     pre_normalized: bool = False,
-) -> Column:
+) -> str:
     """Map-only nearest-centroid assignment against a bounded centroid
     parameter table inlined as plan literals (the IVF-centroid
     contract: k ≪ corpus, collected driver-side once).  Returns a
@@ -90,53 +118,29 @@ def nearest_centroid(
     # separate F.lit() Columns plus one fold expression PER centroid —
     # ~2,900 py4j round-trips at k=45/dim=64, ~3 s of pure driver time
     # per DataFrame build (measured; the count+collect feeding it cost
-    # 0.33 s).  Now the centroid matrix and id list are each ONE
-    # F.expr() parse of a SQL array literal (repr() round-trips every
-    # float64 exactly), and the k-way scoring is a single zip_with
-    # lambda over them.  Per-row arithmetic is unchanged: the same
-    # sequential dot/cosine fold per centroid, the same
-    # array_max(struct(sim, negid)) lowest-id tie-break.
+    # 0.33 s).  The centroid matrix and id list are SQL array literals
+    # and the k-way scoring is a single zip_with lambda over them.
+    # Per-row arithmetic is unchanged: the same sequential dot/cosine
+    # fold per centroid, the same array_max(struct(sim, negid))
+    # lowest-id tie-break.
 
     def _vals(cv: list[float]) -> list[float]:
-        # ADVICE r16: a NaN/Inf coordinate would render as 'nanD'/'infD'
-        # in the SQL array literal below and fail to parse at build
-        # time with an opaque ParseException — fail with the real cause
-        if not all(math.isfinite(float(x)) for x in cv):
-            raise ValueError(
-                "non-finite centroid coordinate (NaN/Inf) cannot be "
-                f"rendered as a SQL literal: {cv!r}"
-            )
         if pre_normalized:
             n = sum(float(x) * float(x) for x in cv) ** 0.5 or 1.0
             return [float(x) / n for x in cv]
-        return [float(x) for x in cv]
+        return cv
 
-    cents = F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{v!r}D" for v in _vals(cv)) + ")"
-            for _, cv in centroids
-        )
-        + ")"
-    )
-    ids = F.expr(
-        "array(" + ",".join(f"{-int(cid)}L" for cid, _ in centroids) + ")"
-    )
+    cents = "array(" + ",".join(array_literal(_vals(cv)) for _, cv in centroids) + ")"
+    ids = "array(" + ",".join(f"{-int(cid)}L" for cid, _ in centroids) + ")"
     score = dot if pre_normalized else cosine
-    arr = F.zip_with(
-        cents,
-        ids,
-        lambda cv, negid: F.struct(
-            score(vec, cv).alias("sim"), negid.alias("negid")
-        ),
+    best = (
+        f"array_max(zip_with({cents}, {ids}, (__vcv, __vnegid) -> "
+        f"named_struct('sim', {score(vec, '__vcv')}, 'negid', __vnegid)))"
     )
-    best = F.array_max(arr)
-    return F.struct(
-        best["sim"].alias("sim"), (-best["negid"]).alias("cluster")
-    )
+    return f"named_struct('sim', {best}.sim, 'cluster', -{best}.negid)"
 
 
-def nearest_centroid_vectorized(vec: Column, centroids: list[tuple[int, list[float]]]) -> Column:
+def nearest_centroid_vectorized(vec: Column | str, centroids: list[tuple[int, list[float]]]) -> Column:
     """Large-k tier of nearest-centroid assignment: an Arrow-batched
     pandas_udf holding the centroid matrix as a closure-broadcast
     numpy array and scoring each batch with ONE normalized matmul

@@ -769,7 +769,7 @@ def semantic_dedup(
             f"choice and the Arrow int64 path all key on numeric ids; "
             f"dense-rank string ids first"
         )
-    base = emb.select(F.col(id_col), as_double(F.col(vec_col)).alias("__v"))
+    base = emb.select(F.col(id_col), F.expr(as_double(vec_col)).alias("__v"))
     if n_centroids is None:
         import math
 
@@ -800,7 +800,7 @@ def semantic_dedup(
     from clickhub_spark.functions.vectors import norm
 
     nrm = base.withColumn(
-        "__n", F.nullif(norm(F.col("__v")), F.lit(0.0))
+        "__n", F.nullif(F.expr(norm("__v")), F.lit(0.0))
     ).withColumn("__nv", F.transform(F.col("__v"), lambda x: x / F.col("__n")))
     # Small k inlines the (pre-normalized) centroids as literals
     # scored by zip_with dot products; larger k switches to the
@@ -815,7 +815,7 @@ def semantic_dedup(
     # Arrow boundary crossing costs more than the tiny interpreted
     # fold.
     if len(cent) <= 16:
-        cluster = nearest_centroid(F.col("__nv"), cent, pre_normalized=True)["cluster"]
+        cluster = F.expr(nearest_centroid("__nv", cent, pre_normalized=True))["cluster"]
     else:
         cluster = nearest_centroid_vectorized(F.col("__v"), cent)["cluster"]
     nrm = nrm.withColumn("cluster", cluster)

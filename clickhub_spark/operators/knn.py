@@ -23,14 +23,17 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from clickhub_spark.functions.vectors import as_double, cosine
+from clickhub_spark.functions.vectors import array_literal, as_double, cosine, dot
+
+
+def _sim(vec_col: str, query: str, digits: int = 4) -> F.Column:
+    """Rounded cosine of the row vector ``vec_col`` (array<float>) to
+    the array<double> SQL expression ``query``."""
+    return F.expr(f"round({cosine(as_double(vec_col), query)}, {digits})")
 
 
 def _scored(emb: DataFrame, vec_col: str, id_col: str, query: DataFrame) -> DataFrame:
-    return (
-        emb.crossJoin(F.broadcast(query))
-        .withColumn("sim", F.round(cosine(as_double(F.col(vec_col)), F.col("__qvec")), 4))
-    )
+    return emb.crossJoin(F.broadcast(query)).withColumn("sim", _sim(vec_col, "__qvec"))
 
 
 def exact_topk_pairs(emb: DataFrame, q: DataFrame, k: int) -> DataFrame:
@@ -48,7 +51,7 @@ def exact_topk_pairs(emb: DataFrame, q: DataFrame, k: int) -> DataFrame:
     )
     return (
         emb.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-        .withColumn("sim", cosine(F.col("v"), F.col("qv")))
+        .withColumn("sim", F.expr(cosine("v", "qv")))
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
         .select("qid", "vec_id")
@@ -61,7 +64,7 @@ def brute_force_topk(
     """Exact cosine top-k neighbors of ``query_id`` (excluded)."""
     query = (
         emb.where(F.col(id_col) == query_id)
-        .select(as_double(F.col(vec_col)).alias("__qvec"))
+        .select(F.expr(as_double(vec_col)).alias("__qvec"))
     )
     return (
         _scored(emb.where(F.col(id_col) != query_id), vec_col, id_col, query)
@@ -71,33 +74,29 @@ def brute_force_topk(
     )
 
 
-def hyperplane_signature(vec: F.Column, n_bits: int = 16, dim: int = 64) -> F.Column:
-    """Deterministic random-hyperplane sign signature.
+def hyperplane_signature(vec: str, n_bits: int = 16, dim: int = 64) -> str:
+    """Deterministic random-hyperplane sign signature of the
+    array<double> SQL expression ``vec``, as SQL text (see
+    functions/vectors).
 
     Plane p, component i weight = a fixed pseudo-random ±1/±3 value
     derived from xxhash64(p, i) — reproducible across runs/engines
     with no stored model.  Returns an int bucket id in [0, 2^n_bits).
     """
-    def bit(p: int) -> F.Column:
+    def bit(p: int) -> str:
         # project over min(dim, len(vec)) components: zip_with pads the
         # shorter side with nulls, so a fixed dim longer than the
         # vector would null every projection and collapse all rows
         # into bucket 0 (round-6 review)
-        proj = F.aggregate(
-            F.zip_with(
-                F.slice(vec, 1, dim),
-                F.sequence(F.lit(0), F.least(F.lit(dim - 1), F.size(vec) - 1)),
-                lambda x, i: x * ((F.pmod(F.xxhash64(F.lit(p), i), F.lit(7)) - 3).cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+        proj = (
+            f"aggregate(zip_with(slice({vec}, 1, {dim}), "
+            f"sequence(0, least({dim - 1}, size({vec}) - 1)), "
+            f"(__vx, __vi) -> __vx * cast(pmod(xxhash64({p}, __vi), 7) - 3 AS double)), "
+            "0D, (__vacc, __vx) -> __vacc + __vx)"
         )
-        return F.when(proj > 0, F.shiftleft(F.lit(1), p)).otherwise(F.lit(0))
+        return f"CASE WHEN {proj} > 0 THEN shiftleft(1, {p}) ELSE 0 END"
 
-    sig = F.lit(0)
-    for p in range(n_bits):
-        sig = sig + bit(p)
-    return sig
+    return " + ".join(["0", *(bit(p) for p in range(n_bits))])
 
 
 def build_ivf_index(
@@ -134,7 +133,7 @@ def build_ivf_index(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    feats = emb.withColumn("__f", array_to_vector(as_double(F.col(vec_col))))
+    feats = emb.withColumn("__f", array_to_vector(F.expr(as_double(vec_col))))
     train = feats
     n = emb.count()
     if train_rows and n > train_rows:
@@ -287,27 +286,20 @@ def lsh_bucket_topk(
     still a broadcast-joined pruning predicate, never a scan."""
     dim = 64
     with_sig = emb.withColumn(
-        "bucket", hyperplane_signature(as_double(F.col(vec_col)), n_bits, dim)
+        "bucket", F.expr(hyperplane_signature(as_double(vec_col), n_bits, dim))
     )
-    probes = F.array(F.col("__qbucket"))
+    probes = "array(__qbucket)"
     if multi_probe >= 1:
-        probes = F.concat(
-            probes,
-            F.array(
-                *[
-                    F.col("__qbucket").bitwiseXOR(F.lit(1 << b))
-                    for b in range(n_bits)
-                ]
-            ),
-        )
+        flips = ", ".join(f"__qbucket ^ {1 << b}" for b in range(n_bits))
+        probes = f"concat({probes}, array({flips}))"
     query = with_sig.where(F.col(id_col) == query_id).select(
-        as_double(F.col(vec_col)).alias("__qvec"),
+        F.expr(as_double(vec_col)).alias("__qvec"),
         F.col("bucket").alias("__qbucket"),
-    ).withColumn("__probes", probes)
+    ).withColumn("__probes", F.expr(probes))
     cand = (
         with_sig.where(F.col(id_col) != query_id)
         .join(F.broadcast(query), F.array_contains(F.col("__probes"), F.col("bucket")))
-        .withColumn("sim", F.round(cosine(as_double(F.col(vec_col)), F.col("__qvec")), 4))
+        .withColumn("sim", _sim(vec_col, "__qvec"))
     )
     return (
         cand.orderBy(F.col("sim").desc(), F.col(id_col).asc())
@@ -343,7 +335,7 @@ def build_pq_index(
 
     spark = emb.sparkSession
     rows = (
-        emb.select(as_double(F.col(vec_col)).alias("v"))
+        emb.select(F.expr(as_double(vec_col)).alias("v"))
         .limit(sample_rows)
         .collect()
     )
@@ -382,7 +374,7 @@ def build_pq_index(
             yield pd.DataFrame({"vid": pdf["vid"], "code": list(codes.tolist())})
 
     emb.select(
-        F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("__v")
+        F.col(id_col).alias("vid"), F.expr(as_double(vec_col)).alias("__v")
     ).mapInPandas(encode, "vid long, code array<int>").write.mode("overwrite").parquet(
         index_path + "/codes"
     )
@@ -459,7 +451,7 @@ def pq_topk(
     while two-stage held ≥0.6), so serve with rerank at scale."""
     row = (
         emb.where(F.col(id_col) == query_id)
-        .select(as_double(F.col(vec_col)).alias("v"))
+        .select(F.expr(as_double(vec_col)).alias("v"))
         .first()
     )
     if row is None:
@@ -525,7 +517,6 @@ def pq_rerank_topk(
     cand = pq_probe_topk(
         spark, index_path, query_vec, k=rerank, exclude_id=exclude_id
     ).select("vec_id")
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         emb.join(
             F.broadcast(cand),
@@ -534,14 +525,14 @@ def pq_rerank_topk(
         )
         .select(
             F.col(id_col).alias("vec_id"),
-            F.round(cosine(as_double(F.col(vec_col)), qlit), 6).alias("sim"),
+            _sim(vec_col, array_literal(query_vec), 6).alias("sim"),
         )
         .orderBy(F.col("sim").desc(), F.col("vec_id").asc())
         .limit(k)
     )
 
 
-def hyperplane_signature_md5(vec: F.Column, n_bits: int = 4, dim: int = 64) -> F.Column:
+def hyperplane_signature_md5(vec: str, n_bits: int = 4, dim: int = 64) -> str:
     """Engine-portable twin of ``hyperplane_signature``: plane weights
     are ±1 from md5 hex parity (md5("p:i") first hex char ≤ '7' → +1),
     so an external engine can recompute the exact bucket with its own
@@ -551,28 +542,19 @@ def hyperplane_signature_md5(vec: F.Column, n_bits: int = 4, dim: int = 64) -> F
     one codegen'd zip_with dot product per plane; the bucket is the
     concatenated sign-bit string.  xxhash-based
     ``hyperplane_signature`` stays the prod path (faster basis, int
-    bucket)."""
+    bucket).  ``vec`` and the result are SQL text, as in
+    ``hyperplane_signature``."""
     import hashlib
 
     bits = []
     for p in range(n_bits):
-        w = F.array(
-            *[
-                F.lit(1.0 if hashlib.md5(f"{p}:{i}".encode()).hexdigest()[0] <= "7" else -1.0)
-                for i in range(dim)
-            ]
+        w = array_literal(
+            1.0 if hashlib.md5(f"{p}:{i}".encode()).hexdigest()[0] <= "7" else -1.0
+            for i in range(dim)
         )
-        proj = F.aggregate(
-            F.zip_with(
-                F.slice(vec, 1, dim),
-                F.slice(w, 1, F.least(F.lit(dim), F.size(vec))),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
+        proj = dot(f"slice({vec}, 1, {dim})", f"slice({w}, 1, least({dim}, size({vec})))")
+        bits.append(f"CASE WHEN {proj} >= 0 THEN '1' ELSE '0' END")
+    return f"concat({', '.join(bits)})"
 
 
 def lsh_bucket_topk_md5(
@@ -589,15 +571,15 @@ def lsh_bucket_topk_md5(
     is reproducible by an external engine for oracle checking."""
     dim = 64
     with_sig = emb.withColumn(
-        "bucket", hyperplane_signature_md5(as_double(F.col(vec_col)), n_bits, dim)
+        "bucket", F.expr(hyperplane_signature_md5(as_double(vec_col), n_bits, dim))
     )
     query = with_sig.where(F.col(id_col) == query_id).select(
-        as_double(F.col(vec_col)).alias("__qvec"), F.col("bucket").alias("__qbucket")
+        F.expr(as_double(vec_col)).alias("__qvec"), F.col("bucket").alias("__qbucket")
     )
     cand = (
         with_sig.where(F.col(id_col) != query_id)
         .join(F.broadcast(query), F.col("bucket") == F.col("__qbucket"))
-        .withColumn("sim", F.round(cosine(as_double(F.col(vec_col)), F.col("__qvec")), 4))
+        .withColumn("sim", _sim(vec_col, "__qvec"))
     )
     return (
         cand.orderBy(F.col("sim").desc(), F.col(id_col).asc())

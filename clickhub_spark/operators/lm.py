@@ -134,13 +134,22 @@ def write_lm_store(
     return path
 
 
+#: the store's tables as ``write_lm_store`` writes them — declared,
+#: so a read (every micro-batch of a store-scored stream) starts no
+#: schema-inference job
+LM_STORE_SCHEMAS = {
+    "bigrams": "prev string, w string, cbw bigint",
+    "unigrams": "prev string, cw bigint",
+    "vocab": "v bigint",
+}
+
+
 def read_lm_store(spark, path: str) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Load a persisted model for score_bits — (bigram_counts,
     unigram_counts, vocab), schema-identical to train_bigram_lm."""
-    return (
-        spark.read.parquet(f"{path}/bigrams"),
-        spark.read.parquet(f"{path}/unigrams"),
-        spark.read.parquet(f"{path}/vocab"),
+    return tuple(
+        spark.read.schema(schema).parquet(f"{path}/{table}")
+        for table, schema in LM_STORE_SCHEMAS.items()
     )
 
 

@@ -46,17 +46,17 @@ def q_llm_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = emb.select(
         F.col("vec_id").alias("id_a"),
         F.col("label"),
-        as_double(F.col("embedding")).alias("va"),
+        F.expr(as_double("embedding")).alias("va"),
     )
     b = emb.select(
         F.col("vec_id").alias("id_b"),
         F.col("label"),
-        as_double(F.col("embedding")).alias("vb"),
+        F.expr(as_double("embedding")).alias("vb"),
     )
     return (
         a.join(b, ["label"])
         .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("sim", F.round(cosine(F.col("va"), F.col("vb")), 4))
+        .withColumn("sim", F.expr(f"round({cosine('va', 'vb')}, 4)"))
         .orderBy(F.col("sim").desc(), F.col("id_a").asc(), F.col("id_b").asc())
         .limit(20)
         .select("id_a", "id_b", "label", "sim")
@@ -1379,24 +1379,17 @@ def q_llm_docstore_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs.  Both sides shuffle on the id — at 100 TB write both tables
     bucketed on doc_id (sources/writer.write_bucketed) and this join
     goes Exchange-free, as plan-pinned by q_join_bucketed."""
-    from clickhub_spark.functions.vectors import as_double
+    from clickhub_spark.functions.vectors import as_double, norm
 
     d = load(spark, sf_dir, "documents").where(F.col("n_chars") >= 100)
     e = load(spark, sf_dir, "embeddings")
-    norm = F.sqrt(
-        F.aggregate(
-            as_double(F.col("embedding")),
-            F.lit(0.0),
-            lambda acc, x: acc + x * x,
-        )
-    )
     return (
         d.join(e, d["doc_id"] == e["vec_id"])
         .select(
             "doc_id",
             "lang",
             "n_chars",
-            F.round(norm, 4).alias("emb_norm"),
+            F.expr(f"round({norm(as_double('embedding'))}, 4)").alias("emb_norm"),
             F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
         )
     )
@@ -1548,7 +1541,7 @@ def q_llm_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clickhub_spark.functions.vectors import as_double, nearest_centroid, norm
 
     emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(as_double("embedding")).alias("v")
     )
     cent_rows = sorted(
         emb.where(F.col("vec_id") < 8).collect(), key=lambda r: r["vec_id"]
@@ -1556,15 +1549,17 @@ def q_llm_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # normalize once per row (materialized — never inline the norm
     # into the transform lambda, that re-folds per element) so each
     # centroid score is a single dot-product fold
-    nrm = emb.withColumn("n", F.nullif(norm(F.col("v")), F.lit(0.0))).withColumn(
+    nrm = emb.withColumn("n", F.nullif(F.expr(norm("v")), F.lit(0.0))).withColumn(
         "nv", F.transform(F.col("v"), lambda x: x / F.col("n"))
     )
     best = nrm.withColumn(
         "b",
-        nearest_centroid(
-            F.col("nv"),
-            [(r["vec_id"], r["v"]) for r in cent_rows],
-            pre_normalized=True,
+        F.expr(
+            nearest_centroid(
+                "nv",
+                [(r["vec_id"], r["v"]) for r in cent_rows],
+                pre_normalized=True,
+            )
         ),
     )
     return best.select(
@@ -1612,11 +1607,11 @@ def q_llm_embed_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("vec")
+        "vec_id", F.expr(as_double("embedding")).alias("vec")
     )
-    scaled = emb.withColumn("absmax", maxabs(F.col("vec")))
-    q = scaled.withColumn("q", quantize_int8(F.col("vec"), F.col("absmax")))
-    deq = q.withColumn("deq", dequantize_int8(F.col("q"), F.col("absmax")))
+    scaled = emb.withColumn("absmax", F.expr(maxabs("vec")))
+    q = scaled.withColumn("q", F.expr(quantize_int8("vec", "absmax")))
+    deq = q.withColumn("deq", F.expr(dequantize_int8("q", "absmax")))
     return deq.select(
         "vec_id",
         F.round("absmax", 6).alias("scale_maxabs"),
@@ -2418,7 +2413,7 @@ def q_llm_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clickhub_spark.functions.vectors import as_double, nearest_centroid
 
     emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(as_double("embedding")).alias("v")
     )
     cent_rows = sorted(
         emb.where(F.col("vec_id") < 8).collect(), key=lambda r: r["vec_id"]
@@ -2428,7 +2423,7 @@ def q_llm_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (pre_normalized=False folds the row norm inside the scorer) —
     # no separate normalize pass
     assigned = emb.withColumn(
-        "cluster", nearest_centroid(F.col("v"), cent, pre_normalized=False)["cluster"]
+        "cluster", F.expr(nearest_centroid("v", cent, pre_normalized=False))["cluster"]
     )
     # per-dimension partial sums: the shuffle after the explode
     # carries k x 64 partials per partition (map-side combine), never
@@ -2817,20 +2812,13 @@ def q_llm_knn_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(as_double("embedding")).alias("v")
     )
     sig = emb.withColumn(
-        "bucket", hyperplane_signature(F.col("v"), _LSH_BITS, 64)
+        "bucket", F.expr(hyperplane_signature("v", _LSH_BITS, 64))
     )
-    probes = F.concat(
-        F.array(F.col("qbucket")),
-        F.array(
-            *[
-                F.col("qbucket").bitwiseXOR(F.lit(1 << b))
-                for b in range(_LSH_BITS)
-            ]
-        ),
-    )
+    flips = ", ".join(f"qbucket ^ {1 << b}" for b in range(_LSH_BITS))
+    probes = F.expr(f"concat(array(qbucket), array({flips}))")
     q = (
         sig.where(F.col("vec_id") < _LSH_NQ)
         .select(
@@ -2853,7 +2841,7 @@ def q_llm_knn_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.array_contains(F.col("probes"), F.col("bucket")),
     )
     ann = (
-        cand.withColumn("sim", cosine(F.col("v"), F.col("qv")))
+        cand.withColumn("sim", F.expr(cosine("v", "qv")))
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= _LSH_K)
         .select("qid", "vec_id")
@@ -2963,7 +2951,7 @@ def q_llm_knn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivf_index(raw, path, _IVF_CELLS)
         prune_stale(path)
 
-    emb = raw.select("vec_id", as_double(F.col("embedding")).alias("v"))
+    emb = raw.select("vec_id", F.expr(as_double("embedding")).alias("v"))
     q = emb.where(F.col("vec_id") < _NQ).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
@@ -2991,7 +2979,7 @@ def q_llm_knn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     data = spark.read.parquet(path + "/data").select(
-        "vec_id", as_double(F.col("embedding")).alias("cv"), "cell"
+        "vec_id", F.expr(as_double("embedding")).alias("cv"), "cell"
     )
     cand = data.join(F.broadcast(probe), "cell").where(
         F.col("vec_id") != F.col("qid")
@@ -3000,7 +2988,7 @@ def q_llm_knn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sim").desc(), F.col("vec_id").asc()
     )
     ann = (
-        cand.withColumn("sim", cosine(F.col("cv"), F.col("qv")))
+        cand.withColumn("sim", F.expr(cosine("cv", "qv")))
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= _IVF_K)
         .select("qid", "vec_id")
@@ -3091,7 +3079,7 @@ def q_llm_knn_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_pq_index(raw, path, _PQ_M, _PQ_CODES)
         prune_stale(path)
 
-    emb = raw.select("vec_id", as_double(F.col("embedding")).alias("v"))
+    emb = raw.select("vec_id", F.expr(as_double("embedding")).alias("v"))
     q = emb.where(F.col("vec_id") < _NQ).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
@@ -3479,7 +3467,7 @@ def q_llm_knn_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_pq_index(raw, path, _PQ_M, _PQ_CODES)
         prune_stale(path)
 
-    emb = raw.select("vec_id", as_double(F.col("embedding")).alias("v"))
+    emb = raw.select("vec_id", F.expr(as_double("embedding")).alias("v"))
     q = emb.where(F.col("vec_id") < _NQ).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
@@ -3540,7 +3528,7 @@ def q_llm_knn_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     rer = (
         emb.join(F.broadcast(cand), "vec_id")
         .join(F.broadcast(q), "qid")
-        .withColumn("sim", cosine(F.col("v"), F.col("qv")))
+        .withColumn("sim", F.expr(cosine("v", "qv")))
     )
     wr = Window.partitionBy("qid").orderBy(
         F.col("sim").desc(), F.col("vec_id").asc()

@@ -1,4 +1,5 @@
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -55,3 +56,16 @@ def sql_executions(spark, fn):
     before = _last_execution(spark)
     out = fn()
     return out, _last_execution(spark) - before
+
+
+def spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"spark-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

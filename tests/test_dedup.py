@@ -398,7 +398,7 @@ def test_nearest_centroid_tiers_agree(spark):
     )
 
     emb = load(spark, SF_DIR, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(as_double("embedding")).alias("v")
     )
     cent = [
         (r["vec_id"], r["v"])
@@ -408,7 +408,7 @@ def test_nearest_centroid_tiers_agree(spark):
     ]
     both = emb.select(
         "vec_id",
-        nearest_centroid(F.col("v"), cent).alias("a"),
+        F.expr(nearest_centroid("v", cent)).alias("a"),
         nearest_centroid_vectorized(F.col("v"), cent).alias("b"),
     ).collect()
     assert both

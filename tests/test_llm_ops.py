@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from clickhub_spark.plans import all_specs
 
-from tests.conftest import SF_DIR, cached_entries, final_plan
+from tests.conftest import SF_DIR, cached_entries, final_plan, spark_jobs
 
 
 def test_embed_centroid_assembles_to_correct_vectors(spark):
@@ -49,18 +49,18 @@ def test_int8_quantization_preserves_similarity(spark):
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(200)
-    v = as_double(F.col("embedding"))
+    v = as_double("embedding")
     out = emb.select(
         F.col("vec_id"),
-        quantize_int8(v).alias("q"),
-        maxabs(v).alias("scale"),
-        F.round(cosine(v, dequantize_int8(quantize_int8(v), maxabs(v))), 5).alias("c"),
+        F.expr(quantize_int8(v)).alias("q"),
+        F.expr(maxabs(v)).alias("scale"),
+        F.expr(f"round({cosine(v, dequantize_int8(quantize_int8(v), maxabs(v)))}, 5)").alias("c"),
     )
     rows = out.collect()
     assert all(r.c >= 0.999 for r in rows)
     assert all(-127 <= code <= 127 for r in rows for code in r.q)
     zero = spark.createDataFrame([([0.0] * 4,)], "embedding array<double>")
-    zq = zero.select(quantize_int8(F.col("embedding")).alias("q")).first().q
+    zq = zero.select(F.expr(quantize_int8("embedding")).alias("q")).first().q
     assert zq == [0, 0, 0, 0]
 
 
@@ -193,6 +193,28 @@ def test_lm_store_reuse_equals_inline_training(spark, tmp_path):
     files = set(scored.inputFiles())
     assert files and all("/lm/" in f for f in files)
     assert scored.count() == 1
+
+
+def test_lm_store_reads_under_declared_schemas(spark, tmp_path):
+    """read_lm_store reads the three store tables under declared
+    schemas — equal to what inference returns from a store that
+    write_lm_store wrote — so a read starts no Spark job."""
+    from clickhub_spark.operators.lm import (
+        LM_STORE_SCHEMAS,
+        read_lm_store,
+        train_bigram_lm,
+        write_lm_store,
+    )
+
+    train = spark.createDataFrame(
+        [(1, "a b a b c"), (2, "a b c d")], "id long, text string"
+    )
+    path = write_lm_store(train_bigram_lm(train, "text", "id"), str(tmp_path / "lm"))
+    tables, jobs = spark_jobs(spark, lambda: read_lm_store(spark, path))
+    assert jobs == 0
+    for table, df in zip(LM_STORE_SCHEMAS, tables):
+        assert df.schema == spark.read.parquet(f"{path}/{table}").schema, table
+    assert tables[0].count() > 0
 
 
 def test_vocab_build_and_oov_stats(spark):

@@ -10,7 +10,6 @@ import os
 import shutil
 import threading
 import time
-import uuid
 
 import pytest
 
@@ -23,22 +22,9 @@ from clickhub_spark.queue import WorkQueue
 from clickhub_spark.sources.tsv import read_positional_tsv, stamp_updated_at
 from clickhub_spark.sources.writer import high_water_mark, read_table
 from clickhub_spark.streaming.collapse import read_collapsed
-from tests.conftest import FIXTURES
+from tests.conftest import FIXTURES, spark_jobs
 
 FIXTURE = str(FIXTURES / "commits.tsv")
-
-
-def spark_jobs(spark, fn):
-    """(fn(), number of Spark jobs it ran)."""
-    sc = spark.sparkContext
-    group = f"read-table-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _log(spark, rows):

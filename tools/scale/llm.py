@@ -214,7 +214,7 @@ def semdedup(run, sf_dir=SF01, repl=50):
     emb = load(run.spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n_base = emb.count()
     big = run.replicate(emb, repl, "embeddings", vec_id=n_base).select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
+        "vec_id", F.expr(as_double("embedding")).alias("v")
     )
 
     def centroids(k: int):
@@ -223,7 +223,7 @@ def semdedup(run, sf_dir=SF01, repl=50):
     cent8, cent256 = centroids(8), centroids(256)
     out = {"n_vectors": n_base * repl, "repl": repl}
     out["assign_inline_k8_sec"], _ = run.timed(
-        lambda: big.select(nearest_centroid(F.col("v"), cent8)["cluster"].alias("c")).groupBy("c").count().collect(),
+        lambda: big.select(F.expr(nearest_centroid("v", cent8))["cluster"].alias("c")).groupBy("c").count().collect(),
         2,
     )
     out["assign_matmul_k256_sec"], _ = run.timed(
@@ -253,7 +253,7 @@ def pca_ivf(run, kpc=16, nprobe=8, *, n=100_000):
     d/k."""
     import numpy as np
 
-    from clickhub_spark.functions.vectors import as_double, cosine
+    from clickhub_spark.functions.vectors import array_literal, as_double, cosine
     from clickhub_spark.operators import knn
     from clickhub_spark.operators.pca import fit_pca, transform_pca
 
@@ -292,11 +292,11 @@ def pca_ivf(run, kpc=16, nprobe=8, *, n=100_000):
     out["recall_at_10_reduced"] = round(len(truth & set(got)) / 10, 2)
 
     def two_stage():
-        qlit = F.array(*[F.lit(float(x)) for x in qfull])
+        sim = F.expr(cosine(as_double("embedding"), array_literal(qfull)))
         return {
             r.vec_id
             for r in emb.where(F.col("vec_id").isin(probe(100)))
-            .select("vec_id", cosine(as_double(F.col("embedding")), qlit).alias("sim"))
+            .select("vec_id", sim.alias("sim"))
             .orderBy(F.col("sim").desc(), F.col("vec_id"))
             .limit(10)
             .collect()
