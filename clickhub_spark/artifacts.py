@@ -1,11 +1,17 @@
-"""Deterministic locations for build-once derived artifacts (ANN
-indexes, signature stores): keyed on the source DataFrame's input
-files + mtimes + its normalized logical plan + a tag, so the same
-data AND the same transformations reuse the artifact, while
-regenerated data or a filtered/projected variant of the same files
-triggers a rebuild (a files-only key would silently serve an index
-built from different row content).  In-memory frames (tests) get a
-throwaway temp location."""
+"""Build-once derived artifacts (ANN indexes, signature and model
+stores, projections): deterministic locations keyed on the source
+DataFrame's input files + mtimes + its normalized logical plan + a
+tag, so the same data AND the same transformations reuse the
+artifact, while regenerated data or a filtered/projected variant of
+the same files triggers a rebuild (a files-only key would silently
+serve an index built from different row content).  In-memory frames
+(tests) get a throwaway temp location.
+
+One publish-and-prune rule, in ``build_artifact``: an artifact is
+written into ``<path>.__build``, published by one rename, and every
+publish then drops the oldest siblings under its tag beyond the
+newest eight.  A directory at the artifact path is therefore always
+a finished artifact, and nothing else decides whether one exists."""
 
 from __future__ import annotations
 
@@ -51,10 +57,9 @@ def prune_stale(artifact_path: str, keep: int = 8) -> int:
     """Drop the oldest sibling artifacts beyond ``keep``: every
     regenerated source dataset mints a new key, so long-lived
     deployments would otherwise accumulate orphaned indexes/stores.
-    Call after a successful build; the just-built artifact is always
-    retained (it is the newest).  Returns the number removed."""
-    import shutil
-
+    ``build_artifact`` runs it after each publish, so the just-built
+    artifact is always retained (it is the newest).  Returns the
+    number removed."""
     parent = os.path.dirname(artifact_path)
     if not os.path.isdir(parent):
         return 0
@@ -73,11 +78,12 @@ def prune_stale(artifact_path: str, keep: int = 8) -> int:
 def build_artifact(df: DataFrame, tag: str, writer) -> str:
     """Fingerprint-cached build-once artifact with an ATOMIC publish:
     if the derived path for (df, tag) doesn't exist yet, ``writer``
-    materializes into ``<path>.__build`` and the finished directory is
-    renamed into place.  A crash mid-build leaves only the build dir —
-    never a partial artifact that the existence check would treat as
-    complete — which is the same publish protocol the incremental
-    writer uses.  Returns the artifact path.
+    materializes into ``<path>.__build``, the finished directory is
+    renamed into place and stale siblings are pruned.  A crash
+    mid-build leaves only the build dir — never a partial artifact
+    that the existence check would treat as complete — which is the
+    same publish protocol the incremental writer uses.  Returns the
+    artifact path.
 
     ``writer(build_path)`` must write the artifact directory at
     ``build_path``.
@@ -92,4 +98,5 @@ def build_artifact(df: DataFrame, tag: str, writer) -> str:
         writer(build)
         os.makedirs(os.path.dirname(path), exist_ok=True)
         os.rename(build, path)
+        prune_stale(path)
     return path

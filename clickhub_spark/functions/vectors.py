@@ -63,7 +63,9 @@ def norm(a: str) -> str:
 
 
 def cosine(a: str, b: str) -> str:
-    return f"{dot(a, b)} / ({norm(a)} * {norm(b)})"
+    """Cosine similarity; NULL when either vector has zero norm (a
+    plain ``/`` raises DIVIDE_BY_ZERO under ANSI mode)."""
+    return f"try_divide({dot(a, b)}, {norm(a)} * {norm(b)})"
 
 
 def maxabs(a: str) -> str:

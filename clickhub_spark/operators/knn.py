@@ -1,28 +1,48 @@
-"""Similarity search over embeddings (SURVEY §2.J6).
+"""Similarity search over embeddings (SURVEY §2.J6): one build and one
+probe function per index kind.
 
-- ``brute_force_topk``: exact cosine top-k against a query vector.
-  The query vector is a one-row broadcast; scoring is a codegen'd
-  higher-order-function expression over every row, then a global
-  top-k (TakeOrderedAndProject — no full sort).  At 100 TB this is
-  one full scan per query: correct baseline, not the scale path.
+| index      | build                              | probe                    |
+|------------|------------------------------------|--------------------------|
+| brute force| none                               | ``brute_force_topk``     |
+| LSH        | ``hyperplane_signature``           | ``lsh_probe``            |
+| md5 LSH    | ``hyperplane_signature_md5``       | ``lsh_bucket_topk_md5``  |
+| IVF        | ``build_ivf_index`` (``ivf_index``)| ``ivf_probe``            |
+| PQ         | ``build_pq_index`` (``pq_index``)  | ``pq_scores``            |
+| PQ re-rank | ``build_pq_index`` (``pq_index``)  | ``pq_rerank_topk``       |
 
-- ``lsh_bucket_topk``: random-hyperplane LSH variant — sign-bit
-  signature per vector (deterministic pseudo-random planes derived
-  from xxhash64, so no driver-side randomness), candidates share the
-  query's bucket, with ``multi_probe=1`` widening to every bucket at
-  Hamming distance 1 (the standard recall knob — a vector near a
-  hyperplane lands one sign-bit away).  The scan is pruned to the
-  probed buckets via a broadcast membership predicate — this is the
-  ANN path that survives 1000 executors.
+- **Brute force** scores every row against a one-row broadcast query
+  with a codegen'd higher-order-function expression, then takes a
+  global top-k (TakeOrderedAndProject, no full sort): one full scan
+  per query, the correct baseline and not the scale path.
+  ``exact_topk_pairs`` is its batched form, the exact side every
+  recall certificate compares against.
+- **LSH** signs each vector with random hyperplanes derived from
+  xxhash64 (no stored model); a query scores only the vectors in its
+  bucket, plus every bucket at Hamming distance 1 with
+  ``multi_probe=1``.  The scan is pruned by a
+  broadcast membership predicate.  The **md5** twin uses md5-parity
+  plane weights so an external engine can recompute its buckets.
+- **IVF** partitions the corpus by nearest KMeans cell; a query scans
+  only the partitions of its ``nprobe`` nearest cells (``ivf_cells``).
+- **PQ** stores an m-byte code per vector; a query is one
+  asymmetric-distance scan over the codes.  **PQ re-rank** re-scores
+  the ADC top candidates with exact cosine.
+
+Batched probes take a list of ``(qid, vector)`` queries (LSH: a frame
+of ``qid, __qvec, __qbucket``), return scored candidate rows carrying
+``qid`` and ``sim``, and never return a query's own id (a ``None``
+qid excludes nothing).  ``topk_per_query`` ranks them; the ``*_topk``
+serving functions take one query and a global top-k.  The IVF and PQ
+indexes are build-once artifacts (``artifacts.build_artifact``) keyed
+on the source files and plan.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from clickhub_spark.artifacts import build_artifact
 from clickhub_spark.functions.vectors import array_literal, as_double, cosine, dot
 
 
@@ -36,26 +56,34 @@ def _scored(emb: DataFrame, vec_col: str, id_col: str, query: DataFrame) -> Data
     return emb.crossJoin(F.broadcast(query)).withColumn("sim", _sim(vec_col, "__qvec"))
 
 
-def exact_topk_pairs(emb: DataFrame, q: DataFrame, k: int) -> DataFrame:
-    """Exact cosine top-k per query vector — the deliberate O(n·q)
-    cross score every ANN recall certification compares against
-    (q=20: certification cost, not a serving path).  ``emb`` carries
-    (vec_id, v), ``q`` carries (qid, qv); self-pairs are excluded and
-    ties break on vec_id so the selected SET is deterministic.
-    SINGLE-SOURCED for q_llm_knn_{lsh,ivf,pq}_recall — the three
-    certified baselines stay comparable by construction."""
-    from pyspark.sql import Window
+def _not_self(id_col: str) -> F.Column:
+    """A candidate is not its own query (a NULL qid excludes nothing)."""
+    return ~F.col(id_col).eqNullSafe(F.col("qid"))
 
-    w = Window.partitionBy("qid").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
+
+def _top(df: DataFrame, k: int, id_col: str) -> DataFrame:
+    """Global top-k of one query's candidates by (sim desc, id asc)."""
+    return df.orderBy(F.col("sim").desc(), F.col(id_col).asc()).limit(k)
+
+
+def topk_per_query(df: DataFrame, k: int, id_col: str = "vec_id") -> DataFrame:
+    """The k best rows of each ``qid`` by (sim desc, id asc): a rank
+    window, so ties break on the id and the selected SET is
+    deterministic."""
+    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col(id_col).asc())
+    return df.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") <= k).drop("__rn")
+
+
+def exact_topk_pairs(emb: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k (qid, vec_id) pairs per query vector — the
+    deliberate O(n·q) cross score every ANN recall certificate
+    compares against (q=20: certification cost, not a serving path).
+    ``emb`` carries (vec_id, embedding), ``q`` carries (qid, __qvec);
+    self-pairs are excluded."""
+    scored = emb.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).withColumn(
+        "sim", F.expr(cosine(as_double("embedding"), "__qvec"))
     )
-    return (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-        .withColumn("sim", F.expr(cosine("v", "qv")))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("qid", "vec_id")
-    )
+    return topk_per_query(scored, k).select("qid", "vec_id")
 
 
 def brute_force_topk(
@@ -99,6 +127,55 @@ def hyperplane_signature(vec: str, n_bits: int = 16, dim: int = 64) -> str:
     return " + ".join(["0", *(bit(p) for p in range(n_bits))])
 
 
+def lsh_probe(
+    with_sig: DataFrame,
+    queries: DataFrame,
+    n_bits: int,
+    multi_probe: int = 0,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Scored LSH candidates of a batch of queries: ``with_sig`` is the
+    corpus with its ``bucket`` signature, ``queries`` carries (qid,
+    __qvec, __qbucket).  A query probes its own bucket, plus with
+    ``multi_probe=1`` every bucket at Hamming distance 1 (the standard
+    recall knob — a vector near a hyperplane lands one sign-bit away).
+    The query rows broadcast and each corpus row is kept only for the
+    queries whose probed buckets hold it — a pruning predicate, never
+    a scored cross product."""
+    probes = "array(__qbucket)"
+    if multi_probe >= 1:
+        flips = ", ".join(f"__qbucket ^ {1 << b}" for b in range(n_bits))
+        probes = f"concat({probes}, array({flips}))"
+    return with_sig.join(
+        F.broadcast(queries.withColumn("__probes", F.expr(probes))),
+        F.array_contains(F.col("__probes"), F.col("bucket")) & _not_self(id_col),
+    ).withColumn("sim", _sim(vec_col, "__qvec"))
+
+
+def lsh_bucket_topk(
+    emb: DataFrame,
+    query_id: int,
+    k: int = 10,
+    n_bits: int = 8,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    multi_probe: int = 0,
+) -> DataFrame:
+    """ANN top-k of ``query_id``: score only vectors in its probed LSH
+    buckets (``lsh_probe``)."""
+    with_sig = emb.withColumn(
+        "bucket", F.expr(hyperplane_signature(as_double(vec_col), n_bits, 64))
+    )
+    query = with_sig.where(F.col(id_col) == query_id).select(
+        F.col(id_col).alias("qid"),
+        F.expr(as_double(vec_col)).alias("__qvec"),
+        F.col("bucket").alias("__qbucket"),
+    )
+    cand = lsh_probe(with_sig, query, n_bits, multi_probe, vec_col, id_col)
+    return _top(cand, k, id_col).select(id_col, "sim", "bucket")
+
+
 def build_ivf_index(
     emb: DataFrame,
     path: str,
@@ -123,13 +200,9 @@ def build_ivf_index(
     scan.  Centroids are n_cells × dim doubles, a parameter table,
     not data.
 
-    The write goes to ``path + ".tmp"`` then renames, so a concurrent
-    reader of an existing index never sees a half-written one
-    (same contract as sources.writer.compact: a brief path-not-found
-    window exists between the two renames).
+    Writes ``path`` in place; ``ivf_index`` runs it under
+    ``build_artifact``, whose rename publishes the finished index.
     """
-    import shutil
-
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -159,18 +232,68 @@ def build_ivf_index(
         train.unpersist()
     assigned = model.transform(feats).drop("__f")
 
-    tmp = path + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(tmp + "/data")
+    assigned.write.mode("overwrite").partitionBy("cell").parquet(path + "/data")
     centroids = [
         (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
     emb.sparkSession.createDataFrame(
         centroids, "cell int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(tmp + "/centroids")
-    shutil.rmtree(path, ignore_errors=True)
-    os.rename(tmp, path)
+    ).coalesce(1).write.mode("overwrite").parquet(path + "/centroids")
     return path
+
+
+def ivf_index(
+    emb: DataFrame, n_cells: int = 16, vec_col: str = "embedding", id_col: str = "vec_id"
+) -> str:
+    """Path of the build-once IVF index of ``emb``: built on first use,
+    then reused until the source files or plan change."""
+    return build_artifact(
+        emb, f"ivf{n_cells}", lambda p: build_ivf_index(emb, p, n_cells, vec_col, id_col)
+    )
+
+
+def ivf_cells(spark, index_path: str, queries, nprobe: int) -> list[list[int]]:
+    """The ``nprobe`` nearest cells of each query vector, chosen
+    driver-side over the n_cells-row centroid table (a parameter
+    lookup, not a data collect): ascending squared L2 distance, ties
+    to the lowest cell id."""
+    import numpy as np
+
+    rows = spark.read.parquet(index_path + "/centroids").collect()
+    cells = np.asarray([r.cell for r in rows])
+    C = np.asarray([r.centroid for r in rows], dtype="float64")
+    Q = np.asarray([list(v) for v in queries], dtype="float64")
+    d2 = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(-1)
+    order = np.lexsort((np.broadcast_to(cells, d2.shape), d2))
+    return cells[order[:, :nprobe]].tolist()
+
+
+def ivf_probe(
+    spark,
+    index_path: str,
+    queries,
+    cells: list[list[int]],
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Scored IVF candidates of a batch of ``(qid, vector)`` queries:
+    query i scores only the vectors of its cells ``cells[i]``
+    (``ivf_cells``), and the scan lists only the partitions some query
+    probes."""
+    probed = sorted({c for cs in cells for c in cs})
+    query = spark.createDataFrame(
+        [(qid, [float(x) for x in v], cs) for (qid, v), cs in zip(queries, cells)],
+        "qid long, __qvec array<double>, __cells array<int>",
+    )
+    return (
+        spark.read.parquet(index_path + "/data")
+        .where(F.col("cell").isin(probed))
+        .join(
+            F.broadcast(query),
+            F.array_contains(F.col("__cells"), F.col("cell")) & _not_self(id_col),
+        )
+        .withColumn("sim", _sim(vec_col, "__qvec"))
+    )
 
 
 def ivf_probe_topk(
@@ -183,40 +306,10 @@ def ivf_probe_topk(
     id_col: str = "vec_id",
     exclude_id: int | None = None,
 ) -> DataFrame:
-    """Query side of IVF ANN: read centroids (a parameter lookup, not a
-    data collect), pick the ``nprobe`` nearest cells driver-side, scan
-    ONLY those partitions of the prebuilt index."""
-    import numpy as np
-
-    centers = {
-        r["cell"]: np.asarray(r["centroid"], dtype="float64")
-        for r in spark.read.parquet(index_path + "/centroids").collect()
-    }
-    q = np.asarray(list(query_vec), dtype="float64")
-    probe = sorted(centers, key=lambda c: float(((centers[c] - q) ** 2).sum()))[:nprobe]
-
-    cand = spark.read.parquet(index_path + "/data").where(
-        F.col("cell").isin([int(c) for c in probe])
-    )
-    if exclude_id is not None:
-        cand = cand.where(F.col(id_col) != exclude_id)
-    query = spark.createDataFrame(
-        [([float(x) for x in query_vec],)], "__qvec array<double>"
-    )
-    return (
-        _scored(cand, vec_col, id_col, query)
-        .orderBy(F.col("sim").desc(), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col, "sim", "cell")
-    )
-
-
-def _default_index_path(emb: DataFrame, n_cells: int) -> str:
-    """Deterministic index location derived from the input files and
-    their mtimes — same data → reuse, regenerated data → rebuild."""
-    from clickhub_spark.artifacts import derived_artifact_path
-
-    return derived_artifact_path(emb, f"ivf{n_cells}")
+    """IVF top-k of one query vector over its ``nprobe`` nearest cells."""
+    cells = ivf_cells(spark, index_path, [query_vec], nprobe)
+    cand = ivf_probe(spark, index_path, [(exclude_id, query_vec)], cells, vec_col, id_col)
+    return _top(cand, k, id_col).select(id_col, "sim", "cell")
 
 
 def ivf_topk(
@@ -227,14 +320,9 @@ def ivf_topk(
     nprobe: int = 4,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    index_path: str | None = None,
 ) -> DataFrame:
-    """IVF (inverted-file) ANN top-k: build-once index + pruned probe.
-
-    Convenience wrapper over ``build_ivf_index`` / ``ivf_probe_topk``:
-    the index is built only if ``index_path`` (default: a deterministic
-    warehouse location keyed by the input files + mtimes) does not
-    already hold one, so repeated queries — and repeated benchmark
+    """IVF (inverted-file) ANN top-k of ``query_id`` over the build-once
+    index (``ivf_index``): repeated queries — and repeated benchmark
     runs — pay the KMeans fit exactly once, the way an IVF index is
     actually operated.  The probe scans nprobe/n_cells partitions via
     parquet partition pruning.
@@ -250,61 +338,15 @@ def ivf_topk(
             .withColumn("sim", F.lit(0.0))
             .withColumn("cell", F.lit(0))
         )
-    if index_path is None:
-        index_path = _default_index_path(emb, n_cells)
-    if not os.path.isdir(index_path + "/data"):
-        from clickhub_spark.artifacts import prune_stale
-
-        build_ivf_index(emb, index_path, n_cells, vec_col, id_col)
-        prune_stale(index_path)  # drop indexes of regenerated datasets
     return ivf_probe_topk(
         emb.sparkSession,
-        index_path,
+        ivf_index(emb, n_cells, vec_col, id_col),
         list(qrow[0]),
         k=k,
         nprobe=nprobe,
         vec_col=vec_col,
         id_col=id_col,
         exclude_id=query_id,
-    )
-
-
-def lsh_bucket_topk(
-    emb: DataFrame,
-    query_id: int,
-    k: int = 10,
-    n_bits: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    multi_probe: int = 0,
-) -> DataFrame:
-    """ANN top-k: score only vectors sharing the query's LSH bucket.
-
-    ``multi_probe=1`` additionally probes every bucket at Hamming
-    distance 1 from the query's (the standard recall knob: a vector
-    near a hyperplane lands one sign-bit away) — n_bits extra buckets,
-    still a broadcast-joined pruning predicate, never a scan."""
-    dim = 64
-    with_sig = emb.withColumn(
-        "bucket", F.expr(hyperplane_signature(as_double(vec_col), n_bits, dim))
-    )
-    probes = "array(__qbucket)"
-    if multi_probe >= 1:
-        flips = ", ".join(f"__qbucket ^ {1 << b}" for b in range(n_bits))
-        probes = f"concat({probes}, array({flips}))"
-    query = with_sig.where(F.col(id_col) == query_id).select(
-        F.expr(as_double(vec_col)).alias("__qvec"),
-        F.col("bucket").alias("__qbucket"),
-    ).withColumn("__probes", F.expr(probes))
-    cand = (
-        with_sig.where(F.col(id_col) != query_id)
-        .join(F.broadcast(query), F.array_contains(F.col("__probes"), F.col("bucket")))
-        .withColumn("sim", _sim(vec_col, "__qvec"))
-    )
-    return (
-        cand.orderBy(F.col("sim").desc(), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col, "sim", "bucket")
     )
 
 
@@ -380,19 +422,28 @@ def build_pq_index(
     )
 
 
-def pq_probe_topk(
-    spark,
-    index_path: str,
-    query_vec,
-    k: int = 10,
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Query side of PQ ANN: asymmetric distance computation — per-
-    subspace lookup tables from the raw query vector (m × n_codes
-    floats, computed driver-side and shipped in the UDF closure), then
-    one bandwidth-bound scan over the CODES table summing table
-    lookups.  Returns approximate cosine (vectors were normalized at
-    build: cos = 1 - L2²/2)."""
+def pq_index(
+    emb: DataFrame,
+    m: int = 8,
+    n_codes: int = 16,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> str:
+    """Path of the build-once PQ index of ``emb``: trained and encoded
+    on first use, then reused until the source files or plan change."""
+    return build_artifact(
+        emb, f"pq{m}x{n_codes}", lambda p: build_pq_index(emb, p, m, n_codes, vec_col, id_col)
+    )
+
+
+def pq_scores(spark, index_path: str, queries) -> DataFrame:
+    """Asymmetric-distance (ADC) scores ``(qid, vid, sim)`` of a batch
+    of ``(qid, vector)`` queries: per-query, per-subspace lookup
+    tables from the raw query vectors (nq × m × n_codes floats,
+    computed driver-side and shipped in the closure), then ONE
+    bandwidth-bound mapInPandas scan over the CODES table summing
+    table lookups for every query.  ``sim`` is approximate cosine
+    rounded to 4dp (vectors were normalized at build: cos = 1 − L2²/2)."""
     import numpy as np
     import pandas as pd
 
@@ -403,29 +454,50 @@ def pq_probe_topk(
     books = np.empty((m, n_codes, d))
     for r in cb:
         books[r.sub, r.code] = r.centroid
-    q = np.asarray(list(query_vec), dtype="float64")
-    q /= max(float(np.linalg.norm(q)), 1e-12)
-    table = np.stack(
-        [((q[s * d : (s + 1) * d][None, :] - books[s]) ** 2).sum(-1) for s in range(m)]
-    )  # m × n_codes
+    qids = [qid for qid, _ in queries]
+    Q = np.asarray([list(v) for _, v in queries], dtype="float64")
+    Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+    tables = np.stack(
+        [
+            ((Q[:, None, s * d : (s + 1) * d] - books[s][None, :, :]) ** 2).sum(-1)
+            for s in range(m)
+        ],
+        axis=1,
+    )  # nq × m × n_codes
 
     def adc(batches):
+        sub_idx = np.arange(m)[None, :]
         for pdf in batches:
             codes = np.asarray(list(pdf["code"]), dtype="int64")
-            dist2 = table[np.arange(m)[None, :], codes].sum(-1)
-            yield pd.DataFrame(
-                {"vid": pdf["vid"], "sim": np.round(1.0 - dist2 / 2.0, 4)}
+            yield pd.concat(
+                pd.DataFrame(
+                    {
+                        "qid": pd.Series([qid] * len(pdf), dtype="Int64"),
+                        "vid": pdf["vid"],
+                        "sim": np.round(1.0 - tables[i][sub_idx, codes].sum(-1) / 2.0, 4),
+                    }
+                )
+                for i, qid in enumerate(qids)
             )
 
-    codes = spark.read.parquet(index_path + "/codes")
-    if exclude_id is not None:
-        codes = codes.where(F.col("vid") != exclude_id)
     return (
-        codes.mapInPandas(adc, "vid long, sim double")
-        .orderBy(F.col("sim").desc(), F.col("vid").asc())
-        .limit(k)
-        .withColumnRenamed("vid", "vec_id")
+        spark.read.parquet(index_path + "/codes")
+        .mapInPandas(adc, "qid long, vid long, sim double")
+        .where(_not_self("vid"))
     )
+
+
+def pq_probe_topk(
+    spark,
+    index_path: str,
+    query_vec,
+    k: int = 10,
+    exclude_id: int | None = None,
+) -> DataFrame:
+    """Single-stage PQ top-k of one query vector: the ADC scan
+    (``pq_scores``) and a global top-k, as (vec_id, sim)."""
+    sims = pq_scores(spark, index_path, [(exclude_id, query_vec)])
+    return _top(sims, k, "vid").select(F.col("vid").alias("vec_id"), "sim")
 
 
 def pq_topk(
@@ -436,12 +508,11 @@ def pq_topk(
     n_codes: int = 16,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    index_path: str | None = None,
     rerank: int | None = None,
 ) -> DataFrame:
-    """Build-once PQ ANN (artifact keyed on files + logical plan, like
-    ivf_topk): train + encode on first call, every later query is a
-    codes-only scan.
+    """PQ ANN top-k of ``query_id`` over the build-once index
+    (``pq_index``): train + encode on first call, every later query is
+    a codes-only scan.
 
     ``rerank=N`` routes the probe through the certified TWO-STAGE
     serving path (pq_rerank_topk: ADC top-N candidates, exact cosine
@@ -463,15 +534,7 @@ def pq_topk(
             .where(F.lit(False))
             .withColumn("sim", F.lit(0.0))
         )
-    if index_path is None:
-        from clickhub_spark.artifacts import derived_artifact_path
-
-        index_path = derived_artifact_path(emb, f"pq{m}x{n_codes}")
-    if not os.path.isdir(index_path + "/codes"):
-        build_pq_index(emb, index_path, m, n_codes, vec_col, id_col)
-        from clickhub_spark.artifacts import prune_stale
-
-        prune_stale(index_path)
+    index_path = pq_index(emb, m, n_codes, vec_col, id_col)
     if rerank is not None:
         return pq_rerank_topk(
             emb.sparkSession,
@@ -517,7 +580,7 @@ def pq_rerank_topk(
     cand = pq_probe_topk(
         spark, index_path, query_vec, k=rerank, exclude_id=exclude_id
     ).select("vec_id")
-    return (
+    rescored = (
         emb.join(
             F.broadcast(cand),
             emb[id_col] == cand["vec_id"],
@@ -527,9 +590,8 @@ def pq_rerank_topk(
             F.col(id_col).alias("vec_id"),
             _sim(vec_col, array_literal(query_vec), 6).alias("sim"),
         )
-        .orderBy(F.col("sim").desc(), F.col("vec_id").asc())
-        .limit(k)
     )
+    return _top(rescored, k, "vec_id")
 
 
 def hyperplane_signature_md5(vec: str, n_bits: int = 4, dim: int = 64) -> str:

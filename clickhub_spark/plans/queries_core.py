@@ -517,9 +517,7 @@ def _orders_projections(spark: SparkSession, sf_dir: str) -> str:
     partitioned by o_orderpriority, and a mergeable pre-aggregation
     keyed (o_orderpriority, o_orderstatus).  Keyed on source files +
     plan like every derived artifact."""
-    import os
-
-    from clickhub_spark.artifacts import derived_artifact_path
+    from clickhub_spark.artifacts import build_artifact
     from clickhub_spark.sources.projections import (
         AggProjection,
         SortProjection,
@@ -527,31 +525,27 @@ def _orders_projections(spark: SparkSession, sf_dir: str) -> str:
     )
 
     orders = load(spark, sf_dir, "orders")
-    base_dir = derived_artifact_path(orders, "projections")
-    if not os.path.exists(os.path.join(base_dir, "_projections.json")):
-        materialize(
-            orders,
-            base_dir,
-            [
-                SortProjection(
-                    "by_priority",
-                    sort_cols=("o_orderdate",),
-                    partition_by="o_orderpriority",
+    projections = [
+        SortProjection(
+            "by_priority",
+            sort_cols=("o_orderdate",),
+            partition_by="o_orderpriority",
+        ),
+        AggProjection(
+            "prio_status_rollup",
+            group_cols=("o_orderpriority", "o_orderstatus"),
+            aggs={
+                "cents": (
+                    "sum",
+                    "CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)",
                 ),
-                AggProjection(
-                    "prio_status_rollup",
-                    group_cols=("o_orderpriority", "o_orderstatus"),
-                    aggs={
-                        "cents": (
-                            "sum",
-                            "CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)",
-                        ),
-                        "n": ("count", "o_orderkey"),
-                    },
-                ),
-            ],
-        )
-    return base_dir
+                "n": ("count", "o_orderkey"),
+            },
+        ),
+    ]
+    return build_artifact(
+        orders, "projections", lambda p: materialize(orders, p, projections)
+    )
 
 
 @query(

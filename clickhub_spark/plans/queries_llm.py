@@ -623,9 +623,7 @@ def q_llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-batch pairs.  Value-equal to a from-scratch LSH run
     restricted to pairs involving the new batch — which is exactly
     what the oracle computes."""
-    import os
-
-    from clickhub_spark.artifacts import derived_artifact_path
+    from clickhub_spark.artifacts import build_artifact
     from clickhub_spark.operators.dedup import (
         incremental_candidate_pairs,
         write_minhash_store,
@@ -634,12 +632,11 @@ def q_llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     corpus = docs.where(F.col("doc_id") % 10 != 0)
     new_batch = docs.where(F.col("doc_id") % 10 == 0)
-    store = derived_artifact_path(docs, "minhash_store")
-    if not os.path.isdir(store):
-        from clickhub_spark.artifacts import prune_stale
-
-        write_minhash_store(corpus, "text", "doc_id", store)
-        prune_stale(store)  # drop stores of regenerated datasets
+    store = build_artifact(
+        docs,
+        "minhash_store",
+        lambda p: write_minhash_store(corpus, "text", "doc_id", p),
+    )
     return incremental_candidate_pairs(new_batch, store, "text", "doc_id")
 
 
@@ -1031,9 +1028,7 @@ def q_llm_perplexity_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     score_against_store — only the three small model tables plus the
     scored batch are read.  Shares q_llm_perplexity's oracle, proving
     persisted-store scoring ≡ inline training bit-for-bit."""
-    import os
-
-    from clickhub_spark.artifacts import derived_artifact_path, prune_stale
+    from clickhub_spark.artifacts import build_artifact
     from clickhub_spark.operators.lm import (
         score_against_store,
         train_bigram_lm,
@@ -1041,10 +1036,11 @@ def q_llm_perplexity_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load(spark, sf_dir, "documents")
-    path = derived_artifact_path(docs, "lm_store")
-    if not os.path.isdir(f"{path}/vocab"):
-        write_lm_store(train_bigram_lm(docs, "text", "doc_id"), path)
-        prune_stale(path)
+    path = build_artifact(
+        docs,
+        "lm_store",
+        lambda p: write_lm_store(train_bigram_lm(docs, "text", "doc_id"), p),
+    )
     scored = score_against_store(docs, path, "text", "doc_id")
     return scored.select(
         "doc_id", "n_bigrams", F.round("bits", 4).alias("bits")
@@ -2754,15 +2750,79 @@ def q_llm_logreg_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every bound check a column whose expected value is a constant.
 # --------------------------------------------------------------------------
 
+#: certification geometry shared by the four ANN recall certificates:
+#: mean recall over the first 20 query vectors, so the flags are
+#: stable across SFs.
+_NQ = 20
+
 #: LSH recall certification geometry — matches the registered
 #: q_llm_knn_lsh serving configuration EXACTLY (n_bits=4 hyperplane
 #: signature over the first 64 components WITH Hamming-1 multi-probe;
 #: the serving path adopted multi_probe=1 in round 10, ADVICE r9 #3),
-#: averaged over the first 20 query vectors so the certified recall
-#: is stable across SFs (measured 0.470 / 0.485 / 0.470 at
-#: sf0.001/0.01/0.1 vs the ~0.31 random-candidate baseline of
-#: scanning 5 of 16 buckets).
-_LSH_NQ, _LSH_K, _LSH_BITS = 20, 10, 4
+#: measured 0.470 / 0.485 / 0.470 at sf0.001/0.01/0.1 vs the ~0.31
+#: random-candidate baseline of scanning 5 of 16 buckets.
+_LSH_K, _LSH_BITS = 10, 4
+
+
+def _ann_queries(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The embeddings table and the certificates' query set: the first
+    ``_NQ`` vectors as (qid, __qvec), the batch layout of the
+    operators/knn probes."""
+    emb = load(spark, sf_dir, "embeddings")
+    q = emb.where(F.col("vec_id") < _NQ).select(
+        F.col("vec_id").alias("qid"), F.expr(as_double("embedding")).alias("__qvec")
+    )
+    return emb, q
+
+
+def _query_vectors(q: DataFrame) -> list:
+    """The 20 query vectors as (qid, vector): a bounded parameter
+    fetch, the IVF and PQ probes' driver-side input."""
+    return [(r.qid, r["__qvec"]) for r in q.collect()]
+
+
+def _recall_row(
+    emb: DataFrame,
+    q: DataFrame,
+    k: int,
+    ann: DataFrame,
+    gate: float,
+    extras: list[DataFrame],
+    cols: list,
+) -> DataFrame:
+    """ONE certificate row: n_vectors, n_queries and n_exact_pairs (the
+    exact cosine top-k pairs, operators/knn.exact_topk_pairs), then
+    ``cols`` in order.  ``extras`` are one-row aggregates cross-joined
+    in for ``cols`` to read, and ``cols`` can name the recall flag
+    ``recall_ge_NNN`` (NNN = gate in hundredths): the ANN (qid,
+    vec_id) pairs hit at least ``gate`` of the exact ones."""
+    from clickhub_spark.operators.knn import exact_topk_pairs
+
+    exact = exact_topk_pairs(emb, q, k)
+    row = (
+        emb.agg(F.count(F.lit(1)).alias("n_vectors"))
+        .crossJoin(q.agg(F.count(F.lit(1)).alias("n_queries")))
+        .crossJoin(exact.agg(F.count(F.lit(1)).alias("n_exact_pairs")))
+        .crossJoin(
+            exact.join(ann, ["qid", "vec_id"]).agg(F.count(F.lit(1)).alias("__hits"))
+        )
+    )
+    for extra in extras:
+        row = row.crossJoin(extra)
+    row = row.withColumn(
+        f"recall_ge_{round(gate * 100):03d}",
+        (F.col("__hits") >= gate * F.col("n_exact_pairs")).cast("int"),
+    )
+    return row.select("n_vectors", "n_queries", "n_exact_pairs", *cols)
+
+
+def _pruned_le_050() -> F.Column:
+    """Candidates (``__cand``) are at most half the query × corpus pairs."""
+    return (
+        (F.col("__cand") <= 0.50 * F.col("n_queries") * (F.col("n_vectors") - 1))
+        .cast("int")
+        .alias("pruned_le_050")
+    )
 
 
 @query(
@@ -2772,7 +2832,7 @@ _LSH_NQ, _LSH_K, _LSH_BITS = 20, 10, 4
         SELECT CAST(COUNT(*) AS BIGINT) AS n_vectors FROM embeddings
     ), q AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n_queries
-        FROM embeddings WHERE vec_id < {_LSH_NQ}
+        FROM embeddings WHERE vec_id < {_NQ}
     )
     SELECT t.n_vectors, q.n_queries,
            CAST(q.n_queries * LEAST({_LSH_K}, t.n_vectors - 1) AS BIGINT)
@@ -2790,12 +2850,11 @@ def q_llm_knn_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     claim that makes it an ANN at all (candidates ≤ half the corpus
     despite Hamming-1 multi-probe; expected 5/16 of buckets probed).
 
-    Both sides run in one plan: signatures are a map-side expression,
-    the 20 query rows broadcast, the exact side is a deliberate
-    O(n·q) cross score (q=20 — certification cost, not the serving
-    path), ANN candidates come from the bucket-probe join, per-query
-    top-k is a rank window over ≤n·q scored rows, and the output is
-    ONE row of counts + flags.
+    Both sides run in one plan: the ANN side is the serving probe
+    (operators/knn.lsh_probe) over the 20 broadcast query rows, the
+    exact side a deliberate O(n·q) cross score (q=20 — certification
+    cost, not the serving path), per-query top-k is a rank window over
+    ≤n·q scored rows, and the output is ONE row of counts + flags.
 
     Unlike q_agg_topk_bounds / q_agg_uniq_bounds / the quantile twin,
     the 0.40 recall gate is a MEASURED margin (0.470/0.485/0.470
@@ -2803,80 +2862,29 @@ def q_llm_knn_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH carries no distribution-free recall guarantee; the gate's
     value is catching signature/probe regressions, with ~15% headroom
     over the observed floor (VERDICT r9 item 7)."""
-    from pyspark.sql import Window
-
     from clickhub_spark.operators.knn import (
-        as_double,
-        cosine,
         hyperplane_signature,
+        lsh_probe,
+        topk_per_query,
     )
 
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.expr(as_double("embedding")).alias("v")
-    )
+    emb, q = _ann_queries(spark, sf_dir)
     sig = emb.withColumn(
-        "bucket", F.expr(hyperplane_signature("v", _LSH_BITS, 64))
+        "bucket", F.expr(hyperplane_signature(as_double("embedding"), _LSH_BITS, 64))
     )
-    flips = ", ".join(f"qbucket ^ {1 << b}" for b in range(_LSH_BITS))
-    probes = F.expr(f"concat(array(qbucket), array({flips}))")
-    q = (
-        sig.where(F.col("vec_id") < _LSH_NQ)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("v").alias("qv"),
-            F.col("bucket").alias("qbucket"),
-        )
-        .withColumn("probes", probes)
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    # exact side single-sourced with the IVF/PQ certs (round 10)
-    from clickhub_spark.operators.knn import exact_topk_pairs
-
-    exact = exact_topk_pairs(emb, q.select("qid", "qv"), _LSH_K)
-    cand = sig.join(
-        F.broadcast(q),
-        (F.col("vec_id") != F.col("qid"))
-        & F.array_contains(F.col("probes"), F.col("bucket")),
-    )
-    ann = (
-        cand.withColumn("sim", F.expr(cosine("v", "qv")))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= _LSH_K)
-        .select("qid", "vec_id")
-    )
-    counts = (
-        emb.agg(F.count(F.lit(1)).alias("n_vectors"))
-        .crossJoin(q.agg(F.count(F.lit(1)).alias("n_queries")))
-        .crossJoin(exact.agg(F.count(F.lit(1)).alias("n_exact_pairs")))
-        .crossJoin(
-            exact.join(ann, ["qid", "vec_id"]).agg(
-                F.count(F.lit(1)).alias("__hits")
-            )
-        )
-        .crossJoin(cand.agg(F.count(F.lit(1)).alias("__cand")))
-    )
-    return counts.select(
-        "n_vectors",
-        "n_queries",
-        "n_exact_pairs",
-        (F.col("__hits") >= 0.40 * F.col("n_exact_pairs"))
-        .cast("int")
-        .alias("recall_ge_040"),
-        (
-            F.col("__cand")
-            <= 0.50 * F.col("n_queries") * (F.col("n_vectors") - 1)
-        )
-        .cast("int")
-        .alias("pruned_le_050"),
+    qb = q.withColumn("__qbucket", F.expr(hyperplane_signature("__qvec", _LSH_BITS, 64)))
+    cand = lsh_probe(sig, qb, _LSH_BITS, multi_probe=1)
+    ann = topk_per_query(cand, _LSH_K).select("qid", "vec_id")
+    return _recall_row(
+        emb,
+        q,
+        _LSH_K,
+        ann,
+        0.40,
+        [cand.agg(F.count(F.lit(1)).alias("__cand"))],
+        ["recall_ge_040", _pruned_le_050()],
     )
 
-
-#: certification geometry shared with q_llm_knn_lsh_recall: mean
-#: recall over the first 20 query vectors, so the flag is stable
-#: across SFs.
-_NQ = 20
 
 #: IVF serving configuration being certified (q_llm_knn_ivf:
 #: n_cells=16, nprobe=4, k=10).  Measured recall@10: 0.645 / 0.710 /
@@ -2888,15 +2896,6 @@ _IVF_CELLS, _IVF_NPROBE, _IVF_K = 16, 4, 10
 #: subspaces, 32 codes, k=20).  Measured recall@20: 0.552 / 0.583 /
 #: 0.438 — gate 0.35 (~20% headroom under the floor).
 _PQ_M, _PQ_CODES, _PQ_K = 16, 32, 20
-
-
-def _exact_pairs(emb: DataFrame, q: DataFrame, k: int) -> DataFrame:
-    """Shared exact side of the ANN recall certifications —
-    operators/knn.exact_topk_pairs (single-sourced with
-    q_llm_knn_lsh_recall's exact side)."""
-    from clickhub_spark.operators.knn import exact_topk_pairs
-
-    return exact_topk_pairs(emb, q, k)
 
 
 @query(
@@ -2922,107 +2921,42 @@ def q_llm_knn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_llm_knn_ivf): mean top-10 recall over 20 query vectors against
     the exact cosine top-10, as a driver-checkable boolean, plus the
     structural pruning claims — every query probes EXACTLY nprobe of
-    the n_cells index partitions (probe_pairs = 20·4, an arithmetic
-    constant: the centroid table always holds n_cells rows), and the
-    probed cells together hold at most half the corpus (measured
-    0.29-0.34).
+    the n_cells index partitions (probe_pairs = 20·4: the serving cell
+    chooser's output, counted), and the probed cells together hold at
+    most half the corpus (measured 0.29-0.34).
 
     The certified configuration is the registered serving path's own
-    build-once index artifact (n_cells=16, nprobe=4 — rebuilt here
-    only if absent, exactly as ivf_topk serves): centroid ranking is
-    a 20×16 broadcast cross score, candidates come from a broadcast
-    join of (qid, cell) probes against the cell-partitioned index,
-    and both top-k sides are rank windows.  Recall gate 0.50 is a
-    MEASURED margin (floor 0.600 across SFs), not a theorem."""
-    import os
-
-    from clickhub_spark.artifacts import derived_artifact_path
+    build-once index artifact (operators/knn.ivf_index, n_cells=16)
+    probed by the serving code: ``ivf_cells`` picks each query's
+    nprobe=4 cells driver-side and ``ivf_probe`` scores the 20 queries'
+    candidates in one broadcast-pruned scan; the ANN top-k is a rank
+    window.  Recall gate 0.50 is a MEASURED margin (floor 0.600
+    across SFs), not a theorem."""
     from clickhub_spark.operators.knn import (
-        as_double,
-        build_ivf_index,
-        cosine,
+        ivf_cells,
+        ivf_index,
+        ivf_probe,
+        topk_per_query,
     )
 
-    raw = load(spark, sf_dir, "embeddings")
-    path = derived_artifact_path(raw, f"ivf{_IVF_CELLS}")
-    if not os.path.isdir(path + "/data"):
-        from clickhub_spark.artifacts import prune_stale
-
-        build_ivf_index(raw, path, _IVF_CELLS)
-        prune_stale(path)
-
-    emb = raw.select("vec_id", F.expr(as_double("embedding")).alias("v"))
-    q = emb.where(F.col("vec_id") < _NQ).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-
-    # nprobe nearest cells per query: 20×16 broadcast cross score on
-    # the centroid parameter table (the driver-side argmin in
-    # ivf_probe_topk, expressed as one plan)
-    cents = spark.read.parquet(path + "/centroids")
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("qv"), F.col("centroid"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    wp = Window.partitionBy("qid").orderBy(
-        F.col("d2").asc(), F.col("cell").asc()
-    )
-    probe = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("d2", d2)
-        .withColumn("rn", F.row_number().over(wp))
-        .where(F.col("rn") <= _IVF_NPROBE)
-        .select("qid", "cell", "qv")
-    )
-
-    data = spark.read.parquet(path + "/data").select(
-        "vec_id", F.expr(as_double("embedding")).alias("cv"), "cell"
-    )
-    cand = data.join(F.broadcast(probe), "cell").where(
-        F.col("vec_id") != F.col("qid")
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    ann = (
-        cand.withColumn("sim", F.expr(cosine("cv", "qv")))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= _IVF_K)
-        .select("qid", "vec_id")
-    )
-    exact = _exact_pairs(emb, q, _IVF_K)
-
-    counts = (
-        emb.agg(F.count(F.lit(1)).alias("n_vectors"))
-        .crossJoin(q.agg(F.count(F.lit(1)).alias("n_queries")))
-        .crossJoin(exact.agg(F.count(F.lit(1)).alias("n_exact_pairs")))
-        .crossJoin(
-            exact.join(ann, ["qid", "vec_id"]).agg(
-                F.count(F.lit(1)).alias("__hits")
-            )
-        )
-        .crossJoin(cand.agg(F.count(F.lit(1)).alias("__cand")))
-        .crossJoin(
-            probe.agg(F.count(F.lit(1)).alias("probe_pairs"))
-        )
-    )
-    return counts.select(
-        "n_vectors",
-        "n_queries",
-        "n_exact_pairs",
-        "probe_pairs",
-        (F.col("__hits") >= 0.50 * F.col("n_exact_pairs"))
-        .cast("int")
-        .alias("recall_ge_050"),
-        (
-            F.col("__cand")
-            <= 0.50 * F.col("n_queries") * (F.col("n_vectors") - 1)
-        )
-        .cast("int")
-        .alias("pruned_le_050"),
+    emb, q = _ann_queries(spark, sf_dir)
+    path = ivf_index(emb, _IVF_CELLS)
+    queries = _query_vectors(q)
+    cells = ivf_cells(spark, path, [v for _, v in queries], _IVF_NPROBE)
+    cand = ivf_probe(spark, path, queries, cells)
+    ann = topk_per_query(cand, _IVF_K).select("qid", "vec_id")
+    return _recall_row(
+        emb,
+        q,
+        _IVF_K,
+        ann,
+        0.50,
+        [cand.agg(F.count(F.lit(1)).alias("__cand"))],
+        [
+            F.lit(sum(map(len, cells))).cast("bigint").alias("probe_pairs"),
+            "recall_ge_050",
+            _pruned_le_050(),
+        ],
     )
 
 
@@ -3054,117 +2988,28 @@ def q_llm_knn_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     entries (bad_codes = 0).
 
     The certified configuration is the registered serving path's own
-    build-once artifact (m=16, n_codes=32 — rebuilt only if absent,
-    exactly as pq_topk serves).  The 20 query vectors and the
-    m×n_codes codebook are bounded parameter fetches (the same
-    posture as ivf_probe_topk's centroid read); the asymmetric-
-    distance scan is ONE vectorized mapInPandas over the codes table
-    emitting all 20 queries' sims per Arrow batch — the serving
-    path's own ADC arithmetic (sim = 1 − L2²/2 on build-normalized
-    vectors, rounded to 4dp like pq_probe_topk).  Recall gate 0.35 is
-    a MEASURED margin (floor 0.438 across SFs), not a theorem."""
-    import os
+    build-once artifact (operators/knn.pq_index, m=16, n_codes=32)
+    scored by the serving ADC scorer: ``pq_scores`` runs ONE
+    vectorized mapInPandas over the codes table emitting all 20
+    queries' sims per Arrow batch (sim = 1 − L2²/2 on build-normalized
+    vectors, rounded to 4dp), and the ANN top-k is a rank window.
+    Recall gate 0.35 is a MEASURED margin (floor 0.438 across SFs),
+    not a theorem."""
+    from clickhub_spark.operators.knn import pq_index, pq_scores, topk_per_query
 
-    import numpy as np
-    import pandas as pd
-
-    from clickhub_spark.artifacts import derived_artifact_path
-    from clickhub_spark.operators.knn import as_double, build_pq_index
-
-    raw = load(spark, sf_dir, "embeddings")
-    path = derived_artifact_path(raw, f"pq{_PQ_M}x{_PQ_CODES}")
-    if not os.path.isdir(path + "/codes"):
-        from clickhub_spark.artifacts import prune_stale
-
-        build_pq_index(raw, path, _PQ_M, _PQ_CODES)
-        prune_stale(path)
-
-    emb = raw.select("vec_id", F.expr(as_double("embedding")).alias("v"))
-    q = emb.where(F.col("vec_id") < _NQ).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
+    emb, q = _ann_queries(spark, sf_dir)
+    path = pq_index(emb, _PQ_M, _PQ_CODES)
+    sims = pq_scores(spark, path, _query_vectors(q))
+    ann = topk_per_query(sims, _PQ_K, "vid").select("qid", F.col("vid").alias("vec_id"))
+    bad = (F.size("code") != _PQ_M) | F.exists(
+        "code", lambda x: (x < 0) | (x >= _PQ_CODES)
     )
-
-    # parameter fetches: m×n_codes codebook + the 20 query vectors
-    cb = spark.read.parquet(path + "/codebooks").collect()
-    m = 1 + max(r.sub for r in cb)
-    n_codes = 1 + max(r.code for r in cb)
-    d = len(cb[0].centroid)
-    books = np.empty((m, n_codes, d))
-    for r in cb:
-        books[r.sub, r.code] = r.centroid
-    qrows = q.collect()
-    qids = np.asarray([r.qid for r in qrows])
-    Q = np.asarray([r.qv for r in qrows], dtype="float64")
-    Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    # per-query ADC lookup tables: nq × m × n_codes
-    tables = np.stack(
-        [
-            ((Q[:, None, s * d : (s + 1) * d] - books[s][None, :, :]) ** 2).sum(-1)
-            for s in range(m)
-        ],
-        axis=1,
+    codes = spark.read.parquet(path + "/codes").agg(
+        F.count(F.lit(1)).alias("code_rows"),
+        F.sum(bad.cast("long")).alias("bad_codes"),
     )
-
-    def adc(batches):
-        sub_idx = np.arange(m)[None, :]
-        for pdf in batches:
-            codes = np.asarray(list(pdf["code"]), dtype="int64")
-            out = []
-            for qi in range(len(qids)):
-                dist2 = tables[qi][sub_idx, codes].sum(-1)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "qid": qids[qi],
-                            "vid": pdf["vid"],
-                            "sim": np.round(1.0 - dist2 / 2.0, 4),
-                        }
-                    )
-                )
-            yield pd.concat(out)
-
-    codes = spark.read.parquet(path + "/codes")
-    sims = codes.mapInPandas(adc, "qid long, vid long, sim double").where(
-        F.col("vid") != F.col("qid")
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("sim").desc(), F.col("vid").asc()
-    )
-    ann = (
-        sims.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= _PQ_K)
-        .select("qid", F.col("vid").alias("vec_id"))
-    )
-    exact = _exact_pairs(emb, q, _PQ_K)
-
-    bad = (F.size("code") != m) | F.exists(
-        "code", lambda x: (x < 0) | (x >= n_codes)
-    )
-    counts = (
-        emb.agg(F.count(F.lit(1)).alias("n_vectors"))
-        .crossJoin(q.agg(F.count(F.lit(1)).alias("n_queries")))
-        .crossJoin(exact.agg(F.count(F.lit(1)).alias("n_exact_pairs")))
-        .crossJoin(
-            exact.join(ann, ["qid", "vec_id"]).agg(
-                F.count(F.lit(1)).alias("__hits")
-            )
-        )
-        .crossJoin(
-            codes.agg(
-                F.count(F.lit(1)).alias("code_rows"),
-                F.sum(bad.cast("long")).alias("bad_codes"),
-            )
-        )
-    )
-    return counts.select(
-        "n_vectors",
-        "n_queries",
-        "n_exact_pairs",
-        "code_rows",
-        "bad_codes",
-        (F.col("__hits") >= 0.35 * F.col("n_exact_pairs"))
-        .cast("int")
-        .alias("recall_ge_035"),
+    return _recall_row(
+        emb, q, _PQ_K, ann, 0.35, [codes], ["code_rows", "bad_codes", "recall_ge_035"]
     )
 
 
@@ -3444,127 +3289,41 @@ def q_llm_knn_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale guarantee: the exact re-rank touches at most 10·k raw
     vectors per query no matter the corpus size).
 
-    Plan shape: one mapInPandas ADC scan emitting all 20 queries'
-    sims per Arrow batch (the single-stage cert's own scan), a rank
-    window capped at 10·k, a broadcast semi-join of the tiny
-    candidate table back to the raw vectors, and a second rank
-    window over candidate rows only.  At 100 TB the codes scan does
-    all the data-volume work; stage two is 20 x 200 rows."""
-    import os
+    Plan shape: the serving ADC scorer (``pq_scores``, one mapInPandas
+    scan for all 20 queries), a rank window capped at 10·k, a
+    broadcast join of the tiny candidate table back to the raw
+    vectors, and a second rank window over candidate rows only.  At
+    100 TB the codes scan does all the data-volume work; stage two is
+    20 x 200 rows."""
+    from clickhub_spark.operators.knn import pq_index, pq_scores, topk_per_query
 
-    import numpy as np
-    import pandas as pd
-
-    from clickhub_spark.artifacts import derived_artifact_path
-    from clickhub_spark.functions.vectors import cosine
-    from clickhub_spark.operators.knn import as_double, build_pq_index
-
-    raw = load(spark, sf_dir, "embeddings")
-    path = derived_artifact_path(raw, f"pq{_PQ_M}x{_PQ_CODES}")
-    if not os.path.isdir(path + "/codes"):
-        from clickhub_spark.artifacts import prune_stale
-
-        build_pq_index(raw, path, _PQ_M, _PQ_CODES)
-        prune_stale(path)
-
-    emb = raw.select("vec_id", F.expr(as_double("embedding")).alias("v"))
-    q = emb.where(F.col("vec_id") < _NQ).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-
-    # parameter fetches: m x n_codes codebook + the 20 query vectors
-    cb = spark.read.parquet(path + "/codebooks").collect()
-    m = 1 + max(r.sub for r in cb)
-    n_codes = 1 + max(r.code for r in cb)
-    d = len(cb[0].centroid)
-    books = np.empty((m, n_codes, d))
-    for r in cb:
-        books[r.sub, r.code] = r.centroid
-    qrows = q.collect()
-    qids = np.asarray([r.qid for r in qrows])
-    Q = np.asarray([r.qv for r in qrows], dtype="float64")
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    tables = np.stack(
-        [
-            ((Qn[:, None, s * d : (s + 1) * d] - books[s][None, :, :]) ** 2).sum(-1)
-            for s in range(m)
-        ],
-        axis=1,
-    )
-
-    def adc(batches):
-        sub_idx = np.arange(m)[None, :]
-        for pdf in batches:
-            codes = np.asarray(list(pdf["code"]), dtype="int64")
-            out = []
-            for qi in range(len(qids)):
-                dist2 = tables[qi][sub_idx, codes].sum(-1)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "qid": qids[qi],
-                            "vid": pdf["vid"],
-                            "sim": np.round(1.0 - dist2 / 2.0, 4),
-                        }
-                    )
-                )
-            yield pd.concat(out)
-
-    codes = spark.read.parquet(path + "/codes")
-    sims = codes.mapInPandas(adc, "qid long, vid long, sim double").where(
-        F.col("vid") != F.col("qid")
-    )
-    wc = Window.partitionBy("qid").orderBy(
-        F.col("sim").desc(), F.col("vid").asc()
-    )
-    cand = (
-        sims.withColumn("rn", F.row_number().over(wc))
-        .where(F.col("rn") <= _PQ_RERANK)
-        .select("qid", F.col("vid").alias("vec_id"))
-    )
-
+    emb, q = _ann_queries(spark, sf_dir)
+    path = pq_index(emb, _PQ_M, _PQ_CODES)
+    cand = topk_per_query(
+        pq_scores(spark, path, _query_vectors(q)), _PQ_RERANK, "vid"
+    ).select("qid", F.col("vid").alias("vec_id"))
     # stage two: exact cosine over candidate rows only (broadcast of
     # the <= nq * rerank candidate table), then the final top-k rank
     rer = (
         emb.join(F.broadcast(cand), "vec_id")
         .join(F.broadcast(q), "qid")
-        .withColumn("sim", F.expr(cosine("v", "qv")))
+        .withColumn("sim", F.expr(cosine(as_double("embedding"), "__qvec")))
     )
-    wr = Window.partitionBy("qid").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
+    ann = topk_per_query(rer, _PQ_K).select("qid", "vec_id")
+    overflow = (
+        cand.groupBy("qid")
+        .agg(F.count(F.lit(1)).alias("__nc"))
+        .agg(F.sum((F.col("__nc") > _PQ_RERANK).cast("long")).alias("__overflow"))
     )
-    ann = (
-        rer.withColumn("rn", F.row_number().over(wr))
-        .where(F.col("rn") <= _PQ_K)
-        .select("qid", "vec_id")
-    )
-    exact = _exact_pairs(emb, q, _PQ_K)
-
-    counts = (
-        emb.agg(F.count(F.lit(1)).alias("n_vectors"))
-        .crossJoin(q.agg(F.count(F.lit(1)).alias("n_queries")))
-        .crossJoin(exact.agg(F.count(F.lit(1)).alias("n_exact_pairs")))
-        .crossJoin(
-            exact.join(ann, ["qid", "vec_id"]).agg(
-                F.count(F.lit(1)).alias("__hits")
-            )
-        )
-        .crossJoin(
-            cand.groupBy("qid")
-            .agg(F.count(F.lit(1)).alias("__nc"))
-            .agg(
-                F.sum(
-                    (F.col("__nc") > _PQ_RERANK).cast("long")
-                ).alias("cand_overflow")
-            )
-        )
-    )
-    return counts.select(
-        "n_vectors",
-        "n_queries",
-        "n_exact_pairs",
-        F.coalesce(F.col("cand_overflow"), F.lit(0)).alias("cand_overflow"),
-        (F.col("__hits") >= 0.60 * F.col("n_exact_pairs"))
-        .cast("int")
-        .alias("recall_ge_060"),
+    return _recall_row(
+        emb,
+        q,
+        _PQ_K,
+        ann,
+        0.60,
+        [overflow],
+        [
+            F.coalesce(F.col("__overflow"), F.lit(0)).alias("cand_overflow"),
+            "recall_ge_060",
+        ],
     )

@@ -51,12 +51,12 @@ def test_ivf_knn_recall_against_brute_force(spark):
 
 
 def test_ivf_index_built_once_and_probe_prunes_partitions(spark, tmp_path):
-    """Build/probe split: the KMeans fit runs only when the index is
-    absent, and the probe's parquet scan prunes cell partitions at
-    file-listing level (nprobe=2 of 4 cells)."""
+    """Build/probe split: probing reads the built index without
+    rewriting it, and the probe's parquet scan prunes cell partitions
+    at file-listing level (nprobe=2 of 4 cells)."""
     import os
 
-    from clickhub_spark.operators.knn import build_ivf_index, ivf_probe_topk, ivf_topk
+    from clickhub_spark.operators.knn import build_ivf_index, ivf_probe_topk
 
     emb = load(spark, SF_DIR, "embeddings")
     idx = str(tmp_path / "ivf")
@@ -66,17 +66,32 @@ def test_ivf_index_built_once_and_probe_prunes_partitions(spark, tmp_path):
     assert cells == {f"cell={i}" for i in range(4)}
 
     # probe reuses the existing index — no rebuild
-    out = ivf_topk(emb, query_id=0, k=5, n_cells=4, nprobe=2, index_path=idx)
-    rows = out.collect()
+    qvec = emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
+    rows = ivf_probe_topk(spark, idx, list(qvec), k=5, nprobe=2, exclude_id=0).collect()
     assert 1 <= len(rows) <= 5
+    assert 0 not in {r.vec_id for r in rows}
     assert os.path.getmtime(idx) == built_at
 
     # partition pruning visible in the physical plan of the probe scan
-    qvec = emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
     plan = ivf_probe_topk(
         spark, idx, list(qvec), k=5, nprobe=2
     )._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "cell" in plan
+
+
+def test_ivf_cells_break_ties_to_lowest_cell_id(spark, tmp_path):
+    """The one IVF cell chooser (serving and certificate): nearest
+    centroids by squared distance, equidistant ones in cell-id order."""
+    from clickhub_spark.operators.knn import ivf_cells
+
+    idx = str(tmp_path / "ivf")
+    # cells 3, 1, 0, 2 all at distance 1 from the origin; cell 4 nearer
+    spark.createDataFrame(
+        [(3, [1.0, 0.0]), (1, [0.0, 1.0]), (0, [-1.0, 0.0]), (2, [0.0, -1.0]), (4, [0.5, 0.0])],
+        "cell int, centroid array<double>",
+    ).write.parquet(idx + "/centroids")
+    assert ivf_cells(spark, idx, [[0.0, 0.0]], 3) == [[4, 0, 1]]
+    assert ivf_cells(spark, idx, [[0.0, 0.0], [0.0, 0.9]], 2) == [[4, 0], [1, 4]]
 
 
 def test_pq_index_recall_and_reuse(spark, tmp_path):
@@ -86,15 +101,20 @@ def test_pq_index_recall_and_reuse(spark, tmp_path):
     built index without re-encoding."""
     import os
 
-    from clickhub_spark.operators.knn import brute_force_topk, pq_topk
+    from clickhub_spark.operators.knn import brute_force_topk, build_pq_index, pq_probe_topk
 
     emb = load(spark, SF_DIR, "embeddings")
     idx = str(tmp_path / "pq")
-    exact = [r.vec_id for r in brute_force_topk(emb, 0, k=5).collect()]
-    got = [r.vec_id for r in pq_topk(emb, 0, k=20, m=32, n_codes=16, index_path=idx).collect()]
-    assert len(set(exact) & set(got)) / 5 >= 0.6
+    build_pq_index(emb, idx, m=32, n_codes=16)
     built_at = os.path.getmtime(idx + "/codes")
-    again = [r.vec_id for r in pq_topk(emb, 3, k=20, m=32, n_codes=16, index_path=idx).collect()]
+
+    def probe(qid: int) -> list[int]:
+        qv = emb.where(F.col("vec_id") == qid).first().embedding
+        return [r.vec_id for r in pq_probe_topk(spark, idx, list(qv), k=20, exclude_id=qid).collect()]
+
+    exact = [r.vec_id for r in brute_force_topk(emb, 0, k=5).collect()]
+    assert len(set(exact) & set(probe(0))) / 5 >= 0.6
+    again = probe(3)
     assert os.path.getmtime(idx + "/codes") == built_at  # no rebuild
     assert 3 not in again  # query excluded from its own neighbors
 

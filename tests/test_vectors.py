@@ -124,6 +124,28 @@ def test_signatures_match_recomputation(spark, frame):
             assert r.sig == 0 and r.md5 == "1" * md5_bits
 
 
+def test_cosine_of_zero_vector_is_null_under_ansi(spark):
+    """A zero-norm vector scores NULL, as the pre-ANSI engine returned,
+    instead of failing the query with DIVIDE_BY_ZERO; brute force still
+    returns k rows and ranks that vector last."""
+    from clickhub_spark.operators.knn import brute_force_topk
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        zero = spark.createDataFrame([([0.0, 0.0], [1.0, 0.0])], "a array<double>, b array<double>")
+        assert zero.select(F.expr(cosine("a", "b")).alias("c")).first().c is None
+        emb = spark.createDataFrame(
+            [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [1.0, 1.0]), (3, [-1.0, 0.5])],
+            "vec_id long, embedding array<float>",
+        )
+        got = brute_force_topk(emb, 0, k=3).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert [r.vec_id for r in got] == [2, 3, 1]
+    assert got[-1].sim is None
+
+
 def test_array_literal_round_trips_and_rejects_non_finite(spark):
     vals = [0.1, -1e-05, 1.5e300, -0.0, 3.0]
     got = spark.range(1).select(F.expr(array_literal(vals)).alias("a")).first().a
