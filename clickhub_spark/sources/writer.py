@@ -13,11 +13,21 @@ append — the MergeTree storage analog.
   '{max_time}'`` — repo/importer.py:95,107).  Appending is safe under
   replay because reads go through the FINAL dedup view
   (operators/dedup.final_view), exactly like ReplacingMergeTree
-  absorbing duplicate keys at merge.
+  absorbing duplicate keys at merge.  One Spark job per import: the
+  watermark comes from footers and the row count from the write.
 
 - ``read_table``: the one table-read path — every open of a stored
   table directory, with one rule each for an absent table, a swap in
-  flight, a dead swap, the schema and errors.
+  flight, a dead swap, the schema, a part subset and errors.
+
+- ``high_water_mark`` / ``footer_answers``: per-key questions answered
+  from part footers (introspect.table_parts — each part's row count
+  and per-column min/max/null count, the analog of a MergeTree part's
+  primary and min/max index).  A part written by one import holds one
+  repo, so its footer alone answers ``max(time)`` for that repo; Spark
+  reads only the parts a footer cannot answer (INT96 timestamps,
+  multi-repo parts left by compaction, partitioned layouts), and a
+  question every footer answers runs no Spark job.
 
 - ``compact``: the one table-rewrite path — the MergeTree merge
   behind compaction, OPTIMIZE … FINAL, mutations, TTL and the
@@ -38,9 +48,11 @@ import time
 import uuid
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructType, TimestampType
+
+from clickhub_spark.introspect import ColumnStats, PartInfo, hidden, table_parts
 
 
 def write_sorted(
@@ -96,17 +108,38 @@ def write_sorted(
     writer.parquet(path)
 
 
+def _settle(path: str) -> str | None:
+    """The local directory of the stored table ``path`` after the swap
+    rules of :func:`read_table`, or None when the table is absent."""
+    from clickhub_spark.operators.mutate import recover_table, swap_in_flight
+
+    local = path.removeprefix("file:")
+    for _ in range(100):
+        if os.path.isdir(local) or not swap_in_flight(local):
+            break
+        time.sleep(0.05)
+    else:
+        recover_table(local)
+    if not os.path.isdir(local) or all(hidden(e) for e in os.listdir(local)):
+        return None
+    return local
+
+
 def read_table(
-    spark: SparkSession, path: str, schema: StructType | None = None
+    spark: SparkSession,
+    path: str,
+    schema: StructType | None = None,
+    files: Sequence[str] | None = None,
 ) -> DataFrame | None:
     """Open the stored table directory ``path`` — the only function
     that does.  The read rules:
 
     - **Absent table:** ``None`` when there is no directory, or when it
-      holds only entries Spark's file listing skips (``.``-prefixed,
-      or ``_``-prefixed without ``=`` — e.g. the ``_staging_*`` dir of
-      an in-flight first ``incremental_append``).  Each caller decides
-      what an absent table means for it.
+      holds only entries Spark's file listing skips
+      (introspect.hidden: ``.``-prefixed, or ``_``-prefixed without
+      ``=`` — e.g. the ``_staging_*`` dir of an in-flight first
+      ``incremental_append``).  Each caller decides what an absent
+      table means for it.
     - **Swap in flight:** when the directory is missing but swap
       siblings exist (operators/mutate.swap_in_flight — the two-rename
       fallback of ``_swap`` is between its renames), wait for the
@@ -117,23 +150,90 @@ def read_table(
     - **Schema:** read under ``schema`` when given — the table's
       declared schema, which spares the footer-inference Spark job and
       keeps a mixed-schema file set (an instant RENAME COLUMN) whole.
+    - **Part subset:** with ``files`` (data files of the table, as
+      :func:`table_files` lists them), read only those, with
+      ``basePath`` at the table directory so partition columns still
+      come from the paths; ``None`` when ``files`` is empty.  The swap
+      rules ran when the files were listed.
     - **Errors:** every other error propagates.  An unreadable table is
       an error, never "no rows"."""
-    from clickhub_spark.operators.mutate import recover_table, swap_in_flight
-
-    local = path.removeprefix("file:")
-    for _ in range(100):
-        if os.path.isdir(local) or not swap_in_flight(local):
-            break
-        time.sleep(0.05)
-    else:
-        recover_table(local)
-    if not os.path.isdir(local) or all(
-        e.startswith(".") or (e.startswith("_") and "=" not in e)
-        for e in os.listdir(local)
-    ):
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    if files is not None:
+        if not files:
+            return None
+        return reader.option("basePath", path.removeprefix("file:")).parquet(*files)
+    if _settle(path) is None:
         return None
-    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+    return reader.parquet(path)
+
+
+def table_files(path: str) -> list[PartInfo] | None:
+    """The data files :func:`read_table` reads for ``path``, each with
+    its cached footer (introspect.table_parts; an unreadable footer is
+    None, for Spark to read and raise on), after the same swap rules;
+    None when the table is absent."""
+    local = _settle(path)
+    return None if local is None else table_parts(local, strict=False)
+
+
+def _matches(stats: ColumnStats | None, schema: StructType | None, col: str) -> bool:
+    """Whether footer ``stats`` carry exact bounds of the values Spark
+    reads for ``col`` under ``schema`` (None: the footer's own type)."""
+    if stats is None or stats.min is None:
+        return False
+    if schema is None:
+        return True
+    want = StringType() if stats.kind == "string" else TimestampType()
+    return col in schema.fieldNames() and schema[col].dataType == want
+
+
+def footer_answers(
+    parts: list[PartInfo],
+    key_col: str,
+    col: str | None = None,
+    key: str | None = None,
+    schema: StructType | None = None,
+) -> tuple[list[tuple[str, ColumnStats | None]], list[str]]:
+    """Split ``parts`` for a per-key question into ``(answered, rest)``.
+
+    ``answered`` holds ``(key, stats of col)`` for each part whose
+    footer answers: an unpartitioned part whose ``key_col`` is a
+    string with min = max and no NULL, and — when ``col`` is asked
+    about — whose ``col`` has exact bounds (:func:`_matches`).
+    ``rest`` lists the parts Spark must read: INT96 timestamps,
+    multi-key parts left by compaction, partitioned layouts, a missing
+    statistic or an unreadable footer.  Parts with no rows, and — when
+    ``key`` is given — parts whose ``key_col`` range excludes it, are
+    in neither list: they hold no row of the answer."""
+    answered, rest = [], []
+    for p in parts:
+        f = p.footer
+        if f is not None and f.rows == 0:
+            continue
+        ks = f.columns.get(key_col) if f is not None and not p.partition else None
+        if not _matches(ks, schema, key_col) or ks.kind != "string" or ks.nulls is None:
+            rest.append(p.path)
+            continue
+        if key is not None and not ks.min <= key <= ks.max:
+            continue
+        stats = None if col is None else f.columns.get(col)
+        if ks.min == ks.max and ks.nulls == 0 and (col is None or _matches(stats, schema, col)):
+            answered.append((ks.min, stats))
+        else:
+            rest.append(p.path)
+    return answered, rest
+
+
+def _footer_value(kind: str, raw):
+    """A footer bound as Spark's ``collect`` returns it (a timestamp
+    under the process ``TZ``, like ``TimestampType.fromInternal``)."""
+    return TimestampType().fromInternal(raw) if kind == "timestamp" else raw
+
+
+def _footer_literal(kind: str, raw) -> Column:
+    """A footer bound as an exact Spark literal (micros, not a local
+    datetime, so no ``TZ`` round trip can shift it)."""
+    return F.timestamp_micros(F.lit(raw)) if kind == "timestamp" else F.lit(raw)
 
 
 def high_water_mark(
@@ -142,13 +242,26 @@ def high_water_mark(
     """Read the incremental watermark (≙ SELECT max(time) … WHERE
     repo_name=…, reference repo/importer.py:95) under ``schema``.
     Returns None when the table doesn't exist yet or holds no rows for
-    the key."""
-    existing = read_table(spark, path, schema)
-    if existing is None:
+    the key.
+
+    Answered from part footers (:func:`footer_answers`, the part
+    min/max index); only the parts a footer cannot answer are read by
+    Spark, whose ``max`` is merged with the footer maximum in the same
+    job.  When no part is left for Spark, no job runs."""
+    parts = table_files(path)
+    if parts is None:
         return None
+    answered, rest = footer_answers(parts, key_col, time_col, key, schema)
+    top = max(answered, key=lambda a: a[1].max, default=None)
+    if not rest:
+        return None if top is None else _footer_value(top[1].kind, top[1].max)
+    hwm = F.max(time_col)
+    if top is not None:
+        hwm = F.greatest(hwm, _footer_literal(top[1].kind, top[1].max))
     row = (
-        existing.where(F.col(key_col) == key)
-        .agg(F.max(time_col).alias("hwm"))
+        read_table(spark, path, schema, rest)
+        .where(F.col(key_col) == key)
+        .agg(hwm.alias("hwm"))
         .first()
     )
     return row.hwm if row else None
@@ -167,10 +280,12 @@ def incremental_append(
     (≙ the `WHERE time > '{max_time}'` cut, repo/importer.py:107).
     Returns the number of rows appended.
 
-    The count comes from an ``Observation`` on the write itself (the
-    ingest-scale shape: no second full pass over the input).  The only
-    pre-write action is ``isEmpty()`` — an early-terminating take(1)
-    that guards no-op replays from appending empty part files.
+    The count comes from an ``Observation`` on the staged write itself
+    (the ingest-scale shape: no second pass over the input, and no
+    pre-write action).  A write that observed 0 rows — a no-op replay —
+    publishes nothing: its staging directory is removed, so replays
+    add no empty part files.  With the watermark answered from part
+    footers (:func:`high_water_mark`), an import is one Spark job.
 
     Concurrency: N worker PROCESSES append to one table (the
     start_workers fleet), and concurrent ``mode("append")`` jobs from
@@ -188,8 +303,6 @@ def incremental_append(
     multi-file commit."""
     hwm = high_water_mark(spark, path, time_col, key_col, key, df.schema)
     fresh = df if hwm is None else df.where(F.col(time_col) > F.lit(hwm))
-    if fresh.isEmpty():
-        return 0
     obs = Observation()
     out = fresh.observe(obs, F.count(F.lit(1)).alias("n")).sortWithinPartitions(
         *(sort_cols or [time_col])
@@ -197,13 +310,15 @@ def incremental_append(
     local = path.removeprefix("file:")
     staging = os.path.join(local, f"_staging_{uuid.uuid4().hex}")
     out.write.mode("overwrite").parquet(staging)
+    n = int(obs.get["n"])
     try:
-        for name in os.listdir(staging):
-            if name.startswith("part-"):
-                os.rename(os.path.join(staging, name), os.path.join(local, name))
+        if n:
+            for name in os.listdir(staging):
+                if name.startswith("part-"):
+                    os.rename(os.path.join(staging, name), os.path.join(local, name))
     finally:
         shutil.rmtree(staging, ignore_errors=True)
-    return int(obs.get["n"])
+    return n
 
 
 def write_bucketed(

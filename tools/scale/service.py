@@ -1,6 +1,7 @@
-"""Coordination scenarios: HTTP queue claim/release throughput with
-worker processes, and the cross-process coordinator failover drill.
-Neither starts a Spark session."""
+"""Service scenarios: HTTP queue claim/release throughput with worker
+processes and the cross-process coordinator failover drill (neither
+starts a Spark session), and the app's per-repo questions answered
+from part footers."""
 
 from __future__ import annotations
 
@@ -178,8 +179,119 @@ def failover(run):
     return out
 
 
+def _scan_answers(spark, path, repos, limit):
+    """The three questions as full scans of the commits table — the
+    formulations the footer answers replaced (the oracle), each
+    opening the table per call as they did."""
+    from pyspark.sql import functions as F
+
+    from clickhub_spark.catalog import STORED_SCHEMAS
+    from clickhub_spark.sources.writer import read_table
+
+    def mine(repo):
+        return read_table(spark, path, STORED_SCHEMAS["commits"]).where(F.col("repo_name") == repo)
+
+    def stale():
+        return [
+            r.repo_name
+            for r in read_table(spark, path, STORED_SCHEMAS["commits"])
+            .groupBy("repo_name")
+            .agg(F.min("updated_at").alias("last_updated"))
+            .orderBy(F.col("last_updated").asc(), F.col("repo_name").asc())
+            .limit(limit)
+            .collect()
+        ]
+
+    return {
+        "is_processed": lambda: [bool(mine(r).limit(1).take(1)) for r in repos],
+        "high_water_mark": lambda: [mine(r).agg(F.max("time").alias("h")).first().h for r in repos],
+        "stale_repos": stale,
+    }
+
+
+def app_parts(run, n_repos=2000, probes=20, limit=100):
+    """The app's per-repo questions from part footers
+    (sources/writer.footer_answers): the membership probe, the import
+    watermark and the ``update_all_repos`` sweep over a commits table
+    of ``n_repos`` single-repo parts — the layout one import per repo
+    leaves — and again after a compaction into ``ORDER BY repo_name``
+    range parts.  Each question is timed against its full-scan
+    formulation over ``probes`` repos (half present, half absent).
+
+    Check: every footer answer equals the scan's, on both layouts; the
+    single-repo layout answers with no Spark job."""
+    from pyspark.sql import functions as F
+
+    from clickhub_spark.catalog import STORED_SCHEMAS
+    from clickhub_spark.introspect import table_stats
+    from clickhub_spark.orchestrator import Orchestrator
+    from clickhub_spark.queue import WorkQueue
+    from clickhub_spark.sources.writer import compact, high_water_mark
+    from tests.conftest import spark_jobs
+
+    spark = run.spark
+    schema = STORED_SCHEMAS["commits"]
+    path = run.path("commits")
+    per_repo = 5
+    t0, hour = 1_672_531_200_000_000, 3_600_000_000
+    r, k = (F.col("id") / per_repo).cast("long"), F.col("id") % per_repo
+    cols = {
+        "repo_name": F.format_string("org/r%06d", r),
+        "hash": F.format_string("%06d-%d", r, k),
+        "time": F.timestamp_micros(F.lit(t0) + (r * 7 % 1000 + k) * hour),
+        "updated_at": F.timestamp_micros(F.lit(t0) + (r * 13 % 997) * hour + k),
+    }
+    # one task writes the rows in repo order, a new file every
+    # ``per_repo`` rows: one part per repo
+    spark.range(n_repos * per_repo, numPartitions=1).select(
+        *[cols.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name) for f in schema.fields]
+    ).write.option("maxRecordsPerFile", per_repo).parquet(path)
+    orch = Orchestrator(spark, path, WorkQueue(run.path("queue")))
+    step = max(1, n_repos // max(1, probes // 2))
+    repos = [f"org/r{i:06d}" for i in range(0, n_repos, step)][: max(1, probes // 2)]
+    repos += [f"org/none{i:03d}" for i in range(len(repos))]
+    footer = {
+        "is_processed": lambda: [orch.is_processed(r) for r in repos],
+        "high_water_mark": lambda: [
+            high_water_mark(spark, path, "time", "repo_name", r, schema) for r in repos
+        ],
+        "stale_repos": lambda: orch.stale_repos(limit),
+    }
+
+    def measure(layout: str) -> dict:
+        out = {"parts": table_stats(path)["files"]}
+        scan = _scan_answers(spark, path, repos, limit)
+        for q in footer:
+            (got, jobs), want = spark_jobs(spark, footer[q]), scan[q]()
+            run.check(f"{layout}_{q}_equal", got == want)
+            if layout == "single_repo":
+                run.check(f"{layout}_{q}_no_job", jobs == 0)
+            footer_s, _ = run.timed(footer[q], 4)
+            scan_s, _ = run.timed(scan[q], 4)
+            out[q] = {"footer_s": footer_s, "scan_s": scan_s, "footer_jobs": jobs}
+        return out
+
+    out = {"metric": "app_parts", "n_repos": n_repos, "probes": len(repos), "limit": limit}
+    out["single_repo"] = measure("single_repo")
+    compact(
+        spark,
+        path,
+        sort_cols=("repo_name", "time"),
+        target_files=None,
+        transform=lambda df: df.repartitionByRange(max(1, n_repos // 250), "repo_name"),
+        read_schema=schema,
+    )
+    out["compacted"] = measure("compacted")
+    # the sweep itself, on the queue: the stale batch is scheduled
+    scheduled = orch.update_all_repos(limit)
+    run.check("update_all_repos_schedules_stale", scheduled == footer["stale_repos"]())
+    out["ok"] = all(run.checks.values())
+    return out
+
+
 #: scenario -> keyword arguments of its tiny Tier-1 run
 SCENARIOS = {
     queue_throughput: {"n": 200, "w": 2},
     failover: {},
+    app_parts: {"n_repos": 8, "probes": 4, "limit": 5},
 }
